@@ -1,13 +1,14 @@
 package graft
 
-import graft.domain.{ModelRunner, Schemas, SteamModels}
+import graft.domain.SteamModels
 import graft.operators.{Dedup, Similarity}
-import graft.quality.DataQuality
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Facade: the one-stop API a user of the reference pipeline lands on after
-  * switching. Everything here delegates to the module that owns the logic —
-  * this object only names the workflows.
+/** The workflows that compose more than one call: each method here adds
+  * logic of its own. Everything else is called on the module that owns it
+  * — `domain.ModelRunner` (the dbt run), `domain.{DedupLake, VectorLake,
+  * LexLake, Retrieval}` (the lakes and their serves), `operators.*` and
+  * `multimodal.Multimodal`.
   */
 object Engine {
 
@@ -23,17 +24,6 @@ object Engine {
       prices = t("prices"), crawlState = t("crawl_state"),
       reviews = t("reviews"))
   }
-
-  /** dbt-run equivalent: staging views + mart tables + quality report. */
-  def runAnalytics(spark: SparkSession, w: SteamModels.Warehouse,
-                   martDir: String): ModelRunner.RunResult =
-    ModelRunner.run(spark, w, martDir)
-
-  /** Quality suite only (dbt test). */
-  def runQuality(w: SteamModels.Warehouse): Seq[DataQuality.CheckResult] =
-    DataQuality.run(DataQuality.steamSuite(w))
-
-  // ---- training-data pipeline workflows ----
 
   /** Exact + near-duplicate report over a document corpus. */
   def dedupReport(docs: DataFrame, idCol: String, textCol: String,
@@ -57,99 +47,12 @@ object Engine {
         emb, idCol, vecCol, typedLit(queryVec), k)
   }
 
-  /** Build (or refresh) the persistent near-dup index for a corpus — run
-    * once per corpus, store bucketed by (band, bh); then ingest batches
-    * with [[ingestDedup]] at per-batch cost. */
-  def buildDedupIndex(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    Dedup.lshBands(docs, idCol, textCol)
-
-  /** Per-batch ingest dedup against a stored index: returns the batch docs
-    * that survive (corpus near-dups drop; within-batch dups keep min id).
-    * Append the survivors' lshBands rows to the index after committing. */
-  def ingestDedup(batch: DataFrame, idCol: String, textCol: String,
-                  index: DataFrame): DataFrame =
-    Dedup.incrementalKeep(batch, idCol, textCol, index)
-
-  /** Batch retrieval: every probe row gets its k nearest corpus rows by
-    * cosine (hard-negative mining / retrieval augmentation). */
-  def retrieveKnn(corpus: DataFrame, corpusId: String, corpusVec: String,
-                  probe: DataFrame, probeId: String, probeVec: String,
-                  k: Int): DataFrame =
-    Similarity.knnJoin(corpus, corpusId, corpusVec, probe, probeId, probeVec, k)
-
-  /** Decontaminate a training corpus against a benchmark suite: n-gram
-    * containment (token overlap) AND embedding cosine (paraphrase leakage) —
-    * run both before any eval you intend to trust. Returns the surviving
-    * corpus rows. */
-  def decontaminate(corpus: DataFrame, benchmark: DataFrame,
-                    idCol: String, textCol: String,
-                    shingleN: Int = 2, containment: Double = 0.8): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val flagged = Dedup.containmentPairs(corpus, benchmark, idCol, textCol,
-      shingleN, containment)
-      .select(col("corpus_id").as(idCol)).distinct()
-    corpus.join(flagged, Seq(idCol), "left_anti")
-  }
-
-  /** Embedding-space decontamination (the semantic twin of [[decontaminate]]). */
-  def decontaminateSemantic(corpus: DataFrame, benchmark: DataFrame,
-                            idCol: String, vecCol: String,
-                            threshold: Double): DataFrame =
-    Dedup.semanticDecontaminate(corpus, benchmark, idCol, vecCol, threshold)
-
-  /** Paragraph/block-level dedup with document rebuild (RefinedWeb-style). */
-  def blockDedup(docs: DataFrame, idCol: String, textCol: String,
-                 blockWords: Int = 64): DataFrame =
-    Dedup.blockDedup(docs, idCol, textCol, blockWords)
-
-  /** ANALYZE-style per-column stats sheet — the first read on any new drop. */
-  def profileCorpus(df: DataFrame, cols: Seq[String]): DataFrame =
-    DataQuality.columnProfile(df, cols)
-
-  /** Near-duplicate image pairs by perceptual dHash (the image twin of the
-    * text simhash; same lossless banding underneath). */
-  def imageDedupReport(media: DataFrame, maxHamming: Int = 8): DataFrame =
-    multimodal.Multimodal.imageNearDupPairs(media, maxHamming)
-
-  /** Audio quality gate: silence/clipping/RMS stats — filter dead air and
-    * distortion BEFORE the embed stage. */
-  def audioQualityReport(media: DataFrame): DataFrame =
-    multimodal.Multimodal.audioQualityStats(media)
-
   /** Mixture assembly: cap each source at a token budget (walked in id
     * order — growth-stable prefix; see Sampling.tokenBudgetSelect). */
   def capSourceTokens(docs: DataFrame, idCol: String, textCol: String,
                       sourceCol: String, budgetTokens: Long): DataFrame =
     graft.operators.Sampling.tokenBudgetSelect(docs, idCol, textCol,
       sourceCol, budgetTokens, Seq(org.apache.spark.sql.functions.col(idCol).asc))
-
-  /** The whole multimodal curation pipeline, bytes to verdicts: one decode
-    * pass, quality gates, perceptual dedup, survivor embeddings, self-kNN
-    * (the binary twin of the q75 text pipeline). */
-  def curateMedia(media: DataFrame): multimodal.Multimodal.MediaCuration =
-    multimodal.Multimodal.curateMedia(media)
-
-  /** Incremental media curation: gate + dedup ONE batch against the
-    * lake-resident dHash band index without rescanning the corpus; append
-    * the returned indexRows to complete the step (the foreachBatch body of
-    * a streaming media ingest — the media twin of [[ingestDedup]]). */
-  def ingestMedia(batch: DataFrame, dhashIndex: DataFrame): multimodal.Multimodal.MediaIngest =
-    multimodal.Multimodal.ingestMediaBatch(batch, dhashIndex)
-
-  /** Per-probe retrieval report card: recall@k, first-hit rank, and
-    * integer-micro reciprocal rank of an approximate result list vs exact
-    * truth (MRR = sum(rr_micros)/n/1e6 downstream). */
-  def evalRetrieval(truth: DataFrame, approx: DataFrame): DataFrame =
-    Similarity.retrievalEval(truth, approx)
-
-  /** Streaming media ingest: the curation pipeline as a Structured
-    * Streaming job over a parquet-resident dHash index (the foreachBatch
-    * wiring of [[ingestMedia]]). */
-  def streamMediaIngest(mediaStream: DataFrame, indexDir: String,
-                        verdictsDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    multimodal.Multimodal.streamingMediaIngest(
-      mediaStream, indexDir, verdictsDir, checkpointDir)
 
   /** Cron orchestration (the prefect.yaml seam): run the daily price/review
     * flows on the reference's own 15:00/16:00 cadence until `until`,
@@ -162,195 +65,4 @@ object Engine {
       start = java.time.LocalDateTime.now(), until = until,
       now = () => java.time.LocalDateTime.now(),
       sleep = d => Thread.sleep(d.toMillis))
-
-  // ---- lake-resident dedup state (the compaction daemon) ----
-
-  /** Greedy per-batch dedup ingest against the managed lake store at
-    * `lakeRoot` (archive/index/keeps; at-least-once safe, writer-leased).
-    * Returns the surviving (doc_id, text) rows. */
-  def dedupLakeIngest(spark: SparkSession, lakeRoot: String,
-                      batch: DataFrame): DataFrame =
-    graft.domain.DedupLake.ingest(spark, lakeRoot, batch)
-
-  /** Repair the lake's greedy keeps to full-batch semantics and compact —
-    * the maintenance pass, normally run from [[dedupLakeMaintenance]]. */
-  def dedupLakeReconcile(spark: SparkSession, lakeRoot: String)
-      : graft.domain.DedupLake.ReconcileReport =
-    graft.domain.DedupLake.reconcile(spark, lakeRoot)
-
-  /** The reconcile pass as a scheduled deployment (weekly by default) —
-    * register it next to the price/review flows in the agent loop. */
-  def dedupLakeMaintenance(spark: SparkSession, lakeRoot: String,
-                           cron: String = "0 3 * * 0")
-      : graft.domain.Scheduler.Deployment =
-    graft.domain.DedupLake.maintenanceDeployment(spark, lakeRoot, cron)
-
-  // ---- lake-resident vector index (DedupLake's ANN sibling) ----
-
-  /** Graded ranking quality: nDCG@k per probe with Scala-precomputed
-    * integer micro-discounts, next to [[evalRetrieval]]'s recall/MRR. */
-  def evalNdcg(truth: DataFrame, approx: DataFrame, k: Int): DataFrame =
-    Similarity.ndcgEval(truth, approx, k)
-
-  /** Diversity-aware final re-rank of a serving result list: greedy MMR
-    * (λ=0.5, exact integer-micro scores) over each probe's top-`poolSize`
-    * pool. */
-  def rerankMmr(corpus: DataFrame, corpusId: String, corpusVec: String,
-                probe: DataFrame, probeId: String, probeVec: String,
-                k: Int, poolSize: Int): DataFrame =
-    Similarity.mmrRerank(corpus, corpusId, corpusVec,
-      probe, probeId, probeVec, k, poolSize)
-
-  /** Near-dup-gated batch ingest into the managed vector lake at
-    * `lakeRoot` (list-partitioned vectors + stored quantizer;
-    * at-least-once safe, writer-leased). */
-  def vectorLakeIngest(spark: SparkSession, lakeRoot: String,
-                       batch: DataFrame): graft.domain.VectorLake.IngestReport =
-    graft.domain.VectorLake.ingest(spark, lakeRoot, batch)
-
-  /** Per-list index-health report of a batch vs the resident vectors —
-    * the measurement that decides when [[vectorLakeMaintenance]]'s
-    * recluster is due. */
-  def vectorLakeDrift(spark: SparkSession, lakeRoot: String,
-                      batch: DataFrame): DataFrame =
-    graft.domain.VectorLake.driftReport(spark, lakeRoot, batch)
-
-  /** The recluster-and-repair pass as a scheduled deployment (weekly by
-    * default), the vector twin of [[dedupLakeMaintenance]]. */
-  def vectorLakeMaintenance(spark: SparkSession, lakeRoot: String,
-                            cron: String = "0 4 * * 0")
-      : graft.domain.Scheduler.Deployment =
-    graft.domain.VectorLake.maintenanceDeployment(spark, lakeRoot, cron)
-
-  /** Continuous embedding ingest into the vector lake: each micro-batch
-    * runs the full near-dup gate and appends survivors (replays are
-    * no-ops); waits out a concurrent maintenance window instead of
-    * crashing. The streaming twin of [[vectorLakeIngest]]. */
-  def vectorLakeIngestStream(emb: DataFrame, lakeRoot: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    graft.streaming.Streams.vectorLakeIngestStream(emb, lakeRoot)
-
-  /** Probing search over the lake-resident index — the serving read: the
-    * stored centroids rank driver-side and only the `nprobe` nearest list
-    * PARTITIONS of the store are opened (the dir is partitionBy(ivf_list)).
-    * Reader path: no lease, safe concurrent with a writer. */
-  def vectorLakeSearch(spark: SparkSession, lakeRoot: String,
-                       queryVec: Seq[Float], k: Int, nprobe: Int = 2): DataFrame =
-    graft.domain.VectorLake.search(spark, lakeRoot, queryVec, k, nprobe)
-
-  /** BATCHED probing search over the lake-resident index — the serving
-    * read a retrieval deployment actually issues: one partition-pruned
-    * store scan (the union of the batch's gate lists) amortized over the
-    * whole probe batch through the bounded-heap kNN plan, instead of
-    * [[vectorLakeSearch]]'s one job per query. Per-probe results equal
-    * the single-query read's. */
-  def vectorLakeSearchBatch(spark: SparkSession, lakeRoot: String,
-                            probes: DataFrame, k: Int,
-                            nprobe: Int = 2,
-                            quantized: Boolean = false): DataFrame =
-    graft.domain.VectorLake.searchBatch(spark, lakeRoot, probes, k, nprobe,
-      quantized = quantized)
-
-  /** Recall@k of the int8 scalar-quantized (4× smaller) corpus
-    * representation vs exact search — the acceptance gate for serving a
-    * corpus from SQ codes, next to the PQ/ADC path. */
-  def evalSqRecall(corpus: DataFrame, corpusId: String, corpusVec: String,
-                   probe: DataFrame, probeId: String, probeVec: String,
-                   k: Int, dims: Int): DataFrame =
-    Similarity.sqRecallEval(corpus, corpusId, corpusVec,
-      probe, probeId, probeVec, k, dims)
-
-  /** IVF-SQ8 probing search: coarse pruning to the query's `nprobe`
-    * nearest lists, asymmetric scoring over the int8-dequantized corpus —
-    * the serving tier that combines partition pruning with the 4× memory
-    * cut, gated by [[evalSqRecall]]. */
-  def searchIvfSq(corpus: DataFrame, idCol: String, vecCol: String,
-                  queryVec: Seq[Float], k: Int, centroids: Seq[Seq[Double]],
-                  nprobe: Int, mins: Seq[Double], maxs: Seq[Double]): DataFrame =
-    Similarity.ivfSqTopK(corpus, idCol, vecCol, queryVec, k, centroids,
-      nprobe, mins, maxs)
-
-  // ---- lake-resident inverted index + the full retrieval endpoint ----
-
-  /** Per-query BM25 over a query batch as a pure posting-list join (the
-    * corpus-sided tf/df/length aggregates are query-independent; scores
-    * become exact integer micros before the per-query sum). The compute
-    * path; [[lexLakeServe]] is its lake-resident serving twin. */
-  def bm25PerQuery(docs: DataFrame, idCol: String, textCol: String,
-                   queries: DataFrame, queryIdCol: String, termsCol: String,
-                   n: Int): DataFrame =
-    graft.operators.TextStats.bm25PerQuery(docs, idCol, textCol,
-      queries, queryIdCol, termsCol, n)
-
-  /** Tokenize-at-ingest into the lake-resident inverted index at
-    * `lakeRoot` (term-bucket-partitioned postings; at-least-once safe,
-    * writer-leased). */
-  def lexLakeIngest(spark: SparkSession, lakeRoot: String,
-                    batch: DataFrame): graft.domain.LexLake.IngestReport =
-    graft.domain.LexLake.ingest(spark, lakeRoot, batch)
-
-  /** BM25 a query batch against the resident inverted index — one
-    * bucket-pruned postings scan, exactly equal to [[bm25PerQuery]] over
-    * the logical corpus. */
-  def lexLakeServe(spark: SparkSession, lakeRoot: String,
-                   queries: DataFrame, n: Int): DataFrame =
-    graft.domain.LexLake.serve(spark, lakeRoot, queries, n)
-
-  /** [[lexLakeServe]] from the generation's IMPACT tier: capped terms read
-    * their top-impact truncated postings (adopted at reconcile behind a
-    * measured recall gate; refused loudly when absent), the rest read full
-    * postings — the stop-word read-amplification fix. */
-  def lexLakeServeImpact(spark: SparkSession, lakeRoot: String,
-                         queries: DataFrame, n: Int): DataFrame =
-    graft.domain.LexLake.serve(spark, lakeRoot, queries, n, impact = true)
-
-  /** Exact phrase search from the lexical store's positional postings —
-    * bucket-pruned read, rarest-word conjunctive gate, (doc, position)-
-    * keyed adjacency joins; equals TextStats.phraseMatch over the logical
-    * corpus. */
-  def lexLakePhraseServe(spark: SparkSession, lakeRoot: String,
-                         phrase: Seq[String]): DataFrame =
-    graft.domain.LexLake.phraseServe(spark, lakeRoot, phrase)
-
-  /** Per-bucket health of the lexical store: posting mass, distinct terms,
-    * the top-df term with its exact integer-micros corpus share (the skew
-    * signal that sets the impact df threshold), pending overlay mass. */
-  def lexLakeHealth(spark: SparkSession, lakeRoot: String): DataFrame =
-    graft.domain.LexLake.health(spark, lakeRoot)
-
-  /** Pseudo-relevance-feedback expansion over the posting-join retriever
-    * (RM3-style expand-and-requery, exact integer-micros term weights). */
-  def bm25PrfExpand(docs: DataFrame, idCol: String, textCol: String,
-                    queries: DataFrame, n: Int,
-                    fbDocs: Int = 5, fbTerms: Int = 3): DataFrame =
-    graft.operators.TextStats.bm25PrfExpand(docs, idCol, textCol,
-      queries, "probe_id", "terms", n, fbDocs, fbTerms)
-
-  /** HYBRID retrieval across BOTH lake-resident indexes: one probe batch
-    * (embedding + terms) served from the vector lake's pruned IVF scan and
-    * the lex lake's pruned postings scan, fused per probe by
-    * reciprocal-rank in exact integer micros. */
-  def hybridServe(spark: SparkSession, vectorRoot: String, lexRoot: String,
-                  probes: DataFrame, k: Int,
-                  kVec: Int = 10, nLex: Int = 10): DataFrame =
-    graft.domain.Retrieval.hybridServe(spark, vectorRoot, lexRoot,
-      probes, k, kVec, nLex)
-
-  /** One coherent (vectorGen, lexGen) pair, both pointers read together —
-    * hold it across probe batches and serve via [[hybridServeAt]]; refresh
-    * on your own schedule (e.g. after both stores' reconciles verify). */
-  def retrievalSnapshot(spark: SparkSession, vectorRoot: String,
-                        lexRoot: String): graft.domain.Retrieval.Snapshot =
-    graft.domain.Retrieval.currentSnapshot(spark, vectorRoot, lexRoot)
-
-  /** [[hybridServe]] PINNED to a [[retrievalSnapshot]] pair: both arms read
-    * committed generation state (the lex side skips pending edit/tombstone
-    * overlays), so a cross-lake mutation that has reached only one store
-    * cannot fuse mismatched corpus views mid-serve. */
-  def hybridServeAt(spark: SparkSession, vectorRoot: String, lexRoot: String,
-                    snapshot: graft.domain.Retrieval.Snapshot,
-                    probes: DataFrame, k: Int,
-                    kVec: Int = 10, nLex: Int = 10): DataFrame =
-    graft.domain.Retrieval.hybridServeAt(spark, vectorRoot, lexRoot,
-      snapshot, probes, k, kVec, nLex)
 }

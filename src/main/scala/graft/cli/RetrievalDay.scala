@@ -170,8 +170,9 @@ object RetrievalDay {
     //    lexGen) snapshot across the batch — with all overlays folded,
     //    byte-equal to the unpinned serve (the spec asserts the count)
     val snap = Retrieval.currentSnapshot(spark, vectorRoot, lexRoot)
-    stages += "pinned_hybrid" -> Retrieval.hybridServeAt(spark, vectorRoot,
-      lexRoot, snap, probes(), k = 5, kVec = 5, nLex = 5).count()
+    stages += "pinned_hybrid" -> Retrieval.hybridServe(spark, vectorRoot,
+      lexRoot, probes(), k = 5, kVec = 5, nLex = 5,
+      snapshot = Some(snap)).count()
 
     // 9. (round 12) the PRF endpoint over the resident index — two passes
     //    under one generation resolution; the tier was just folded, so the

@@ -46,6 +46,20 @@ private[domain] object GenStore {
   def dataRoot(spark: SparkSession, root: String): String =
     dataRootOf(root, currentGen(spark, root))
 
+  /** A serve's [[ReadView]] as (data root, apply the root overlays) — the
+    * one place a view is resolved. The root is expiry-checked here, so a
+    * pinned generation that retention dropped (or never wrote) fails with
+    * the stranded-reader message before any scan. */
+  def resolve(spark: SparkSession, root: String,
+              view: ReadView): (String, Boolean) = {
+    val resolved = view match {
+      case ReadView.Live => (dataRoot(spark, root), true)
+      case ReadView.Pinned(gen) => (dataRootOf(root, gen), false)
+    }
+    requireLive(spark, resolved._1)
+    resolved
+  }
+
   /** Expiry guard for a PREVIOUSLY-resolved generation root: a reader that
     * resolved gen-N and then slept through `retainGenerations` promotions
     * holds a root that retention has deleted. Raise the actionable message
@@ -93,7 +107,7 @@ private[domain] object GenStore {
 
   /** WRITER-side ROLLBACK (call under the store's lease): flip the pointer
     * BACK to a still-resident older generation — the undo of a promotion a
-    * shadow read (searchBatchAt vs the current generation) judged a
+    * shadow read (a pinned searchBatch vs the current generation) judged a
     * regression. Strictly backward: `toGen` must be BELOW the current
     * pointer, because a gen dir ABOVE it is a crashed promotion's orphan —
     * possibly torn, never committed — and flipping to it would serve a

@@ -155,25 +155,28 @@ object LexLake {
   private val confCache =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Int)]()
 
-  private def servedBuckets(spark: SparkSession, root: String): Option[Int] = {
+  private def servedBuckets(spark: SparkSession, root: String): Int = {
     val p = new org.apache.hadoop.fs.Path(s"$root/conf")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      val sig = fs.listStatus(p).filter(_.isFile)
-        .sortBy(_.getPath.getName)
-        .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-        .mkString(",")
-      Option(confCache.get(root)) match {
-        case Some((s, nb)) if s == sig => Some(nb)
-        case _ =>
-          Writers.readOrEmptyReadOnly(spark, s"$root/conf", confSchema)
-            .collect().headOption.map { r =>
-              confCache.put(root, (sig, r.getInt(0)))
-              r.getInt(0)
-            }
+    val nb =
+      if (!fs.exists(p)) None
+      else {
+        val sig = fs.listStatus(p).filter(_.isFile)
+          .sortBy(_.getPath.getName)
+          .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
+          .mkString(",")
+        Option(confCache.get(root)) match {
+          case Some((s, nb)) if s == sig => Some(nb)
+          case _ =>
+            Writers.readOrEmptyReadOnly(spark, s"$root/conf", confSchema)
+              .collect().headOption.map { r =>
+                confCache.put(root, (sig, r.getInt(0)))
+                r.getInt(0)
+              }
+        }
       }
-    }
+    nb.getOrElse(throw new IllegalArgumentException(
+      s"lex lake at $root has no layout conf — ingest something first"))
   }
 
   private def confuredBuckets(spark: SparkSession, root: String,
@@ -450,6 +453,12 @@ object LexLake {
     * bm25_micros, rank <= n); a probe whose terms miss the corpus yields
     * no rows. READER path: no lease, one generation resolution.
     *
+    * `view` picks the state served (every serve below takes it):
+    * [[ReadView.Live]] applies the pending tombstone/edit overlays,
+    * [[ReadView.Pinned]] serves a generation's committed state only — the
+    * shadow-read / snapshot arm, and [[Retrieval.hybridServe]]'s lexical
+    * side under a snapshot.
+    *
     * `impact = true` serves capped terms from the generation's
     * impact-ordered truncated tier (adopted at [[reconcile]] behind a
     * measured recall gate — absent tier refuses loudly, mismatched k1/b
@@ -459,46 +468,91 @@ object LexLake {
     * overlays pend (a truncated list's df cannot be corrected), and the
     * tier reflects the last fold — postings INGESTED after it for capped
     * terms enter the tier at the next reconcile, the standard static
-    * impact-file trade (exactness-critical reads serve impact = false). */
+    * impact-file trade (exactness-critical reads serve impact = false).
+    * Live view only: a pinned view refuses it. */
   def serve(spark: SparkSession, root: String, queries: DataFrame,
             n: Int, queryIdCol: String = "probe_id",
             termsCol: String = "terms",
             k1: Double = 1.2, b: Double = 0.75,
             maxBroadcastQueryTerms: Long = 1L << 20,
             impact: Boolean = false,
-            maxStaleFraction: Double = 1.0): DataFrame =
-    serveIn(spark, GenStore.dataRoot(spark, root), root, queries, n,
-      queryIdCol, termsCol, k1, b, maxBroadcastQueryTerms,
-      applyOverlays = true, impact = impact,
-      maxStaleFraction = maxStaleFraction)
+            maxStaleFraction: Double = 1.0,
+            view: ReadView = ReadView.Live): DataFrame = {
+    require(!impact || view == ReadView.Live, impactPinnedRefusal)
+    val (droot, overlays) = resolve(spark, root, view)
+    serveIn(spark, root, droot, overlays, queries, n, queryIdCol, termsCol,
+      k1, b, maxBroadcastQueryTerms, impact, maxStaleFraction)
+  }
 
-  /** The resident generation numbers, oldest first — what [[serveAt]]
-    * accepts (the [[VectorLake.generations]] twin). Empty for a store that
-    * has never reconciled (still on the legacy root layout — pin that with
-    * `None`). */
+  private val impactPinnedRefusal =
+    "impact = true serves the live view only — the tier's staleness and " +
+      "overlay fallback are defined against the current generation. " +
+      "Serve the pinned view with impact = false."
+
+  /** The resident generation numbers, oldest first — what a
+    * [[ReadView.Pinned]] names (the [[VectorLake.generations]] twin).
+    * Empty for a store that has never reconciled (still on the legacy root
+    * layout — pin that with `Pinned(None)`). */
   def generations(spark: SparkSession, root: String): Seq[Long] =
     GenStore.generations(spark, root)
 
-  /** [[serve]] PINNED to an explicit generation (`None` = the legacy root
-    * layout of a never-reconciled store) — the shadow-read / snapshot arm
-    * of the searchBatchAt idiom, and [[Retrieval.hybridServeAt]]'s lexical
-    * side. A pinned read serves the generation's COMMITTED state only: the
-    * root-level tombstone/edit overlays are SKIPPED (they are uncommitted
-    * mutation state shared across generations — applying them would let a
-    * half-fanned-out cross-lake edit leak into a snapshot that exists
-    * precisely to exclude it; the fold commits them into the next
-    * generation, where a re-taken snapshot picks them up). Consequently
-    * `serveAt(currentGen)` differs from [[serve]] exactly while overlays
-    * are pending. A generation retention has dropped refuses loudly at
-    * resolve time (the stranded-reader message). */
-  def serveAt(spark: SparkSession, root: String, generation: Option[Long],
-              queries: DataFrame, n: Int, queryIdCol: String = "probe_id",
-              termsCol: String = "terms",
-              k1: Double = 1.2, b: Double = 0.75,
-              maxBroadcastQueryTerms: Long = 1L << 20): DataFrame =
-    serveIn(spark, GenStore.dataRootOf(root, generation), root, queries, n,
-      queryIdCol, termsCol, k1, b, maxBroadcastQueryTerms,
-      applyOverlays = false)
+  /** A serve's resolved [[ReadView]]: the generation data root, and the
+    * root overlays the view applies ([[rootOverlays]]; `None` for a
+    * pinned view or while none are pending). */
+  private def resolve(spark: SparkSession, root: String, view: ReadView,
+                      maxOverlayRows: Long = 1L << 20)
+      : (String, Option[(DataFrame, DataFrame)]) = {
+    val (droot, applyOverlays) = GenStore.resolve(spark, root, view)
+    (droot, if (applyOverlays) rootOverlays(spark, root, maxOverlayRows)
+      else None)
+  }
+
+  /** The raw root overlay dirs (tombstones, edits), READ-ONLY resolution —
+    * reader paths hold no lease. */
+  private def overlayDirs(spark: SparkSession,
+                          root: String): (DataFrame, DataFrame) =
+    (Writers.readOrEmptyReadOnly(spark, s"$root/tombstones", tombstonesSchema),
+      Writers.readOrEmptyReadOnly(spark, s"$root/edits", editsSchema))
+
+  /** The ROOT-LEVEL delete/edit overlays, read once per serve: `None` when
+    * neither dir exists (the common fast path keeps plans free of dead
+    * join nodes), else (edits-minus-tombstones, overlay id union). A
+    * tombstone on an edited id wins until the edit's tombstone drop lands
+    * — [[VectorLake]]'s rootOverlays on doc ids. The id union BROADCASTS
+    * at every appliance: bounded by the overlays-are-interim-state
+    * contract and ENFORCED here for every serve, so a mass-deletion day
+    * refuses loudly instead of OOMing the driver. */
+  private def rootOverlays(spark: SparkSession, root: String,
+                           maxOverlayRows: Long)
+      : Option[(DataFrame, DataFrame)] = {
+    // MID-SWAP-AWARE probe (r12 advice): a destination-only probe would let
+    // a reader racing upsert's swapReplace transiently skip committed edits
+    def has(sub: String): Boolean =
+      Writers.stateExistsReadOnly(spark, s"$root/$sub")
+    if (!has("tombstones") && !has("edits")) None
+    else {
+      val (tombs, edits0) = overlayDirs(spark, root)
+      val edits = edits0.join(tombs, Seq("doc_id"), "left_anti")
+      val overlayIds = edits.select("doc_id")
+        .unionByName(tombs.select("doc_id")).distinct()
+      graft.operators.Serving.requireBroadcastable(overlayIds, maxOverlayRows,
+        "the tombstone/edit overlay id set",
+        "Overlays are bounded interim state by contract — run reconcile " +
+          "to fold them, then re-run the serve.")
+      Some((edits, overlayIds))
+    }
+  }
+
+  /** `stored` posting rows with the overlays applied: every overlay id's
+    * stored rows drop, and the edit texts' postings (recomputed through
+    * [[postingsOf]], projected by `shape`) union in. */
+  private def withOverlays(stored: DataFrame,
+                           overlays: Option[(DataFrame, DataFrame)],
+                           nb: Int)(shape: DataFrame => DataFrame): DataFrame =
+    overlays.fold(stored) { case (edits, overlayIds) =>
+      stored.join(broadcast(overlayIds), Seq("doc_id"), "left_anti")
+        .unionByName(shape(postingsOf(edits, nb)))
+    }
 
   /** PSEUDO-RELEVANCE-FEEDBACK serve over the RESIDENT index — the
     * lake-resident twin of
@@ -509,9 +563,8 @@ object LexLake {
     * nominate expansion terms by exact integer-micros length-normalized
     * tf (the probe's original terms excluded, top-`fbTerms` via the
     * bounded STRING heap), and pass 2 rescores the expanded batch top-`n`.
-    * BOTH passes and the feedback read run under ONE generation
-    * resolution — a reconcile promoting between them can never mix
-    * corpus views.
+    * BOTH passes and the feedback read run under ONE view resolution — a
+    * reconcile promoting between them can never mix corpus views.
     *
     * Scale shape: the lake does the pure form one better on feedback
     * extraction — postings rows ARE (term, doc_id, tf, dl), so no
@@ -527,54 +580,30 @@ object LexLake {
     * AND in the expanded requery (an expansion term that happens to be
     * capped serves truncated too), under [[serve]]'s exact contracts:
     * loud absent-tier/mismatched-(k1,b) refusal, the `maxStaleFraction`
-    * bound, and the exact-fallback while overlays pend. The FEEDBACK
-    * extraction between the passes always reads the exact full postings
-    * (semi-joined to the bounded probes×fbDocs id set): a truncated list
-    * would silently drop feedback terms whose posting fell outside a
-    * capped term's top-M — expansion-term SELECTION is exact even when
-    * both scoring passes are tier-approximated. */
+    * bound, the exact-fallback while overlays pend, and live view only.
+    * The FEEDBACK extraction between the passes always reads the exact
+    * full postings (semi-joined to the bounded probes×fbDocs id set): a
+    * truncated list would silently drop feedback terms whose posting fell
+    * outside a capped term's top-M — expansion-term SELECTION is exact
+    * even when both scoring passes are tier-approximated. */
   def prfServe(spark: SparkSession, root: String, queries: DataFrame,
                n: Int, fbDocs: Int, fbTerms: Int,
                queryIdCol: String = "probe_id", termsCol: String = "terms",
                k1: Double = 1.2, b: Double = 0.75,
                maxBroadcastQueryTerms: Long = 1L << 20,
                impact: Boolean = false,
-               maxStaleFraction: Double = 1.0): DataFrame =
-    prfServeIn(spark, GenStore.dataRoot(spark, root), root, queries, n,
-      fbDocs, fbTerms, queryIdCol, termsCol, k1, b, maxBroadcastQueryTerms,
-      applyOverlays = true, impact = impact,
-      maxStaleFraction = maxStaleFraction)
-
-  /** [[prfServe]] PINNED to an explicit generation — the snapshot arm
-    * ([[serveAt]]'s contract: committed state only, root overlays
-    * skipped; both passes under the pinned generation). */
-  def prfServeAt(spark: SparkSession, root: String, generation: Option[Long],
-                 queries: DataFrame, n: Int, fbDocs: Int, fbTerms: Int,
-                 queryIdCol: String = "probe_id", termsCol: String = "terms",
-                 k1: Double = 1.2, b: Double = 0.75,
-                 maxBroadcastQueryTerms: Long = 1L << 20): DataFrame =
-    prfServeIn(spark, GenStore.dataRootOf(root, generation), root, queries,
-      n, fbDocs, fbTerms, queryIdCol, termsCol, k1, b,
-      maxBroadcastQueryTerms, applyOverlays = false)
-
-  private def prfServeIn(spark: SparkSession, droot: String, root: String,
-                         queries: DataFrame, n: Int, fbDocs: Int,
-                         fbTerms: Int, queryIdCol: String, termsCol: String,
-                         k1: Double, b: Double,
-                         maxBroadcastQueryTerms: Long,
-                         applyOverlays: Boolean,
-                         impact: Boolean = false,
-                         maxStaleFraction: Double = 1.0): DataFrame = {
+               maxStaleFraction: Double = 1.0,
+               view: ReadView = ReadView.Live): DataFrame = {
     require(fbDocs >= 1, s"fbDocs must be >= 1, got $fbDocs")
     require(fbTerms >= 1, s"fbTerms must be >= 1, got $fbTerms")
-    val nb = servedBuckets(spark, root).getOrElse(throw
-      new IllegalArgumentException(
-        s"lex lake at $root has no layout conf — ingest something first"))
+    require(!impact || view == ReadView.Live, impactPinnedRefusal)
+    val nb = servedBuckets(spark, root)
+    val (droot, overlays) = resolve(spark, root, view)
     // pass 1: the standard serve, cut at fbDocs — pinned, it feeds the
     // feedback scope AND the weights join
-    val fb = serveIn(spark, droot, root, queries, fbDocs, queryIdCol,
-        termsCol, k1, b, maxBroadcastQueryTerms, applyOverlays,
-        impact = impact, maxStaleFraction = maxStaleFraction)
+    val fb = serveIn(spark, root, droot, overlays, queries, fbDocs,
+        queryIdCol, termsCol, k1, b, maxBroadcastQueryTerms, impact,
+        maxStaleFraction)
       .select("probe_id", "doc_id")
       .localCheckpoint(true)
     // pin = true (r12 advice): this frame feeds BOTH the expansion
@@ -586,29 +615,10 @@ object LexLake {
     val fbIds = fb.select("doc_id").distinct()
     // the feedback docs' posting rows — (term, doc_id, tf, dl) directly,
     // no re-aggregation; overlay-corrected exactly like serve's rows
-    val stored = GenStore.readGenOrEmpty(spark, droot, "postings",
-        postingsSchema)
-      .select("term", "doc_id", "tf", "dl")
-    // mid-swap-aware (r12 advice): a destination-only probe would let a
-    // reader racing upsert's swapReplace transiently skip committed edits
-    def overlay(sub: String): Boolean =
-      Writers.stateExistsReadOnly(spark, s"$root/$sub")
-    val logicalRows =
-      if (!applyOverlays || (!overlay("tombstones") && !overlay("edits")))
-        stored
-      else {
-        val tombs = Writers.readOrEmptyReadOnly(spark, s"$root/tombstones",
-          tombstonesSchema)
-        val edits = Writers.readOrEmptyReadOnly(spark, s"$root/edits",
-            editsSchema)
-          .join(tombs, Seq("doc_id"), "left_anti")
-        val overlayIds = edits.select("doc_id")
-          .unionByName(tombs.select("doc_id")).distinct()
-        stored.join(broadcast(overlayIds), Seq("doc_id"), "left_anti")
-          .unionByName(postingsOf(edits, nb)
-            .select("term", "doc_id", "tf", "dl"))
-      }
-    val fbRows = logicalRows
+    val fbRows = withOverlays(
+        GenStore.readGenOrEmpty(spark, droot, "postings", postingsSchema)
+          .select("term", "doc_id", "tf", "dl"), overlays, nb)(
+        _.select("term", "doc_id", "tf", "dl"))
       .join(broadcast(fbIds), Seq("doc_id"), "left_semi")
     val weights = fb.join(fbRows, Seq("doc_id"))
       .join(qterms, Seq("probe_id", "term"), "left_anti")
@@ -622,9 +632,8 @@ object LexLake {
       .unionByName(expansion.select("probe_id", "term"))
       .groupBy("probe_id").agg(collect_set(col("term")).as("terms"))
       .localCheckpoint(true)
-    serveIn(spark, droot, root, expanded, n, "probe_id", "terms", k1, b,
-      maxBroadcastQueryTerms, applyOverlays,
-      impact = impact, maxStaleFraction = maxStaleFraction)
+    serveIn(spark, root, droot, overlays, expanded, n, "probe_id", "terms",
+      k1, b, maxBroadcastQueryTerms, impact, maxStaleFraction)
   }
 
   /** The LOGICAL (overlay-corrected) posting rows for a query-term
@@ -637,14 +646,13 @@ object LexLake {
     * (pushes into the pruned scan), switching to a broadcast semi-join for
     * large batches — a 10^5-term IN literal would bloat codegen without
     * pruning anything the buckets didn't. Stats are the keyed-delta sum,
-    * corrected from the overlays when `foldOverlays` (= the caller applies
-    * overlays AND an overlay dir exists): old lengths re-derive from the
-    * CURRENT doclens (scoped, bounded), so the correction is exact AND
-    * idempotent across the fold. */
+    * corrected from the `overlays` when present: old lengths re-derive
+    * from the CURRENT doclens (scoped, bounded), so the correction is
+    * exact AND idempotent across the fold. */
   private def logicalQueryRows(spark: SparkSession, droot: String,
-                               root: String, qterms: DataFrame,
+                               overlays: Option[(DataFrame, DataFrame)],
+                               qterms: DataFrame,
                                universe: Seq[String], nb: Int,
-                               foldOverlays: Boolean,
                                withPositions: Boolean)
       : (DataFrame, Long, Long, Long) = {
     val outCols =
@@ -670,49 +678,34 @@ object LexLake {
     var nDocs = statsRow.getLong(0)
     var totalDl = statsRow.getLong(1)
     val docsSinceFold = statsRow.getLong(2)
-    val postL =
-      if (!foldOverlays) stored0
-      else {
-        val tombs = Writers.readOrEmptyReadOnly(spark, s"$root/tombstones",
-          tombstonesSchema)
-        val edits = Writers.readOrEmptyReadOnly(spark, s"$root/edits",
-            editsSchema)
-          .join(tombs, Seq("doc_id"), "left_anti")
-          .localCheckpoint(true)
-        val overlayIds = edits.select("doc_id")
-          .unionByName(tombs.select("doc_id"))
-        // stats corrections: remove every overlay id's stored contribution
-        // (scoped semi-join against doclens — zero rows once folded, so
-        // the correction is idempotent across the fold), then add back the
-        // edits' new lengths
-        val old = GenStore.readGenOrEmpty(spark, droot, "doclens", doclensSchema)
-          .join(broadcast(overlayIds.distinct()), Seq("doc_id"), "left_semi")
-          .agg(coalesce(count(lit(1)), lit(0L)),
-            coalesce(sum(col("dl")), lit(0L))).head()
-        val nw = edits.agg(coalesce(count(lit(1)), lit(0L)),
-          coalesce(sum(TF.tokenCount(col("text"))), lit(0L))).head()
-        nDocs = nDocs - old.getLong(0) + nw.getLong(0)
-        totalDl = totalDl - old.getLong(1) + nw.getLong(1)
-        val editPost = termFilter(postingsOf(edits, nb)).select(outCols: _*)
-        stored0
-          .join(broadcast(overlayIds.distinct()), Seq("doc_id"), "left_anti")
-          .unionByName(editPost)
-      }
+    for ((edits, overlayIds) <- overlays) {
+      // stats corrections: remove every overlay id's stored contribution
+      // (scoped semi-join against doclens — zero rows once folded, so
+      // the correction is idempotent across the fold), then add back the
+      // edits' new lengths
+      val old = GenStore.readGenOrEmpty(spark, droot, "doclens", doclensSchema)
+        .join(broadcast(overlayIds), Seq("doc_id"), "left_semi")
+        .agg(coalesce(count(lit(1)), lit(0L)),
+          coalesce(sum(col("dl")), lit(0L))).head()
+      val nw = edits.agg(coalesce(count(lit(1)), lit(0L)),
+        coalesce(sum(TF.tokenCount(col("text"))), lit(0L))).head()
+      nDocs = nDocs - old.getLong(0) + nw.getLong(0)
+      totalDl = totalDl - old.getLong(1) + nw.getLong(1)
+    }
+    val postL = withOverlays(stored0, overlays, nb)(
+      termFilter(_).select(outCols: _*))
     (postL, nDocs, totalDl, docsSinceFold)
   }
 
-  private def serveIn(spark: SparkSession, droot: String, root: String,
+  private def serveIn(spark: SparkSession, root: String, droot: String,
+                      overlays: Option[(DataFrame, DataFrame)],
                       queries: DataFrame, n: Int, queryIdCol: String,
                       termsCol: String, k1: Double, b: Double,
                       maxBroadcastQueryTerms: Long,
-                      applyOverlays: Boolean,
-                      impact: Boolean = false,
-                      maxStaleFraction: Double = 1.0): DataFrame = {
+                      impact: Boolean,
+                      maxStaleFraction: Double): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
-    val nb = servedBuckets(spark, root).getOrElse(throw
-      new IllegalArgumentException(
-        s"lex lake at $root has no layout conf — ingest something first"))
-    GenStore.requireLive(spark, droot)
+    val nb = servedBuckets(spark, root)
     // impact-tier resolution comes FIRST when requested: an absent tier
     // fails loudly (the sqQuantized contract — never silently serve a
     // different read path than the caller asked for), and the tier's
@@ -745,18 +738,13 @@ object LexLake {
       termsCol, maxBroadcastQueryTerms, pin = true)
     val universe = qterms.select("term").distinct()
       .collect().map(_.getString(0)).toSeq
-    // mid-swap-aware (r12 advice): a destination-only probe would let a
-    // reader racing upsert's swapReplace transiently skip committed edits
-    def overlay(sub: String): Boolean =
-      Writers.stateExistsReadOnly(spark, s"$root/$sub")
-    val hasOverlays = overlay("tombstones") || overlay("edits")
     // while overlays pend, impact serving FALLS BACK to the exact full
     // path: the tier's denormalized df cannot be corrected from a
     // truncated list (the removed postings are unknowable), and overlays
     // are bounded interim state — the fold refreshes the tier. Documented
     // behavior, never silent wrongness: the tier's presence was already
     // checked loudly above.
-    val useImpact = impactConf.isDefined && !(applyOverlays && hasOverlays)
+    val useImpact = impactConf.isDefined && overlays.isEmpty
     val emptyOut = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(StructField("probe_id", LongType),
@@ -766,8 +754,7 @@ object LexLake {
     if (universe.isEmpty) return emptyOut
     val buckets = universe.map(bucketOf(_, nb)).distinct
     val (postL, nDocs, totalDl, docsSinceFold) = logicalQueryRows(spark,
-      droot, root, qterms, universe, nb,
-      foldOverlays = applyOverlays && hasOverlays, withPositions = false)
+      droot, overlays, qterms, universe, nb, withPositions = false)
     if (nDocs == 0L) return emptyOut
     // the impact tier's STALENESS BOUND (round 12, r11 verdict ask #3 —
     // the recall gate's freshness twin): the tier is frozen at the last
@@ -881,40 +868,13 @@ object LexLake {
                          termsCol: String = "terms",
                          k1: Double = 1.2, b: Double = 0.75,
                          proxWeight: Double = 1.0,
-                         maxBroadcastQueryTerms: Long = 1L << 20): DataFrame =
-    proximityRankServeIn(spark, GenStore.dataRoot(spark, root), root,
-      queries, n, w, queryIdCol, termsCol, k1, b, proxWeight,
-      maxBroadcastQueryTerms, applyOverlays = true)
-
-  /** [[proximityRankServe]] PINNED to an explicit generation — committed
-    * state only (the [[serveAt]] contract). */
-  def proximityRankServeAt(spark: SparkSession, root: String,
-                           generation: Option[Long],
-                           queries: DataFrame, n: Int, w: Int,
-                           queryIdCol: String = "probe_id",
-                           termsCol: String = "terms",
-                           k1: Double = 1.2, b: Double = 0.75,
-                           proxWeight: Double = 1.0,
-                           maxBroadcastQueryTerms: Long = 1L << 20)
-      : DataFrame =
-    proximityRankServeIn(spark, GenStore.dataRootOf(root, generation), root,
-      queries, n, w, queryIdCol, termsCol, k1, b, proxWeight,
-      maxBroadcastQueryTerms, applyOverlays = false)
-
-  private def proximityRankServeIn(spark: SparkSession, droot: String,
-                                   root: String, queries: DataFrame,
-                                   n: Int, w: Int, queryIdCol: String,
-                                   termsCol: String, k1: Double, b: Double,
-                                   proxWeight: Double,
-                                   maxBroadcastQueryTerms: Long,
-                                   applyOverlays: Boolean): DataFrame = {
+                         maxBroadcastQueryTerms: Long = 1L << 20,
+                         view: ReadView = ReadView.Live): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
     require(w >= 1, s"w must be >= 1, got $w")
     require(proxWeight >= 0, s"proxWeight must be >= 0, got $proxWeight")
-    val nb = servedBuckets(spark, root).getOrElse(throw
-      new IllegalArgumentException(
-        s"lex lake at $root has no layout conf — ingest something first"))
-    GenStore.requireLive(spark, droot)
+    val nb = servedBuckets(spark, root)
+    val (droot, overlays) = resolve(spark, root, view)
     val qterms = graft.operators.Serving.queryTermsBatch(queries, queryIdCol,
       termsCol, maxBroadcastQueryTerms, pin = true)
     graft.operators.Serving.requireTermCharset(qterms, "term",
@@ -928,12 +888,8 @@ object LexLake {
         StructField("score_micros", LongType),
         StructField("rank", LongType))))
     if (universe.isEmpty) return emptyOut
-    def overlay(sub: String): Boolean =
-      Writers.stateExistsReadOnly(spark, s"$root/$sub")
-    val hasOverlays = overlay("tombstones") || overlay("edits")
-    val (postL0, nDocs, totalDl, _) = logicalQueryRows(spark, droot, root,
-      qterms, universe, nb, foldOverlays = applyOverlays && hasOverlays,
-      withPositions = true)
+    val (postL0, nDocs, totalDl, _) = logicalQueryRows(spark, droot,
+      overlays, qterms, universe, nb, withPositions = true)
     if (nDocs == 0L) return emptyOut
     // pre-positional rows would silently drop the bonus arm — same loud
     // refusal as the positional serves (a bounded probe over pruned rows)
@@ -956,35 +912,21 @@ object LexLake {
       n, proxWeight)
   }
 
-  /** EXACT PHRASE serve from the STORED positional postings — the
-    * lake-resident twin of [[graft.operators.TextStats.phraseMatch]]
-    * (spec-pinned parity over the logical corpus, mutations pending or
-    * not): one bucket-pruned postings read restricted to the phrase's
-    * terms (columnar read of term/doc_id/positions only), the conjunctive
-    * rarest-word gate, then k−1 (doc, start)-keyed adjacency semi-joins
-    * over the exploded stored positions. Overlays apply exactly as in
-    * [[serve]]: tombstoned/edited docs' stored rows drop, edit texts'
-    * positional postings recompute from the bounded overlay. Output:
-    * (doc_id, occurrences), matching docs only. READER path. */
-  /** Pruned POSITIONAL postings for `terms` over the LOGICAL corpus — the
-    * read [[phraseServe]] and [[proximityServe]] share: one bucket-pruned
-    * scan of term/doc_id/positions restricted to the terms (columnar —
-    * tf/dl are never read), the pre-positional loud refusal (r11 advice:
-    * null positions would silently drop rows from every result, made
-    * permanent by the fold since the lake stores no text to rebuild
-    * from), and the overlay arms (tombstoned/edited docs' stored rows
-    * drop; edit texts' positional postings recompute from the bounded,
-    * guard-enforced overlay). */
+  /** Pruned POSITIONAL postings for `terms` over the `view`'s corpus — the
+    * read every positional serve shares: one bucket-pruned scan of
+    * term/doc_id/positions restricted to the terms (columnar — tf/dl are
+    * never read), the pre-positional loud refusal (r11 advice: null
+    * positions would silently drop rows from every result, made permanent
+    * by the fold since the lake stores no text to rebuild from), and the
+    * overlay arms (tombstoned/edited docs' stored rows drop; edit texts'
+    * positional postings recompute from the bounded, guard-enforced
+    * overlay). */
   private def positionalPostings(spark: SparkSession, root: String,
                                  terms: Seq[String],
                                  maxOverlayRows: Long,
-                                 droot0: Option[String] = None,
-                                 applyOverlays: Boolean = true): DataFrame = {
-    val nb = servedBuckets(spark, root).getOrElse(throw
-      new IllegalArgumentException(
-        s"lex lake at $root has no layout conf — ingest something first"))
-    val droot = droot0.getOrElse(GenStore.dataRoot(spark, root))
-    GenStore.requireLive(spark, droot)
+                                 view: ReadView): DataFrame = {
+    val nb = servedBuckets(spark, root)
+    val (droot, overlays) = resolve(spark, root, view, maxOverlayRows)
     val buckets = terms.map(bucketOf(_, nb)).distinct
     // the bucket IN-list is <= nBuckets values; the TERM filter stays a
     // pushed IN-list only while the (batched) universe is literal-sized —
@@ -1011,31 +953,8 @@ object LexLake {
         "needs the positional layout. Re-ingest the affected documents " +
         "(delete + upsert with their text, then reconcile) or rebuild the " +
         "store; a silent serve would drop those rows from every result.")
-    // mid-swap-aware (r12 advice): a destination-only probe would let a
-    // reader racing upsert's swapReplace transiently skip committed edits
-    def overlay(sub: String): Boolean =
-      Writers.stateExistsReadOnly(spark, s"$root/$sub")
-    if (!applyOverlays || (!overlay("tombstones") && !overlay("edits")))
-      stored
-    else {
-      val tombs = Writers.readOrEmptyReadOnly(spark, s"$root/tombstones",
-        tombstonesSchema)
-      val edits = Writers.readOrEmptyReadOnly(spark, s"$root/edits",
-          editsSchema)
-        .join(tombs, Seq("doc_id"), "left_anti")
-      val overlayIds = edits.select("doc_id")
-        .unionByName(tombs.select("doc_id")).distinct()
-      // ENFORCED broadcast bound (r11 verdict nit): overlay mass is
-      // bounded between reconciles by contract, but a mass-deletion day
-      // must refuse loudly here, not OOM the driver
-      graft.operators.Serving.requireBroadcastable(overlayIds, maxOverlayRows,
-        "the tombstone/edit overlay id set",
-        "Overlays are bounded interim state by contract — run reconcile " +
-          "to fold them, then re-run the positional serve.")
-      stored.join(broadcast(overlayIds), Seq("doc_id"), "left_anti")
-        .unionByName(termFilter(postingsOf(edits, nb))
-          .select("term", "doc_id", "positions"))
-    }
+    withOverlays(stored, overlays, nb)(
+      termFilter(_).select("term", "doc_id", "positions"))
   }
 
   /** WINDOWED PROXIMITY serve from the STORED positional postings — the
@@ -1050,31 +969,13 @@ object LexLake {
     * READER path. */
   def proximityServe(spark: SparkSession, root: String,
                      termA: String, termB: String, w: Int,
-                     maxOverlayRows: Long = 1L << 20): DataFrame = {
+                     maxOverlayRows: Long = 1L << 20,
+                     view: ReadView = ReadView.Live): DataFrame = {
     require(w >= 1, s"w must be >= 1, got $w")
     require(Seq(termA, termB).forall(_.matches("[A-Za-z0-9_-]+")),
       s"terms must be [A-Za-z0-9_-]+: $termA, $termB")
     val postL = positionalPostings(spark, root,
-      Seq(termA, termB).distinct, maxOverlayRows)
-    graft.operators.TextStats.proximityPairsFromPositions(
-      postL.select(col("doc_id"), col("term"),
-        explode(col("positions")).as("pos")),
-      termA, termB, w)
-  }
-
-  /** [[proximityServe]] PINNED to an explicit generation — committed state
-    * only, root overlays skipped (the [[serveAt]] contract). */
-  def proximityServeAt(spark: SparkSession, root: String,
-                       generation: Option[Long],
-                       termA: String, termB: String, w: Int,
-                       maxOverlayRows: Long = 1L << 20): DataFrame = {
-    require(w >= 1, s"w must be >= 1, got $w")
-    require(Seq(termA, termB).forall(_.matches("[A-Za-z0-9_-]+")),
-      s"terms must be [A-Za-z0-9_-]+: $termA, $termB")
-    val postL = positionalPostings(spark, root,
-      Seq(termA, termB).distinct, maxOverlayRows,
-      droot0 = Some(GenStore.dataRootOf(root, generation)),
-      applyOverlays = false)
+      Seq(termA, termB).distinct, maxOverlayRows, view)
     graft.operators.TextStats.proximityPairsFromPositions(
       postL.select(col("doc_id"), col("term"),
         explode(col("positions")).as("pos")),
@@ -1088,61 +989,43 @@ object LexLake {
     * window covers, read from only the query terms' buckets with overlay
     * arms exactly like the other positional serves. READER path. */
   def passageServe(spark: SparkSession, root: String, terms: Seq[String],
-                   w: Int, maxOverlayRows: Long = 1L << 20): DataFrame = {
+                   w: Int, maxOverlayRows: Long = 1L << 20,
+                   view: ReadView = ReadView.Live): DataFrame = {
     require(w >= 1, s"w must be >= 1, got $w")
     require(terms.nonEmpty && terms.forall(_.matches("[A-Za-z0-9_-]+")),
       s"terms must be [A-Za-z0-9_-]+: $terms")
     val postL = positionalPostings(spark, root, terms.distinct,
-      maxOverlayRows)
+      maxOverlayRows, view)
     graft.operators.TextStats.bestPassageWindowFromPositions(
       postL.select(col("doc_id"), col("term"),
         explode(col("positions")).as("pos")), w)
   }
 
-  /** [[passageServe]] PINNED to an explicit generation — committed state
-    * only (the [[serveAt]] contract). */
-  def passageServeAt(spark: SparkSession, root: String,
-                     generation: Option[Long], terms: Seq[String], w: Int,
-                     maxOverlayRows: Long = 1L << 20): DataFrame = {
-    require(w >= 1, s"w must be >= 1, got $w")
-    require(terms.nonEmpty && terms.forall(_.matches("[A-Za-z0-9_-]+")),
-      s"terms must be [A-Za-z0-9_-]+: $terms")
-    val postL = positionalPostings(spark, root, terms.distinct,
-      maxOverlayRows, droot0 = Some(GenStore.dataRootOf(root, generation)),
-      applyOverlays = false)
-    graft.operators.TextStats.bestPassageWindowFromPositions(
-      postL.select(col("doc_id"), col("term"),
-        explode(col("positions")).as("pos")), w)
-  }
-
+  /** EXACT PHRASE serve from the STORED positional postings — the
+    * lake-resident twin of [[graft.operators.TextStats.phraseMatch]]
+    * (spec-pinned parity over the logical corpus, mutations pending or
+    * not): one bucket-pruned postings read restricted to the phrase's
+    * terms (columnar read of term/doc_id/positions only), the conjunctive
+    * rarest-word gate, then k−1 (doc, start)-keyed adjacency semi-joins
+    * over the exploded stored positions. Overlays apply exactly as in
+    * [[serve]]: tombstoned/edited docs' stored rows drop, edit texts'
+    * positional postings recompute from the bounded overlay. Under a
+    * pinned view it is [[Retrieval.hybridServe]]'s phrase gate, so the
+    * gate and the arms it filters read ONE corpus view. Output:
+    * (doc_id, occurrences), matching docs only. READER path. */
   def phraseServe(spark: SparkSession, root: String,
                   phrase: Seq[String],
-                  maxOverlayRows: Long = 1L << 20): DataFrame = {
+                  maxOverlayRows: Long = 1L << 20,
+                  view: ReadView = ReadView.Live): DataFrame = {
     require(phrase.nonEmpty, "phrase must carry at least one token")
     require(phrase.forall(_.matches("[A-Za-z0-9_-]+")),
       s"phrase tokens must be [A-Za-z0-9_-]+: $phrase")
     phraseFold(positionalPostings(spark, root, phrase.distinct,
-      maxOverlayRows), phrase)
-  }
-
-  /** [[phraseServe]] PINNED to an explicit generation — committed state
-    * only, root overlays skipped (the [[serveAt]] contract); what
-    * [[Retrieval.hybridServeAt]]'s phrase arm gates with, so the gate and
-    * the arms it filters read ONE corpus view. */
-  def phraseServeAt(spark: SparkSession, root: String,
-                    generation: Option[Long], phrase: Seq[String],
-                    maxOverlayRows: Long = 1L << 20): DataFrame = {
-    require(phrase.nonEmpty, "phrase must carry at least one token")
-    require(phrase.forall(_.matches("[A-Za-z0-9_-]+")),
-      s"phrase tokens must be [A-Za-z0-9_-]+: $phrase")
-    phraseFold(positionalPostings(spark, root, phrase.distinct,
-      maxOverlayRows, droot0 = Some(GenStore.dataRootOf(root, generation)),
-      applyOverlays = false), phrase)
+      maxOverlayRows, view), phrase)
   }
 
   /** The conjunctive gate + adjacency fold over a positional posting
-    * frame — the phraseMatch plan verbatim, shared by the pinned and
-    * unpinned phrase serves. */
+    * frame — the phraseMatch plan verbatim. */
   private def phraseFold(postL: DataFrame, phrase: Seq[String]): DataFrame = {
     val k = phrase.size
     val terms = phrase.distinct
@@ -1183,38 +1066,14 @@ object LexLake {
                        probeIdCol: String = "probe_id",
                        phraseCol: String = "phrase",
                        maxBroadcastQueryTerms: Long = 1L << 20,
-                       maxOverlayRows: Long = 1L << 20): DataFrame =
-    phraseServeBatchIn(spark, root, probes, probeIdCol, phraseCol,
-      maxBroadcastQueryTerms, maxOverlayRows, droot0 = None,
-      applyOverlays = true)
-
-  /** [[phraseServeBatch]] PINNED to an explicit generation — committed
-    * state only, root overlays skipped (the [[serveAt]] contract). */
-  def phraseServeBatchAt(spark: SparkSession, root: String,
-                         generation: Option[Long], probes: DataFrame,
-                         probeIdCol: String = "probe_id",
-                         phraseCol: String = "phrase",
-                         maxBroadcastQueryTerms: Long = 1L << 20,
-                         maxOverlayRows: Long = 1L << 20): DataFrame =
-    phraseServeBatchIn(spark, root, probes, probeIdCol, phraseCol,
-      maxBroadcastQueryTerms, maxOverlayRows,
-      droot0 = Some(GenStore.dataRootOf(root, generation)),
-      applyOverlays = false)
-
-  private def phraseServeBatchIn(spark: SparkSession, root: String,
-                                 probes: DataFrame, probeIdCol: String,
-                                 phraseCol: String,
-                                 maxBroadcastQueryTerms: Long,
-                                 maxOverlayRows: Long,
-                                 droot0: Option[String],
-                                 applyOverlays: Boolean): DataFrame = {
+                       maxOverlayRows: Long = 1L << 20,
+                       view: ReadView = ReadView.Live): DataFrame = {
     val slots = graft.operators.Serving.phraseSlotsBatch(probes, probeIdCol,
       phraseCol, maxBroadcastQueryTerms)
     val universe = slots.select("term").distinct()
       .collect().map(_.getString(0)).toSeq
     graft.operators.TextStats.phraseOccurrencesBatchFromPositions(
-      batchPositions(spark, root, universe, maxOverlayRows, droot0,
-        applyOverlays), slots)
+      batchPositions(spark, root, universe, maxOverlayRows, view), slots)
   }
 
   /** The ONE materialized positional read a batch serve folds over:
@@ -1226,10 +1085,8 @@ object LexLake {
     * exists for; plan-pinned in LexLakeSpec). */
   private def batchPositions(spark: SparkSession, root: String,
                              universe: Seq[String], maxOverlayRows: Long,
-                             droot0: Option[String],
-                             applyOverlays: Boolean): DataFrame =
-    positionalPostings(spark, root, universe, maxOverlayRows,
-      droot0 = droot0, applyOverlays = applyOverlays)
+                             view: ReadView): DataFrame =
+    positionalPostings(spark, root, universe, maxOverlayRows, view)
       .select(col("doc_id"), col("term"),
         explode(col("positions")).as("pos"))
       .localCheckpoint(true)
@@ -1241,32 +1098,15 @@ object LexLake {
     * co-occurring docs only. READER path. */
   def proximityServeBatch(spark: SparkSession, root: String,
                           probes: DataFrame, w: Int,
-                          maxOverlayRows: Long = 1L << 20): DataFrame =
-    proximityServeBatchIn(spark, root, probes, w, maxOverlayRows,
-      droot0 = None, applyOverlays = true)
-
-  /** [[proximityServeBatch]] PINNED to an explicit generation. */
-  def proximityServeBatchAt(spark: SparkSession, root: String,
-                            generation: Option[Long], probes: DataFrame,
-                            w: Int,
-                            maxOverlayRows: Long = 1L << 20): DataFrame =
-    proximityServeBatchIn(spark, root, probes, w, maxOverlayRows,
-      droot0 = Some(GenStore.dataRootOf(root, generation)),
-      applyOverlays = false)
-
-  private def proximityServeBatchIn(spark: SparkSession, root: String,
-                                    probes: DataFrame, w: Int,
-                                    maxOverlayRows: Long,
-                                    droot0: Option[String],
-                                    applyOverlays: Boolean): DataFrame = {
+                          maxOverlayRows: Long = 1L << 20,
+                          view: ReadView = ReadView.Live): DataFrame = {
     require(w >= 1, s"w must be >= 1, got $w")
     val p = graft.operators.Serving.termPairProbes(probes)
     val universe = p.select(col("term_a").as("term"))
       .unionByName(p.select(col("term_b").as("term")))
       .distinct().collect().map(_.getString(0)).toSeq
     graft.operators.TextStats.proximityPairsBatchFromPositions(
-      batchPositions(spark, root, universe, maxOverlayRows, droot0,
-        applyOverlays), p, w)
+      batchPositions(spark, root, universe, maxOverlayRows, view), p, w)
   }
 
   /** Batched [[passageServe]]: `probes` is (probe_id, terms array<string>)
@@ -1277,31 +1117,8 @@ object LexLake {
                         probeIdCol: String = "probe_id",
                         termsCol: String = "terms",
                         maxBroadcastQueryTerms: Long = 1L << 20,
-                        maxOverlayRows: Long = 1L << 20): DataFrame =
-    passageServeBatchIn(spark, root, probes, w, probeIdCol, termsCol,
-      maxBroadcastQueryTerms, maxOverlayRows, droot0 = None,
-      applyOverlays = true)
-
-  /** [[passageServeBatch]] PINNED to an explicit generation. */
-  def passageServeBatchAt(spark: SparkSession, root: String,
-                          generation: Option[Long], probes: DataFrame,
-                          w: Int,
-                          probeIdCol: String = "probe_id",
-                          termsCol: String = "terms",
-                          maxBroadcastQueryTerms: Long = 1L << 20,
-                          maxOverlayRows: Long = 1L << 20): DataFrame =
-    passageServeBatchIn(spark, root, probes, w, probeIdCol, termsCol,
-      maxBroadcastQueryTerms, maxOverlayRows,
-      droot0 = Some(GenStore.dataRootOf(root, generation)),
-      applyOverlays = false)
-
-  private def passageServeBatchIn(spark: SparkSession, root: String,
-                                  probes: DataFrame, w: Int,
-                                  probeIdCol: String, termsCol: String,
-                                  maxBroadcastQueryTerms: Long,
-                                  maxOverlayRows: Long,
-                                  droot0: Option[String],
-                                  applyOverlays: Boolean): DataFrame = {
+                        maxOverlayRows: Long = 1L << 20,
+                        view: ReadView = ReadView.Live): DataFrame = {
     require(w >= 1, s"w must be >= 1, got $w")
     val qterms = graft.operators.Serving.queryTermsBatch(probes, probeIdCol,
       termsCol, maxBroadcastQueryTerms, pin = true)
@@ -1310,8 +1127,7 @@ object LexLake {
     val universe = qterms.select("term").distinct()
       .collect().map(_.getString(0)).toSeq
     graft.operators.TextStats.bestPassageWindowBatchFromPositions(
-      batchPositions(spark, root, universe, maxOverlayRows, droot0,
-        applyOverlays), qterms, w)
+      batchPositions(spark, root, universe, maxOverlayRows, view), qterms, w)
   }
 
   /** FOLD + COMPACT + REBASE as a new generation: postings and doclens are
@@ -1613,20 +1429,14 @@ object LexLake {
     * state and names the overlay mass separately, which is the operator's
     * actual question ("how much is pending the fold?"). */
   def health(spark: SparkSession, root: String): DataFrame = {
-    val nb = servedBuckets(spark, root).getOrElse(throw
-      new IllegalArgumentException(
-        s"lex lake at $root has no layout conf — ingest something first"))
-    val droot = GenStore.dataRoot(spark, root)
-    GenStore.requireLive(spark, droot)
+    val nb = servedBuckets(spark, root)
+    val (droot, _) = GenStore.resolve(spark, root, ReadView.Live)
     val post = GenStore.readGenOrEmpty(spark, droot, "postings",
       postingsSchema)
     val nDocs = GenStore.readGenOrEmpty(spark, droot, "stats", statsSchema)
       .agg(coalesce(sum(col("n_docs")), lit(0L))).head().getLong(0)
     require(nDocs > 0, s"lex lake at $root holds no documents")
-    val tombs = Writers.readOrEmptyReadOnly(spark, s"$root/tombstones",
-      tombstonesSchema)
-    val edits = Writers.readOrEmptyReadOnly(spark, s"$root/edits",
-      editsSchema)
+    val (tombs, edits) = overlayDirs(spark, root)
     // the resident impact tier (when adopted) feeds the staleness column:
     // its denormalized df IS the at-fold df per capped term
     val fsRoot = new org.apache.hadoop.fs.Path(s"$droot/impactconf")

@@ -20,14 +20,14 @@ import graft.operators.Similarity
   * once inside its own serve — the two stores version independently (they
   * are separate indexes over one id space, the [[LakeSync]] contract).
   *
-  * SNAPSHOT PINNING ([[currentSnapshot]] + [[hybridServeAt]], the r10
-  * verdict ask): [[hybridServe]]'s independent resolutions leave a window —
-  * a reconcile promoting on ONE lake between the two arms' reads fuses
-  * mismatched corpus views (an upserted doc's new text in [[LexLake]]
+  * SNAPSHOT PINNING ([[currentSnapshot]] + `hybridServe(snapshot = …)`,
+  * the r10 verdict ask): the live serve's independent resolutions leave a
+  * window — a reconcile promoting on ONE lake between the two arms'
+  * reads fuses mismatched corpus views (an upserted doc's new text in [[LexLake]]
   * ranked against its old embedding in [[VectorLake]], or one side of a
   * rollback). A serving deployment instead reads BOTH pointers once
   * ([[currentSnapshot]]) and serves every batch against the pinned pair
-  * until it chooses to refresh — the [[VectorLake.searchBatchAt]]
+  * until it chooses to refresh — the [[VectorLake.searchBatch]] pinned
   * shadow-read idiom, paired. Pinned serves read COMMITTED generation
   * state only, on BOTH arms: each lake routes deletes and upserts through
   * root-level tombstone/edit overlays that pinned reads skip (uncommitted
@@ -51,6 +51,14 @@ object Retrieval {
     Snapshot(GenStore.currentGen(spark, vectorRoot),
       GenStore.currentGen(spark, lexRoot))
 
+  /** `snapshot = Some(pair)` PINS both arms to the pair's committed
+    * generations (see the object doc's coherence contract) — the vector
+    * search, the lexical serve AND the phrase gate all read
+    * [[ReadView.Pinned]] views. A pinned generation that retention dropped
+    * refuses loudly at resolve time on its own arm. `vectorGen = None` (a
+    * never-reconciled vector store) serves that arm LIVE — there is no
+    * committed generation to pin yet. `None` (the default) serves both
+    * arms live. */
   def hybridServe(spark: SparkSession, vectorRoot: String, lexRoot: String,
                   probes: DataFrame, k: Int,
                   kVec: Int = 10, nLex: Int = 10,
@@ -60,11 +68,16 @@ object Retrieval {
                   quantized: Boolean = false,
                   refineFactor: Int = 0,
                   prfFbDocs: Int = 0, prfFbTerms: Int = 0,
-                  phrase: Seq[String] = Nil): DataFrame = {
+                  phrase: Seq[String] = Nil,
+                  snapshot: Option[Snapshot] = None): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require((prfFbDocs > 0) == (prfFbTerms > 0),
       s"prfFbDocs=$prfFbDocs, prfFbTerms=$prfFbTerms — the PRF arm needs " +
         "both (feedback depth AND expansion width) or neither")
+    val vecView = snapshot.flatMap(_.vectorGen)
+      .fold[ReadView](ReadView.Live)(g => ReadView.Pinned(Some(g)))
+    val lexView = snapshot
+      .fold[ReadView](ReadView.Live)(s => ReadView.Pinned(s.lexGen))
     // pinned: both arms evaluate the probe frame independently — an
     // unpinned non-deterministic source could serve one probe set to the
     // vector arm and another to the lexical arm (the searchBatch pinning
@@ -73,16 +86,16 @@ object Retrieval {
       col(vecCol), col(termsCol)).localCheckpoint(true)
     val vec = VectorLake.searchBatch(spark, vectorRoot, p, kVec, nprobe,
         probeId = "probe_id", probeVec = vecCol,
-        quantized = quantized, refineFactor = refineFactor)
+        quantized = quantized, refineFactor = refineFactor, view = vecView)
       .select("probe_id", "neighbor_id", "rank")
     // the EXPANDED-TERMS arm (r11 verdict ask #5): prfFbDocs/prfFbTerms > 0
     // swaps the lexical retriever for the two-pass PRF serve — first-pass
     // feedback expands each probe's terms before the list that fuses
     val lex = (if (prfFbDocs > 0)
         LexLake.prfServe(spark, lexRoot, p, nLex, prfFbDocs, prfFbTerms,
-          queryIdCol = "probe_id", termsCol = termsCol)
+          queryIdCol = "probe_id", termsCol = termsCol, view = lexView)
       else LexLake.serve(spark, lexRoot, p, nLex,
-        queryIdCol = "probe_id", termsCol = termsCol))
+        queryIdCol = "probe_id", termsCol = termsCol, view = lexView))
       .select(col("probe_id"), col("doc_id").as("neighbor_id"), col("rank"))
     // the PHRASE-CONSTRAINED arm (r11 verdict ask #7) — the "exact quote +
     // semantic" query every retrieval product ships: the phrase's doc set
@@ -90,59 +103,12 @@ object Retrieval {
     // the fused candidates BEFORE the final rank, so each probe's top-k is
     // taken over quote-bearing docs only — a fused candidate that merely
     // scored well lexically/semantically cannot displace one that carries
-    // the quote.
+    // the quote. The gate reads the SAME view as the lexical arm it
+    // filters — one corpus view end to end.
     val gate =
       if (phrase.isEmpty) None
-      else Some(LexLake.phraseServe(spark, lexRoot, phrase)
+      else Some(LexLake.phraseServe(spark, lexRoot, phrase, view = lexView)
         .select(col("doc_id").as("neighbor_id")))
     Similarity.rrfFuseAll(Seq(vec, lex), k, kRrf, candidates = gate)
-  }
-
-  /** [[hybridServe]] PINNED to a [[Snapshot]] — both arms serve the pair's
-    * committed generations (see the object doc's coherence contract). A
-    * pinned generation that retention dropped refuses loudly at resolve
-    * time on its own arm. `snapshot.vectorGen = None` (a never-reconciled
-    * vector store) serves that arm's legacy layout unpinned — there is no
-    * committed generation to pin yet. */
-  def hybridServeAt(spark: SparkSession, vectorRoot: String, lexRoot: String,
-                    snapshot: Snapshot,
-                    probes: DataFrame, k: Int,
-                    kVec: Int = 10, nLex: Int = 10,
-                    nprobe: Int = 2, kRrf: Int = 60,
-                    probeId: String = "probe_id",
-                    vecCol: String = "embedding", termsCol: String = "terms",
-                    quantized: Boolean = false,
-                    refineFactor: Int = 0,
-                    prfFbDocs: Int = 0, prfFbTerms: Int = 0,
-                    phrase: Seq[String] = Nil): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    require((prfFbDocs > 0) == (prfFbTerms > 0),
-      s"prfFbDocs=$prfFbDocs, prfFbTerms=$prfFbTerms — the PRF arm needs " +
-        "both (feedback depth AND expansion width) or neither")
-    val p = probes.select(col(probeId).cast("long").as("probe_id"),
-      col(vecCol), col(termsCol)).localCheckpoint(true)
-    val vec = snapshot.vectorGen match {
-      case Some(g) => VectorLake.searchBatchAt(spark, vectorRoot, g, p, kVec,
-        nprobe, probeId = "probe_id", probeVec = vecCol,
-        quantized = quantized, refineFactor = refineFactor)
-      case None => VectorLake.searchBatch(spark, vectorRoot, p, kVec, nprobe,
-        probeId = "probe_id", probeVec = vecCol,
-        quantized = quantized, refineFactor = refineFactor)
-    }
-    val lex = (if (prfFbDocs > 0)
-        LexLake.prfServeAt(spark, lexRoot, snapshot.lexGen, p, nLex,
-          prfFbDocs, prfFbTerms, queryIdCol = "probe_id",
-          termsCol = termsCol)
-      else LexLake.serveAt(spark, lexRoot, snapshot.lexGen, p, nLex,
-        queryIdCol = "probe_id", termsCol = termsCol))
-      .select(col("probe_id"), col("doc_id").as("neighbor_id"), col("rank"))
-    // the phrase gate reads the SAME pinned lexical generation as the arm
-    // it filters — one corpus view end to end
-    val gate =
-      if (phrase.isEmpty) None
-      else Some(LexLake.phraseServeAt(spark, lexRoot, snapshot.lexGen,
-        phrase).select(col("doc_id").as("neighbor_id")))
-    Similarity.rrfFuseAll(Seq(vec.select("probe_id", "neighbor_id", "rank"),
-      lex), k, kRrf, candidates = gate)
   }
 }

@@ -28,9 +28,9 @@ import graft.sources.Writers
   *    UNCOMMITTED mutation state shared across generations, applied by
   *    every unpinned read immediately (tombstoned ids vanish, edited ids
   *    serve the overlay's embedding assigned under the generation's
-  *    quantizer), SKIPPED by pinned reads ([[searchBatchAt]] serves the
+  *    quantizer), SKIPPED by pinned reads ([[ReadView.Pinned]] serves the
   *    generation's committed state only — what makes a
-  *    [[Retrieval.hybridServeAt]] snapshot byte-frozen across a concurrent
+  *    [[Retrieval.hybridServe]] snapshot byte-frozen across a concurrent
   *    [[LakeSync.propagate]], the r11 verdict's top ask), and FOLDED into
   *    gen-(N+1) by [[reconcile]], which clears them. Generations written
   *    before round 12 may still carry a legacy `gen-N/tombstones/` dir —
@@ -530,7 +530,7 @@ object VectorLake {
     * [[searchBatch]] float and quantized, [[driftReport]], the ingest
     * near-dup gate — excludes tombstoned rows from that moment, so
     * deleted content can neither be served nor suppress new ingests.
-    * PINNED reads ([[searchBatchAt]]) serve the generation's committed
+    * PINNED reads ([[ReadView.Pinned]]) serve the generation's committed
     * state until the fold — the snapshot contract. The PHYSICAL rows (and
     * their SQ codes) wait for the next [[reconcile]], whose generation
     * rewrite drops them and clears the overlay — deletes are rare, and
@@ -577,8 +577,8 @@ object VectorLake {
     * sanctioned id resurrection). From that commit every UNPINNED read
     * serves the NEW embedding (assigned under the current quantizer,
     * full-float on the quantized paths); the COMMITTED generations are
-    * untouched, so a PINNED read ([[searchBatchAt]], a
-    * [[Retrieval.hybridServeAt]] snapshot) stays byte-frozen across the
+    * untouched, so a PINNED read ([[ReadView.Pinned]], a
+    * [[Retrieval.hybridServe]] snapshot) stays byte-frozen across the
     * upsert — the r11 verdict's top ask (the old leaf-rewrite form
     * mutated the current generation in place, which broke exactly that).
     * The next [[reconcile]] folds the overlay into the physical
@@ -705,6 +705,14 @@ object VectorLake {
       .limit(k)
   }
 
+  /** The resident generation numbers, oldest first — what a
+    * [[ReadView.Pinned]] shadow read names. Under the default retention
+    * this is (displaced, current): the displaced generation survives
+    * exactly one promotion FOR THIS — shadow reads. Read-only; empty for a
+    * pointer-less legacy store. */
+  def generations(spark: SparkSession, root: String): Seq[Long] =
+    GenStore.generations(spark, root)
+
   /** Batched probing search — the serving read a retrieval deployment
     * actually issues (r8 verdict ask #1): ONE partition-pruned store scan
     * amortized over a whole probe batch, instead of [[search]]'s one Spark
@@ -723,59 +731,32 @@ object VectorLake {
     * [[search]](itsVec, k, nprobe)'s — spec-pinned parity. Output:
     * (probe_id, neighbor_id, cos, rank). READER path: no lease, read-only
     * swap resolution. The probe batch BROADCASTS, serving-bounded by
-    * contract and enforced exactly like ingest's gate. */
+    * contract and enforced exactly like ingest's gate.
+    *
+    * `view = ReadView.Pinned(Some(g))` is the SHADOW READ an index
+    * deployment runs before trusting a promotion: serve the same probe
+    * batch against the displaced generation and the new one
+    * ([[generations]] lists both under the default retention), diff the
+    * result lists (retrievalEval/nDCG with one side as truth), and
+    * [[rollback]] if the retrain regressed recall. A pinned read serves
+    * the generation's committed state (root overlays skipped); a
+    * generation retention has dropped (or never wrote) refuses loudly at
+    * resolve time, same message as a stranded reader. */
   def searchBatch(spark: SparkSession, root: String, probes: DataFrame,
                   k: Int, nprobe: Int = 2,
                   probeId: String = "probe_id",
                   probeVec: String = "embedding",
                   quantized: Boolean = false,
                   refineFactor: Int = 0,
-                  maxBroadcastProbes: Long = 1L << 20): DataFrame =
-    searchBatchIn(spark, dataRoot(spark, root), root, probes, k, nprobe,
-      probeId, probeVec, quantized, refineFactor, maxBroadcastProbes,
-      applyOverlays = true)
-
-  /** The resident generation numbers, oldest first — what [[searchBatchAt]]
-    * accepts. Under the default retention this is (displaced, current): the
-    * displaced generation survives exactly one promotion FOR THIS — shadow
-    * reads. Read-only; empty for a pointer-less legacy store. */
-  def generations(spark: SparkSession, root: String): Seq[Long] =
-    GenStore.generations(spark, root)
-
-  /** [[searchBatch]] PINNED to an explicit resident generation — the shadow
-    * read an index deployment runs BEFORE trusting a promotion: serve the
-    * same probe batch against the displaced generation and the new one
-    * ([[generations]] lists both under the default retention), diff the
-    * result lists (retrievalEval/nDCG with one side as truth), and roll
-    * back — re-promote from the old generation's data — if the retrain
-    * regressed recall. A generation retention has dropped (or never wrote)
-    * refuses loudly at resolve time, same message as a stranded reader. */
-  def searchBatchAt(spark: SparkSession, root: String, generation: Long,
-                    probes: DataFrame, k: Int, nprobe: Int = 2,
-                    probeId: String = "probe_id",
-                    probeVec: String = "embedding",
-                    quantized: Boolean = false,
-                    refineFactor: Int = 0,
-                    maxBroadcastProbes: Long = 1L << 20): DataFrame =
-    searchBatchIn(spark, s"$root/gen-$generation", root, probes, k, nprobe,
-      probeId, probeVec, quantized, refineFactor, maxBroadcastProbes,
-      applyOverlays = false)
-
-  private def searchBatchIn(spark: SparkSession, droot: String, root: String,
-                            probes: DataFrame, k: Int, nprobe: Int,
-                            probeId: String, probeVec: String,
-                            quantized: Boolean, refineFactor: Int,
-                            maxBroadcastProbes: Long,
-                            applyOverlays: Boolean): DataFrame = {
+                  maxBroadcastProbes: Long = 1L << 20,
+                  view: ReadView = ReadView.Live): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     require(refineFactor == 0 || quantized,
       s"refineFactor=$refineFactor without quantized=true — the refine " +
         "stage rescores a QUANTIZED scan's candidates against the float " +
         "tier; a float scan is already exact and has nothing to refine")
-    // a pinned generation that retention dropped (or that never existed)
-    // fails HERE with the stranded-reader message, not on an empty scan
-    GenStore.requireLive(spark, droot)
+    val (droot, applyOverlays) = GenStore.resolve(spark, root, view)
     val cents = centroidsAt(spark, droot, root)
     val np = math.min(nprobe, cents.size)
     // PINNED: the probe frame is evaluated several times (union-list
@@ -800,8 +781,8 @@ object VectorLake {
     def pruneLists(df: DataFrame): DataFrame =
       if (unionLists.isEmpty) df.filter(lit(false))
       else df.filter(col("ivf_list").isInCollection(unionLists))
-    // the root delete/edit overlays apply to UNPINNED serves only: a
-    // pinned read ([[searchBatchAt]]) serves the generation's COMMITTED
+    // the root delete/edit overlays apply to the LIVE view only: a
+    // pinned read ([[ReadView.Pinned]]) serves the generation's COMMITTED
     // state, byte-frozen across concurrent deletes/upserts (the r11
     // verdict's top ask — overlay rows are uncommitted until the fold).
     // On the QUANTIZED scan, overlay edit rows score through the
@@ -867,7 +848,7 @@ object VectorLake {
   }
 
   /** ROLL BACK to a still-resident older generation — the undo a shadow
-    * read ([[searchBatchAt]] old-vs-new, diffed with
+    * read ([[ReadView.Pinned]] old-vs-new, diffed with
     * [[Similarity.retrievalEval]]/nDCG) calls for when a promotion
     * regressed recall. One pointer flip under the writer lease (the
     * generation trees are immutable once written, so there is nothing else
@@ -915,7 +896,7 @@ object VectorLake {
 
   /** Pending-overlay masses — (tombstones, edits) rows awaiting the next
     * [[reconcile]]'s fold: exactly the mutation state a PINNED read
-    * ([[searchBatchAt]], a [[Retrieval.hybridServeAt]] snapshot) is NOT
+    * ([[ReadView.Pinned]], a [[Retrieval.hybridServe]] snapshot) is NOT
     * seeing, so this is the operator's "fold before re-pinning?" check
     * (the vector twin of the lex health report's overlay columns, and of
     * [[LakeSync.pending]] one level down). Two bounded counts over the

@@ -688,8 +688,8 @@ object Streams {
     * (probe_id, embedding, terms; ids unique — refused loudly by both
     * arms) pins ONE coherent (vectorGen, lexGen) snapshot
     * ([[graft.domain.Retrieval.currentSnapshot]] — both pointers read
-    * together) and serves [[graft.domain.Retrieval.hybridServeAt]] against
-    * it: vector IVF scan + lexical BM25 postings scan, fused per probe by
+    * together) and serves [[graft.domain.Retrieval.hybridServe]] pinned
+    * to it: vector IVF scan + lexical BM25 postings scan, fused per probe by
     * reciprocal rank in exact integer micros. Epoch-level re-resolution: a
     * reconcile promoting on either lake mid-stream is picked up at the
     * NEXT micro-batch, and no epoch can fuse mismatched generations — the
@@ -725,10 +725,11 @@ object Streams {
     probes.writeStream.foreachBatch { (batch: DataFrame, epoch: Long) =>
       val s = batch.sparkSession
       val snap = graft.domain.Retrieval.currentSnapshot(s, vectorRoot, lexRoot)
-      sink(epoch, graft.domain.Retrieval.hybridServeAt(s, vectorRoot, lexRoot,
-        snap, batch, k, kVec, nLex, nprobe, kRrf,
+      sink(epoch, graft.domain.Retrieval.hybridServe(s, vectorRoot, lexRoot,
+        batch, k, kVec, nLex, nprobe, kRrf,
         quantized = quantized, refineFactor = refineFactor,
-        prfFbDocs = prfFbDocs, prfFbTerms = prfFbTerms, phrase = phrase))
+        prfFbDocs = prfFbDocs, prfFbTerms = prfFbTerms, phrase = phrase,
+        snapshot = Some(snap)))
     }
 
   /** S19 webhook sink seam: the engine core stays offline-testable; the HTTP

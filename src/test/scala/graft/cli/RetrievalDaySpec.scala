@@ -64,7 +64,7 @@ class RetrievalDaySpec extends SparkSpec {
     // the r10 verdict ask: hybridServe resolves each lake independently, so
     // an edit that reached only ONE store fuses its new text against the
     // other store's old state. currentSnapshot reads both pointers once;
-    // hybridServeAt serves the pinned pair's COMMITTED generations (the
+    // hybridServe(snapshot = …) serves the pair's COMMITTED generations (the
     // lex arm skips the uncommitted root overlays), so the torn window is
     // invisible to a pinned serve and explicit in an unpinned one.
     import spark.implicits._
@@ -87,20 +87,20 @@ class RetrievalDaySpec extends SparkSpec {
     LexLake.reconcile(spark, lroot)
     val probe = Seq((7L, unit(10), Seq("marker")))
       .toDF("probe_id", "embedding", "terms")
-    val snap = graft.Engine.retrievalSnapshot(spark, vroot, lroot)
+    val snap = Retrieval.currentSnapshot(spark, vroot, lroot)
     assert(snap == Retrieval.Snapshot(Some(0L), Some(0L)))
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long, Long)] =
       df.collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val pinnedBefore = rows(graft.Engine.hybridServeAt(
-      spark, vroot, lroot, snap, probe, k = 5))
+    val pinnedBefore = rows(Retrieval.hybridServe(
+      spark, vroot, lroot, probe, k = 5, snapshot = Some(snap)))
     // the torn fan-out: the edit lands in the LEX lake only (a LakeSync
     // propagate crashed before the other arm) — new text says "marker"
     LexLake.upsert(spark, lroot,
       Seq((2L, "zzz special marker words")).toDF("doc_id", "text"))
-    val pinned = graft.Engine.hybridServeAt(
-      spark, vroot, lroot, snap, probe, k = 5)
-    val unpinned = graft.Engine.hybridServe(
+    val pinned = Retrieval.hybridServe(
+      spark, vroot, lroot, probe, k = 5, snapshot = Some(snap))
+    val unpinned = Retrieval.hybridServe(
       spark, vroot, lroot, probe, k = 5)
     // pinned pair: byte-identical to the pre-edit serve — the half-landed
     // edit is invisible, both arms agree on the committed corpus
@@ -154,13 +154,13 @@ class RetrievalDaySpec extends SparkSpec {
       df.collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     val snap = Retrieval.currentSnapshot(spark, vroot, lroot)
-    val pinnedBefore = rows(Retrieval.hybridServeAt(
-      spark, vroot, lroot, snap, probe, k = 5))
+    val pinnedBefore = rows(Retrieval.hybridServe(
+      spark, vroot, lroot, probe, k = 5, snapshot = Some(snap)))
     // the phrase-gated pinned serve reads the SAME pinned view (gate
     // included): frozen across the propagate too
-    val pinnedPhraseBefore = rows(Retrieval.hybridServeAt(
-      spark, vroot, lroot, snap, probe, k = 5,
-      phrase = Seq("second", "body")))
+    val pinnedPhraseBefore = rows(Retrieval.hybridServe(
+      spark, vroot, lroot, probe, k = 5,
+      phrase = Seq("second", "body"), snapshot = Some(snap)))
     assert(pinnedPhraseBefore.nonEmpty, "the committed corpus carries the quote")
     // the propagate, mid-pinned-batch: purge doc 3 AND re-embed+re-text
     // doc 2 (its new embedding is the probe's own direction; its new text
@@ -176,12 +176,14 @@ class RetrievalDaySpec extends SparkSpec {
     // the pinned pair: byte-identical on BOTH arms — the vector arm did
     // not see the re-embed (the old leaf-rewrite design failed exactly
     // here), the lex arm did not see the purge or the new text
-    assert(rows(Retrieval.hybridServeAt(
-        spark, vroot, lroot, snap, probe, k = 5)) == pinnedBefore,
+    assert(rows(Retrieval.hybridServe(
+        spark, vroot, lroot, probe, k = 5, snapshot = Some(snap)))
+      == pinnedBefore,
       "a propagate mid-pinned-batch must not move the pinned pair by a byte")
-    assert(rows(Retrieval.hybridServeAt(
-        spark, vroot, lroot, snap, probe, k = 5,
-        phrase = Seq("second", "body"))) == pinnedPhraseBefore,
+    assert(rows(Retrieval.hybridServe(
+        spark, vroot, lroot, probe, k = 5,
+        phrase = Seq("second", "body"), snapshot = Some(snap)))
+      == pinnedPhraseBefore,
       "the pinned phrase gate must read the pinned view too — the re-text " +
         "(which removed the quote) is invisible until the fold")
     // the UNPINNED serve carries both mutations immediately: doc 3 gone,
@@ -195,8 +197,8 @@ class RetrievalDaySpec extends SparkSpec {
     VectorLake.reconcile(spark, vroot, k = 2, iters = 3)
     LexLake.reconcile(spark, lroot)
     val snap2 = Retrieval.currentSnapshot(spark, vroot, lroot)
-    assert(rows(Retrieval.hybridServeAt(
-        spark, vroot, lroot, snap2, probe, k = 5))
+    assert(rows(Retrieval.hybridServe(
+        spark, vroot, lroot, probe, k = 5, snapshot = Some(snap2)))
       == rows(Retrieval.hybridServe(spark, vroot, lroot, probe, k = 5)),
       "with overlays folded, the re-pinned pair equals the unpinned serve")
   }
@@ -274,7 +276,7 @@ class RetrievalDaySpec extends SparkSpec {
     // r12 verdict ask #3: batch hybridServe grew PRF/phrase/quantized arms
     // in r11-r12 while the streaming endpoint served plain hybrid. The
     // arms now ride through per epoch — every epoch must equal batch
-    // hybridServeAt on the SAME pinned snapshot with the SAME arms, an
+    // hybridServe on the SAME pinned snapshot with the SAME arms, an
     // uncommitted overlay stays invisible, and a mid-stream reconcile is
     // picked up at the next epoch's re-pin.
     import spark.implicits._
@@ -297,12 +299,12 @@ class RetrievalDaySpec extends SparkSpec {
     LexLake.reconcile(spark, lroot)
     val arms = (2, 2, Seq("second", "body")) // (prfFbDocs, prfFbTerms, phrase)
     def batchAt(pid: Long): Set[(Long, Long, Long, Long)] =
-      Retrieval.hybridServeAt(spark, vroot, lroot,
-          Retrieval.currentSnapshot(spark, vroot, lroot),
+      Retrieval.hybridServe(spark, vroot, lroot,
           Seq((pid, unit(10), Seq("marker")))
             .toDF("probe_id", "embedding", "terms"),
           k = 5, prfFbDocs = arms._1, prfFbTerms = arms._2,
-          phrase = arms._3)
+          phrase = arms._3,
+          snapshot = Some(Retrieval.currentSnapshot(spark, vroot, lroot)))
         .collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     def shape(rs: Iterable[(Long, Long, Long, Long)]): Set[(Long, Long, Long)] =
@@ -326,7 +328,7 @@ class RetrievalDaySpec extends SparkSpec {
       q.processAllAvailable()
       assert(got.contains(7L), "the phrase-bearing doc must serve")
       assert(got(7L) == batchAt(7L),
-        "epoch serve == batch hybridServeAt with identical arms")
+        "epoch serve == batch pinned hybridServe with identical arms")
       // a half-landed edit (doc 2 re-text, quote kept, tf shifted): the
       // pinned epoch must not see it
       LexLake.upsert(spark, lroot,
@@ -340,7 +342,7 @@ class RetrievalDaySpec extends SparkSpec {
       input.addData((9L, unit(10), Seq("marker")))
       q.processAllAvailable()
       assert(got(9L) == batchAt(9L),
-        "post-reconcile epoch == batch hybridServeAt at the re-pinned snapshot")
+        "post-reconcile epoch == batch hybridServe at the re-pinned snapshot")
     } finally q.stop()
   }
 }

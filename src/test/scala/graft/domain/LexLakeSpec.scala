@@ -553,6 +553,12 @@ class LexLakeSpec extends SparkSpec {
       LexLake.serve(spark, root, queriesDf, n = 5, k1 = 1.5, impact = true)
     }
     assert(e3.getMessage.contains("was built under k1="), e3.getMessage)
+    // the tier is a live-view read: a pinned view refuses impact = true
+    val e4 = intercept[IllegalArgumentException] {
+      LexLake.serve(spark, root, queriesDf, n = 5, impact = true,
+        view = ReadView.Pinned(LexLake.generations(spark, root).lastOption))
+    }
+    assert(e4.getMessage.contains("live view only"), e4.getMessage)
   }
 
   test("impact serve falls back to the exact path while overlays pend") {
@@ -607,12 +613,12 @@ class LexLakeSpec extends SparkSpec {
     // the reconcile fold carries positions into the new generation
     LexLake.reconcile(spark, root)
     assert(got(ph) == want(logical, ph))
-    // the PINNED arm (hybridServeAt's phrase gate) serves committed state:
-    // a post-fold delete of a matching doc is invisible to it
+    // the PINNED arm (hybridServe's phrase gate under a snapshot) serves
+    // committed state: a post-fold delete of a matching doc is invisible
     val gen = LexLake.generations(spark, root).lastOption
     val victim = want(logical, ph).head._1
     LexLake.delete(spark, root, Seq(victim).toDF("doc_id"))
-    assert(LexLake.phraseServeAt(spark, root, gen, ph)
+    assert(LexLake.phraseServe(spark, root, ph, view = ReadView.Pinned(gen))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       == want(logical, ph))
     assert(got(ph) == want(logical.filterNot(_._1 == victim), ph))
@@ -639,16 +645,16 @@ class LexLakeSpec extends SparkSpec {
     val logical = corpus().filterNot(d => d._1 == 2L || d._1 == 9L) :+
       ((300L, "spark window spark stream query"))
     assert(got() == want(logical))
-    // the PINNED arm serves committed state only (serveAt's contract,
+    // the PINNED arm serves committed state only (ReadView.Pinned,
     // both passes): the legacy root has no generations yet -> fold first
     LexLake.reconcile(spark, root)
     val gen = LexLake.generations(spark, root).lastOption
-    assert(served(LexLake.prfServeAt(spark, root, gen, queriesDf, n = 5,
-      fbDocs = 3, fbTerms = 2)) == want(logical))
+    assert(served(LexLake.prfServe(spark, root, queriesDf, n = 5,
+      fbDocs = 3, fbTerms = 2, view = ReadView.Pinned(gen))) == want(logical))
     // new overlays pend: pinned stays on the fold, unpinned tracks
     LexLake.delete(spark, root, Seq(4L).toDF("doc_id"))
-    assert(served(LexLake.prfServeAt(spark, root, gen, queriesDf, n = 5,
-      fbDocs = 3, fbTerms = 2)) == want(logical),
+    assert(served(LexLake.prfServe(spark, root, queriesDf, n = 5,
+      fbDocs = 3, fbTerms = 2, view = ReadView.Pinned(gen))) == want(logical),
       "the pinned PRF serve must not see the pending overlay")
     assert(got() == want(logical.filterNot(_._1 == 4L)))
     // the hybrid expanded-terms arm wires prfServe as the lexical list
@@ -709,7 +715,8 @@ class LexLakeSpec extends SparkSpec {
     // invisible to the pinned read, visible to the unpinned one
     val gen = LexLake.generations(spark, root).lastOption
     LexLake.delete(spark, root, Seq(1L).toDF("doc_id"))
-    assert(LexLake.proximityServeAt(spark, root, gen, "spark", "hash", 5)
+    assert(LexLake.proximityServe(spark, root, "spark", "hash", 5,
+        view = ReadView.Pinned(gen))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       == want(logical, "spark", "hash", 5))
     assert(got("spark", "hash", 5)
@@ -747,7 +754,8 @@ class LexLakeSpec extends SparkSpec {
     // pinned arm: a post-fold delete is invisible to the pinned read
     val gen = LexLake.generations(spark, root).lastOption
     LexLake.delete(spark, root, Seq(100L).toDF("doc_id"))
-    assert(LexLake.passageServeAt(spark, root, gen, ts, 4)
+    assert(LexLake.passageServe(spark, root, ts, 4,
+        view = ReadView.Pinned(gen))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       == want(logical, 4))
     assert(got(4) == want(logical.filterNot(_._1 == 100L), 4))
@@ -759,7 +767,7 @@ class LexLakeSpec extends SparkSpec {
     // the batch forms read the stored positions ONCE — bucket-pruned to
     // the union of all probes' terms — and fold per probe downstream.
     // Parity per probe with the scalar serves must hold through
-    // delete/upsert/fold, and the pinned twins serve committed state.
+    // delete/upsert/fold, and the pinned views serve committed state.
     val root = freshRoot("posbatch")
     LexLake.ingest(spark, root, corpus().toDF("doc_id", "text"), nBuckets = 8)
     val phrases = Seq(
@@ -803,23 +811,24 @@ class LexLakeSpec extends SparkSpec {
     checkParity()
     LexLake.reconcile(spark, root)
     checkParity()
-    // pinned twins: a post-fold delete is invisible at the pinned gen
-    val gen = LexLake.generations(spark, root).lastOption
-    val before = rows3(LexLake.phraseServeBatchAt(spark, root, gen,
-      phrases.toDF("probe_id", "phrase")))
+    // pinned views: a post-fold delete is invisible at the pinned gen
+    val pinned = ReadView.Pinned(LexLake.generations(spark, root).lastOption)
+    val before = rows3(LexLake.phraseServeBatch(spark, root,
+      phrases.toDF("probe_id", "phrase"), view = pinned))
     val victim = before.head._2
     LexLake.delete(spark, root, Seq(victim).toDF("doc_id"))
-    assert(rows3(LexLake.phraseServeBatchAt(spark, root, gen,
-      phrases.toDF("probe_id", "phrase"))) == before)
-    assert(rows3(LexLake.proximityServeBatchAt(spark, root, gen,
-        pairs.toDF("probe_id", "term_a", "term_b"), w = 5))
+    assert(rows3(LexLake.phraseServeBatch(spark, root,
+      phrases.toDF("probe_id", "phrase"), view = pinned)) == before)
+    assert(rows3(LexLake.proximityServeBatch(spark, root,
+        pairs.toDF("probe_id", "term_a", "term_b"), w = 5, view = pinned))
       == pairs.flatMap { case (id, a, b) =>
-        scalar2(LexLake.proximityServeAt(spark, root, gen, a, b, w = 5))
+        scalar2(LexLake.proximityServe(spark, root, a, b, w = 5,
+            view = pinned))
           .map { case (d, n) => (id, d, n) } }.toSet)
-    assert(rows3(LexLake.passageServeBatchAt(spark, root, gen,
-        passages.toDF("probe_id", "terms"), w = 8))
+    assert(rows3(LexLake.passageServeBatch(spark, root,
+        passages.toDF("probe_id", "terms"), w = 8, view = pinned))
       == passages.flatMap { case (id, ts) =>
-        scalar2(LexLake.passageServeAt(spark, root, gen, ts, w = 8))
+        scalar2(LexLake.passageServe(spark, root, ts, w = 8, view = pinned))
           .map { case (d, n) => (id, d, n) } }.toSet)
     assert(rows3(LexLake.phraseServeBatch(spark, root,
       phrases.toDF("probe_id", "phrase"))) != before,
@@ -830,12 +839,12 @@ class LexLakeSpec extends SparkSpec {
     // off that materialized frame — ZERO parquet re-scans of the store no
     // matter how many probes the batch carries — and never a nested loop
     for (df <- Seq(
-        LexLake.phraseServeBatchAt(spark, root, gen,
-          phrases.toDF("probe_id", "phrase")),
-        LexLake.proximityServeBatchAt(spark, root, gen,
-          pairs.toDF("probe_id", "term_a", "term_b"), w = 5),
-        LexLake.passageServeBatchAt(spark, root, gen,
-          passages.toDF("probe_id", "terms"), w = 8))) {
+        LexLake.phraseServeBatch(spark, root,
+          phrases.toDF("probe_id", "phrase"), view = pinned),
+        LexLake.proximityServeBatch(spark, root,
+          pairs.toDF("probe_id", "term_a", "term_b"), w = 5, view = pinned),
+        LexLake.passageServeBatch(spark, root,
+          passages.toDF("probe_id", "terms"), w = 8, view = pinned))) {
       val plan = df.queryExecution.executedPlan.toString
       val postingScans = plan.linesIterator.count(l =>
         l.contains("Scan parquet") && l.contains("postings"))
@@ -922,11 +931,11 @@ class LexLakeSpec extends SparkSpec {
     assert(got() == want(logical))
     LexLake.reconcile(spark, root)
     assert(got() == want(logical))
-    // pinned twin: a post-fold delete is invisible at the pinned generation
+    // pinned view: a post-fold delete is invisible at the pinned generation
     val gen = LexLake.generations(spark, root).lastOption
     LexLake.delete(spark, root, Seq(101L).toDF("doc_id"))
-    assert(served(LexLake.proximityRankServeAt(spark, root, gen, queriesDf,
-      n = 5, w = 4)) == want(logical))
+    assert(served(LexLake.proximityRankServe(spark, root, queriesDf,
+      n = 5, w = 4, view = ReadView.Pinned(gen))) == want(logical))
     assert(got() == want(logical.filterNot(_._1 == 101L)))
   }
 
@@ -952,7 +961,7 @@ class LexLakeSpec extends SparkSpec {
   }
 
   test("overlay broadcasts are guarded: a mass-deletion day refuses loudly") {
-    // phraseServe's overlay id union broadcasts — bounded by contract,
+    // every serve's overlay id union broadcasts — bounded by contract,
     // ENFORCED here (r11 verdict nit #2): past the cap it must name the
     // reconcile remedy, never OOM the driver silently
     val root = freshRoot("overlayguard")
@@ -964,6 +973,25 @@ class LexLakeSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("cannot broadcast"), e.getMessage)
     assert(e.getMessage.contains("reconcile"), e.getMessage)
+    // the BM25 serves take no overlay cap of their own: they read the
+    // overlays through the same guarded helper at its default cap, so a
+    // real mass-deletion day (tombstones past 2^20 ids — delete itself
+    // caps nothing) refuses on every one of them
+    spark.range(1000L, 1000L + (1L << 20) + 1L).toDF("doc_id")
+      .write.mode("append").parquet(s"$root/tombstones")
+    for ((name, serveCall) <- Seq[(String, () => DataFrame)](
+        "serve" -> (() => LexLake.serve(spark, root, queriesDf, n = 5)),
+        "prfServe" -> (() => LexLake.prfServe(spark, root, queriesDf, n = 5,
+          fbDocs = 2, fbTerms = 2)),
+        "proximityRankServe" -> (() => LexLake.proximityRankServe(spark,
+          root, queriesDf, n = 5, w = 4)))) {
+      val em = intercept[IllegalArgumentException](serveCall())
+      assert(em.getMessage.contains("cannot broadcast") &&
+        em.getMessage.contains("reconcile"), s"$name: ${em.getMessage}")
+    }
+    // a pinned view skips the overlays, so it still serves
+    assert(LexLake.serve(spark, root, queriesDf, n = 5,
+      view = ReadView.Pinned(None)).count() > 0)
     // healthOfPostings' tombstone-mass broadcast carries the same guard
     val docs = corpus(6).toDF("doc_id", "text")
     val post = LexLake.tokenizePostings(docs, 4)

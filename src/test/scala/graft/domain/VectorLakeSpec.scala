@@ -851,7 +851,7 @@ class VectorLakeSpec extends SparkSpec {
       k = 5).count() == 0)
   }
 
-  test("shadow read: searchBatchAt serves the displaced generation next to the current one") {
+  test("shadow read: a pinned view serves the old generation") {
     val root = freshRoot("shadow")
     VectorLake.init(spark, root, Seq(Seq(0.0, 0.0), Seq(10.0, 10.0)))
     VectorLake.ingest(spark, root, Seq(
@@ -868,12 +868,15 @@ class VectorLakeSpec extends SparkSpec {
     // same data (no ingest between), so the shadow diff is empty — the
     // promotion did not regress recall
     val cur = ids(VectorLake.searchBatch(spark, root, probes, k = 2, nprobe = 2))
-    val shadowNew = ids(VectorLake.searchBatchAt(spark, root, 2L, probes, k = 2, nprobe = 2))
-    val shadowOld = ids(VectorLake.searchBatchAt(spark, root, 1L, probes, k = 2, nprobe = 2))
+    def pinned(g: Long): ReadView = ReadView.Pinned(Some(g))
+    val shadowNew = ids(VectorLake.searchBatch(spark, root, probes, k = 2, nprobe = 2,
+      view = pinned(2L)))
+    val shadowOld = ids(VectorLake.searchBatch(spark, root, probes, k = 2, nprobe = 2,
+      view = pinned(1L)))
     assert(cur == shadowNew && shadowNew == shadowOld, s"$cur / $shadowNew / $shadowOld")
     // a generation retention dropped fails loudly at resolve time
     val e = intercept[IllegalStateException] {
-      VectorLake.searchBatchAt(spark, root, 0L, probes, k = 2).count()
+      VectorLake.searchBatch(spark, root, probes, k = 2, view = pinned(0L)).count()
     }
     assert(e.getMessage.contains("EXPIRED"))
     // hybrid composition: the lake's batched serve feeds rrfFuse directly
