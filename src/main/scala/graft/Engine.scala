@@ -40,7 +40,7 @@ object Engine {
     // compare against the clamped probe itself: with a threshold beyond
     // Int range, count() could never exceed it and LSH became unreachable
     val probe = math.min(lshThresholdRows + 1, Int.MaxValue.toLong - 1).toInt
-    if (emb.limit(probe).count() >= probe)
+    if (graft.operators.Serving.boundedCount(emb, probe) >= probe)
       Similarity.lshTopK(emb, idCol, vecCol, queryVec, k)
     else
       Similarity.bruteForceTopK(

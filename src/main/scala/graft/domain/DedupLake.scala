@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Serving}
 import graft.sources.Writers
 
 /** The lake-resident incremental-dedup state as a MANAGED store, and its
@@ -448,8 +448,9 @@ object DedupLake {
         val tombs = readOr(spark, s"$root/tombstones", tombstonesSchema)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          if (tombs.join(broadcast(docs.select("doc_id")),
-              Seq("doc_id"), "left_semi").limit(1).count() > 0)
+          if (Serving.boundedCount(
+              tombs.join(broadcast(docs.select("doc_id")),
+                Seq("doc_id"), "left_semi"), 1) > 0)
             Writers.swapReplace(spark, s"$root/tombstones",
               tombs.join(broadcast(docs.select("doc_id")),
                 Seq("doc_id"), "left_anti"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.operators.Serving
 import graft.sources.Writers
 
 /** CROSS-LAKE mutation sync — the fan-out a real purge or edit request
@@ -120,8 +121,8 @@ object LakeSync {
           upsertsSchema)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          if (ups.join(broadcast(del), Seq("doc_id"), "left_semi")
-              .limit(1).count() > 0)
+          if (Serving.boundedCount(
+              ups.join(broadcast(del), Seq("doc_id"), "left_semi"), 1) > 0)
             Writers.swapReplace(spark, s"$syncRoot/upserts",
               ups.join(broadcast(del), Seq("doc_id"), "left_anti"))
         } finally { ups.unpersist(blocking = false); () }
@@ -178,8 +179,9 @@ object LakeSync {
                 requestsSchema)
               .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
             try {
-              if (reqs.join(broadcast(batch.select("doc_id")),
-                  Seq("doc_id"), "left_semi").limit(1).count() > 0)
+              if (Serving.boundedCount(
+                  reqs.join(broadcast(batch.select("doc_id")),
+                    Seq("doc_id"), "left_semi"), 1) > 0)
                 Writers.swapReplace(spark, s"$syncRoot/requests",
                   reqs.join(broadcast(batch.select("doc_id")),
                     Seq("doc_id"), "left_anti"))

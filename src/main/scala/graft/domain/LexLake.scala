@@ -316,12 +316,11 @@ object LexLake {
                 // PARTIALLY-overlapping retries of pre-round-12 torn
                 // batches remain reconcile's job — a null-coverage ledger
                 // cannot say which ids it counted.
-                val legacyCovered = readOr(spark, s"$droot/stats",
-                    statsSchema)
-                  .filter(col("doc_ids").isNull &&
-                    (col("batch_key") === key ||
-                      col("batch_key").startsWith(key + ":")))
-                  .limit(1).count() > 0
+                val legacyCovered = graft.operators.Serving.boundedCount(
+                  readOr(spark, s"$droot/stats", statsSchema)
+                    .filter(col("doc_ids").isNull &&
+                      (col("batch_key") === key ||
+                        col("batch_key").startsWith(key + ":"))), 1) > 0
                 if (!legacyCovered) toCount
                   .groupBy(pmod(col("doc_id"), lit(parts)).as("__part"))
                   .agg(count(lit(1)).as("n_docs"),
@@ -428,8 +427,9 @@ object LexLake {
         val tombs = readOr(spark, s"$root/tombstones", tombstonesSchema)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          if (tombs.join(broadcast(docs.select("doc_id")),
-              Seq("doc_id"), "left_semi").limit(1).count() > 0)
+          if (graft.operators.Serving.boundedCount(
+              tombs.join(broadcast(docs.select("doc_id")),
+                Seq("doc_id"), "left_semi"), 1) > 0)
             Writers.swapReplace(spark, s"$root/tombstones",
               tombs.join(broadcast(docs.select("doc_id")),
                 Seq("doc_id"), "left_anti"))
@@ -893,7 +893,8 @@ object LexLake {
     if (nDocs == 0L) return emptyOut
     // pre-positional rows would silently drop the bonus arm — same loud
     // refusal as the positional serves (a bounded probe over pruned rows)
-    require(postL0.filter(col("positions").isNull).limit(1).count() == 0,
+    require(graft.operators.Serving.boundedCount(
+        postL0.filter(col("positions").isNull), 1) == 0,
       s"lex lake at $root holds PRE-POSITIONAL posting rows for the " +
         s"queried terms (positions = null) — the proximity bonus needs " +
         "the positional layout. Re-ingest the affected documents or " +
@@ -945,9 +946,10 @@ object LexLake {
       .filter(if (buckets.isEmpty) lit(false)
         else col("tbucket").isInCollection(buckets)))
       .select("term", "doc_id", "positions")
-    // the probe is a LIMIT over the already-pruned scan — bounded, and
-    // only on the queried terms
-    require(stored.filter(col("positions").isNull).limit(1).count() == 0,
+    // the probe is a bounded count over the already-pruned scan — bounded,
+    // and only on the queried terms
+    require(graft.operators.Serving.boundedCount(
+        stored.filter(col("positions").isNull), 1) == 0,
       s"lex lake at $root holds PRE-POSITIONAL posting rows for " +
         s"${terms.mkString("/")} (positions = null) — positional serving " +
         "needs the positional layout. Re-ingest the affected documents " +

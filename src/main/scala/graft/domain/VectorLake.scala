@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType, StructField, StructType}
 
 import graft.functions.{VectorFunctions => VF}
-import graft.operators.{Clustering, Similarity}
+import graft.operators.{Clustering, Serving, Similarity}
 import graft.sources.Writers
 
 /** The lake-resident incremental VECTOR index — [[DedupLake]]'s ANN sibling
@@ -653,8 +653,8 @@ object VectorLake {
         val tombs = readOr(spark, s"$root/tombstones", tombstonesSchema)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          if (tombs.join(broadcast(ids), Seq("vec_id"), "left_semi")
-              .limit(1).count() > 0)
+          if (Serving.boundedCount(
+              tombs.join(broadcast(ids), Seq("vec_id"), "left_semi"), 1) > 0)
             Writers.swapReplace(spark, s"$root/tombstones",
               tombs.join(broadcast(ids), Seq("vec_id"), "left_anti"))
         } finally { tombs.unpersist(blocking = false); () }

@@ -158,15 +158,32 @@ object Serving {
         s"${c.getLong(1)} distinct) — $consequence")
   }
 
+  /** `df.limit(cap).count()` — the row count capped at `cap` — with
+    * generated code that repeats from call to call. Spark's local limit
+    * names its row counter from a JVM-wide sequence (`_limit_counter_N`),
+    * so a limit plan's source never repeats and each such count compiles
+    * two classes whatever the codegen cache size. This counts each
+    * partition of the plan's own RDD up to `cap` rows (the local limit's
+    * early stop) and caps the sum, which equals the capped count: one
+    * partition reaching `cap` makes the sum reach it. Every bounded count
+    * and existence probe in the engine goes through here. */
+  def boundedCount(df: DataFrame, cap: Int): Long = {
+    require(cap >= 0, s"cap must be >= 0, got $cap")
+    val n = df.queryExecution.toRdd
+      .mapPartitions(it => Iterator.single(it.take(cap).size.toLong))
+      .fold(0L)(_ + _)
+    math.min(n, cap.toLong)
+  }
+
   /** Broadcast-contract guard for a BOUNDED-BY-CONTRACT frame (the knnJoin
-    * idiom, shared): probe the row count with a LIMIT — never a full count
+    * idiom, shared): bound the row count ([[boundedCount]]) — never a full count
     * of a possibly-expensive plan — and refuse loudly past the cap instead
     * of letting the broadcast OOM the driver. `subject` names the frame;
     * `remedy` names the way out (e.g. "run reconcile to fold the overlay"). */
   def requireBroadcastable(df: DataFrame, maxRows: Long,
                            subject: String, remedy: String): Unit = {
     val cap = math.min(maxRows + 1, Int.MaxValue.toLong - 1).toInt
-    require(df.limit(cap).count() < cap,
+    require(boundedCount(df, cap) < cap,
       s"$subject exceeds $maxRows rows — it cannot broadcast. $remedy")
   }
 

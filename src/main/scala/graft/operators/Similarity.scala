@@ -687,16 +687,11 @@ object Similarity {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Double, Long)]]()
   }
 
-  /** Broadcast-contract guard: probe the row count with a LIMIT (never a
-    * full count of a possibly-expensive plan) and refuse to broadcast a side
-    * that exceeds the cap. */
-  private def requireBroadcastable(df: DataFrame, maxRows: Long): Unit = {
-    val cap = math.min(maxRows + 1, Int.MaxValue.toLong - 1).toInt
-    require(df.limit(cap).count() < cap,
-      s"probe side exceeds $maxRows rows — it cannot broadcast. Use " +
-        "ivfKnnJoin (blocked candidates) or lshNearDupPairs (bucketed pairs) " +
-        "for corpus-scale probe sets, or raise maxBroadcastProbes explicitly.")
-  }
+  /** The way out named when a broadcast side passes its cap. */
+  private val probeCapRemedy =
+    "Use ivfKnnJoin (blocked candidates) or lshNearDupPairs (bucketed " +
+      "pairs) for corpus-scale probe sets, or raise maxBroadcastProbes " +
+      "explicitly."
 
   /** Batch kNN join (the retrieval/hard-negative-mining primitive): EVERY
     * probe row gets its k nearest corpus rows by cosine. The probe side is
@@ -722,7 +717,8 @@ object Similarity {
               k: Int, excludeSelf: Boolean = false,
               maxBroadcastProbes: Long = 1L << 20): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    requireBroadcastable(probe, maxBroadcastProbes)
+    Serving.requireBroadcastable(probe, maxBroadcastProbes, "probe side",
+      probeCapRemedy)
     val topk = udaf(new TopKAgg(k),
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Double, Long)]())
     val cand = corpus
@@ -759,7 +755,8 @@ object Similarity {
                     probeLabel: String,
                     k: Int, maxBroadcastProbes: Long = 1L << 20): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    requireBroadcastable(probe, maxBroadcastProbes)
+    Serving.requireBroadcastable(probe, maxBroadcastProbes, "probe side",
+      probeCapRemedy)
     val topk = udaf(new TopKAgg(k),
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Double, Long)]())
     corpus
@@ -793,7 +790,8 @@ object Similarity {
                  excludeSelf: Boolean = false,
                  maxBroadcastProbes: Long = 1L << 20): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    requireBroadcastable(probe, maxBroadcastProbes)
+    Serving.requireBroadcastable(probe, maxBroadcastProbes, "probe side",
+      probeCapRemedy)
     val topk = udaf(new TopKAgg(k),
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Double, Long)]())
     val c = ivfAssign(
@@ -978,7 +976,8 @@ object Similarity {
     require(kRrf >= 1, s"kRrf must be >= 1, got $kRrf (60 is the standard)")
     val lex = lexRanks.select(col("neighbor_id").cast("long").as("neighbor_id"),
       col("rank").cast("long").as("rank"))
-    requireBroadcastable(lex, maxBroadcastLex)
+    Serving.requireBroadcastable(lex, maxBroadcastLex, "probe side",
+      probeCapRemedy)
     val p = probeIds.select(col("probe_id").cast("long").as("probe_id"))
       .distinct()
     // the global lexical list replicates per probe (bounded × bounded);

@@ -52,8 +52,9 @@ object PricePipeline {
 
   /** One micro-batch into the warehouse. Idempotent under foreachBatch's
     * at-least-once replay: games and crawl_state merge by key, and the
-    * prices append anti-joins the existing table on (game_id, timestamp) so
-    * a replayed batch inserts nothing new. */
+    * prices append deduplicates the batch and anti-joins the existing table
+    * on the full row, so a replayed batch or a repeated line inserts nothing
+    * new. */
   def mergeBatch(spark: SparkSession, warehouseDir: String, batch: DataFrame): Unit = {
     val ticks = batch.cache()
     try {
@@ -68,9 +69,12 @@ object PricePipeline {
       // e.g. a corrected resend — still lands
       val allCols = Seq("game_id", "price_cents", "discount",
         "initial_price_cents", "timestamp")
+      // a tick line repeated inside one batch would otherwise land twice:
+      // the anti-join only sees rows already in the table. distinct() is
+      // null-safe like the anti-join's <=> (grouping treats NULLs as equal)
       val incoming = priceRows.select(
         col("appid").as("game_id"), col("price_cents"), col("discount"),
-        col("initial_price_cents"), col("ts").as("timestamp"))
+        col("initial_price_cents"), col("ts").as("timestamp")).distinct()
       // restrict the existing side to the batch's game_ids BEFORE the
       // anti-join: without it every micro-batch full-scans the whole prices
       // table, a per-batch cost that grows with the table forever

@@ -3,23 +3,16 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared session for the whole test JVM (Test/fork := true). Mirrors the
-  * Verify session config (ANSI off, UTC, ns-as-long, AQE). */
+/** One shared session for the whole test JVM (Test/fork := true), built from
+  * the engine's own session contract ([[GraftSession.builder]]: ANSI off,
+  * UTC, ns-as-long, AQE, the extensions and the codegen cache size) plus a
+  * test app name and a temporary warehouse dir. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder("4", "4")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.graft.native.allpairs", "true")
-      .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

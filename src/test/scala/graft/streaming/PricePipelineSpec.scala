@@ -62,6 +62,27 @@ class PricePipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"$warehouse/games").count() == 3)
   }
 
+  test("a tick line repeated inside one file lands once; a different payload at the same key still lands") {
+    val staging = Files.createTempDirectory("staging_dup").toString
+    val warehouse = Files.createTempDirectory("wh_dup").toString
+    val ckpt = Files.createTempDirectory("ck_dup").toString
+    def tick(price: String, ts: Double): String =
+      s"""{"type":"price","appid":7,"discount":"0","price":"$price","initial_price":"$price","timestamp":$ts}"""
+    Files.writeString(Path.of(staging, "w1.jsonl"),
+      Seq(tick("9,99", 1700000000.0), tick("9,99", 1700000000.0),
+        // unparseable price: a NULL price_cents must dedupe too
+        tick("free", 1700000050.0), tick("free", 1700000050.0),
+        // a corrected resend at the same (game_id, timestamp)
+        tick("7,49", 1700000000.0)).mkString("\n"))
+    val q = PricePipeline.start(spark, staging, warehouse, ckpt)
+    try q.processAllAvailable() finally q.stop()
+    val prices = spark.read.parquet(s"$warehouse/prices")
+    assert(prices.count() == 3)
+    assert(prices.filter(col("timestamp") === epochTs(1700000000L))
+      .select("price_cents").as[Long].collect().sorted.toSeq == Seq(749L, 999L))
+    assert(prices.filter(col("price_cents").isNull).count() == 1)
+  }
+
   private def epochTs(s: Long) = new java.sql.Timestamp(s * 1000)
 
   private def stateDf(reviewTs: Long, priceTs: Long) =
