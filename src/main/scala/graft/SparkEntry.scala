@@ -30,15 +30,15 @@ object SparkEntry {
 
   /** Shared duplicate-cluster closure: q54/q102/q118/q127 all consume
     * resolveClusters over the SAME candidate pairs (documents, numHashes=8,
-    * bandRows=2, shingleN=2). The closure is iterative (a wave of jobs per
-    * round), so each query re-running it from scratch multiplies the sweep
-    * cost by four; materialize it ONCE per testdata dir to a temp parquet and
-    * let all four scan that. A file (not .persist) on purpose: Bench clears
-    * the Spark cache between queries for isolation, which would silently
-    * evict an in-memory shared stage and re-trigger the closure. At 100 TB
-    * this IS the production shape — cluster labels are a pipeline-stage
-    * artifact written once to the lake and joined by every downstream
-    * consumer, not recomputed per query. */
+    * bandRows=2, shingleN=2). The candidate pairs and the closure cost jobs
+    * of their own, so each query re-running them from scratch multiplies
+    * that cost by four; materialize the labels ONCE per testdata dir to a
+    * temp parquet and let all four scan that. A file (not .persist) on
+    * purpose: Bench clears the Spark cache between queries for isolation,
+    * which would silently evict an in-memory shared stage and re-trigger
+    * the closure. At 100 TB this IS the production shape — cluster labels
+    * are a pipeline-stage artifact written once to the lake and joined by
+    * every downstream consumer, not recomputed per query. */
   private val clusterLabelsCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 

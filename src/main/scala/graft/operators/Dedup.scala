@@ -693,112 +693,109 @@ object Dedup {
 
   /** Duplicate-cluster resolution: turn near-dup PAIRS into per-document
     * cluster labels (label = smallest doc id in the connected component) so a
-    * pipeline can keep one representative per cluster. Iterative min-label
-    * propagation over the undirected edge set — the standard distributed
-    * connected-components loop (converges in O(component diameter) rounds,
-    * each one join + one aggregate; the driver only coordinates rounds and a
-    * convergence count, never holds data). Documents absent from `pairs` are
-    * their own clusters and need no rows here. */
+    * pipeline can keep one representative per cluster: one (id, cluster_id)
+    * row per id in `pairs`, typed like the (wider) id column. Documents
+    * absent from `pairs` are their own clusters; a pair with a NULL id names
+    * no document. Ids must be integral (hash string ids to longs upstream).
+    *
+    * Per-task union-find contraction (Łącki, Mirrokni & Włodarczyk,
+    * "Connected Components at Scale via Local Contractions", 2018). The
+    * distinct undirected edges are counted once and cut into
+    * ceil(edges / [[EdgesPerTask]]) tasks. Each task runs union-find over
+    * its edges and emits (node, local root = smallest id of the node's local
+    * component). One aggregation by node gives m(v), the smallest of v's
+    * roots, and the next level's edges (m(v), r) for v's other roots r,
+    * which are resolved the same way and joined back onto m(v). A level with
+    * one task or no next edges is final. Right: v's edges connect all of
+    * v's roots, and a component's smallest id is the root of every local
+    * component it is in. Ends: past the first level no edge is a self-loop,
+    * so the largest id of each component is no task's root and every level
+    * drops it. `maxIter` bounds the levels. Jobs: the edge count plus one
+    * per level of more than one task; the last level runs inside the
+    * caller's job, over persisted blocks freed when the frame is GC'd. */
   def resolveClusters(pairs: DataFrame, aCol: String, bCol: String,
-                      maxIter: Int = 20): DataFrame = {
+                      maxIter: Int = 20): DataFrame =
+    resolveClustersIn(pairs, aCol, bCol, maxIter, EdgesPerTask)
+
+  /** Edges one union-find task holds. Per edge a task keeps its two
+    * endpoints (16 B, twice that while the buffer grows), their sorted copy
+    * (16 B) and an int parent per distinct endpoint (at most 8 B): under
+    * 64 B, so 2^20 edges stay under 64 MiB, well under a 1 GiB executor
+    * heap. A constant, so the bound holds whatever the caller passes. */
+  private val EdgesPerTask: Long = 1L << 20
+
+  /** [[resolveClusters]] with the per-task edge budget as an argument, so a
+    * spec can force many tasks and levels on a small graph. */
+  private[operators] def resolveClustersIn(pairs: DataFrame, aCol: String,
+                                           bCol: String, maxIter: Int,
+                                           edgesPerTask: Long): DataFrame = {
     import org.apache.spark.rdd.RDD
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.types.DecimalType
-    import org.apache.spark.storage.StorageLevel
-    // Lineage truncation with explicit block handles: each round's plan
-    // references the prior round twice, so without truncation the logical
-    // plan DOUBLES per iteration. Pinning through a persisted InternalRow
-    // RDD + LogicalRDD keeps the plan O(1) per round, skips the df.rdd Row
-    // serialization round trip, AND lets the loop free the previous round's
-    // blocks — a localCheckpoint chain would strand every round's blocks in
-    // the block manager until GC.
-    // the convergence check sums labels as DECIMAL(38,0): a non-numeric id
-    // column would cast to NULL, sum to NULL, and be misread as "no pairs" —
-    // every doc silently its own cluster. Hash string ids to longs upstream.
-    Seq(aCol, bCol).foreach { c =>
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val idType = Seq(aCol, bCol).map { c =>
       val dt = pairs.schema(c).dataType
-      require(dt.isInstanceOf[org.apache.spark.sql.types.NumericType],
-        s"resolveClusters needs numeric ids; column '$c' is $dt")
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
+        s"resolveClusters needs integral ids; column '$c' is $dt")
+      dt
+    }.maxBy(_.defaultSize)
+    // (node, smallest id of its component) for the endpoints of `edges`,
+    // which are distinct, persisted and `n` in number
+    def level(edges: RDD[(Long, Long)], n: Long, depth: Int): RDD[(Long, Long)] = {
+      require(depth <= maxIter, s"resolveClusters needs more than $maxIter " +
+        "levels of contraction — raise maxIter (each level drops at least " +
+        "the largest id of every component)")
+      val tasks = ((n + edgesPerTask - 1) / edgesPerTask).toInt
+      if (tasks <= 1) return edges.coalesce(1).mapPartitions(contractLocal)
+      // per node: its distinct local roots, smallest first
+      val roots = edges.repartition(tasks).mapPartitions(contractLocal).groupByKey()
+        .mapValues(_.toArray.distinct.sorted).persist(MEMORY_AND_DISK)
+      val next = roots.flatMap { case (_, rs) => rs.iterator.drop(1).map(r => (rs(0), r)) }
+        .distinct().persist(MEMORY_AND_DISK)
+      val nextN = next.count()
+      edges.unpersist(blocking = false)
+      val m = roots.mapValues(_(0))
+      if (nextN == 0) { next.unpersist(blocking = false); m }
+      else m.map(_.swap).leftOuterJoin(level(next, nextN, depth + 1))
+        .map { case (root, (v, label)) => (v, label.getOrElse(root)) }
     }
-    def pin(df: DataFrame): (DataFrame, RDD[InternalRow]) =
-      org.apache.spark.sql.GraftBridge.pinInternal(df, StorageLevel.MEMORY_AND_DISK)
-    val (edges, edgesRdd) = pin(
-      pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-        .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-        .distinct())
-    // round 0 fused into the init (r13 optimization): every node starts at
-    // least(own id, min neighbor id) — exactly the first pull step from
-    // identity labels, but as ONE map-side-combining aggregation over the
-    // edge table instead of a join + aggregate round. Saves one full wave
-    // of jobs on every closure call; the fixpoint (min id per component)
-    // and the monotone-sum convergence witness are unchanged.
-    // The init is LAZILY pinned (r14): its labelSum action is gone — the
-    // first loop round's labelSum materializes init + round 1 in ONE job,
-    // one fewer scheduler round-trip per closure call. Convergence is
-    // detected from round 2 on (prevSum == null skips the compare), which
-    // costs nothing: a fixpoint-at-init graph now spends its second action
-    // on the verify round instead of the init sum — same action count.
-    var (labels, labelsRdd) = pin(
-      edges.groupBy(col("src").as("id")).agg(min(col("dst")).as("__m"))
-        .select(col("id"), least(col("id"), col("__m")).as("label")))
-    // exact decimal sum; null means the frame is empty (no pairs -> no work)
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("label").cast(DecimalType(38, 0)))).head().getDecimal(0)
-    var prevSum: java.math.BigDecimal = null
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // each node pulls the smallest label among its neighbors...
-      val pulled = edges.join(labels.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id")).agg(min(col("label")).as("nbr_label"))
-      val stepped = labels.join(pulled, Seq("id"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
-      // ...then follows its label's own label (pointer doubling) — halves the
-      // remaining tree height each round, so convergence is O(log diameter)
-      // rounds instead of O(diameter): the difference between 5 and 50 waves
-      // of jobs on a web-scale dup graph with long chains. `stepped` is
-      // LAZILY pinned first (r14): the self-join embeds its input subtree
-      // on both sides, so unpinned, the round's pull join+agg — its
-      // dominant cost at 100 TB — executed TWICE per round (the lazy
-      // persist adds no action; the labelSum job below materializes the
-      // chain once). A second in-plan hop was tried and did not reduce
-      // rounds (propagation is pull-bound, not pointer-depth-bound on the
-      // LSH near-dup graph shape) — kept at one.
-      val (steppedP, steppedRdd) = pin(stepped)
-      val (next, nextRdd) = pin(steppedP.join(
-        steppedP.select(col("id").as("label"), col("label").as("hop")),
-        Seq("label"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("hop"), col("label"))).as("label")))
-      // labels only move down, so the (exact, decimal) sum strictly decreases
-      // until fixpoint — one cheap agg per round, which also materializes the
-      // freshly pinned round so the previous round's blocks can be freed
-      val nextSum = labelSum(next)
-      if (nextSum == null) {
-        // empty edge set (no pairs): every doc is its own cluster; nothing
-        // to iterate
-        edgesRdd.unpersist(blocking = false)
-        steppedRdd.unpersist(blocking = false)
-        labelsRdd.unpersist(blocking = false)
-        return next.select(col("id"), col("label").as("cluster_id"))
+    val edges = pairs.select(col(aCol).cast("long"), col(bCol).cast("long"))
+      .queryExecution.toRdd
+      .collect { case r if !r.isNullAt(0) && !r.isNullAt(1) =>
+        val (a, b) = (r.getLong(0), r.getLong(1))
+        (math.min(a, b), math.max(a, b))
       }
-      // stepped was only pinned so the self-join's two sides compute the
-      // pull once inside the labelSum job — free it with the superseded
-      // round
-      steppedRdd.unpersist(blocking = false)
-      labelsRdd.unpersist(blocking = false)
-      labels = next
-      labelsRdd = nextRdd
-      converged = prevSum != null && nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      iter += 1
+      .distinct().persist(MEMORY_AND_DISK)
+    val labels = level(edges, edges.count(), 1).map { case (v, l) => Row(v, l) }
+    pairs.sparkSession.createDataFrame(labels, StructType(Seq(
+      StructField("id", LongType), StructField("cluster_id", LongType))))
+      .select(col("id").cast(idType), col("cluster_id").cast(idType))
+  }
+
+  /** One task's contraction: union-find over its edges, emitting (node,
+    * smallest id of its local component) once per endpoint. Endpoints are
+    * sorted and a union hangs the larger root under the smaller, so each
+    * set's root is its smallest id. */
+  private def contractLocal(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val ends = new scala.collection.mutable.ArrayBuilder.ofLong
+    edges.foreach { case (a, b) => ends += a += b }
+    val flat = ends.result()
+    val nodes = flat.clone()
+    java.util.Arrays.sort(nodes)
+    var n = 0
+    nodes.foreach { v => if (n == 0 || v != nodes(n - 1)) { nodes(n) = v; n += 1 } }
+    val parent = Array.range(0, n)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
     }
-    edgesRdd.unpersist(blocking = false)
-    require(converged, s"resolveClusters did not converge in $maxIter rounds — " +
-      "component diameter exceeds maxIter; raise it (labels only move monotonically down)")
-    // the final round's blocks back the returned frame; freed when it is GC'd
-    labels.select(col("id"), col("label").as("cluster_id"))
+    def root(v: Long): Int = find(java.util.Arrays.binarySearch(nodes, 0, n, v))
+    flat.indices.by(2).foreach { e =>
+      val (ra, rb) = (root(flat(e)), root(flat(e + 1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    Iterator.range(0, n).map(i => (nodes(i), nodes(find(i))))
   }
 
   /** Duplicate-cluster resolution by QUALITY (the production policy): per

@@ -976,8 +976,9 @@ object Similarity {
     require(kRrf >= 1, s"kRrf must be >= 1, got $kRrf (60 is the standard)")
     val lex = lexRanks.select(col("neighbor_id").cast("long").as("neighbor_id"),
       col("rank").cast("long").as("rank"))
-    Serving.requireBroadcastable(lex, maxBroadcastLex, "probe side",
-      probeCapRemedy)
+    Serving.requireBroadcastable(lex, maxBroadcastLex, "lexical list",
+      "It replicates to every probe; cut it to a top-n first, or raise " +
+        "maxBroadcastLex explicitly.")
     val p = probeIds.select(col("probe_id").cast("long").as("probe_id"))
       .distinct()
     // the global lexical list replicates per probe (bounded × bounded);

@@ -1483,9 +1483,8 @@ object TextStats {
     * by word freq), a 1-ROW driver pick of the global best pair (count desc,
     * then lexicographic (left, right) — fully deterministic), and a narrow
     * rewrite of the segmentations; rounds are pinned through InternalRow
-    * RDDs (O(1) plan, previous round's blocks freed — the resolveClusters
-    * loop discipline). Words carry the Sennrich end-of-word marker "</w>" as
-    * a separate final symbol. Stops early when no pair occurs twice.
+    * RDDs (O(1) plan, previous round's blocks freed). Words carry the
+    * Sennrich end-of-word marker "</w>" as a separate final symbol. Stops early when no pair occurs twice.
     * Returns the ordered merge table (rank, left, right, pair_count). */
   /** The train/encode contract for a word's initial segmentation: one symbol
     * per character plus the Sennrich end-of-word marker as a separate final

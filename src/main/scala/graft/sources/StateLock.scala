@@ -78,6 +78,9 @@ object StateLock {
     private val lock = new org.apache.hadoop.fs.Path(lockPath)
     private val fs = lock.getFileSystem(spark.sessionState.newHadoopConf())
     Option(lock.getParent).foreach(fs.mkdirs)
+    // the heartbeat's rename handle, built once per provider, not per beat
+    private lazy val fc = org.apache.hadoop.fs.FileContext.getFileContext(
+      fs.getUri, fs.getConf)
 
     def tryCreate(payload: String): Boolean =
       try {
@@ -125,8 +128,6 @@ object StateLock {
         try out.write(payload.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         finally out.close()
         try {
-          val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-            fs.getUri, fs.getConf)
           fc.rename(fs.makeQualified(tmp), fs.makeQualified(lock),
             org.apache.hadoop.fs.Options.Rename.OVERWRITE)
           true

@@ -103,6 +103,119 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(labels == Seq(1L))
   }
 
+  /** Driver-side reference: union-find over the pairs, label = smallest id
+    * of each component, one entry per id that appears in a pair. */
+  private def referenceLabels(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.map(v => v -> find(v)).toMap
+  }
+
+  private def labelMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
+    val rows = df.collect().map(r => r.getLong(0) -> r.getLong(1))
+    assert(rows.map(_._1).distinct.length == rows.length, "one row per id")
+    rows.toMap
+  }
+
+  /** A path over `n` seed-shuffled ids 1..n: every id is in one component
+    * labelled 1, but ids do not grow along the chain. */
+  private def shuffledPath(n: Int, seed: Long): Seq[(Long, Long)] = {
+    val ids = new scala.util.Random(seed).shuffle((1L to n.toLong).toVector)
+    ids.sliding(2).map(w => (w(0), w(1))).toSeq
+  }
+
+  test("resolveClusters: a 4096-node path with shuffled ids resolves to one label") {
+    val pairs = shuffledPath(4096, seed = 11L).toDF("doc_a", "doc_b").repartition(4)
+    val out = labelMap(Dedup.resolveClusters(pairs, "doc_a", "doc_b"))
+    assert(out.size == 4096)
+    assert(out.values.toSet == Set(1L))
+    // the same chain cut into 16 tasks a level still resolves within the
+    // default level budget
+    val split = labelMap(Dedup.resolveClustersIn(pairs, "doc_a", "doc_b",
+      maxIter = 20, edgesPerTask = 256))
+    assert(split == out)
+  }
+
+  test("resolveClusters: random graphs over many tasks match a driver-side union-find") {
+    val rnd = new scala.util.Random(4242)
+    (1 to 6).foreach { g =>
+      val nodes = 20 + rnd.nextInt(300)
+      // sparse ids; random pairs bring self-loops, repeats and reversed twins
+      val ids = rnd.shuffle((0 until 5 * nodes).map(_.toLong * 7 + 3).toVector).take(nodes)
+      val nEdges = nodes / 2 + rnd.nextInt(2 * nodes)
+      val edges = Seq.fill(nEdges)((ids(rnd.nextInt(nodes)), ids(rnd.nextInt(nodes))))
+      val dup = edges.take(nEdges / 5).map(_.swap)
+      val pairs = (edges ++ dup).toDF("doc_a", "doc_b").repartition(2 + rnd.nextInt(4))
+      val want = referenceLabels(edges)
+      val edgesPerTask = 8 + rnd.nextInt(40)
+      val got = labelMap(Dedup.resolveClustersIn(pairs, "doc_a", "doc_b",
+        maxIter = 40, edgesPerTask = edgesPerTask))
+      assert(got == want, s"graph $g: $nodes nodes, $nEdges edges, " +
+        s"$edgesPerTask edges a task")
+      assert(labelMap(Dedup.resolveClusters(pairs, "doc_a", "doc_b")) == want,
+        s"graph $g, one task")
+    }
+  }
+
+  test("resolveClusters keeps the id type and counts maxIter in levels") {
+    val pairs = Seq((5, 3), (3, 8), (20, 21)).toDF("doc_a", "doc_b")
+    val out = Dedup.resolveClusters(pairs, "doc_a", "doc_b")
+    assert(out.schema.map(f => f.name -> f.dataType) == Seq(
+      "id" -> org.apache.spark.sql.types.IntegerType,
+      "cluster_id" -> org.apache.spark.sql.types.IntegerType))
+    assert(out.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap ==
+      Map(3 -> 3, 5 -> 3, 8 -> 3, 20 -> 20, 21 -> 20))
+    // a chain cut into one-edge tasks needs more than one level: refused
+    // at maxIter = 1, resolved given room
+    val chain = shuffledPath(64, seed = 5L).toDF("doc_a", "doc_b")
+    val e = intercept[IllegalArgumentException](Dedup.resolveClustersIn(
+      chain, "doc_a", "doc_b", maxIter = 1, edgesPerTask = 1))
+    assert(e.getMessage.contains("levels of contraction"), e.getMessage)
+    assert(labelMap(Dedup.resolveClustersIn(chain, "doc_a", "doc_b",
+      maxIter = 40, edgesPerTask = 1)).values.toSet == Set(1L))
+  }
+
+  test("resolveClusters launches a bounded number of Spark jobs") {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sentinelSeen = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val scope = "graft.test.scope"
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val tag = Option(e.properties).map(_.getProperty(scope)).orNull
+        if (tag == "resolve") jobs.incrementAndGet()
+        if (tag == "sentinel") sentinelSeen.set(true)
+      }
+    }
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (7L, 9L)).toDF("doc_a", "doc_b")
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(scope, "resolve")
+      val out = Dedup.resolveClusters(pairs, "doc_a", "doc_b").collect()
+      assert(out.length == 6)
+      // listener events arrive in order: once a later job is seen, every
+      // job of the call has been counted
+      sc.setLocalProperty(scope, "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!sentinelSeen.get() && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(sentinelSeen.get(), "listener bus did not deliver the sentinel job")
+    } finally {
+      sc.setLocalProperty(scope, null)
+      sc.removeSparkListener(listener)
+    }
+    // the edge count and the caller's collect
+    assert(jobs.get() >= 1 && jobs.get() <= 5, s"${jobs.get()} jobs")
+  }
+
   test("simhash: identical docs equal; near-dups within small hamming distance") {
     val sh = Dedup.simhash(docs, "doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap

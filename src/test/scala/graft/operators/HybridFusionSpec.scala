@@ -140,6 +140,13 @@ class HybridFusionSpec extends SparkSpec {
       Similarity.rrfFuse(vec, big, probes, k = 5, maxBroadcastLex = 99L)
     }
     assert(e.getMessage.contains("cannot broadcast"))
+    // at cap + 1 the refusal names the lexical list and its own cap, not
+    // the kNN probe side and its parameter
+    assert(e.getMessage.startsWith("requirement failed: lexical list exceeds 99 rows"),
+      e.getMessage)
+    assert(e.getMessage.contains("maxBroadcastLex"), e.getMessage)
+    assert(!e.getMessage.contains("probe side") &&
+      !e.getMessage.contains("maxBroadcastProbes"), e.getMessage)
     // at exactly the cap it proceeds
     assert(Similarity.rrfFuse(vec, big, probes, k = 5,
       maxBroadcastLex = 100L).count() > 0)
