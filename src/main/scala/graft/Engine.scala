@@ -14,7 +14,10 @@ object Engine {
 
   /** Load a parquet warehouse laid out as one dir per init_db.sql table. */
   def loadWarehouse(spark: SparkSession, dir: String): SteamModels.Warehouse = {
-    def t(name: String): DataFrame = spark.read.parquet(s"$dir/$name")
+    // each table at its current version (crawl_state commits versions;
+    // a pointer-less table reads as its plain dir)
+    def t(name: String): DataFrame =
+      spark.read.parquet(graft.domain.GenStore.currentDir(spark, s"$dir/$name"))
     SteamModels.Warehouse(
       games = t("games"),
       developers = t("developers"), publishers = t("publishers"),

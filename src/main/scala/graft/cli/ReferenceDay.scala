@@ -131,7 +131,8 @@ object ReferenceDay {
       gameDevelopers = cat("game_developers"), gamePublishers = cat("game_publishers"),
       gameGenres = cat("game_genres"), gameLanguages = cat("game_languages"),
       prices = prices,
-      crawlState = spark.read.parquet(s"$whDir/crawl_state"),
+      crawlState = spark.read.parquet(
+        graft.domain.GenStore.currentDir(spark, s"$whDir/crawl_state")),
       reviews = cat("reviews"))
   }
 
@@ -165,7 +166,8 @@ object ReferenceDay {
     } finally q.stop()
     stages += "warehouse_games" -> spark.read.parquet(s"$warehouse/games").count()
     stages += "warehouse_prices" -> spark.read.parquet(s"$warehouse/prices").count()
-    stages += "warehouse_crawl_state" -> spark.read.parquet(s"$warehouse/crawl_state").count()
+    stages += "warehouse_crawl_state" -> spark.read.parquet(
+      graft.domain.GenStore.currentDir(spark, s"$warehouse/crawl_state")).count()
 
     // 3. model graph: staging views -> mart tables -> quality suite
     val w = assembleWarehouse(spark, catalog, warehouse)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
-import graft.operators.{Dedup, Serving}
+import graft.operators.Dedup
 import graft.sources.Writers
 
 /** The lake-resident incremental-dedup state as a MANAGED store, and its
@@ -14,23 +14,26 @@ import graft.sources.Writers
   * a production ingest adds next to them).
   *
   * Layout under one root (all parquet):
-  *  - `archive/` — (doc_id, text) of EVERY ingested doc, kept and dropped;
-  *    the verdict lake, append-only at the ROOT (the durable source of
-  *    truth is not versioned — only compacted). Dropped rows are exactly
-  *    the chain links the keep index is missing, which is why
-  *    reconciliation reads the archive.
-  *  - `tombstones/` — (doc_id) ids [[delete]]d, root-level because they
-  *    guard the root-level archive: excluded from every read immediately,
-  *    physically purged from the archive by the next reconcile.
-  *  - `edits/` — (doc_id, text) EDIT OVERLAY, root-level for the same
-  *    reason: [[upsert]]ed content supersedes the archive row sharing its
-  *    id at every read ([[corpus]], the ingest probe gate, reconcile's
-  *    truth) from the moment the upsert commits, and the next reconcile
-  *    FOLDS it into the physical archive rewrite and clears it. At most
-  *    one row per id (upsert swap-replaces last-writer-wins). The overlay
-  *    is edit-request-sized by contract — rare, like tombstones — never
-  *    corpus-sized; corpus-scale re-writes belong to a bulk archive
-  *    rewrite + reconcile.
+  *  - `archive.GEN` + `archive.gen-N/` (a pre-versioning store's plain
+  *    `archive/` reads the same) — (doc_id, text) of EVERY ingested doc,
+  *    kept and dropped; the verdict lake. Ingest appends into the current
+  *    version; reconcile and [[compactStores]] commit a rewritten one.
+  *    Dropped rows are exactly the chain links the keep index is missing,
+  *    which is why reconciliation reads the archive.
+  *  - `overlay.GEN` + `overlay.gen-N/{tombstones,edits}` (legacy: both at
+  *    the root), root-level because they guard the root-level archive and
+  *    committed TOGETHER ([[GenStore.commitOverlay]]):
+  *    - `tombstones` — (doc_id) ids [[delete]]d: excluded from every read
+  *      immediately, physically purged from the archive by the next
+  *      reconcile.
+  *    - `edits` — (doc_id, text) EDIT OVERLAY: [[upsert]]ed content
+  *      supersedes the archive row sharing its id at every read
+  *      ([[corpus]], the ingest probe gate, reconcile's truth) from the
+  *      moment the upsert commits, and the next reconcile FOLDS it into
+  *      the physical archive rewrite and clears it. At most one row per id
+  *      (last-writer-wins). The overlay is edit-request-sized by contract
+  *      — rare, like tombstones — never corpus-sized; corpus-scale
+  *      re-writes belong to a bulk archive rewrite + reconcile.
   *  - `GEN` + `gen-N/index/`, `gen-N/keeps/` — the MUTABLE state,
   *    generation-versioned through the shared [[GenStore]] lifecycle
   *    (VectorLake's contract): `index/` holds (doc_id, band, bh) LSH band
@@ -38,7 +41,8 @@ import graft.sources.Writers
   *    [[Dedup.incrementalKeep]] — and `keeps/` the (doc_id) keep set
   *    (greedy until a reconcile repairs it to full-batch semantics).
   *
-  * Ingest appends into the current generation; reconcile writes
+  * Ingest appends into the current generation (and archive version);
+  * reconcile (and [[compactStores]]) writes
   * gen-(N+1)/{keeps,index} IN FULL and commits by flipping the pointer —
   * so the round-7-era window where a crash between the two swaps left
   * keeps and index one reconcile apart is structurally gone: any reader
@@ -95,28 +99,24 @@ object DedupLake {
 
   /** The logical corpus — (doc_id, text), the durable truth every reader
     * (and reconcile) agrees on: archive with the [[upsert]] edit overlay
-    * folded over it and [[delete]] tombstones excluded. READER path:
-    * root-level stores, read-only swap resolution, no lease; the existence
-    * probes keep the common no-overlay plan free of dead join nodes. */
+    * folded over it and [[delete]] tombstones excluded. READER path, no
+    * lease: the overlay resolves once, BEFORE the archive (a reconcile
+    * commits the folded archive first and clears the overlay second), and
+    * its absence keeps the common no-overlay plan free of dead join
+    * nodes. */
   def corpus(spark: SparkSession, root: String): DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
-    def exists(sub: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(s"$root/$sub")
-      p.getFileSystem(conf).exists(p)
-    }
-    val archive = Writers.readOrEmptyReadOnly(spark, s"$root/archive",
-      archiveSchema)
-    if (!exists("edits") && !exists("tombstones")) archive
-    else corpusFold(archive,
-      Writers.readOrEmptyReadOnly(spark, s"$root/edits", archiveSchema),
-      Writers.readOrEmptyReadOnly(spark, s"$root/tombstones",
-        tombstonesSchema))
+    val ov = GenStore.readOverlay(spark, root, tombstonesSchema, archiveSchema)
+    val archive = GenStore.read(spark, s"$root/archive", archiveSchema)
+    ov.fold(archive) { case (tombs, edits) => corpusFold(archive, edits, tombs) }
   }
 
-  private def readOr(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    // the swap/recovery protocol is the shared Writers implementation —
-    // one state machine, not N hand-rolled copies (r7 review finding)
-    Writers.readOrEmpty(spark, path, schema)
+  /** WRITER-side: the current overlay's (tombstones, edits). */
+  private def overlay(spark: SparkSession, root: String): (DataFrame, DataFrame) =
+    GenStore.readOverlay(spark, root, tombstonesSchema, archiveSchema)
+      .getOrElse(noOverlay(spark))
+
+  private def noOverlay(spark: SparkSession): (DataFrame, DataFrame) =
+    (GenStore.empty(spark, tombstonesSchema), GenStore.empty(spark, archiveSchema))
 
   /** Run `f` holding the lake's exclusive writer lease — the shared
     * [[graft.sources.StateLock]] contract (atomic `_LOCK` create, epoch
@@ -154,10 +154,10 @@ object DedupLake {
     // reconcile, then proceed); the default stays fail-fast (VectorLake
     // .ingest's contract)
     graft.sources.StateLock.withRootLock(spark, root, waitMs = lockWaitMs) {
-      // one generation resolution for the whole mutation (the pointer
-      // cannot flip while we hold the lease); the archive stays at the
-      // unversioned root
+      // one generation (and archive version) resolution for the whole
+      // mutation — no pointer flips while we hold the lease
       val droot = GenStore.dataRoot(spark, root)
+      val archiveDir = GenStore.currentDir(spark, s"$root/archive")
       val docs = batch.select(col("doc_id").cast("long"), col("text"))
       // the PROBE index is the LOGICAL store: tombstoned docs' band rows
       // excluded (purged content must not keep suppressing near-dups — a
@@ -169,10 +169,9 @@ object DedupLake {
       // appends below keep anti-joining the PHYSICAL stores, so a replay
       // stays a no-op and a tombstoned id is not reusable until reconcile
       // reclaims it.
-      val tombs = readOr(spark, s"$root/tombstones", tombstonesSchema)
-      val edits = readOr(spark, s"$root/edits", archiveSchema)
-        .join(tombs, Seq("doc_id"), "left_anti")
-      val index = readOr(spark, s"$droot/index", indexSchema)
+      val (tombs, edits0) = overlay(spark, root)
+      val edits = edits0.join(tombs, Seq("doc_id"), "left_anti")
+      val index = GenStore.readOrEmpty(spark, s"$droot/index", indexSchema)
         .join(tombs, Seq("doc_id"), "left_anti")
         .join(broadcast(edits.select("doc_id")), Seq("doc_id"), "left_anti")
         .unionByName(Dedup.lshBands(edits, "doc_id", "text",
@@ -198,18 +197,18 @@ object DedupLake {
         val batchIds = docs.select("doc_id").distinct()
         // existing-state scans below are all scoped to batchIds via a
         // semi-join first, so replay checks cost O(batch), not O(lake)
-        def scoped(path: String, schema: StructType): DataFrame =
-          readOr(spark, path, schema)
-            .join(batchIds, Seq("doc_id"), "left_semi")
+        def scoped(df: DataFrame): DataFrame =
+          df.join(batchIds, Seq("doc_id"), "left_semi")
+        def scopedDir(path: String, schema: StructType): DataFrame =
+          scoped(GenStore.readOrEmpty(spark, path, schema))
         // "already durable" includes the edit overlay: an id living only in
-        // `edits/` (upsert-inserted, not yet folded) is resident content —
+        // `edits` (upsert-inserted, not yet folded) is resident content —
         // re-ingesting it must stay the same no-op-write it is for an
         // archived id (the overlay would supersede the appended row anyway)
-        docs.join(scoped(s"$root/archive", archiveSchema).select("doc_id")
-              .unionByName(
-                scoped(s"$root/edits", archiveSchema).select("doc_id")),
+        docs.join(scopedDir(archiveDir, archiveSchema).select("doc_id")
+              .unionByName(scoped(edits0).select("doc_id")),
             Seq("doc_id"), "left_anti")
-          .write.mode("append").parquet(s"$root/archive")
+          .write.mode("append").parquet(archiveDir)
         failpoint()
         // each append derives its "new" set from ITS OWN store, not a
         // sibling's: deriving the index rows from not-in-keeps would
@@ -220,16 +219,16 @@ object DedupLake {
         // nothing (the probe masks stored rows of overlay ids) while
         // cluttering the index until reconcile rebuilds it
         val notInIndex = kept.select("doc_id")
-          .join(scoped(s"$droot/index", indexSchema).select("doc_id").distinct(),
-            Seq("doc_id"), "left_anti")
-          .join(scoped(s"$root/edits", archiveSchema).select("doc_id"),
-            Seq("doc_id"), "left_anti")
+          .join(scopedDir(s"$droot/index", indexSchema).select("doc_id")
+              .distinct(), Seq("doc_id"), "left_anti")
+          .join(scoped(edits0).select("doc_id"), Seq("doc_id"), "left_anti")
         bandPin.join(notInIndex, Seq("doc_id"), "left_semi")
           .select("doc_id", "band", "bh")
           .write.mode("append").parquet(s"$droot/index")
         failpointAfterIndex()
         kept.select("doc_id")
-          .join(scoped(s"$droot/keeps", keepsSchema), Seq("doc_id"), "left_anti")
+          .join(scopedDir(s"$droot/keeps", keepsSchema), Seq("doc_id"),
+            "left_anti")
           .write.mode("append").parquet(s"$droot/keeps")
         kept
       } finally {
@@ -268,19 +267,15 @@ object DedupLake {
       // repaired keep set is computed over the purged+edited corpus, and
       // the archive itself is physically rewritten below (the reclaim and
       // the fold this lifecycle deferred)
-      def overlayExists(sub: String): Boolean = {
-        val p = new org.apache.hadoop.fs.Path(s"$root/$sub")
-        p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-      }
-      val hadOverlays = overlayExists("tombstones") || overlayExists("edits")
+      val pending = GenStore.readOverlay(spark, root, tombstonesSchema,
+        archiveSchema)
+      val (tombs, edits) = pending.getOrElse(noOverlay(spark))
       val archive = corpusFold(
-        readOr(spark, s"$root/archive", archiveSchema),
-        readOr(spark, s"$root/edits", archiveSchema),
-        readOr(spark, s"$root/tombstones", tombstonesSchema))
+        GenStore.read(spark, s"$root/archive", archiveSchema), edits, tombs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val archiveRows = archive.count()
-        val cur = readOr(spark, s"$droot/keeps", keepsSchema)
+        val cur = GenStore.readOrEmpty(spark, s"$droot/keeps", keepsSchema)
         val r = Dedup.reconcileLshKeeps(archive, "doc_id", "text", cur,
           numHashes, bandRows, shingleN)
         val repaired = r.repairedKeeps
@@ -305,40 +300,30 @@ object DedupLake {
           }
         } finally { repaired.unpersist(blocking = false); () }
         // the archive accumulates one small file set per ingest batch —
-        // compact it on the same cadence so reads stay one healthy scan.
-        // With overlays resident the rewrite uses the PURGED+FOLDED frame
-        // (the physical reclaim of deletes and the fold of edits), then
-        // drops the now-applied overlays; a crash between those steps
-        // re-runs harmlessly (re-excluding absent ids and re-folding
+        // commit it compacted on the same cadence so reads stay one healthy
+        // scan. The rewrite is the PURGED+FOLDED frame (the physical
+        // reclaim of deletes and the fold of edits); the now-applied
+        // overlay clears after it. A crash between the two commits re-runs
+        // harmlessly (re-excluding absent ids and re-folding
         // already-identical text are both no-ops at the next reconcile).
-        if (hadOverlays) {
-          val files = math.max(1L,
-            (archiveRows + targetRecordsPerFile - 1) / targetRecordsPerFile)
-          Writers.swapReplace(spark, s"$root/archive",
-            archive.coalesce(files.toInt))
-          GenStore.deleteDir(spark, s"$root/tombstones")
-          GenStore.deleteDir(spark, s"$root/edits")
-        } else Writers.compact(spark, s"$root/archive", targetRecordsPerFile)
+        GenStore.commitCompacted(spark, s"$root/archive", archive,
+          archiveRows, targetRecordsPerFile)
+        if (pending.isDefined) GenStore.commitOverlay(spark, root, None, None)
         report
       } finally { archive.unpersist(blocking = false); () }
     }
 
   def keeps(spark: SparkSession, root: String): DataFrame = {
-    // READER path: one pointer resolution, read-only swap resolution — no
-    // lease held, safe concurrent with a locked writer's promotion. The
-    // GenStore expiry guard makes a stranded reader (resolved generation
-    // dropped by retention) fail loudly instead of serving an EMPTY keep
-    // set as an answer (r9 verdict finding #3). Tombstoned docs excluded
-    // (the existence probe keeps the common no-deletes plan join-free).
+    // READER path: one overlay and one generation resolution (overlay
+    // first, see corpus) — no lease held, safe concurrent with a locked
+    // writer's commits. The GenStore expiry guard makes a stranded reader
+    // (resolved generation dropped by retention) fail loudly instead of
+    // serving an EMPTY keep set as an answer (r9 verdict finding #3).
+    // Tombstoned docs excluded (no overlay keeps the plan join-free).
+    val ov = GenStore.readOverlay(spark, root, tombstonesSchema, archiveSchema)
     val base = GenStore.readGenOrEmpty(spark, GenStore.dataRoot(spark, root),
       "keeps", keepsSchema)
-    val p = new org.apache.hadoop.fs.Path(s"$root/tombstones")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) base
-    else base.join(
-      Writers.readOrEmptyReadOnly(spark, s"$root/tombstones",
-        tombstonesSchema),
-      Seq("doc_id"), "left_anti")
+    ov.fold(base) { case (tombs, _) => base.join(tombs, Seq("doc_id"), "left_anti") }
   }
 
   /** DELETE by doc id — the right-to-be-forgotten path through the dedup
@@ -358,34 +343,32 @@ object DedupLake {
     graft.sources.StateLock.withRootLock(spark, root, waitMs = lockWaitMs) {
       val del = ids.select(col("doc_id").cast("long").as("doc_id")).distinct()
       // resident = archive OR the edit overlay: an upsert-inserted id lives
-      // only in `edits/` until a reconcile folds it, and a purge ordered in
+      // only in `edits` until a reconcile folds it, and a purge ordered in
       // that window must still tombstone it
-      val resident = readOr(spark, s"$root/archive", archiveSchema)
+      val (existing, edits) = overlay(spark, root)
+      val resident = GenStore.read(spark, s"$root/archive", archiveSchema)
         .select("doc_id")
-        .unionByName(readOr(spark, s"$root/edits", archiveSchema)
-          .select("doc_id"))
-      val existing = readOr(spark, s"$root/tombstones", tombstonesSchema)
+        .unionByName(edits.select("doc_id"))
       val toWrite = del
         .join(resident, Seq("doc_id"), "left_semi")
         .join(existing, Seq("doc_id"), "left_anti")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val n = toWrite.count() // while pinned, BEFORE the append
-        if (n > 0)
-          toWrite.write.mode("append").parquet(s"$root/tombstones")
+        if (n > 0) GenStore.appendTombstones(spark, root, toWrite)
         n
       } finally { toWrite.unpersist(blocking = false); () }
     }
 
   /** UPSERT by doc id — the content-EDIT path ([[VectorLake.upsert]]'s
     * document twin: a correction, a re-crawl, a redaction rewrite): under
-    * one lease the batch lands in the `edits/` overlay (swap-replaced,
-    * last-writer-wins per id — the overlay IS the replacement, so the
-    * append-only archive is never rewritten per edit), any tombstones on
-    * the batch ids drop (an upsert is explicit new content — the one
-    * sanctioned id resurrection), and the batch ids join [[keeps]]
-    * (anti-joined). From that commit every read serves the new text:
-    * [[corpus]] folds the overlay over the archive, and the ingest probe
+    * one lease the batch lands in the `edits` overlay (last-writer-wins
+    * per id — the overlay IS the replacement, so the append-only archive
+    * is never rewritten per edit) and any tombstones on the batch ids drop
+    * (an upsert is explicit new content — the one sanctioned id
+    * resurrection), both in ONE overlay commit; then the batch ids join
+    * [[keeps]] (anti-joined). From that commit every read serves the new
+    * text: [[corpus]] folds the overlay over the archive, and the ingest probe
     * gates on the overlay's band rows INSTEAD of the stored ones (the old
     * content stops suppressing near-dups the moment it stops existing).
     * The next [[reconcile]] folds the overlay into the physical archive
@@ -400,11 +383,12 @@ object DedupLake {
     * (the same greedy-until-reconcile contract as chain-straddling
     * ingests). Use [[ingest]] for gated inserts.
     *
-    * At-least-once: the overlay swap is last-writer-wins (a replay
-    * re-writes identical rows), the tombstone drop and keeps append
-    * anti-join — the operation is idempotent as a whole.
-    * `failpointAfterEdits` runs after the overlay commit (before the
-    * resurrection) and `failpointAfterTombstones` before the keeps append
+    * At-least-once: the overlay commit is last-writer-wins (a replay
+    * re-writes identical rows) and the keeps append anti-joins — the
+    * operation is idempotent as a whole. `failpointAfterEdits` runs once
+    * the next overlay version is written in full, before its pointer flip
+    * (nothing is committed: readers keep the previous overlay), and
+    * `failpointAfterTombstones` after the commit, before the keeps append
     * — the two torn windows the spec drives, both repaired by replay.
     * Batch ids must be unique (refused loudly — two texts would race for
     * one id), and the RESULTING overlay stays inside `maxOverlayRows`
@@ -429,7 +413,8 @@ object DedupLake {
           s"upsert batch carries duplicate doc_id values ($n rows, " +
             s"${counts.getLong(1)} distinct) — two texts would land under " +
             "one id. Deduplicate the batch first.")
-        val merged = readOr(spark, s"$root/edits", archiveSchema)
+        val (tombs, edits) = overlay(spark, root)
+        val merged = edits
           .join(broadcast(docs.select("doc_id")), Seq("doc_id"), "left_anti")
           .unionByName(docs)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -442,26 +427,18 @@ object DedupLake {
               "fold). Run reconcile to fold it into the archive, then " +
               "resume; corpus-scale re-writes belong to a bulk archive " +
               "rewrite + reconcile.")
-          if (n > 0) Writers.swapReplace(spark, s"$root/edits", merged)
+          if (n > 0) GenStore.commitOverlay(spark, root,
+            GenStore.nonEmpty(tombs.join(broadcast(docs.select("doc_id")),
+              Seq("doc_id"), "left_anti")),
+            Some(merged), beforeFlip = failpointAfterEdits)
         } finally { merged.unpersist(blocking = false); () }
-        failpointAfterEdits()
-        val tombs = readOr(spark, s"$root/tombstones", tombstonesSchema)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          if (Serving.boundedCount(
-              tombs.join(broadcast(docs.select("doc_id")),
-                Seq("doc_id"), "left_semi"), 1) > 0)
-            Writers.swapReplace(spark, s"$root/tombstones",
-              tombs.join(broadcast(docs.select("doc_id")),
-                Seq("doc_id"), "left_anti"))
-        } finally { tombs.unpersist(blocking = false); () }
         failpointAfterTombstones()
         // gate-free keep membership (scoped anti-join — O(batch), the
         // PricePipeline idiom): a kept id stays kept, a dropped or new id
         // joins; reconcile's full-batch repair re-decides over the edited
         // corpus anyway
         docs.select("doc_id")
-          .join(readOr(spark, s"$droot/keeps", keepsSchema)
+          .join(GenStore.readOrEmpty(spark, s"$droot/keeps", keepsSchema)
               .join(broadcast(docs.select("doc_id")),
                 Seq("doc_id"), "left_semi"),
             Seq("doc_id"), "left_anti")
@@ -484,38 +461,53 @@ object DedupLake {
 
   /** Collapse the small files a high-frequency ingest accumulates BETWEEN
     * reconciles — the dedup twin of [[VectorLake.compactLists]]: every
-    * batch appends one file set each to `archive/`, the current
-    * generation's `index/` and `keeps/`, and reconcile compacts weekly,
-    * but a streaming `dedupLakeIngestStream` leaves thousands of tiny
-    * files in between. Each store whose data-file count reaches
-    * `minFilesPerStore` is rewritten to ceil(rows/target) files via the
-    * table-level [[Writers.compact]] swap (safe next to concurrent readers:
-    * they resolve `__tmp`/`__old` read-only). Values untouched; CURRENT
-    * generation only. Returns the compacted stores with their prior file
+    * batch appends one file set each to the current archive version and
+    * the current generation's `index/` and `keeps/`, and reconcile
+    * compacts weekly, but a streaming `dedupLakeIngestStream` leaves
+    * thousands of tiny files in between. When a store's data-file count
+    * reaches `minFilesPerStore`, it is rewritten to ceil(rows/target)
+    * files and committed by pointer flip: the archive as its next version
+    * ([[GenStore.commitCompacted]]), `index` and `keeps` TOGETHER as the
+    * next generation (reconcile's protocol, so a reader or a crash sees
+    * the old pair or the compacted one, never a missing member). Values
+    * untouched. Returns the compacted stores with their prior file
     * counts. `lockWaitMs > 0` is the scheduled-caller stance. */
   def compactStores(spark: SparkSession, root: String,
                     targetRecordsPerFile: Long = 1000000L,
                     minFilesPerStore: Int = 8,
                     lockWaitMs: Long = 0L): Map[String, Long] =
     graft.sources.StateLock.withRootLock(spark, root, waitMs = lockWaitMs) {
-      val droot = GenStore.dataRoot(spark, root)
-      val conf = spark.sessionState.newHadoopConf()
-      val out = Map.newBuilder[String, Long]
-      for ((label, dir) <- Seq("archive" -> s"$root/archive",
-          "index" -> s"$droot/index", "keeps" -> s"$droot/keeps")) {
+      Writers.recoverPointer(spark, GenStore.pointer(root))
+      val genCur = GenStore.currentGen(spark, root)
+      val droot = GenStore.dataRootOf(root, genCur)
+      val archiveDir = GenStore.currentDir(spark, s"$root/archive")
+      def dataFiles(dir: String): Long = {
         val p = new org.apache.hadoop.fs.Path(dir)
-        val fs = p.getFileSystem(conf)
-        if (fs.exists(p)) {
-          val nFiles = fs.listStatus(p).count(f => f.isFile &&
-            !f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith("."))
-          if (nFiles >= minFilesPerStore) {
-            Writers.compact(spark, dir, targetRecordsPerFile)
-            out += label -> nFiles.toLong
+        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+        if (!fs.exists(p)) 0L
+        else fs.listStatus(p).count(f =>
+          f.isFile && !"_.".contains(f.getPath.getName.head)).toLong
+      }
+      val due = Seq("archive" -> archiveDir, "index" -> s"$droot/index",
+          "keeps" -> s"$droot/keeps")
+        .map { case (label, dir) => label -> dataFiles(dir) }
+        .filter(_._2 >= minFilesPerStore).toMap
+      if (due.contains("archive")) {
+        val archive = spark.read.parquet(archiveDir)
+        GenStore.commitCompacted(spark, s"$root/archive", archive,
+          archive.count(), targetRecordsPerFile)
+      }
+      if (due.contains("index") || due.contains("keeps"))
+        GenStore.promote(spark, root, genCur,
+            legacyDirs = Seq("keeps", "index")) { ngRoot =>
+          for ((m, schema) <- Seq("keeps" -> keepsSchema, "index" -> indexSchema)
+               if GenStore.exists(spark, s"$droot/$m")) {
+            val df = spark.read.schema(schema).parquet(s"$droot/$m")
+            GenStore.compacted(df, df.count(), targetRecordsPerFile)
+              .write.parquet(s"$ngRoot/$m")
           }
         }
-      }
-      out.result()
+      due
     }
 
   /** [[compactStores]] as a cron [[Scheduler.Deployment]] — the in-between

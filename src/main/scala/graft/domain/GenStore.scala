@@ -5,104 +5,249 @@ import org.apache.spark.sql.types.StructType
 
 import graft.sources.Writers
 
-/** The shared GENERATION lifecycle of a versioned lake store (the r8 ask to
-  * factor the common lake contract, done structurally rather than only as a
-  * shared spec harness): pointer resolution, atomic promotion of a fully
-  * written gen-(N+1) tree, parameterized retention, expiry detection, and
-  * legacy-layout migration — ONE implementation behind [[VectorLake]] and
-  * [[DedupLake]], inherited by the next lake. The pointer-file crash
-  * protocol itself is [[Writers]]' (readPointerReadOnly / writePointer /
-  * recoverPointer).
+/** The ONE commit protocol of every mutable state dir: immutable numbered
+  * versions plus a pointer naming the current one (Delta Lake's
+  * log-structured commit, Armbrust et al., VLDB 2020, at directory scale).
+  * The pointer file's own crash protocol is [[Writers]]' (injectable
+  * through `withPointerCommit`). A [[Store]] is a lake's generations
+  * (`root/GEN`, `root/gen-N/`), one state dir `d` (`d.GEN`, `d.gen-N/`:
+  * `crawl_state`, the dedup archive, the lex conf, centroids), or a set of
+  * dirs committed together (`root/name.GEN`, `root/name.gen-N/{a,b}`: a
+  * lake's tombstones+edits overlay, the sync logs).
   *
-  * Contract: a store's mutable dirs live under `root/gen-N/`; the `GEN`
-  * pointer names the current generation. Readers resolve the pointer ONCE
-  * per operation, so every read under the returned root comes from one
-  * generation — a promotion landing mid-operation can never mix
-  * generations. Writers promote by writing the WHOLE new generation first
-  * and flipping the pointer as the commit; a crash anywhere before the
-  * flip leaves readers on gen-N with only an orphan dir (overwritten by
-  * the next attempt). A pointer-less root (a store created before
-  * versioning, or one that has never reconciled) works at the root layout
-  * and is migrated by its first promotion.
-  *
-  * Retention: [[promote]] keeps the newest `retainGenerations` generations
-  * (default 2 — the displaced one survives exactly one more promotion for
-  * in-flight readers). A reader whose resolved generation outlives
-  * retention fails LOUDLY at its next generation-scoped read
-  * ([[readGenOrEmpty]]'s expiry guard) instead of silently serving an
-  * empty frame or dying mid-scan on a raw FileNotFoundException (the r9
-  * verdict's unfriendliest-failure finding). */
-private[domain] object GenStore {
+  * Readers resolve the pointer ONCE per operation, so every read comes
+  * from one version, and a lazily listed read keeps its files until
+  * retention drops them. Writers (under the store's lease) write the WHOLE
+  * next version, then flip the pointer; a crash before the flip leaves an
+  * orphan the next attempt deletes. Appends go into the current version. A
+  * pointer-less store reads its legacy layout exactly as before and is
+  * migrated by its first commit. Retention keeps the newest two versions
+  * (the legacy layout counts as the one before gen-0; lake reconciles may
+  * raise it); a reader that outlives it fails LOUDLY ([[requireLive]],
+  * [[requireLiveScan]]), never with an empty frame or a raw
+  * FileNotFoundException. */
+private[graft] object GenStore {
 
-  def pointer(root: String): String = s"$root/GEN"
+  /** Where one versioned store lives: `stem + "GEN"` is the pointer,
+    * `stem + "gen-N"` version N, and `legacy` the pointer-less layout. */
+  final case class Store(stem: String, legacy: String) {
+    def pointer: String = s"${stem}GEN"
+    def root(version: Option[Long]): String =
+      version.fold(legacy)(n => s"${stem}gen-$n")
+  }
+
+  object Store {
+    /** A lake's generations: `root/GEN`, `root/gen-N`. */
+    def lake(root: String): Store = Store(s"$root/", root)
+    /** One plain state dir: `dir.GEN`, `dir.gen-N`. */
+    def dir(path: String): Store = Store(s"$path.", path)
+    /** A set of dirs committed together: `root/name.GEN`,
+      * `root/name.gen-N/<member>`, legacy members at `root/<member>`. */
+    def under(root: String, name: String): Store = Store(s"$root/$name.", root)
+  }
+
+  private def fsOf(spark: SparkSession, path: String) = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+  }
+
+  def exists(spark: SparkSession, path: String): Boolean = {
+    val (fs, p) = fsOf(spark, path)
+    fs.exists(p)
+  }
+
+  /** READER-side: the store's current version id, `None` when pointer-less. */
+  def version(spark: SparkSession, s: Store): Option[Long] =
+    Writers.readPointerReadOnly(spark, s.pointer).map(_.toLong)
+
+  /** READER-side: the store's current root, resolved once. */
+  def current(spark: SparkSession, s: Store): String =
+    s.root(version(spark, s))
+
+  /** The current root of the plain state dir `dir` — what a reader that
+    * builds its own `spark.read` (the warehouse loaders) resolves first. */
+  def currentDir(spark: SparkSession, dir: String): String =
+    current(spark, Store.dir(dir))
+
+  /** The one read-or-empty reader: `path` as `schema`, an empty frame if
+    * absent. Plain — callers pass a path under a root they resolved. */
+  def readOrEmpty(spark: SparkSession, path: String,
+                  schema: StructType): DataFrame =
+    if (exists(spark, path)) spark.read.schema(schema).parquet(path)
+    else empty(spark, schema)
+
+  def empty(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+
+  /** The state dir `dir` at its current version, or empty. */
+  def read(spark: SparkSession, dir: String, schema: StructType): DataFrame =
+    readOrEmpty(spark, currentDir(spark, dir), schema)
+
+  /** WRITER-side commit of the next version of `s`: `write` fills the
+    * fresh version root, the pointer flip commits it. `legacyMembers`
+    * (absolute paths) are the pointer-less layout. */
+  def commit(spark: SparkSession, s: Store, legacyMembers: Seq[String])
+            (write: String => Unit): Unit = {
+    Writers.recoverPointer(spark, s.pointer)
+    promoteStore(spark, s, version(spark, s), 2, legacyMembers)(write)
+  }
+
+  /** [[commit]] of a plain state dir whose next content is `df`. */
+  def commitDir(spark: SparkSession, dir: String, df: DataFrame): Unit =
+    commit(spark, Store.dir(dir), Seq(dir))(df.write.parquet(_))
+
+  /** [[commitDir]] in ceil(rows / targetRecordsPerFile) files — compaction
+    * as a version commit (values untouched; `coalesce` only narrows). */
+  def commitCompacted(spark: SparkSession, dir: String, df: DataFrame,
+                      rows: Long, targetRecordsPerFile: Long): Unit =
+    commitDir(spark, dir, compacted(df, rows, targetRecordsPerFile))
+
+  /** `df` (of `rows` rows) in ceil(rows / targetRecordsPerFile) files. */
+  def compacted(df: DataFrame, rows: Long,
+                targetRecordsPerFile: Long): DataFrame = {
+    require(targetRecordsPerFile > 0, "targetRecordsPerFile must be positive")
+    val files = math.max(1L,
+      (rows + targetRecordsPerFile - 1) / targetRecordsPerFile)
+    df.coalesce(files.toInt)
+  }
+
+  /** [[commit]] of a set whose next members are `next` (every member,
+    * name -> frame); a `None` member is left out of the new version (reads
+    * as empty). */
+  def commitMembers(spark: SparkSession, s: Store,
+                    next: Seq[(String, Option[DataFrame])],
+                    beforeFlip: () => Unit = () => ()): Unit =
+    commit(spark, s, next.map { case (m, _) => s"${s.legacy}/$m" }) { vroot =>
+      for ((m, df) <- next; d <- df) d.write.parquet(s"$vroot/$m")
+      // an empty version still needs its dir: it IS the committed state
+      val (fs, p) = fsOf(spark, vroot)
+      fs.mkdirs(p)
+      beforeFlip()
+    }
+
+  // ---- a lake's root overlay: tombstones + edits, committed together ------
+
+  def overlay(root: String): Store = Store.under(root, "overlay")
+
+  /** The overlay `view` applies — the one place that policy lives: the
+    * current overlay's (tombstones, edits) for [[ReadView.Live]], resolved
+    * once; `None` for a pinned view, or when neither member exists (the
+    * fast path that keeps reader plans free of dead join nodes). Readers
+    * resolve it BEFORE the generation: a reconcile commits the folded
+    * generation first and clears the overlay second, so this order can
+    * only re-apply a folded overlay (a no-op), never miss a pending one. */
+  def readOverlay(spark: SparkSession, root: String, tombstones: StructType,
+                  edits: StructType, view: ReadView = ReadView.Live)
+      : Option[(DataFrame, DataFrame)] = view match {
+    case ReadView.Pinned(_) => None
+    case ReadView.Live =>
+      val ov = current(spark, overlay(root))
+      if (!exists(spark, s"$ov/tombstones") && !exists(spark, s"$ov/edits"))
+        None
+      else Some((readOrEmpty(spark, s"$ov/tombstones", tombstones),
+        readOrEmpty(spark, s"$ov/edits", edits)))
+  }
+
+  /** WRITER-side: append tombstone rows into the CURRENT overlay version
+    * (the legacy `root/tombstones` while pointer-less). */
+  def appendTombstones(spark: SparkSession, root: String, rows: DataFrame): Unit =
+    rows.write.mode("append")
+      .parquet(s"${current(spark, overlay(root))}/tombstones")
+
+  /** `df` as a next-version member, `None` when it has no rows (one
+    * bounded probe). */
+  def nonEmpty(df: DataFrame): Option[DataFrame] =
+    if (graft.operators.Serving.boundedCount(df, 1) > 0) Some(df) else None
+
+  /** WRITER-side: commit the next overlay — both members in ONE flip (a
+    * `None` member is left out). `beforeFlip` runs once the version is
+    * written in full, before the pointer commits it. */
+  def commitOverlay(spark: SparkSession, root: String,
+                    tombstones: Option[DataFrame], edits: Option[DataFrame],
+                    beforeFlip: () => Unit = () => ()): Unit =
+    commitMembers(spark, overlay(root),
+      Seq("tombstones" -> tombstones, "edits" -> edits), beforeFlip)
+
+  // ---- lake generations (Store.lake) ---------------------------------------
+
+  def pointer(root: String): String = Store.lake(root).pointer
 
   def currentGen(spark: SparkSession, root: String): Option[Long] =
-    Writers.readPointerReadOnly(spark, pointer(root)).map(_.toLong)
+    version(spark, Store.lake(root))
 
   def dataRootOf(root: String, gen: Option[Long]): String =
-    gen.map(g => s"$root/gen-$g").getOrElse(root)
+    Store.lake(root).root(gen)
 
   /** READER-side: one resolution per operation. */
   def dataRoot(spark: SparkSession, root: String): String =
     dataRootOf(root, currentGen(spark, root))
 
-  /** A serve's [[ReadView]] as (data root, apply the root overlays) — the
-    * one place a view is resolved. The root is expiry-checked here, so a
-    * pinned generation that retention dropped (or never wrote) fails with
-    * the stranded-reader message before any scan. */
-  def resolve(spark: SparkSession, root: String,
-              view: ReadView): (String, Boolean) = {
-    val resolved = view match {
-      case ReadView.Live => (dataRoot(spark, root), true)
-      case ReadView.Pinned(gen) => (dataRootOf(root, gen), false)
+  /** A serve's [[ReadView]] as its generation data root — the one place a
+    * view's generation is resolved (its overlay: [[readOverlay]]). The
+    * root is expiry-checked here, so a pinned generation that retention
+    * dropped (or never wrote) fails with the stranded-reader message
+    * before any scan. */
+  def resolve(spark: SparkSession, root: String, view: ReadView): String = {
+    val droot = view match {
+      case ReadView.Live => dataRoot(spark, root)
+      case ReadView.Pinned(gen) => dataRootOf(root, gen)
     }
-    requireLive(spark, resolved._1)
-    resolved
+    requireLive(spark, droot)
+    droot
   }
 
-  /** Expiry guard for a PREVIOUSLY-resolved generation root: a reader that
-    * resolved gen-N and then slept through `retainGenerations` promotions
-    * holds a root that retention has deleted. Raise the actionable message
-    * at the next read instead of letting [[Writers.readOrEmptyReadOnly]]
-    * return a silently-EMPTY frame (DedupLake.keeps would serve "no keeps"
-    * as an answer) or a mid-scan FileNotFoundException.
-    *
-    * A resolved ROOT layout (no `gen-N` suffix) expires the same way: it
-    * means "no pointer existed at resolution time", so if a pointer exists
-    * NOW, the store was versioned since — this reader's legacy dirs are at
-    * most one promotion from deletion, and after that deletion its reads
-    * would silently come up empty (the r9 ask-#6 focus: promote's
-    * legacy-dir drop at newGen=1 under a mid-flight legacy reader). */
-  def requireLive(spark: SparkSession, droot: String): Unit =
-    if (droot.matches("""(?s).*/gen-\d+""")) {
-      val p = new org.apache.hadoop.fs.Path(droot)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(p))
-        throw new IllegalStateException(
-          s"generation at $droot has EXPIRED — later promotions dropped it " +
-            "under the store's retention. Re-resolve the pointer " +
-            "(GenStore.dataRoot) and re-read under the current generation; " +
-            "if readers legitimately outlive two promotions, raise " +
-            "retainGenerations on the reconcile/promote call.")
-    } else {
-      val p = new org.apache.hadoop.fs.Path(pointer(droot))
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(p))
-        throw new IllegalStateException(
-          s"the legacy root layout at $droot has EXPIRED — the store was " +
-            "versioned (a GEN pointer now exists) after this reader " +
-            "resolved it, and promotions delete the legacy dirs once " +
-            "displaced. Re-resolve the pointer (GenStore.dataRoot) and " +
-            "re-read under the current generation.")
-    }
+  private val versionRoot = """(?s).*[/.]gen-\d+""".r
 
-  /** READER-side generation-scoped read: [[Writers.readOrEmptyReadOnly]]
-    * behind the [[requireLive]] expiry guard — what both lakes' reader
-    * paths call so a stranded reader fails loudly, not emptily. */
+  private def expired(root: String) = new IllegalStateException(
+    s"generation at $root has EXPIRED — later commits dropped it under " +
+      "the store's retention. Re-resolve the pointer (GenStore.current / " +
+      "dataRoot) and re-read under the current version; if readers " +
+      "legitimately outlive two promotions, raise retainGenerations on " +
+      "the reconcile/promote call.")
+
+  /** Expiry guard for a PREVIOUSLY-resolved lake generation root, raised
+    * at the next read instead of a silently-EMPTY frame (DedupLake.keeps
+    * would serve "no keeps" as an answer) or a mid-scan
+    * FileNotFoundException. A resolved lake ROOT layout expires once a
+    * pointer exists: its legacy dirs are then at most one promotion from
+    * deletion. */
+  def requireLive(spark: SparkSession, droot: String): Unit =
+    if (versionRoot.matches(droot)) {
+      if (!exists(spark, droot)) throw expired(droot)
+    } else if (exists(spark, pointer(droot)))
+      throw new IllegalStateException(
+        s"the legacy root layout at $droot has EXPIRED — the store was " +
+          "versioned (a GEN pointer now exists) after this reader " +
+          "resolved it, and promotions delete the legacy dirs once " +
+          "displaced. Re-resolve the pointer (GenStore.dataRoot) and " +
+          "re-read under the current generation.")
+
+  /** Expiry guard for a frame built EARLIER over state dirs (a loaded
+    * warehouse): a file-relation root that retention dropped — a version,
+    * or a legacy dir whose store was versioned since — fails with the
+    * expiry message, not a raw FILE_NOT_EXIST mid-scan. No Spark job. */
+  def requireLiveScan(spark: SparkSession, df: DataFrame): Unit = {
+    import org.apache.spark.sql.execution.datasources.{
+      HadoopFsRelation, LogicalRelation}
+    val roots = df.queryExecution.analyzed.collect {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation => h.location.rootPaths.map(_.toString)
+        case _ => Nil
+      }
+    }.flatten.distinct
+    for (r <- roots if !exists(spark, r))
+      if (versionRoot.matches(r) || exists(spark, Store.dir(r).pointer))
+        throw expired(r)
+  }
+
+  /** READER-side generation-scoped read: [[readOrEmpty]] behind the
+    * [[requireLive]] expiry guard — what the lakes' reader paths call so a
+    * stranded reader fails loudly, not emptily. */
   def readGenOrEmpty(spark: SparkSession, droot: String, sub: String,
                      schema: StructType): DataFrame = {
     requireLive(spark, droot)
-    Writers.readOrEmptyReadOnly(spark, s"$droot/$sub", schema)
+    readOrEmpty(spark, s"$droot/$sub", schema)
   }
 
   /** WRITER-side ROLLBACK (call under the store's lease): flip the pointer
@@ -128,72 +273,72 @@ private[domain] object GenStore {
     Writers.writePointer(spark, pointer(root), toGen.toString)
   }
 
+  /** The resident version numbers of `s`, oldest first — one listing of
+    * the stem's parent. */
+  private def versions(spark: SparkSession, s: Store): Seq[(Long, String)] = {
+    val (fs, stem) = fsOf(spark, s.pointer)
+    val base = stem.getParent
+    val head = s.stem.substring(s.stem.lastIndexOf('/') + 1)
+    val name = s"""\\Q$head\\Egen-(\\d+)""".r
+    if (!fs.exists(base)) Seq.empty
+    else fs.listStatus(base).toSeq.collect {
+      case st if st.isDirectory => st.getPath.getName match {
+        case name(g) => Some(g.toLong -> st.getPath.toString)
+        case _ => None
+      }
+    }.flatten.sortBy(_._1)
+  }
+
   /** The resident generation numbers under `root`, oldest first — one root
     * listing. Under the default retention this is (displaced, current); the
     * displaced generation survives exactly one promotion FOR shadow reads.
     * Empty for a pointer-less legacy store. */
-  def generations(spark: SparkSession, root: String): Seq[Long] = {
-    val base = new org.apache.hadoop.fs.Path(root)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(base)) Seq.empty
-    else {
-      val genName = """gen-(\d+)""".r
-      fs.listStatus(base).toSeq.collect {
-        case st if st.isDirectory =>
-          st.getPath.getName match {
-            case genName(g) => Some(g.toLong)
-            case _ => None
-          }
-      }.flatten.sorted
-    }
-  }
+  def generations(spark: SparkSession, root: String): Seq[Long] =
+    versions(spark, Store.lake(root)).map(_._1)
 
   def deleteDir(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val (fs, p) = fsOf(spark, path)
     if (fs.exists(p)) { fs.delete(p, true); () }
   }
 
-  /** WRITER-side promotion (call under the store's lease, with `cur` read
-    * AFTER [[Writers.recoverPointer]]): `write` fills a fresh gen-(N+1)
-    * root completely — an orphan from a crashed previous attempt is
-    * deleted first — then the pointer flip COMMITS it. Retention: the
-    * newest `retainGenerations` generations survive (the displaced one
-    * lives `retainGenerations - 1` more promotions for in-flight readers);
-    * older generations, and (once the legacy root layout itself falls out
-    * of the retention window) the `legacyDirs` of a pre-versioning store,
-    * are dropped. `retainGenerations = 1` deletes the displaced generation
-    * immediately — only for stores with provably no concurrent readers. */
+  /** WRITER-side lake promotion (under the lease, `cur` read AFTER
+    * [[Writers.recoverPointer]]): `write` fills gen-(N+1) completely, the
+    * pointer flip COMMITS it, and the newest `retainGenerations` survive
+    * (1 = no concurrent readers allowed). A pre-versioning store's
+    * `legacyDirs` — and any dir store versioned at them — drop once the
+    * legacy layout leaves the retention window. */
   def promote(spark: SparkSession, root: String, cur: Option[Long],
               legacyDirs: Seq[String],
-              retainGenerations: Int = 2)(write: String => Unit): Unit = {
-    require(retainGenerations >= 1,
-      s"retainGenerations must be >= 1, got $retainGenerations")
-    val newGen = cur.map(_ + 1).getOrElse(0L)
-    val ngRoot = s"$root/gen-$newGen"
-    deleteDir(spark, ngRoot)
-    write(ngRoot)
-    Writers.writePointer(spark, pointer(root), newGen.toString)
-    // retention drops the generations that actually EXIST below the cutoff
-    // (one root listing), not a 0..newGen probe sweep — at generation 10⁴
-    // the per-promotion existence probes would dwarf the deletions (all but
-    // retainGenerations of them hit nothing, every promotion, forever)
-    val cutoff = newGen - (retainGenerations - 1)
-    if (cutoff > 0) {
-      val base = new org.apache.hadoop.fs.Path(root)
-      val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-      val genName = """gen-(\d+)""".r
-      for (st <- fs.listStatus(base) if st.isDirectory)
-        st.getPath.getName match {
-          case genName(g) if g.toLong < cutoff =>
-            deleteDir(spark, st.getPath.toString)
-          case _ => ()
+              retainGenerations: Int = 2)(write: String => Unit): Unit =
+    promoteStore(spark, Store.lake(root), cur, retainGenerations,
+      legacyDirs.map(d => s"$root/$d"), nestedLegacy = true)(write)
+
+  private def promoteStore(spark: SparkSession, s: Store, cur: Option[Long],
+                           retain: Int, legacy: Seq[String],
+                           nestedLegacy: Boolean = false)
+                          (write: String => Unit): Unit = {
+    require(retain >= 1, s"retainGenerations must be >= 1, got $retain")
+    val newVersion = cur.map(_ + 1).getOrElse(0L)
+    val next = s.root(Some(newVersion))
+    deleteDir(spark, next)
+    write(next)
+    Writers.writePointer(spark, s.pointer, newVersion.toString)
+    // retention drops the versions that actually EXIST below the cutoff
+    // (one listing), not a 0..newVersion probe sweep
+    val cutoff = newVersion - (retain - 1)
+    for ((v, path) <- versions(spark, s) if v < cutoff) deleteDir(spark, path)
+    // the legacy layout counts as the version BEFORE gen-0: it leaves the
+    // retention window at the same commit gen-0 would
+    if (newVersion >= retain - 1)
+      for (d <- legacy) {
+        deleteDir(spark, d)
+        // a legacy lake dir may itself be a versioned dir store (a
+        // pre-versioning vector lake's re-initialized centroids)
+        if (nestedLegacy) {
+          val ds = Store.dir(d)
+          versions(spark, ds).foreach { case (_, p) => deleteDir(spark, p) }
+          deleteDir(spark, ds.pointer)
         }
-    }
-    // the legacy root layout counts as the generation BEFORE gen-0: it
-    // leaves the retention window at the same promotion gen-0 would
-    if (newGen >= retainGenerations - 1)
-      for (d <- legacyDirs; suf <- Seq("", "__tmp", "__old"))
-        deleteDir(spark, s"$root/$d$suf")
+      }
   }
 }

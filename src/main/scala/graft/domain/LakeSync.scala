@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.Serving
-import graft.sources.Writers
 
 /** CROSS-LAKE mutation sync — the fan-out a real purge or edit request
   * needs when the same document lives in BOTH stores (the dedup lake holds
@@ -16,23 +15,27 @@ import graft.sources.Writers
   *
   * The design is a tiny write-ahead INTENT LOG per mutation kind plus
   * idempotent fan-out:
-  *  - `requests/` under the sync root — (doc_id) rows, the durable record
+  *  - `requests` under the sync root — (doc_id) rows, the durable record
   *    that a purge was ORDERED. [[requestDelete]] appends (anti-joined, so
   *    an exact replay appends nothing).
-  *  - `upserts/` — (doc_id, text, embedding) rows, the durable record of a
+  *  - `upserts` — (doc_id, text, embedding) rows, the durable record of a
   *    cross-lake EDIT (the paired-payload contract). [[requestUpsert]]
-  *    swap-replaces last-writer-wins per id.
-  *  - The logs are DISJOINT by construction: each request call commits its
-  *    OWN log first, THEN cancels the other log's rows for its ids (newer
-  *    intent wins). Own-intent-first is load-bearing: cancelling first
-  *    opened a crash window where the old intent was destroyed before the
-  *    new one was durable — NEITHER survived (the r10 advice). A crash
-  *    between the two steps now leaves an id in BOTH logs, and propagate
-  *    resolves the intersection DELETE-WINS: for requestDelete's window
-  *    the delete genuinely is the newer intent; for requestUpsert's the
-  *    caller saw a FAILED call and retries (which re-cancels). Resolving
-  *    the other way would silently cancel a durable purge, the one
-  *    unacceptable loss.
+  *    commits it last-writer-wins per id.
+  *  - Both logs are members of ONE versioned set, `log.GEN` +
+  *    `log.gen-N/{requests,upserts}` ([[GenStore]]; a pre-versioning sync
+  *    root's plain `requests/`, `upserts/` read the same): a commit moves
+  *    both logs at once, appends go into the current version.
+  *  - The logs are DISJOINT by construction (newer intent wins):
+  *    [[requestUpsert]] commits its edit and cancels the purge log's rows
+  *    for its ids in ONE commit; [[requestDelete]] appends its own purge
+  *    order first, THEN commits the cancellation of the edit log's rows.
+  *    Own-intent-first is load-bearing: cancelling first opened a crash
+  *    window where the old intent was destroyed before the new one was
+  *    durable — NEITHER survived (the r10 advice). A crash between
+  *    requestDelete's two steps leaves an id in BOTH logs, and propagate
+  *    resolves the intersection DELETE-WINS: the delete genuinely is the
+  *    newer intent. Resolving the other way would silently cancel a
+  *    durable purge, the one unacceptable loss.
   *  - [[propagate]] applies the WHOLE of both logs to both lakes (purges,
   *    then edits) and retires them. Both lakes' `delete` are no-ops for
   *    absent or already-tombstoned ids and both `upsert`s are idempotent
@@ -82,6 +85,23 @@ object LakeSync {
                               waitMs: Long)(f: => T): T =
     graft.sources.StateLock.withRootLock(spark, syncRoot, waitMs = waitMs)(f)
 
+  private def log(syncRoot: String) = GenStore.Store.under(syncRoot, "log")
+
+  /** The two logs at the current version (resolved once): (requests,
+    * upserts). */
+  private def logs(spark: SparkSession, syncRoot: String): (DataFrame, DataFrame) = {
+    val v = GenStore.current(spark, log(syncRoot))
+    (GenStore.readOrEmpty(spark, s"$v/requests", requestsSchema),
+      GenStore.readOrEmpty(spark, s"$v/upserts", upsertsSchema))
+  }
+
+  /** Commit the next log version (`None` leaves that log empty). */
+  private def commitLogs(spark: SparkSession, syncRoot: String,
+                         requests: Option[DataFrame],
+                         upserts: Option[DataFrame]): Unit =
+    GenStore.commitMembers(spark, log(syncRoot),
+      Seq("requests" -> requests, "upserts" -> upserts))
+
   /** Durably record a purge order for `ids` (any frame with a `doc_id`
     * column). Append-only, anti-joined — an exact replay appends nothing.
     * Returns the number of ids newly logged. Does NOT touch the lakes:
@@ -100,16 +120,15 @@ object LakeSync {
         // survived). With this order the torn state is an id in BOTH logs,
         // which propagate's delete-wins intersection resolves correctly:
         // here the delete genuinely IS the newer intent.
-        val existing = Writers.readOrEmpty(spark, s"$syncRoot/requests",
-          requestsSchema)
+        val (existing, _) = logs(spark, syncRoot)
         val toWrite = del.join(existing, Seq("doc_id"), "left_anti")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val n = try {
           // count while pinned, BEFORE the append — afterwards the plan's
           // requests read would see its own rows
           val n0 = toWrite.count()
-          if (n0 > 0)
-            toWrite.write.mode("append").parquet(s"$syncRoot/requests")
+          if (n0 > 0) toWrite.write.mode("append").parquet(
+            s"${GenStore.current(spark, log(syncRoot))}/requests")
           n0
         } finally { toWrite.unpersist(blocking = false); () }
         failpointAfterCommit()
@@ -117,15 +136,11 @@ object LakeSync {
         // both in either order would be wrong (edit-then-purge loses the
         // ordering guarantee on replay; purge-then-edit resurrects purged
         // content) — the two logs stay DISJOINT by construction instead
-        val ups = Writers.readOrEmpty(spark, s"$syncRoot/upserts",
-          upsertsSchema)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          if (Serving.boundedCount(
-              ups.join(broadcast(del), Seq("doc_id"), "left_semi"), 1) > 0)
-            Writers.swapReplace(spark, s"$syncRoot/upserts",
-              ups.join(broadcast(del), Seq("doc_id"), "left_anti"))
-        } finally { ups.unpersist(blocking = false); () }
+        val (reqs, ups) = logs(spark, syncRoot)
+        if (Serving.boundedCount(
+            ups.join(broadcast(del), Seq("doc_id"), "left_semi"), 1) > 0)
+          commitLogs(spark, syncRoot, GenStore.nonEmpty(reqs), GenStore.nonEmpty(
+            ups.join(broadcast(del), Seq("doc_id"), "left_anti")))
         n
       } finally { del.unpersist(blocking = false); () }
     }
@@ -160,8 +175,8 @@ object LakeSync {
           s"upsert request carries duplicate doc_id values ($n rows, " +
             s"${counts.getLong(1)} distinct) — two payloads would race " +
             "for one id. Deduplicate the batch first.")
-        val merged = Writers.readOrEmpty(spark, s"$syncRoot/upserts",
-            upsertsSchema)
+        val (reqs, ups) = logs(spark, syncRoot)
+        val merged = ups
           .join(broadcast(batch.select("doc_id")), Seq("doc_id"), "left_anti")
           .unionByName(batch)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -171,22 +186,12 @@ object LakeSync {
             s"upsert log would grow to $m rows > maxLogRows=$maxLogRows — " +
               "the log is edit-request-sized by contract. Run propagate to " +
               "drain it, then resume.")
-          if (n > 0) {
-            Writers.swapReplace(spark, s"$syncRoot/upserts", merged)
-            // the newer edit cancels a pending purge for the same id (see
-            // requestDelete's mirror-image cancellation)
-            val reqs = Writers.readOrEmpty(spark, s"$syncRoot/requests",
-                requestsSchema)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              if (Serving.boundedCount(
-                  reqs.join(broadcast(batch.select("doc_id")),
-                    Seq("doc_id"), "left_semi"), 1) > 0)
-                Writers.swapReplace(spark, s"$syncRoot/requests",
-                  reqs.join(broadcast(batch.select("doc_id")),
-                    Seq("doc_id"), "left_anti"))
-            } finally { reqs.unpersist(blocking = false); () }
-          }
+          // the newer edit cancels a pending purge for the same id (see
+          // requestDelete's mirror-image cancellation) in the SAME commit
+          if (n > 0) commitLogs(spark, syncRoot,
+            GenStore.nonEmpty(reqs.join(broadcast(batch.select("doc_id")),
+              Seq("doc_id"), "left_anti")),
+            Some(merged))
           n
         } finally { merged.unpersist(blocking = false); () }
       } finally { batch.unpersist(blocking = false); () }
@@ -197,7 +202,7 @@ object LakeSync {
     * purge reached both lakes (their tombstones/reconciles own the
     * physical reclaim from there). */
   def pending(spark: SparkSession, syncRoot: String): DataFrame =
-    Writers.readOrEmptyReadOnly(spark, s"$syncRoot/requests", requestsSchema)
+    logs(spark, syncRoot)._1
 
   /** Apply the WHOLE intent log to both lakes, then retire it — the
     * fan-out and the crash repair in one idempotent pass (see the object
@@ -211,17 +216,15 @@ object LakeSync {
                 failpointAfterDedupUpsert: () => Unit = () => (),
                 lexRoot: Option[String] = None): SyncReport =
     withSyncLock(spark, syncRoot, lockWaitMs) {
-      val reqs = Writers.readOrEmpty(spark, s"$syncRoot/requests",
-          requestsSchema)
+      val (reqs0, ups0) = logs(spark, syncRoot)
+      val reqs = reqs0
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // DELETE WINS on a (torn-request-only) intersection of the two logs:
-      // the request calls cancel the other log BEFORE/AFTER their own
-      // commit such that an id in both can only mean a requestUpsert
-      // crashed between its commit and its cancellation — that caller saw
-      // the failure and retries (which re-cancels), so applying the purge
-      // here is the honest reading of the durable state
-      val ups = Writers.readOrEmpty(spark, s"$syncRoot/upserts",
-          upsertsSchema)
+      // an id in both can only mean a requestDelete crashed between its
+      // purge append and its cancellation of the edit — the purge is the
+      // newer intent, so applying it here is the honest reading of the
+      // durable state
+      val ups = ups0
         .join(reqs, Seq("doc_id"), "left_anti")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
@@ -273,9 +276,8 @@ object LakeSync {
           }
           failpointBeforeRetire()
           // every logged id is now applied to every lake — the logs have
-          // nothing left to recover
-          GenStore.deleteDir(spark, s"$syncRoot/requests")
-          GenStore.deleteDir(spark, s"$syncRoot/upserts")
+          // nothing left to recover: retire both in one empty commit
+          commitLogs(spark, syncRoot, None, None)
           SyncReport(n, nd, nv, n, nu, nl)
         }
       } finally {
@@ -287,7 +289,7 @@ object LakeSync {
   /** The logged-but-unapplied EDITS — read-only, the upsert mirror of
     * [[pending]]. */
   def pendingUpserts(spark: SparkSession, syncRoot: String): DataFrame =
-    Writers.readOrEmptyReadOnly(spark, s"$syncRoot/upserts", upsertsSchema)
+    logs(spark, syncRoot)._2
 
   /** Purge `ids` from BOTH lakes, durably: log the intent, then fan out.
     * Returns the propagate report (its `requested` covers any earlier

@@ -35,9 +35,13 @@ import graft.sources.Writers
   *    one base row. An aggregate can't anti-join its own absence — the
   *    keyed-delta log is what makes the stats update idempotent without a
   *    corpus rescan.
-  *  - `conf/` (root) — one row pinning nBuckets: the bucket function is
-  *    layout, not a per-call knob; a mismatched caller is refused loudly.
-  *  - `tombstones/`, `edits/` (root) — the [[delete]]/[[upsert]] overlays,
+  *  - `conf.GEN` + `conf.gen-N/` (root; a pre-versioning store's plain
+  *    `conf/` reads the same) — one row pinning nBuckets: the bucket
+  *    function is layout, not a per-call knob; a mismatched caller is
+  *    refused loudly.
+  *  - `overlay.GEN` + `overlay.gen-N/{tombstones,edits}` (root; legacy
+  *    `tombstones/`, `edits/` at the root) — the [[delete]]/[[upsert]]
+  *    overlays, committed together through [[GenStore.commitOverlay]],
   *    exactly [[DedupLake]]'s lifecycle: excluded/superseding at every
   *    read immediately, FOLDED into gen-(N+1) by [[reconcile]] and
   *    cleared. Serving corrects n_docs/total_dl/df from the bounded
@@ -54,9 +58,9 @@ import graft.sources.Writers
   * (fold + compact + stats rebase) is the weekly batch job.
   *
   * Concurrency/crash: the shared contracts — exclusive `_LOCK` lease,
-  * write-whole-generation-then-flip, at-least-once-safe appends (each
-  * store's scope derived from ITSELF), read-only swap resolution for
-  * readers. */
+  * write-whole-version-then-flip for every rewritten dir, at-least-once-safe
+  * appends (each store's scope derived from ITSELF), one pointer
+  * resolution per reader operation. */
 object LexLake {
 
   val postingsSchema: StructType = StructType(Seq(
@@ -112,10 +116,6 @@ object LexLake {
     graft.sources.StateLock.withRootLock(spark, root, leaseMs,
       waitMs = waitMs, heartbeatMs = heartbeatMs)(f)
 
-  private def readOr(spark: SparkSession, path: String,
-                     schema: StructType): DataFrame =
-    Writers.readOrEmpty(spark, path, schema)
-
   /** Driver-side twin of [[TF.md5Prefix32]] `% nBuckets` — MUST stay
     * bit-identical to the Column form: serve prunes partitions with
     * buckets computed HERE for terms that ingest bucketed THERE. */
@@ -146,34 +146,33 @@ object LexLake {
   }
 
   /** Driver-side conf cache for the READER path: one parquet read per
-    * (root, conf-dir file signature) per JVM. The layout conf is written
-    * once and never mutated in place, but a store REBUILT at the same path
-    * gets fresh file names/mtimes — the signature (one FS metadata listing,
-    * no Spark job) invalidates the cache then, so a cached value can never
-    * serve a different layout. Closes the r10 three-driver-actions-per-
-    * serve nit without trusting path identity. */
+    * conf version per JVM. The layout conf is committed once as a version
+    * of `root/conf` and never mutated; the key is the resolved version
+    * root plus its data files' names and modification times (one listing
+    * of a one-file dir), so a store REBUILT at the same path (same version
+    * number, fresh write) can never serve a cached layout — the dir's own
+    * mtime is no witness on object stores, where it is synthetic. Closes
+    * the r10 three-driver-actions-per-serve nit without trusting path
+    * identity. */
   private val confCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Int)]()
+    new java.util.concurrent.ConcurrentHashMap[String, Int]()
 
   private def servedBuckets(spark: SparkSession, root: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/conf")
+    val conf = GenStore.currentDir(spark, s"$root/conf")
+    val p = new org.apache.hadoop.fs.Path(conf)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val nb =
       if (!fs.exists(p)) None
       else {
-        val sig = fs.listStatus(p).filter(_.isFile)
-          .sortBy(_.getPath.getName)
-          .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-          .mkString(",")
-        Option(confCache.get(root)) match {
-          case Some((s, nb)) if s == sig => Some(nb)
-          case _ =>
-            Writers.readOrEmptyReadOnly(spark, s"$root/conf", confSchema)
-              .collect().headOption.map { r =>
-                confCache.put(root, (sig, r.getInt(0)))
-                r.getInt(0)
-              }
-        }
+        val key = fs.listStatus(p).filter(_.isFile)
+          .map(f => s"${f.getPath.getName}@${f.getModificationTime}")
+          .sorted.mkString(s"$conf:", ",", "")
+        Option(confCache.get(key)).orElse(
+          GenStore.readOrEmpty(spark, conf, confSchema)
+            .collect().headOption.map { r =>
+              confCache.put(key, r.getInt(0))
+              r.getInt(0)
+            })
       }
     nb.getOrElse(throw new IllegalArgumentException(
       s"lex lake at $root has no layout conf — ingest something first"))
@@ -181,7 +180,7 @@ object LexLake {
 
   private def confuredBuckets(spark: SparkSession, root: String,
                               nBuckets: Int): Int = {
-    val rows = readOr(spark, s"$root/conf", confSchema).collect()
+    val rows = GenStore.read(spark, s"$root/conf", confSchema).collect()
     rows.headOption match {
       case Some(r) =>
         require(r.getInt(0) == nBuckets,
@@ -192,7 +191,7 @@ object LexLake {
         r.getInt(0)
       case None =>
         import scala.jdk.CollectionConverters._
-        Writers.swapReplace(spark, s"$root/conf", spark.createDataFrame(
+        GenStore.commitDir(spark, s"$root/conf", spark.createDataFrame(
           Seq(org.apache.spark.sql.Row(nBuckets)).asJava, confSchema))
         nBuckets
     }
@@ -256,10 +255,10 @@ object LexLake {
       // upsert-inserted id is resident content not yet folded) — scoped
       // semi-joins, O(batch) not O(lake)
       val batchIds = docs0.select("doc_id").distinct()
-      val resident = readOr(spark, s"$droot/doclens", doclensSchema)
+      val (_, edits) = overlay(spark, root)
+      val resident = GenStore.readOrEmpty(spark, s"$droot/doclens", doclensSchema)
         .select("doc_id")
-        .unionByName(readOr(spark, s"$root/edits", editsSchema)
-          .select("doc_id"))
+        .unionByName(edits.select("doc_id"))
         .join(batchIds, Seq("doc_id"), "left_semi")
       val docs = docs0.join(resident, Seq("doc_id"), "left_anti")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -288,7 +287,8 @@ object LexLake {
           // until reconcile. (Texts must agree for shared ids, the
           // standard retry contract — ingest is not the edit path.)
           if (nDocs > 0) {
-            val coveredScoped = readOr(spark, s"$droot/stats", statsSchema)
+            val coveredScoped =
+              GenStore.readOrEmpty(spark, s"$droot/stats", statsSchema)
               .select(explode(col("doc_ids")).as("doc_id"))
               .join(broadcast(batchIds), Seq("doc_id"), "left_semi")
             val toCount = docs
@@ -317,7 +317,7 @@ object LexLake {
                 // batches remain reconcile's job — a null-coverage ledger
                 // cannot say which ids it counted.
                 val legacyCovered = graft.operators.Serving.boundedCount(
-                  readOr(spark, s"$droot/stats", statsSchema)
+                  GenStore.readOrEmpty(spark, s"$droot/stats", statsSchema)
                     .filter(col("doc_ids").isNull &&
                       (col("batch_key") === key ||
                         col("batch_key").startsWith(key + ":"))), 1) > 0
@@ -336,7 +336,8 @@ object LexLake {
           }
           failpointAfterStats()
           // postings append scoped by the POSTINGS store's own ids
-          val postedIds = readOr(spark, s"$droot/postings", postingsSchema)
+          val postedIds =
+            GenStore.readOrEmpty(spark, s"$droot/postings", postingsSchema)
             .select("doc_id")
             .join(broadcast(batchIds), Seq("doc_id"), "left_semi")
           post.join(postedIds, Seq("doc_id"), "left_anti")
@@ -346,7 +347,7 @@ object LexLake {
           // doclens append scoped by ITS own store — LAST, because it is
           // the residency record the replay scope derives from: once it
           // lands, the batch is fully repaired by construction
-          val lensIds = readOr(spark, s"$droot/doclens", doclensSchema)
+          val lensIds = GenStore.readOrEmpty(spark, s"$droot/doclens", doclensSchema)
             .select("doc_id")
             .join(broadcast(batchIds), Seq("doc_id"), "left_semi")
           docs.select(col("doc_id"), TF.tokenCount(col("text")).as("dl"))
@@ -368,27 +369,26 @@ object LexLake {
     withWriterLock(spark, root, waitMs = lockWaitMs) {
       val droot = GenStore.dataRoot(spark, root)
       val del = ids.select(col("doc_id").cast("long").as("doc_id")).distinct()
-      val resident = readOr(spark, s"$droot/doclens", doclensSchema)
+      val (existing, edits) = overlay(spark, root)
+      val resident = GenStore.readOrEmpty(spark, s"$droot/doclens", doclensSchema)
         .select("doc_id")
-        .unionByName(readOr(spark, s"$root/edits", editsSchema)
-          .select("doc_id"))
-      val existing = readOr(spark, s"$root/tombstones", tombstonesSchema)
+        .unionByName(edits.select("doc_id"))
       val toWrite = del
         .join(resident, Seq("doc_id"), "left_semi")
         .join(existing, Seq("doc_id"), "left_anti")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val n = toWrite.count()
-        if (n > 0)
-          toWrite.write.mode("append").parquet(s"$root/tombstones")
+        if (n > 0) GenStore.appendTombstones(spark, root, toWrite)
         n
       } finally { toWrite.unpersist(blocking = false); () }
     }
 
   /** UPSERT by doc id — the content-edit path ([[DedupLake.upsert]]'s
     * contract verbatim, minus the keep set): the batch lands in the
-    * `edits/` overlay (swap-replaced, last-writer-wins), tombstones on the
-    * batch ids drop (the sanctioned resurrection), and from that commit
+    * `edits` overlay (last-writer-wins), tombstones on the batch ids drop
+    * (the sanctioned resurrection) — both in ONE overlay commit — and from
+    * that commit
     * [[serve]] scores the NEW text (the overlay's postings replace the
     * stored rows sharing their ids — recomputed per serve over the
     * bounded-by-contract overlay). An unseen id is an insert. The next
@@ -413,7 +413,8 @@ object LexLake {
         require(counts.getLong(2) == 0L,
           "upsert batch carries zero-token texts — an empty replacement " +
             "is a delete, not an edit")
-        val merged = readOr(spark, s"$root/edits", editsSchema)
+        val (tombs, edits) = overlay(spark, root)
+        val merged = edits
           .join(broadcast(docs.select("doc_id")), Seq("doc_id"), "left_anti")
           .unionByName(docs)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -422,18 +423,11 @@ object LexLake {
           require(m <= maxOverlayRows,
             s"edit overlay would grow to $m rows > maxOverlayRows=" +
               s"$maxOverlayRows — run reconcile to fold it, then resume")
-          if (n > 0) Writers.swapReplace(spark, s"$root/edits", merged)
+          if (n > 0) GenStore.commitOverlay(spark, root,
+            GenStore.nonEmpty(tombs.join(broadcast(docs.select("doc_id")),
+              Seq("doc_id"), "left_anti")),
+            Some(merged))
         } finally { merged.unpersist(blocking = false); () }
-        val tombs = readOr(spark, s"$root/tombstones", tombstonesSchema)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          if (graft.operators.Serving.boundedCount(
-              tombs.join(broadcast(docs.select("doc_id")),
-                Seq("doc_id"), "left_semi"), 1) > 0)
-            Writers.swapReplace(spark, s"$root/tombstones",
-              tombs.join(broadcast(docs.select("doc_id")),
-                Seq("doc_id"), "left_anti"))
-        } finally { tombs.unpersist(blocking = false); () }
         n
       } finally { docs.unpersist(blocking = false); () }
     }
@@ -498,50 +492,45 @@ object LexLake {
 
   /** A serve's resolved [[ReadView]]: the generation data root, and the
     * root overlays the view applies ([[rootOverlays]]; `None` for a
-    * pinned view or while none are pending). */
+    * pinned view or while none are pending). The overlay resolves FIRST
+    * (see [[GenStore.readOverlay]]). */
   private def resolve(spark: SparkSession, root: String, view: ReadView,
                       maxOverlayRows: Long = 1L << 20)
       : (String, Option[(DataFrame, DataFrame)]) = {
-    val (droot, applyOverlays) = GenStore.resolve(spark, root, view)
-    (droot, if (applyOverlays) rootOverlays(spark, root, maxOverlayRows)
-      else None)
+    val overlays = rootOverlays(spark, root, view, maxOverlayRows)
+    (GenStore.resolve(spark, root, view), overlays)
   }
 
-  /** The raw root overlay dirs (tombstones, edits), READ-ONLY resolution —
-    * reader paths hold no lease. */
-  private def overlayDirs(spark: SparkSession,
-                          root: String): (DataFrame, DataFrame) =
-    (Writers.readOrEmptyReadOnly(spark, s"$root/tombstones", tombstonesSchema),
-      Writers.readOrEmptyReadOnly(spark, s"$root/edits", editsSchema))
+  /** The current overlay's (tombstones, edits), empty when absent. */
+  private def overlay(spark: SparkSession, root: String): (DataFrame, DataFrame) =
+    GenStore.readOverlay(spark, root, tombstonesSchema, editsSchema)
+      .getOrElse(noOverlay(spark))
 
-  /** The ROOT-LEVEL delete/edit overlays, read once per serve: `None` when
-    * neither dir exists (the common fast path keeps plans free of dead
-    * join nodes), else (edits-minus-tombstones, overlay id union). A
-    * tombstone on an edited id wins until the edit's tombstone drop lands
-    * — [[VectorLake]]'s rootOverlays on doc ids. The id union BROADCASTS
+  private def noOverlay(spark: SparkSession): (DataFrame, DataFrame) =
+    (GenStore.empty(spark, tombstonesSchema), GenStore.empty(spark, editsSchema))
+
+  /** The ROOT-LEVEL delete/edit overlays, resolved once per serve: `None`
+    * when neither member exists (the common fast path keeps plans free of
+    * dead join nodes), else (edits-minus-tombstones, overlay id union). A
+    * tombstone on an edited id wins (a delete after the upsert) —
+    * [[VectorLake]]'s rootOverlays on doc ids. The id union BROADCASTS
     * at every appliance: bounded by the overlays-are-interim-state
     * contract and ENFORCED here for every serve, so a mass-deletion day
     * refuses loudly instead of OOMing the driver. */
-  private def rootOverlays(spark: SparkSession, root: String,
+  private def rootOverlays(spark: SparkSession, root: String, view: ReadView,
                            maxOverlayRows: Long)
-      : Option[(DataFrame, DataFrame)] = {
-    // MID-SWAP-AWARE probe (r12 advice): a destination-only probe would let
-    // a reader racing upsert's swapReplace transiently skip committed edits
-    def has(sub: String): Boolean =
-      Writers.stateExistsReadOnly(spark, s"$root/$sub")
-    if (!has("tombstones") && !has("edits")) None
-    else {
-      val (tombs, edits0) = overlayDirs(spark, root)
-      val edits = edits0.join(tombs, Seq("doc_id"), "left_anti")
-      val overlayIds = edits.select("doc_id")
-        .unionByName(tombs.select("doc_id")).distinct()
-      graft.operators.Serving.requireBroadcastable(overlayIds, maxOverlayRows,
-        "the tombstone/edit overlay id set",
-        "Overlays are bounded interim state by contract — run reconcile " +
-          "to fold them, then re-run the serve.")
-      Some((edits, overlayIds))
+      : Option[(DataFrame, DataFrame)] =
+    GenStore.readOverlay(spark, root, tombstonesSchema, editsSchema, view).map {
+      case (tombs, edits0) =>
+        val edits = edits0.join(tombs, Seq("doc_id"), "left_anti")
+        val overlayIds = edits.select("doc_id")
+          .unionByName(tombs.select("doc_id")).distinct()
+        graft.operators.Serving.requireBroadcastable(overlayIds,
+          maxOverlayRows, "the tombstone/edit overlay id set",
+          "Overlays are bounded interim state by contract — run reconcile " +
+            "to fold them, then re-run the serve.")
+        (edits, overlayIds)
     }
-  }
 
   /** `stored` posting rows with the overlays applied: every overlay id's
     * stored rows drop, and the edit texts' postings (recomputed through
@@ -714,7 +703,7 @@ object LexLake {
     val impactConf =
       if (!impact) None
       else {
-        val rows = Writers.readOrEmptyReadOnly(spark, s"$droot/impactconf",
+        val rows = GenStore.readOrEmpty(spark, s"$droot/impactconf",
           impactConfSchema).collect()
         if (rows.isEmpty) throw new IllegalArgumentException(
           s"no impact tier resident for the generation at $droot — " +
@@ -784,7 +773,7 @@ object LexLake {
       // tier for capped terms (a truncated list cannot be counted) and
       // from row counts for the rest; scoring and stats are unchanged, so
       // the approximation is exactly the gate-certified truncation.
-      val impAll = Writers.readOrEmptyReadOnly(spark, s"$droot/impact",
+      val impAll = GenStore.readOrEmpty(spark, s"$droot/impact",
           impactSchema)
         .filter(col("tbucket").isInCollection(buckets))
       val impRows = (if (universe.size <= 4096)
@@ -1156,24 +1145,25 @@ object LexLake {
       Writers.recoverPointer(spark, GenStore.pointer(root))
       val cur = GenStore.currentGen(spark, root)
       val droot = GenStore.dataRootOf(root, cur)
-      val confRows = readOr(spark, s"$root/conf", confSchema).collect()
+      val confRows = GenStore.read(spark, s"$root/conf", confSchema).collect()
       require(confRows.nonEmpty,
         s"lex lake at $root has no layout conf — nothing to reconcile")
       val nb = confRows.head.getInt(0)
-      val tombs = readOr(spark, s"$root/tombstones", tombstonesSchema)
-      val edits = readOr(spark, s"$root/edits", editsSchema)
-        .join(tombs, Seq("doc_id"), "left_anti")
+      val pending = GenStore.readOverlay(spark, root, tombstonesSchema,
+        editsSchema)
+      val (tombs, edits0) = pending.getOrElse(noOverlay(spark))
+      val edits = edits0.join(tombs, Seq("doc_id"), "left_anti")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val overlayIds = edits.select("doc_id")
           .unionByName(tombs.select("doc_id")).distinct()
-        val lens = readOr(spark, s"$droot/doclens", doclensSchema)
+        val lens = GenStore.readOrEmpty(spark, s"$droot/doclens", doclensSchema)
           .join(broadcast(overlayIds), Seq("doc_id"), "left_anti")
           .unionByName(edits.select(col("doc_id"),
             TF.tokenCount(col("text")).as("dl")))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          val post = readOr(spark, s"$droot/postings", postingsSchema)
+          val post = GenStore.readOrEmpty(spark, s"$droot/postings", postingsSchema)
             .join(broadcast(overlayIds), Seq("doc_id"), "left_anti")
             .select("term", "doc_id", "tf", "dl", "positions", "tbucket")
             .unionByName(postingsOf(edits, nb))
@@ -1278,8 +1268,7 @@ object LexLake {
             failpoint()
           }
           } finally { post.unpersist(blocking = false); () }
-          GenStore.deleteDir(spark, s"$root/tombstones")
-          GenStore.deleteDir(spark, s"$root/edits")
+          if (pending.isDefined) GenStore.commitOverlay(spark, root, None, None)
         } finally { lens.unpersist(blocking = false); () }
       } finally { edits.unpersist(blocking = false); () }
     }
@@ -1432,13 +1421,13 @@ object LexLake {
     * actual question ("how much is pending the fold?"). */
   def health(spark: SparkSession, root: String): DataFrame = {
     val nb = servedBuckets(spark, root)
-    val (droot, _) = GenStore.resolve(spark, root, ReadView.Live)
+    val (tombs, edits) = overlay(spark, root) // overlay first, then generation
+    val droot = GenStore.resolve(spark, root, ReadView.Live)
     val post = GenStore.readGenOrEmpty(spark, droot, "postings",
       postingsSchema)
     val nDocs = GenStore.readGenOrEmpty(spark, droot, "stats", statsSchema)
       .agg(coalesce(sum(col("n_docs")), lit(0L))).head().getLong(0)
     require(nDocs > 0, s"lex lake at $root holds no documents")
-    val (tombs, edits) = overlayDirs(spark, root)
     // the resident impact tier (when adopted) feeds the staleness column:
     // its denormalized df IS the at-fold df per capped term
     val fsRoot = new org.apache.hadoop.fs.Path(s"$droot/impactconf")
@@ -1446,7 +1435,7 @@ object LexLake {
       .getFileSystem(spark.sessionState.newHadoopConf()).exists(fsRoot)
     val tier =
       if (!hasTier) None
-      else Some(Writers.readOrEmptyReadOnly(spark, s"$droot/impact",
+      else Some(GenStore.readOrEmpty(spark, s"$droot/impact",
         impactSchema).select("term", "df"))
     healthOfPostings(post, nDocs, tombs, postingsOf(edits, nb),
         impactTier = tier)

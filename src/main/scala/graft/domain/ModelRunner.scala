@@ -23,6 +23,14 @@ object ModelRunner {
     testFailures: Seq[DataQuality.CheckResult])
 
   def run(spark: SparkSession, w: SteamModels.Warehouse, martDir: String): RunResult = {
+    // a warehouse loaded before later state commits keeps its versions for
+    // one more commit; past that it fails with the expiry message here,
+    // not with a raw FILE_NOT_EXIST mid-run
+    w.productIterator.foreach {
+      case df: org.apache.spark.sql.Dataset[_] =>
+        GenStore.requireLiveScan(spark, df.toDF())
+      case _ => ()
+    }
     // marts are pinned while the run executes: downstream marts reference
     // their upstream mart DataFrames (game_quality_metrics reads dim_games +
     // fact_reviews), and without the persist each write re-executed the

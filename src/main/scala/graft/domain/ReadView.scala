@@ -2,8 +2,9 @@ package graft.domain
 
 /** Which state of a generation-versioned lake a serve reads — the one
   * argument every [[LexLake]] / [[VectorLake]] serve takes in place of a
-  * separate pinned twin. Resolved to (data root, apply root overlays) in
-  * one place, [[GenStore.resolve]].
+  * separate pinned twin. Resolved to its data root by
+  * [[GenStore.resolve]] and to its root overlays by
+  * [[GenStore.readOverlay]].
   *
   *  - [[ReadView.Live]]: the current generation PLUS the root
   *    tombstone/edit overlays — every delete and upsert serves the moment

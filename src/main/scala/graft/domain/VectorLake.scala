@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType, StructField, StructType}
 
 import graft.functions.{VectorFunctions => VF}
-import graft.operators.{Clustering, Serving, Similarity}
+import graft.operators.{Clustering, Similarity}
 import graft.sources.Writers
 
 /** The lake-resident incremental VECTOR index — [[DedupLake]]'s ANN sibling
@@ -22,8 +22,10 @@ import graft.sources.Writers
   *    `partitionBy(ivf_list)` so a serving probe reads only its own lists
   *    (partition pruning is the IVF inverted file).
   *  - `gen-N/centroids/` — (ivf_list, c array<double>), the coarse
-  *    quantizer THAT ASSIGNED gen-N's vectors.
-  *  - `tombstones/`, `edits/` (ROOT level, round 12) — the
+  *    quantizer THAT ASSIGNED gen-N's vectors; a re-[[init]] commits
+  *    `gen-N/centroids.gen-M/` behind `gen-N/centroids.GEN`.
+  *  - `overlay.GEN` + `overlay.gen-M/{tombstones,edits}` (ROOT level;
+  *    legacy `tombstones/`, `edits/` at the root) — the
   *    [[delete]]/[[upsert]] overlays, exactly [[LexLake]]'s lifecycle:
   *    UNCOMMITTED mutation state shared across generations, applied by
   *    every unpinned read immediately (tombstoned ids vanish, edited ids
@@ -68,11 +70,12 @@ import graft.sources.Writers
   * decoupled).
   *
   * Concurrency/crash: same contracts as DedupLake — exclusive `_LOCK`
-  * lease (fail-fast), write-new-then-swap for full rewrites, and
+  * lease (fail-fast), write-whole-version-then-flip for full rewrites
+  * ([[GenStore]]: generations, the centroids dir, the root overlay), and
   * at-least-once-safe appends (anti-join on vec_id, so an exact replay of
-  * a crashed batch inserts nothing). Readers resolve interrupted swaps
-  * READ-ONLY (Writers.readOrEmptyReadOnly) — recovery renames happen only
-  * under the writer lease. */
+  * a crashed batch inserts nothing). Readers resolve each pointer once
+  * and never mutate; pointer recovery happens only under the writer
+  * lease. */
 object VectorLake {
 
   val vectorsSchema: StructType = StructType(Seq(
@@ -113,11 +116,13 @@ object VectorLake {
     graft.sources.StateLock.withRootLock(spark, root, leaseMs, now, waitMs,
       heartbeatMs)(f)
 
-  // WRITER-side read: performs swap-recovery renames, so only call under
-  // the writer lease (appends need the dir physically at its destination)
-  private def readOr(spark: SparkSession, path: String,
-                     schema: StructType): DataFrame =
-    Writers.readOrEmpty(spark, path, schema)
+  /** WRITER-side: the current overlay's (tombstones, edits). */
+  private def overlay(spark: SparkSession, root: String): (DataFrame, DataFrame) =
+    GenStore.readOverlay(spark, root, tombstonesSchema, editsSchema)
+      .getOrElse(noOverlay(spark))
+
+  private def noOverlay(spark: SparkSession): (DataFrame, DataFrame) =
+    (GenStore.empty(spark, tombstonesSchema), GenStore.empty(spark, editsSchema))
 
   /** The CURRENT generation's data root, resolved READ-ONLY (shared
     * [[GenStore]] lifecycle). Every operation resolves this ONCE and reads
@@ -127,12 +132,13 @@ object VectorLake {
   private[graft] def dataRoot(spark: SparkSession, root: String): String =
     GenStore.dataRoot(spark, root)
 
-  /** Install the coarse quantizer. Idempotent (swap-replace within the
-    * current generation — re-init on a populated store replaces ONLY the
-    * quantizer, which is exactly the mixed-quantizer window the ingest
-    * gate must tolerate and reconcile repairs). A fresh root starts at
-    * generation 0; a pointer-less legacy root with resident vectors stays
-    * at the root layout until its first reconcile versions it. */
+  /** Install the coarse quantizer. Idempotent (a version commit of the
+    * current generation's `centroids` — re-init on a populated store
+    * replaces ONLY the quantizer, which is exactly the mixed-quantizer
+    * window the ingest gate must tolerate and reconcile repairs). A fresh
+    * root starts at generation 0; a pointer-less legacy root with resident
+    * vectors stays at the root layout until its first reconcile versions
+    * it. */
   def init(spark: SparkSession, root: String,
            centroids: Seq[Seq[Double]]): Unit = {
     require(centroids.size >= 2, "need >= 2 centroids")
@@ -142,21 +148,14 @@ object VectorLake {
     val df = spark.createDataFrame(rows, centroidsSchema)
     withWriterLock(spark, root) {
       Writers.recoverPointer(spark, GenStore.pointer(root))
-      GenStore.currentGen(spark, root) match {
-        case Some(g) =>
-          Writers.swapReplace(spark, s"$root/gen-$g/centroids", df)
-        case None =>
-          val fs = new org.apache.hadoop.fs.Path(root)
-            .getFileSystem(spark.sessionState.newHadoopConf())
-          if (fs.exists(new org.apache.hadoop.fs.Path(s"$root/vectors")))
-            // legacy store: replace the quantizer in place, no migration
-            Writers.swapReplace(spark, s"$root/centroids", df)
-          else {
-            // fresh root: write gen-0 fully, then commit via the pointer
-            Writers.swapReplace(spark, s"$root/gen-0/centroids", df)
-            Writers.writePointer(spark, GenStore.pointer(root), "0")
-          }
-      }
+      val cur = GenStore.currentGen(spark, root)
+      if (cur.isEmpty && !GenStore.exists(spark, s"$root/vectors"))
+        // fresh root: gen-0 holds the quantizer, committed by the pointer
+        GenStore.promote(spark, root, None, legacyDirs = Nil) { ng =>
+          df.write.parquet(s"$ng/centroids") }
+      else // a legacy store replaces its quantizer in place, no migration
+        GenStore.commitDir(spark,
+          s"${GenStore.dataRootOf(root, cur)}/centroids", df)
     }
   }
 
@@ -167,8 +166,8 @@ object VectorLake {
   // FileNotFoundException (r9 verdict finding #3)
   private def centroidsAt(spark: SparkSession, droot: String,
                           root: String): Seq[Seq[Double]] = {
-    val rows = GenStore
-      .readGenOrEmpty(spark, droot, "centroids", centroidsSchema)
+    GenStore.requireLive(spark, droot)
+    val rows = GenStore.read(spark, s"$droot/centroids", centroidsSchema)
       .orderBy("ivf_list").collect()
     require(rows.nonEmpty, s"vector lake at $root has no centroids — run init")
     rows.map(_.getSeq[Double](1).toIndexedSeq)
@@ -181,12 +180,9 @@ object VectorLake {
     * plan free of a dead join node. */
   private def minusTombstones(spark: SparkSession, droot: String,
                               df: DataFrame): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$droot/tombstones")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) df
+    if (!GenStore.exists(spark, s"$droot/tombstones")) df
     else df.join(
-      Writers.readOrEmptyReadOnly(spark, s"$droot/tombstones",
-        tombstonesSchema),
+      GenStore.readOrEmpty(spark, s"$droot/tombstones", tombstonesSchema),
       Seq("vec_id"), "left_anti")
   }
 
@@ -200,53 +196,42 @@ object VectorLake {
     minusTombstones(spark, droot,
       GenStore.readGenOrEmpty(spark, droot, "codes", codesSchema))
 
-  /** The ROOT-LEVEL delete/edit overlays, read once (READ-ONLY resolution —
-    * reader paths hold no lease): `None` when neither dir exists (the
-    * common fast path keeps plans free of dead join nodes), else
+  /** The ROOT-LEVEL delete/edit overlays, resolved once (reader paths
+    * hold no lease): `None` when neither member exists (the common fast
+    * path keeps plans free of dead join nodes), else
     * (edits-minus-tombstones, overlay id union). A tombstone on an edited
-    * id wins until the edit's tombstone drop lands — [[LexLake]]'s
-    * precedence verbatim. The id union BROADCASTS at every appliance —
-    * bounded by the overlays-are-interim-state contract and ENFORCED. */
+    * id wins (a delete after the upsert) — [[LexLake]]'s precedence
+    * verbatim. The id union BROADCASTS at every appliance — bounded by the
+    * overlays-are-interim-state contract and ENFORCED. A pointer-less
+    * LEGACY root keeps its tombstones dir at the root by layout accident
+    * (droot == root) — those are gen-level tombstones, already excluded by
+    * minusTombstones; reading them here too is a harmless double
+    * exclusion. */
   private def rootOverlays(spark: SparkSession, root: String,
+                           view: ReadView = ReadView.Live,
                            maxOverlayRows: Long = 1L << 20)
-      : Option[(DataFrame, DataFrame)] = {
-    // MID-SWAP-AWARE probe (r12 advice): during upsert's swapReplace of
-    // edits/ the destination is briefly absent (displaced to __old before
-    // __tmp promotes) — a destination-only probe would let a concurrent
-    // unpinned reader transiently serve WITHOUT committed edits, bypassing
-    // readOrEmptyReadOnly's source resolution below
-    def has(sub: String): Boolean =
-      Writers.stateExistsReadOnly(spark, s"$root/$sub")
-    // a pointer-less LEGACY root keeps its tombstones dir at the root by
-    // layout accident (droot == root) — those are gen-level tombstones,
-    // already excluded by minusTombstones; reading them here too is a
-    // harmless double exclusion
-    if (!has("tombstones") && !has("edits")) None
-    else {
-      val tombs = Writers.readOrEmptyReadOnly(spark, s"$root/tombstones",
-        tombstonesSchema)
-      val edits = Writers.readOrEmptyReadOnly(spark, s"$root/edits",
-          editsSchema)
-        .join(tombs, Seq("vec_id"), "left_anti")
-      val overlayIds = edits.select("vec_id")
-        .unionByName(tombs.select("vec_id")).distinct()
-      graft.operators.Serving.requireBroadcastable(overlayIds, maxOverlayRows,
-        "the vector tombstone/edit overlay id set",
-        "Overlays are bounded interim state by contract — run reconcile " +
-          "to fold them, then retry.")
-      Some((edits, overlayIds))
+      : Option[(DataFrame, DataFrame)] =
+    GenStore.readOverlay(spark, root, tombstonesSchema, editsSchema, view).map {
+      case (tombs, edits0) =>
+        val edits = edits0.join(tombs, Seq("vec_id"), "left_anti")
+        val overlayIds = edits.select("vec_id")
+          .unionByName(tombs.select("vec_id")).distinct()
+        graft.operators.Serving.requireBroadcastable(overlayIds,
+          maxOverlayRows, "the vector tombstone/edit overlay id set",
+          "Overlays are bounded interim state by contract — run reconcile " +
+            "to fold them, then retry.")
+        (edits, overlayIds)
     }
-  }
 
   /** The LOGICAL corpus view — what every UNPINNED read serves: committed
     * generation rows minus the root overlays' ids, plus the edit overlay's
     * rows assigned under the generation's quantizer (`cents` is by-name:
     * the no-overlay fast path never reads centroids). */
   private def logicalVectors(spark: SparkSession, droot: String,
-                             root: String,
+                             overlays: Option[(DataFrame, DataFrame)],
                              cents: => Seq[Seq[Double]]): DataFrame = {
     val stored = vectorsAt(spark, droot)
-    rootOverlays(spark, root) match {
+    overlays match {
       case None => stored
       case Some((edits, overlayIds)) =>
         stored.join(broadcast(overlayIds), Seq("vec_id"), "left_anti")
@@ -270,10 +255,9 @@ object VectorLake {
   }
 
   /** The stored quantizer as literals — k rows, the broadcast-LUT contract
-    * (bounded by construction; this is NOT a corpus collect). Read-only
-    * swap resolution: callable with or without the writer lease (the
-    * centroids dir is swap-replaced, never appended, so the content a
-    * reader resolves is identical to post-recovery content). */
+    * (bounded by construction; this is NOT a corpus collect). Callable
+    * with or without the writer lease (the centroids dir commits whole
+    * versions, never appends). */
   def centroids(spark: SparkSession, root: String): Seq[Seq[Double]] =
     centroidsAt(spark, dataRoot(spark, root), root)
 
@@ -393,8 +377,8 @@ object VectorLake {
       // LexLake residency contract: re-ingest is not the edit path, so
       // they are state no-ops, excluded up front (the overlay is bounded
       // by the upsert contract, so the anti-join build side broadcasts)
-      val editIds = readOr(spark, s"$root/edits", editsSchema)
-        .select("vec_id")
+      val (rootTombs, edits0) = overlay(spark, root)
+      val editIds = edits0.select("vec_id")
       // the embedding cast is load-bearing: an uncast array<double> batch
       // would append double-typed files into the float-typed store and
       // brick every subsequent schema-imposed read
@@ -428,7 +412,7 @@ object VectorLake {
             "bulk-write the store and run reconcile (banded dedup, no " +
             "broadcast); raise maxBroadcastRows only if executors are " +
             "sized for it.")
-        val stored = readOr(spark, s"$droot/vectors", vectorsSchema)
+        val stored = GenStore.readOrEmpty(spark, s"$droot/vectors", vectorsSchema)
         // the GATE probes the LOGICAL store (tombstoned rows excluded,
         // edit-overlay rows INCLUDED under the current quantizer): deleted
         // content must not suppress a new near-duplicate — that would make
@@ -437,11 +421,9 @@ object VectorLake {
         // the PHYSICAL ids: appending a second row under a tombstoned id
         // would leave two rows sharing a vec_id (see [[delete]]'s id-reuse
         // caveat).
-        val rootTombs = readOr(spark, s"$root/tombstones", tombstonesSchema)
-        val edits = readOr(spark, s"$root/edits", editsSchema)
-          .join(rootTombs, Seq("vec_id"), "left_anti")
+        val edits = edits0.join(rootTombs, Seq("vec_id"), "left_anti")
         val storedLogical = stored
-          .join(readOr(spark, s"$droot/tombstones", tombstonesSchema),
+          .join(GenStore.readOrEmpty(spark, s"$droot/tombstones", tombstonesSchema),
             Seq("vec_id"), "left_anti")
           .join(rootTombs, Seq("vec_id"), "left_anti")
           .join(broadcast(editIds), Seq("vec_id"), "left_anti")
@@ -489,7 +471,8 @@ object VectorLake {
           // derive-from-your-own-store rule). Codes clamp into this
           // generation's grid; the next reconcile refreshes the stats.
           for ((mins, maxs) <- sqStatsAt(spark, droot)) {
-            val codedScoped = readOr(spark, s"$droot/codes", codesSchema)
+            val codedScoped =
+              GenStore.readOrEmpty(spark, s"$droot/codes", codesSchema)
               .select("vec_id")
               .join(broadcast(assigned.select("vec_id")), Seq("vec_id"), "left_semi")
             kept.join(codedScoped, Seq("vec_id"), "left_anti")
@@ -510,13 +493,15 @@ object VectorLake {
       }
     }
 
-  /** The resident vectors — READER path (read-only swap resolution; safe
-    * concurrent with a locked writer's swap). The LOGICAL corpus view:
+  /** The resident vectors — READER path (one overlay and one generation
+    * resolution; safe concurrent with a locked writer's commits). The
+    * LOGICAL corpus view:
     * tombstoned ids excluded, edit-overlay rows included (assigned under
     * the current quantizer). */
   def vectors(spark: SparkSession, root: String): DataFrame = {
+    val overlays = rootOverlays(spark, root) // overlay first, then generation
     val droot = dataRoot(spark, root)
-    logicalVectors(spark, droot, root, centroidsAt(spark, droot, root))
+    logicalVectors(spark, droot, overlays, centroidsAt(spark, droot, root))
   }
 
   /** DELETE by id — the retraction/right-to-be-forgotten path a serving
@@ -549,11 +534,10 @@ object VectorLake {
       // the purge done — the one delete outcome worse than failing
       Writers.recoverPartitionCompact(spark, s"$droot/vectors")
       val del = ids.select(col("vec_id").cast("long").as("vec_id")).distinct()
-      val resident = readOr(spark, s"$droot/vectors", vectorsSchema)
+      val (existing, edits) = overlay(spark, root)
+      val resident = GenStore.readOrEmpty(spark, s"$droot/vectors", vectorsSchema)
         .select("vec_id")
-        .unionByName(readOr(spark, s"$root/edits", editsSchema)
-          .select("vec_id"))
-      val existing = readOr(spark, s"$root/tombstones", tombstonesSchema)
+        .unionByName(edits.select("vec_id"))
       val toWrite = del
         .join(resident, Seq("vec_id"), "left_semi")
         .join(existing, Seq("vec_id"), "left_anti")
@@ -562,19 +546,18 @@ object VectorLake {
         // count while pinned and BEFORE the append — afterwards the plan's
         // tombstone read would see its own rows
         val n = toWrite.count()
-        if (n > 0)
-          toWrite.write.mode("append").parquet(s"$root/tombstones")
+        if (n > 0) GenStore.appendTombstones(spark, root, toWrite)
         n
       } finally { toWrite.unpersist(blocking = false); () }
     }
 
   /** UPSERT by id — the re-embedding path (a model refresh re-encodes
     * RESIDENT documents; their vectors must serve REPLACED immediately,
-    * not deleted-and-waited-on): the batch lands in the root `edits/`
-    * OVERLAY (swap-replaced, last-writer-wins per id — the
-    * [[LexLake.upsert]] contract verbatim), and any tombstones on the
-    * batch ids drop (an upsert is explicit new content — the one
-    * sanctioned id resurrection). From that commit every UNPINNED read
+    * not deleted-and-waited-on): the batch lands in the root `edits`
+    * OVERLAY (last-writer-wins per id — the [[LexLake.upsert]] contract
+    * verbatim) and any tombstones on the batch ids drop (an upsert is
+    * explicit new content — the one sanctioned id resurrection), both in
+    * ONE overlay commit. From that commit every UNPINNED read
     * serves the NEW embedding (assigned under the current quantizer,
     * full-float on the quantized paths); the COMMITTED generations are
     * untouched, so a PINNED read ([[ReadView.Pinned]], a
@@ -589,11 +572,11 @@ object VectorLake {
     * gating it would fight every model refresh (the whole corpus shifts
     * together). Use [[ingest]] for gated inserts.
     *
-    * At-least-once: the overlay swap is last-writer-wins, so a replay
-    * rewrites identical state; a crash between the swap and the tombstone
-    * drop (`failpointAfterEdits`, the torn window) leaves a tombstoned
-    * id's edit masked — hidden until the replay drops the tombstone (the
-    * LexLake torn-window contract). Batch ids must be unique — refused
+    * At-least-once: the overlay commit is last-writer-wins, so a replay
+    * rewrites identical state; a crash after the next overlay is written
+    * but before its pointer flip (`failpointAfterEdits`, the torn window)
+    * commits nothing — a tombstoned id stays masked until the replay
+    * commits edit and tombstone drop together. Batch ids must be unique — refused
     * loudly otherwise; the RESULTING overlay stays inside
     * `maxOverlayRows` AND `maxOverlayBytes` (it broadcasts EMBEDDINGS at
     * every read, so the real budget is bytes ≈ rows × 4·dims — a row cap
@@ -623,7 +606,8 @@ object VectorLake {
             "one id. Deduplicate the batch first.")
         val dims = counts.getInt(2)
         val ids = newRows.select("vec_id")
-        val merged = readOr(spark, s"$root/edits", editsSchema)
+        val (tombs, edits) = overlay(spark, root)
+        val merged = edits
           .join(broadcast(ids), Seq("vec_id"), "left_anti")
           .unionByName(newRows)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -645,19 +629,14 @@ object VectorLake {
               s"$maxOverlayBytes — it broadcasts EMBEDDINGS at every " +
               "read. Run reconcile to fold it; corpus-scale re-encodes " +
               "belong to a bulk rewrite + reconcile.")
-          if (n > 0) Writers.swapReplace(spark, s"$root/edits", merged)
+          // an upsert of a tombstoned id is the sanctioned resurrection:
+          // its tombstone drops in the same commit, or every read would
+          // exclude the new row
+          if (n > 0) GenStore.commitOverlay(spark, root,
+            GenStore.nonEmpty(tombs.join(broadcast(ids), Seq("vec_id"),
+              "left_anti")), Some(merged),
+            beforeFlip = failpointAfterEdits)
         } finally { merged.unpersist(blocking = false); () }
-        failpointAfterEdits()
-        // an upsert of a tombstoned id is the sanctioned resurrection:
-        // drop its tombstone or every read would exclude the new row
-        val tombs = readOr(spark, s"$root/tombstones", tombstonesSchema)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          if (Serving.boundedCount(
-              tombs.join(broadcast(ids), Seq("vec_id"), "left_semi"), 1) > 0)
-            Writers.swapReplace(spark, s"$root/tombstones",
-              tombs.join(broadcast(ids), Seq("vec_id"), "left_anti"))
-        } finally { tombs.unpersist(blocking = false); () }
         n
       } finally { newRows.unpersist(blocking = false); () }
     }
@@ -670,8 +649,8 @@ object VectorLake {
     * never the corpus — the IVF inverted file realized as the lake layout.
     * Scoring uses the STORED assignment (no re-assignment scan), cosine
     * top-k with the house tie rule (cos desc, vec_id asc on the rounded
-    * score). READER path: no lease, read-only swap resolution — safe
-    * concurrent with a locked writer's reconcile swap. Recall/latency
+    * score). READER path: no lease, one pointer resolution per store —
+    * safe concurrent with a locked writer's reconcile. Recall/latency
     * dial: nprobe = numLists degrades to exact search over the store.
     *
     * Generation consistency: the pointer is resolved ONCE, then centroids
@@ -687,12 +666,13 @@ object VectorLake {
     // name the real problems before the clamp can turn them into
     // probeLists' confusing "nprobe=0 outside [1, 0]" (r8 advice)
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
+    val overlays = rootOverlays(spark, root) // overlay first, then generation
     val droot = dataRoot(spark, root)
     failpoint()
     val cents = centroidsAt(spark, droot, root)
     val probes = Similarity.probeLists(
       queryVec, cents, math.min(nprobe, cents.size))
-    logicalVectors(spark, droot, root, cents)
+    logicalVectors(spark, droot, overlays, cents)
       .filter(col("ivf_list").isInCollection(probes))
       .withColumn("cos",
         round(VF.cosine(col("embedding"), typedLit(queryVec)), 6))
@@ -729,8 +709,8 @@ object VectorLake {
     * re-assignment scan) and the house tie rule (cos desc, vec_id asc on
     * the rounded score), so each probe's rows EQUAL
     * [[search]](itsVec, k, nprobe)'s — spec-pinned parity. Output:
-    * (probe_id, neighbor_id, cos, rank). READER path: no lease, read-only
-    * swap resolution. The probe batch BROADCASTS, serving-bounded by
+    * (probe_id, neighbor_id, cos, rank). READER path: no lease, one
+    * pointer resolution per store. The probe batch BROADCASTS, serving-bounded by
     * contract and enforced exactly like ingest's gate.
     *
     * `view = ReadView.Pinned(Some(g))` is the SHADOW READ an index
@@ -756,7 +736,9 @@ object VectorLake {
       s"refineFactor=$refineFactor without quantized=true — the refine " +
         "stage rescores a QUANTIZED scan's candidates against the float " +
         "tier; a float scan is already exact and has nothing to refine")
-    val (droot, applyOverlays) = GenStore.resolve(spark, root, view)
+    // the overlay resolves BEFORE the generation (GenStore.readOverlay)
+    val overlays = rootOverlays(spark, root, view)
+    val droot = GenStore.resolve(spark, root, view)
     val cents = centroidsAt(spark, droot, root)
     val np = math.min(nprobe, cents.size)
     // PINNED: the probe frame is evaluated several times (union-list
@@ -792,7 +774,6 @@ object VectorLake {
     // longer displace a resident near-tie purely by estimator mismatch
     // (r12 verdict finding #2). The refine rescore then sees them as
     // exact floats, like every other candidate.
-    val overlays = if (applyOverlays) rootOverlays(spark, root) else None
     def withOverlays(base: DataFrame, svCol: String,
                      enc: Column => Column = identity): DataFrame =
       overlays match {
@@ -883,8 +864,10 @@ object VectorLake {
           s"generation (${cur.fold("no pointer")(g => s"gen-$g")}) — only " +
           "committed past generations can be rolled back to")
       GenStore.requireLive(spark, target)
-      val pending = readOr(spark, s"$curRoot/tombstones", tombstonesSchema)
-        .join(readOr(spark, s"$target/tombstones", tombstonesSchema),
+      val pending = GenStore.readOrEmpty(spark, s"$curRoot/tombstones",
+          tombstonesSchema)
+        .join(GenStore.readOrEmpty(spark, s"$target/tombstones",
+          tombstonesSchema),
           Seq("vec_id"), "left_anti")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
@@ -901,25 +884,20 @@ object VectorLake {
     * (the vector twin of the lex health report's overlay columns, and of
     * [[LakeSync.pending]] one level down). Two bounded counts over the
     * overlay dirs — READER path, no lease, never a corpus scan. */
-  def overlayReport(spark: SparkSession, root: String): (Long, Long) = {
-    val conf = spark.sessionState.newHadoopConf()
-    def countOf(sub: String, schema: StructType): Long = {
-      val p = new org.apache.hadoop.fs.Path(s"$root/$sub")
-      if (!p.getFileSystem(conf).exists(p)) 0L
-      else Writers.readOrEmptyReadOnly(spark, s"$root/$sub", schema).count()
-    }
-    (countOf("tombstones", tombstonesSchema), countOf("edits", editsSchema))
-  }
+  def overlayReport(spark: SparkSession, root: String): (Long, Long) =
+    GenStore.readOverlay(spark, root, tombstonesSchema, editsSchema)
+      .fold((0L, 0L)) { case (t, e) => (t.count(), e.count()) }
 
   /** Index-health check: q150's per-list drift report of an incoming batch
     * against the resident vectors under the CURRENT centroids. Reader path
     * — holds no lease, mutates nothing. */
   def driftReport(spark: SparkSession, root: String,
                   batch: DataFrame): DataFrame = {
+    val overlays = rootOverlays(spark, root) // overlay first, then generation
     val droot = dataRoot(spark, root) // one resolution: no generation mixing
     val cents = centroidsAt(spark, droot, root)
     Similarity.ivfDriftReport(
-      logicalVectors(spark, droot, root, cents).select("embedding"),
+      logicalVectors(spark, droot, overlays, cents).select("embedding"),
       batch.select("embedding"), "embedding", cents)
   }
 
@@ -979,13 +957,14 @@ object VectorLake {
       // — the new generation commits both, and the overlays clear after
       // the pointer flip (a crash between re-applies them as no-ops: the
       // tombstoned ids are gone, the edit values identical)
-      val rootTombs = readOr(spark, s"$root/tombstones", tombstonesSchema)
-      val edits = readOr(spark, s"$root/edits", editsSchema)
-        .join(rootTombs, Seq("vec_id"), "left_anti")
+      val pending = GenStore.readOverlay(spark, root, tombstonesSchema,
+        editsSchema)
+      val (rootTombs, edits0) = pending.getOrElse(noOverlay(spark))
+      val edits = edits0.join(rootTombs, Seq("vec_id"), "left_anti")
       val overlayIds = edits.select("vec_id")
         .unionByName(rootTombs.select("vec_id")).distinct()
-      val stored = readOr(spark, s"$droot/vectors", vectorsSchema)
-        .join(readOr(spark, s"$droot/tombstones", tombstonesSchema),
+      val stored = GenStore.readOrEmpty(spark, s"$droot/vectors", vectorsSchema)
+        .join(GenStore.readOrEmpty(spark, s"$droot/tombstones", tombstonesSchema),
           Seq("vec_id"), "left_anti")
         .join(broadcast(overlayIds), Seq("vec_id"), "left_anti")
         .select("vec_id", "embedding")
@@ -1085,9 +1064,8 @@ object VectorLake {
         failpoint() // the crash window: data written, pointer not yet flipped
         } // GenStore.promote flips the pointer and applies retention
         // the overlays are folded into the promoted generation — clear them
-        // (a crash before these re-applies them as no-ops, see above)
-        GenStore.deleteDir(spark, s"$root/tombstones")
-        GenStore.deleteDir(spark, s"$root/edits")
+        // (a crash before this re-applies them as no-ops, see above)
+        if (pending.isDefined) GenStore.commitOverlay(spark, root, None, None)
         } finally { repaired.unpersist(blocking = false); () }
         } finally { reassigned.unpersist(blocking = false); () }
       } finally { stored.unpersist(blocking = false); () }

@@ -281,7 +281,9 @@ object Serving {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val fb = Future(b)
+    // the pooled thread runs b under the CALLER's job group/description
+    val onCaller = org.apache.spark.sql.GraftBridge.withCallerLocals(b)
+    val fb = Future(onCaller())
     val ra = a // caller thread does one side itself — no idle blocking
     (ra, Await.result(fb, Duration.Inf))
   }

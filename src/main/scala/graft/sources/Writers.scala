@@ -84,151 +84,32 @@ object Writers {
     keyed.select(oid +: fields.toSeq: _*).toJSON.write.mode("overwrite").text(path)
   }
 
-  // ---- write-new-then-swap crash-recovery protocol (shared) -------------
-  // ONE implementation of the __tmp/__old/_SUCCESS state machine that
-  // compact, DedupLake, and the price-pipeline state swap all rely on — the
-  // rename/recovery ordering is subtle enough that three hand-rolled copies
-  // were a divergence bug waiting to happen (r7 review finding).
-
   private def hfsOf(spark: SparkSession, path: String) = {
     val p = new org.apache.hadoop.fs.Path(path)
     (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
   }
 
-  /** Recover from a swap interrupted between renames: if the destination is
-    * missing, restore the fully-written new state (__tmp with _SUCCESS —
-    * the write that produced it had completed) or, failing that, the
-    * displaced previous state (__old). All checks go through the PATH's
-    * Hadoop filesystem — java.io.File is always false on hdfs://s3a://
-    * URIs and would silently treat the state as empty. */
-  def recoverSwap(spark: SparkSession, path: String): Unit = {
-    val (fs, dst) = hfsOf(spark, path)
-    if (!fs.exists(dst)) {
-      val tmp = new org.apache.hadoop.fs.Path(path + "__tmp")
-      val old = new org.apache.hadoop.fs.Path(path + "__old")
-      if (fs.exists(tmp) &&
-          fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))) {
-        require(fs.rename(tmp, dst), s"state recovery failed: $tmp -> $dst")
-        if (fs.exists(old)) fs.delete(old, true)
-      } else if (fs.exists(old)) {
-        require(fs.rename(old, dst), s"state recovery failed: $old -> $dst")
-      }
-    }
-  }
+  // ---- version-pointer protocol (the commit of every state dir) ----------
+  // A tiny text file naming the CURRENT version of a versioned store
+  // (a lake's `GEN` -> "3" meaning gen-3/{vectors,centroids}, or the
+  // warehouse's `crawl_state.GEN` -> "3" meaning crawl_state.gen-3/; the
+  // layouts are graft.domain.GenStore's). Version dirs are written whole
+  // under fresh names before the flip, so any resolvable value names a
+  // complete version. The default flip is write-tmp / delete / rename: a
+  // reader sees the old value, the new value (via the fully-written __tmp
+  // during the rename window), or the new value after the rename.
 
-  /** Read a state dir as `schema`, empty frame if absent — ALWAYS through
-    * [[recoverSwap]] first (a swap interrupted last run must be restored
-    * before the listing) and through the path's Hadoop filesystem
-    * (java.io.File is always false on hdfs://s3a:// URIs and would read
-    * the state as empty). The read half of the swap protocol, shared by
-    * every lake-resident store for the same reason the write half is.
-    *
-    * WRITER-SIDE ONLY: the recovery performs renames, so this must run
-    * under the store's writer lease. A reader racing a live writer's
-    * [[promoteSwap]] between its two renames would otherwise itself promote
-    * `__tmp` (or restore `__old`) and make the writer's checked rename fail
-    * its `require` — loud but spurious (r7 advice). Readers use
-    * [[readOrEmptyReadOnly]]. */
-  def readOrEmpty(spark: SparkSession, path: String,
-                  schema: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.DataFrame = {
-    recoverSwap(spark, path)
-    val (fs, p) = hfsOf(spark, path)
-    if (fs.exists(p)) spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
-
-  /** The READER half of the swap protocol: resolve which dir an interrupted
-    * swap left the state in — destination if present, else a fully-written
-    * `__tmp` (its `_SUCCESS` proves the write completed), else the displaced
-    * `__old` — and read it WITHOUT performing the recovery renames. Content
-    * priority is identical to [[recoverSwap]]'s, so a reader sees exactly
-    * the post-recovery state; only the mutation is deferred to the next
-    * writer (which recovers under its lease). This is what lets lake
-    * readers (keep sets, vector scans, drift reports) run concurrently
-    * with a locked writer's swap without tripping its checked renames. */
-  def readOrEmptyReadOnly(spark: SparkSession, path: String,
-                          schema: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.DataFrame = {
-    val (fs, dst) = hfsOf(spark, path)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__tmp")
-    val old = new org.apache.hadoop.fs.Path(path + "__old")
-    val src =
-      if (fs.exists(dst)) Some(path)
-      else if (fs.exists(tmp) &&
-        fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")))
-        Some(path + "__tmp")
-      else if (fs.exists(old)) Some(path + "__old")
-      else None
-    src.map(spark.read.schema(schema).parquet(_)).getOrElse(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
-  }
-
-  /** Mid-swap-aware EXISTENCE probe for a swap-replaced state dir — the
-    * reader twin of [[readOrEmptyReadOnly]]'s source resolution, for the
-    * fast-path probes that skip overlay joins when no overlay exists (r12
-    * advice): during a concurrent [[swapReplace]] the destination is
-    * briefly absent (displaced to `__old` before `__tmp` promotes), so
-    * probing the destination alone would transiently report COMMITTED
-    * state as absent — an unpinned reader would serve without committed
-    * edits for that instant. Priority matches [[readOrEmptyReadOnly]]:
-    * destination, else a fully-written `__tmp`, else `__old`. */
-  def stateExistsReadOnly(spark: SparkSession, path: String): Boolean = {
-    val (fs, dst) = hfsOf(spark, path)
-    fs.exists(dst) || {
-      val tmp = new org.apache.hadoop.fs.Path(path + "__tmp")
-      fs.exists(tmp) &&
-        fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))
-    } || fs.exists(new org.apache.hadoop.fs.Path(path + "__old"))
-  }
-
-  /** Full-replace a state dir via write-new-then-swap: write `next` to
-    * __tmp, displace the current dir to __old, promote __tmp, drop __old.
-    * Every rename is checked; a crash between renames is recoverable by
-    * [[recoverSwap]] on the next read. Renames are atomic on HDFS/local —
-    * don't point this at a store without atomic rename. */
-  def swapReplace(spark: SparkSession, path: String,
-                  next: org.apache.spark.sql.DataFrame): Unit = {
-    val tmp = path + "__tmp"
-    next.write.mode("overwrite").parquet(tmp)
-    promoteSwap(spark, path)
-  }
-
-  /** The rename half of [[swapReplace]], for callers that have already
-    * written `path__tmp` (with _SUCCESS) themselves. */
-  def promoteSwap(spark: SparkSession, path: String): Unit = {
-    val (fs, dst) = hfsOf(spark, path)
-    val tmpP = new org.apache.hadoop.fs.Path(path + "__tmp")
-    if (fs.exists(dst)) {
-      val old = new org.apache.hadoop.fs.Path(path + "__old")
-      if (fs.exists(old)) fs.delete(old, true)
-      require(fs.rename(dst, old), s"state swap failed: $dst -> $old")
-      require(fs.rename(tmpP, dst), s"state swap failed: $tmpP -> $dst")
-      fs.delete(old, true)
-    } else require(fs.rename(tmpP, dst), s"state swap failed: $tmpP -> $dst")
-  }
-
-  // ---- generation-pointer protocol (shared lake-lifecycle primitive) -----
-  // A tiny text file naming the CURRENT generation of a versioned store
-  // (e.g. VectorLake's `GEN` -> "3" meaning gen-3/{vectors,centroids}).
-  // The flip is write-tmp / delete / rename: a reader sees the old value,
-  // the new value (via the fully-written __tmp during the rename window),
-  // or — one racing instant — neither, which the retry below absorbs. The
-  // pointer is the COMMIT of a generation swap: data dirs are fully written
-  // before the flip, so any resolvable value names a complete generation.
-
-  /** READER-side pointer resolution: destination first, else a non-empty
-    * `__tmp` (the flip's rename window), retried with backoff for the
-    * instant between the delete and the rename. Returns None ONLY when no
-    * pointer exists at all (an unversioned/legacy store). A pointer that
-    * EXISTS but stays unreadable/empty through the retries THROWS instead:
-    * returning None there would silently degrade a versioned store to the
-    * root layout — DedupLake.keeps would serve an empty frame and a
-    * post-migration VectorLake would see no vectors — turning a transient
-    * IO error into a wrong answer (the lock protocol's live-on-read-error
-    * rule, applied to the pointer). */
+  /** READER-side pointer resolution: the destination, else a non-empty
+    * `__tmp` (the flip's rename window), else the destination again — a
+    * flip renames `__tmp` onto it atomically, so a reader that found
+    * neither file in that order raced no flip and the store has no pointer
+    * (None: an unversioned/legacy store, answered without any wait). A
+    * pointer seen but unreadable or empty is retried with backoff and then
+    * THROWS: returning None there would silently degrade a versioned store
+    * to its legacy layout — DedupLake.keeps would serve an empty frame and
+    * a post-migration VectorLake would see no vectors — turning a
+    * transient IO error into a wrong answer (the lock protocol's
+    * live-on-read-error rule, applied to the pointer). */
   def readPointerReadOnly(spark: SparkSession, path: String): Option[String] = {
     val (fs, dst) = hfsOf(spark, path)
     val tmp = new org.apache.hadoop.fs.Path(path + "__tmp")
@@ -243,10 +124,10 @@ object Writers {
     var sawPointer = false
     val resolved = Iterator.range(0, 3).map { i =>
       if (i > 0) Thread.sleep(25L << i)
-      if (fs.exists(dst)) { sawPointer = true; readF(dst) }
-      else if (fs.exists(tmp)) { sawPointer = true; readF(tmp) }
-      else None
-    }.find(_.isDefined).flatten
+      Seq(dst, tmp, dst).find(fs.exists).flatMap { p =>
+        sawPointer = true; readF(p)
+      }
+    }.find(r => r.isDefined || !sawPointer).flatten
     if (resolved.isEmpty && sawPointer)
       throw new IllegalStateException(
         s"generation pointer at $path exists but could not be read (empty " +
@@ -258,21 +139,21 @@ object Writers {
   }
 
   // ---- the COMMIT PRIMITIVE seam (r12 verdict ask #7) --------------------
-  // The pointer flip is THE commit of every lake mutation, and the default
-  // implementation relies on ATOMIC RENAME — true on HDFS and local
-  // filesystems, FALSE on S3-style object stores (rename = copy + delete,
-  // neither atomic nor cheap). The primitive is therefore INJECTABLE: a
-  // deployment on an object store scopes its writers in
-  // withPointerCommit(OverwritePutPointerCommit) — one atomic overwrite
-  // PUT of the pointer object (the conditional-put/pointer-object idiom),
-  // no delete-to-rename window at all — without touching any lake code.
-  // DATA never needs the seam: generation trees are written WHOLE under
-  // fresh names before the pointer commits (no rename on the commit
-  // path). The root-overlay/compaction swaps (swapReplace /
-  // compactPartition) DO remain rename-protocol: on an object store,
-  // route mutations through reconcile folds instead of overlay swaps, or
-  // mount an atomic-rename layer for the overlay dirs — stated loudly
-  // because a silent wrong-store deployment would tear exactly at commit.
+  // The pointer flip is THE commit of every state-dir mutation — lake
+  // generations, lake overlays, the layout conf, centroids, the dedup
+  // archive, the sync logs and the warehouse's crawl_state all commit
+  // through writePointer. The default implementation relies on ATOMIC
+  // RENAME — true on HDFS and local filesystems, FALSE on S3-style object
+  // stores (rename = copy + delete, neither atomic nor cheap). The
+  // primitive is therefore INJECTABLE: a deployment on an object store
+  // scopes its writers in withPointerCommit(OverwritePutPointerCommit) —
+  // one atomic overwrite PUT of the pointer object (the
+  // conditional-put/pointer-object idiom), no delete-to-rename window at
+  // all — without touching any store code. DATA never needs the seam:
+  // versions are written WHOLE under fresh names before the pointer
+  // commits, and appends go into the current version. The one rename
+  // path left is the hidden-sibling leaf swap below (compactPartition /
+  // rewriteLeaf), which rewrites a partition leaf inside a generation.
 
   /** How a pointer value is atomically PUBLISHED and RECOVERED — the one
     * interface [[writePointer]]/[[recoverPointer]] route through. A
@@ -377,53 +258,33 @@ object Writers {
     pointerCommitVar.value.recover(fs, dst)
   }
 
-  /** Small-file compaction — the maintenance pass every streaming/incremental
-    * ingest needs: micro-batches leave a long tail of tiny part files whose
-    * per-file open/footer cost eventually dominates scans. Rewrites the
-    * table's current contents into ceil(rows / targetRecordsPerFile) files
-    * and swaps via checked renames on the PATH's Hadoop filesystem (atomic
-    * per rename on HDFS/local; don't point this at a store without atomic
-    * rename). A reader can land in the instant between the two renames —
-    * the window where the dir is absent — and a crash there would strand
-    * the data at __old, so compact() FIRST runs the same recovery step as
-    * PricePipeline's state swap: a complete __tmp (with _SUCCESS) or a
-    * displaced __old is restored before any new work. Values are
-    * untouched: compaction is layout-only.
-    *
-    * At 100 TB this runs per partition (pass the partition dir), never the
-    * whole table; `coalesce` avoids a shuffle — data only narrows. */
-  def compact(spark: SparkSession, dir: String,
-              targetRecordsPerFile: Long = 1000000L): Unit = {
-    require(targetRecordsPerFile > 0, "targetRecordsPerFile must be positive")
-    // recovery first: restore a swap interrupted by a crash last run
-    recoverSwap(spark, dir)
-    val df = spark.read.parquet(dir)
-    val rows = df.count()
-    val files = math.max(1L, (rows + targetRecordsPerFile - 1) / targetRecordsPerFile)
-    df.coalesce(files.toInt).write.mode("overwrite").parquet(s"${dir}__tmp")
-    promoteSwap(spark, dir)
-  }
-
   // ---- hidden-sibling compaction for PARTITION LEAF dirs ------------------
-  // [[compact]]'s __tmp/__old names are unusable on a leaf of a
-  // partitionBy'd table: a crash would leave `ivf_list=3__old` as a SIBLING
+  // The one rename protocol left. It rewrites ONE leaf of a partitionBy'd
+  // table inside a generation (a vector list, a posting bucket, a dedup
+  // generation's keeps/index), and cannot commit through a version
+  // pointer: Spark's partition discovery lists the table dir and cannot
+  // follow a per-leaf pointer. Plain `__tmp`/`__old` sibling names would
+  // be worse — a crash would leave `ivf_list=3__old` as a SIBLING
   // PARTITION whose value fails the partition-column cast and surfaces
-  // ghost null-partition rows to every table reader until a writer
-  // recovers. The leaf swap therefore goes through HIDDEN dot-prefixed
-  // siblings (`.ivf_list=3__ctmp` / `.ivf_list=3__cold`), which Spark's
-  // file listing skips at every level — no crash state is ever VISIBLE to
-  // a reader; the only reader-observable anomaly is the leaf-absent
-  // instant between the two renames (the same instant [[compact]]
-  // documents), and a crash there is repaired by
-  // [[recoverPartitionCompact]] under the next writer lease.
+  // ghost null-partition rows to every table reader. The swap therefore
+  // goes through HIDDEN dot-prefixed siblings (`.ivf_list=3__ctmp` /
+  // `.ivf_list=3__cold`), which Spark's file listing skips at every level
+  // — no crash state is ever VISIBLE to a reader; the only
+  // reader-observable anomaly is the leaf-absent instant between the two
+  // renames, and a crash there is repaired by [[recoverPartitionCompact]]
+  // under the next writer lease. On an object store without atomic
+  // rename, skip leaf compaction: the next reconcile's generation rewrite
+  // compacts the same leaves through the pointer.
 
   private def leafTmp(dst: org.apache.hadoop.fs.Path) =
     new org.apache.hadoop.fs.Path(dst.getParent, s".${dst.getName}__ctmp")
   private def leafOld(dst: org.apache.hadoop.fs.Path) =
     new org.apache.hadoop.fs.Path(dst.getParent, s".${dst.getName}__cold")
 
-  /** [[compact]] for ONE leaf of a partitioned table (values untouched,
-    * layout-only). WRITER-SIDE: call under the store's lease, AFTER
+  /** Small-file compaction of ONE leaf of a partitioned table into
+    * ceil(rows / targetRecordsPerFile) files (values untouched,
+    * layout-only; `coalesce` avoids a shuffle — data only narrows).
+    * WRITER-SIDE: call under the store's lease, AFTER
     * [[recoverPartitionCompact]] on the table dir. */
   def compactPartition(spark: SparkSession, leafDir: String,
                        targetRecordsPerFile: Long = 1000000L): Unit =

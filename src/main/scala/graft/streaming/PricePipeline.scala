@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.domain.Schemas
+import graft.domain.{GenStore, Schemas}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -14,25 +14,15 @@ import org.apache.spark.sql.types.StructType
   * loops and per-message MySQL commits (tasks/steam_tasks_improved.py:208-511).
   *
   * The warehouse layout is plain parquet dirs (games/, prices/, crawl_state/);
-  * at 100 TB prices/ partitions by date and the merge becomes a MERGE INTO on
-  * a table format — same batch-core, different sink. */
+  * crawl_state, the one dir a batch rewrites, commits as numbered versions
+  * behind a `crawl_state.GEN` pointer ([[GenStore]]). At 100 TB prices/
+  * partitions by date and the merge becomes a MERGE INTO on a table
+  * format — same batch-core, different sink. */
 object PricePipeline {
 
   val wireSchema: StructType = StructType(Seq(
     org.apache.spark.sql.types.StructField("value",
       org.apache.spark.sql.types.StringType)))
-
-  /** Recover from a swap interrupted between renames: if the destination is
-    * missing, restore the fully-written new state (__tmp with _SUCCESS — the
-    * merge that produced it had completed) or, failing that, the displaced
-    * previous state (__old). Without this, an interrupted swap silently
-    * rebuilds empty state and wipes the watermarks. */
-  // all state-file operations go through the PATH's Hadoop filesystem
-  // (java.io.File is always false on hdfs://s3a:// URIs) and the shared
-  // Writers swap protocol — one __tmp/__old/_SUCCESS state machine across
-  // compaction, DedupLake, and this pipeline, not a third hand-rolled copy
-  private def readOr(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    graft.sources.Writers.readOrEmpty(spark, path, schema)
 
   private val gamesSchema = StructType(Seq(
     org.apache.spark.sql.types.StructField("game_id",
@@ -58,12 +48,14 @@ object PricePipeline {
   def mergeBatch(spark: SparkSession, warehouseDir: String, batch: DataFrame): Unit = {
     val ticks = batch.cache()
     try {
-      val games = readOr(spark, s"$warehouseDir/games", gamesSchema)
-      val state = readOr(spark, s"$warehouseDir/crawl_state", stateSchema)
+      val games =
+        GenStore.readOrEmpty(spark, s"$warehouseDir/games", gamesSchema)
+      val state = GenStore.read(spark, s"$warehouseDir/crawl_state", stateSchema)
       val (missingGames, priceRows, mergedState) =
         Streams.priceBatchMerge(games, state, ticks)
       missingGames.write.mode("append").parquet(s"$warehouseDir/games")
-      val existingPrices = readOr(spark, s"$warehouseDir/prices", pricesSchema)
+      val existingPrices =
+        GenStore.readOrEmpty(spark, s"$warehouseDir/prices", pricesSchema)
       // anti-join on the FULL row: a replayed batch inserts nothing, while a
       // genuinely different payload at the same (game_id, timestamp) —
       // e.g. a corrected resend — still lands
@@ -87,13 +79,12 @@ object PricePipeline {
       val dupCond = allCols.map(c => incoming(c) <=> existingScoped(c)).reduce(_ && _)
       incoming.join(existingScoped, dupCond, "left_anti")
         .write.mode("append").parquet(s"$warehouseDir/prices")
-      // state is a full-replace merge: write-new-then-swap via the shared
-      // protocol. Every rename is checked and a crash between the renames
-      // is recoverable (Writers.recoverSwap restores __tmp-with-_SUCCESS or
-      // __old on the next read) — an interrupted swap can no longer
-      // silently reset the watermarks.
-      graft.sources.Writers.swapReplace(
-        spark, s"$warehouseDir/crawl_state", mergedState)
+      // state is a full-replace merge, committed as the next crawl_state
+      // version: a merge torn before the pointer flip leaves the old
+      // watermarks current (its replay lands once — the prices anti-join
+      // above), and a reader that resolved the old version keeps its files
+      // for one more commit
+      GenStore.commitDir(spark, s"$warehouseDir/crawl_state", mergedState)
     } finally ticks.unpersist()
   }
 

@@ -551,8 +551,8 @@ object Streams {
     * per batch. Micro-batch ids must be unique (upsert refuses duplicates
     * loudly — an edit feed keyed by doc id satisfies this by
     * construction). Exactly-once EFFECT on at-least-once delivery: the
-    * overlay swap is last-writer-wins and the tombstone/keeps arms
-    * anti-join, so a redelivered batch re-commits identical state. NOTE
+    * overlay commit is last-writer-wins and the keeps arm anti-joins,
+    * so a redelivered batch re-commits identical state. NOTE
     * the within-batch last-writer-wins caveat: two edits of the SAME id
     * must not share a micro-batch (refused); across batches the later one
     * wins, which is the edit feed's intent. `onUpserted` sees (epochId,
@@ -576,7 +576,7 @@ object Streams {
     * upsert contract). Micro-batch ids must be unique (refused loudly)
     * and the resulting overlay bounded (it broadcasts at every read).
     * Exactly-once EFFECT on at-least-once delivery: upsert is idempotent
-    * as a whole — a redelivered batch swap-replaces identical overlay
+    * as a whole — a redelivered batch re-commits identical overlay
     * state. `onUpserted` sees (epochId, rowCount) per batch. */
   def vectorLakeUpsertStream(emb: DataFrame, root: String,
                              lockWaitMs: Long = 30 * 60 * 1000L,

@@ -31,4 +31,28 @@ object GraftBridge {
       .internalCreateDataFrame(rdd, df.schema)
     (out, rdd)
   }
+
+  /** `body` as a thunk that runs under the CALLING thread's Spark local
+    * properties (job group, description, pool) and active session, on
+    * whichever thread runs it. Spark copies local properties only when a
+    * thread is created, so a pooled thread keeps its creator's job group:
+    * misattributed jobs that escape the caller's cancellation. */
+  def withCallerLocals[T](body: => T): () => T = {
+    val sc = org.apache.spark.SparkContext.getActive
+    val props = sc.map(c =>
+      org.apache.spark.util.Utils.cloneProperties(c.getLocalProperties))
+    val session = SparkSession.getActiveSession
+    () => {
+      val prevProps = sc.map(_.getLocalProperties)
+      val prevSession = SparkSession.getActiveSession
+      for (c <- sc; p <- props) c.setLocalProperties(p)
+      session.foreach(SparkSession.setActiveSession)
+      try body
+      finally {
+        for (c <- sc; p <- prevProps) c.setLocalProperties(p)
+        prevSession.fold(SparkSession.clearActiveSession())(
+          SparkSession.setActiveSession)
+      }
+    }
+  }
 }

@@ -152,8 +152,13 @@ class DedupLakeSpec extends SparkSpec {
     assert(GenStore.dataRoot(spark, root) == s"$root/gen-2")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/gen-0")))
     assert(keepIds(DedupLake.keeps(spark, root)) == Set(30L, 40L, 60L))
-    // the archive stayed unversioned at the root throughout
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$root/archive")))
+    // the archive commits one compacted version per reconcile under the
+    // same two-version retention: its legacy dir went with the second
+    // reconcile, version 0 with the third
+    assert(GenStore.currentDir(spark, s"$root/archive") == s"$root/archive.gen-2")
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/archive")) &&
+      !fs.exists(new org.apache.hadoop.fs.Path(s"$root/archive.gen-0")))
+    assert(DedupLake.corpus(spark, root).count() == 4)
   }
 
   test("streaming lake ingest resolves the generation PER BATCH across a mid-stream reconcile") {
@@ -206,9 +211,10 @@ class DedupLakeSpec extends SparkSpec {
     DedupLake.reconcile(spark, root)
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/tombstones")))
-    assert(spark.read.schema(DedupLake.archiveSchema)
-      .parquet(s"$root/archive").collect().map(_.getLong(0)).toSet
+    assert(GenStore.readOverlay(spark, root, DedupLake.tombstonesSchema,
+      DedupLake.archiveSchema).isEmpty, "the tombstones are cleared")
+    assert(GenStore.read(spark, s"$root/archive", DedupLake.archiveSchema)
+      .collect().map(_.getLong(0)).toSet
       == Set(50L, 70L), "the archive rewrite must purge the deleted doc")
     assert(keepIds(DedupLake.keeps(spark, root)) == Set(50L, 70L))
   }
@@ -231,7 +237,8 @@ class DedupLakeSpec extends SparkSpec {
     assert(dataFiles(s"$root/archive") >= 4, "four batches, four file sets")
     val report = DedupLake.compactStores(spark, root, minFilesPerStore = 3)
     assert(report.keySet == Set("archive", "index", "keeps"), report)
-    assert(dataFiles(s"$root/archive") == 1 && dataFiles(s"$root/keeps") == 1,
+    assert(dataFiles(GenStore.currentDir(spark, s"$root/archive")) == 1 &&
+      dataFiles(s"${GenStore.dataRoot(spark, root)}/keeps") == 1,
       "4 rows / 1e6 target must collapse to ONE file")
     assert(keepIds(DedupLake.keeps(spark, root)) == before,
       "compaction changed the keep set")

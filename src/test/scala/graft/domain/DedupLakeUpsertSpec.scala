@@ -58,22 +58,24 @@ class DedupLakeUpsertSpec extends SparkSpec {
     DedupLake.ingest(spark, root, Seq((30L, textB)).toDF("doc_id", "text"))
     DedupLake.delete(spark, root, Seq(30L).toDF("doc_id"))
     assert(corpusMap(root).isEmpty)
-    // torn window 1: overlay committed, crash BEFORE the tombstone drop —
-    // the edit is invisible (still tombstoned) until the replay repairs
+    // torn window 1: the next overlay (edit + tombstone drop) written in
+    // full, crash BEFORE its pointer flip — nothing committed, the id is
+    // still tombstoned until the replay commits both at once
     intercept[RuntimeException] {
       DedupLake.upsert(spark, root, Seq((30L, textX)).toDF("doc_id", "text"),
         failpointAfterEdits = () => throw new RuntimeException("torn"))
     }
-    assert(corpusMap(root).isEmpty, "edit landed but the id is still tombstoned")
+    assert(corpusMap(root).isEmpty, "an unflipped overlay must not serve")
     assert(DedupLake.upsert(spark, root, Seq((30L, textX)).toDF("doc_id", "text")) == 1L)
     assert(corpusMap(root) == Map(30L -> textX))
     assert(keepIds(DedupLake.keeps(spark, root)) == Set(30L))
     // exact replay: overlay (last-writer-wins), tombstones, keeps all no-op
-    val snapshot = (spark.read.parquet(s"$root/edits").collect().toSet,
-      spark.read.parquet(s"$root/keeps").count())
+    def edits() = GenStore.readOverlay(spark, root,
+      DedupLake.tombstonesSchema, DedupLake.archiveSchema)
+      .fold(Set.empty[org.apache.spark.sql.Row])(_._2.collect().toSet)
+    val snapshot = (edits(), spark.read.parquet(s"$root/keeps").count())
     DedupLake.upsert(spark, root, Seq((30L, textX)).toDF("doc_id", "text"))
-    assert((spark.read.parquet(s"$root/edits").collect().toSet,
-      spark.read.parquet(s"$root/keeps").count()) == snapshot)
+    assert((edits(), spark.read.parquet(s"$root/keeps").count()) == snapshot)
     // torn window 2: crash BEFORE the keeps append on an INSERTED id — the
     // corpus serves it, keeps misses it, the replay repairs exactly that
     intercept[RuntimeException] {
@@ -96,11 +98,11 @@ class DedupLakeUpsertSpec extends SparkSpec {
     DedupLake.reconcile(spark, root)
     assert(corpusMap(root) == before, "the fold changes WHERE the truth lives, not what it says")
     assert(before == Map(30L -> textX))
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/edits")), "overlay folded and cleared")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/tombstones")), "tombstones reclaimed")
-    assert(spark.read.parquet(s"$root/archive").collect()
+    assert(GenStore.readOverlay(spark, root, DedupLake.tombstonesSchema,
+      DedupLake.archiveSchema).isEmpty, "overlay folded, tombstones reclaimed")
+    assert(GenStore.current(spark, GenStore.overlay(root)) ==
+      s"$root/overlay.gen-1", "the clear is a commit of its own")
+    assert(GenStore.read(spark, s"$root/archive", DedupLake.archiveSchema).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap == Map(30L -> textX),
       "the physical archive now holds the edited text")
     // the rebuilt index gates on the CURRENT content

@@ -156,9 +156,8 @@ class LakeCrashMatrixSpec extends SparkSpec with LakeCrashMatrix {
       ()
     }
     def residentCount(root: String): Long =
-      graft.sources.Writers.readOrEmptyReadOnly(spark,
-        s"${GenStore.dataRoot(spark, root)}/doclens",
-        LexLake.doclensSchema).count()
+      GenStore.readGenOrEmpty(spark, GenStore.dataRoot(spark, root),
+        "doclens", LexLake.doclensSchema).count()
     val expectedAfterBatch = 2L
     def reconcile(root: String): Unit = LexLake.reconcile(spark, root)
   })
@@ -252,14 +251,64 @@ class LakeCrashMatrixSpec extends SparkSpec with LakeCrashMatrix {
     assert(LakeSync.pendingUpserts(spark, sync).count() == 0L)
     // applied ONCE everywhere despite the replayed arms: one edit-overlay
     // row per content lake, one resident vector row, one lex edit row
-    assert(graft.sources.Writers.readOrEmptyReadOnly(spark, s"$dedup/edits",
-      DedupLake.archiveSchema).where("doc_id = 2").count() == 1L)
+    def editRows(root: String, edits: org.apache.spark.sql.types.StructType) =
+      GenStore.readOverlay(spark, root, DedupLake.tombstonesSchema, edits)
+        .fold(0L)(_._2.where("doc_id = 2").count())
+    assert(editRows(dedup, DedupLake.archiveSchema) == 1L)
     assert(VectorLake.vectors(spark, vector).where("vec_id = 2").count() == 1L)
-    assert(graft.sources.Writers.readOrEmptyReadOnly(spark, s"$lex/edits",
-      LexLake.editsSchema).where("doc_id = 2").count() == 1L)
+    assert(editRows(lex, LexLake.editsSchema) == 1L)
     // and a further propagate is a free no-op — the boundary left nothing
     assert(LakeSync.propagate(spark, sync, dedup, vector,
       lexRoot = Some(lex)) == LakeSync.SyncReport(0, 0, 0, 0))
+  }
+
+  test("[matrix:DedupLake] a compaction torn at its generation flip keeps the keep set; the next ingest and compaction keep every doc") {
+    import graft.sources.Writers
+    // dies at the lake's generation flip only: the archive's own commit
+    // lands, the compacted keeps/index pair is written but never committed
+    object CrashAtGenFlip extends Writers.PointerCommit {
+      val name = "crash-at-gen-flip"
+      def put(fs: org.apache.hadoop.fs.FileSystem,
+              dst: org.apache.hadoop.fs.Path, value: String): Unit =
+        if (dst.getName == "GEN")
+          throw new RuntimeException("crash at the generation flip")
+        else Writers.RenamePointerCommit.put(fs, dst, value)
+      def recover(fs: org.apache.hadoop.fs.FileSystem,
+                  dst: org.apache.hadoop.fs.Path): Unit =
+        Writers.RenamePointerCommit.recover(fs, dst)
+    }
+    val root =
+      java.nio.file.Files.createTempDirectory("matrix_dcompact").toString +
+        "/lake"
+    def text(id: Long) = s"standalone document number $id topic $id"
+    def ingest(id: Long, body: String): Unit = {
+      DedupLake.ingest(spark, root, Seq((id, body)).toDF("doc_id", "text"))
+        .count(); ()
+    }
+    def keepSet: Set[Long] =
+      DedupLake.keeps(spark, root).select("doc_id").as[Long].collect().toSet
+    for (id <- 1L to 3L) ingest(id, text(id))
+    assert(keepSet == Set(1L, 2L, 3L))
+    val e = intercept[RuntimeException] {
+      Writers.withPointerCommit(CrashAtGenFlip) {
+        DedupLake.compactStores(spark, root, minFilesPerStore = 3)
+      }
+    }
+    assert(e.getMessage == "crash at the generation flip", e.getMessage)
+    assert(GenStore.exists(spark, s"$root/gen-0/keeps"),
+      "the compacted generation was written in full")
+    assert(GenStore.currentGen(spark, root).isEmpty)
+    assert(keepSet == Set(1L, 2L, 3L), "a torn compaction changed the keeps")
+    ingest(4L, text(4L))
+    assert(keepSet == Set(1L, 2L, 3L, 4L))
+    val report = DedupLake.compactStores(spark, root, minFilesPerStore = 3)
+    assert(Set("index", "keeps").subsetOf(report.keySet), report)
+    assert(GenStore.currentGen(spark, root).contains(0L),
+      "the next compaction lands on the orphan's number")
+    assert(keepSet == Set(1L, 2L, 3L, 4L), "compaction lost a kept doc")
+    // the committed index still gates near-duplicates of every kept doc
+    ingest(5L, text(1L))
+    assert(keepSet == Set(1L, 2L, 3L, 4L), "the index lost a kept doc's bands")
   }
 
   test("[matrix:commit] the pointer commit primitive is injectable — a full lifecycle on the object-store put, and the rename protocol survives a simulated non-atomic rename") {
@@ -271,30 +320,57 @@ class LakeCrashMatrixSpec extends SparkSpec with LakeCrashMatrix {
     val docs = Seq(
       (1L, "alpha beta gamma delta"), (2L, "alpha beta gamma delta"),
       (3L, "omega psi chi phi")).toDF("doc_id", "text")
-    def lifecycle(): String = {
-      val root =
-        java.nio.file.Files.createTempDirectory("cpmatrix").toString + "/lake"
-      LexLake.ingest(spark, root, docs, nBuckets = 4)
-      LexLake.reconcile(spark, root) // gen-0 commit
-      LexLake.delete(spark, root, Seq(2L).toDF("doc_id"))
-      LexLake.reconcile(spark, root) // gen-1 commit
-      root
-    }
     def servedOf(root: String): Set[(Long, Long, Long, Long)] =
       LexLake.serve(spark, root,
           Seq((9L, Seq("alpha", "omega"))).toDF("probe_id", "terms"), n = 5)
         .collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val renameRoot = lifecycle()
-    val putRoot = Writers.withPointerCommit(
+    def servedIds(root: String): Set[Long] = servedOf(root).map(_._2)
+    // every commit kind: the layout conf, the generation flips, the
+    // overlay (a delete's append into it, an upsert's commit, the fold's
+    // clear) — and the warehouse's crawl_state through a price merge
+    def lifecycle(): (String, String) = {
+      val root =
+        java.nio.file.Files.createTempDirectory("cpmatrix").toString + "/lake"
+      LexLake.ingest(spark, root, docs, nBuckets = 4) // conf commit
+      LexLake.reconcile(spark, root) // gen-0 commit
+      LexLake.delete(spark, root, Seq(2L).toDF("doc_id"))
+      assert(servedIds(root) == Set(1L, 3L), "the delete serves at once")
+      LexLake.upsert(spark, root,
+        Seq((3L, "alpha omega rewritten")).toDF("doc_id", "text"))
+      assert(servedOf(root).exists(r => r._2 == 3L && r._4 == 1L),
+        "the upsert serves at once (both query terms now match doc 3)")
+      LexLake.reconcile(spark, root) // gen-1 commit, overlay clear
+      val wh =
+        java.nio.file.Files.createTempDirectory("cpmatrix_wh").toString
+      val ts = new java.sql.Timestamp(1700000000000L)
+      graft.streaming.PricePipeline.mergeBatch(spark, wh,
+        Seq((1, 999L, 0.0, 999L, ts))
+          .toDF("appid", "price_cents", "discount", "initial_price_cents", "ts"))
+      (root, wh)
+    }
+    val (renameRoot, renameWh) = lifecycle()
+    val (putRoot, putWh) = Writers.withPointerCommit(
       Writers.OverwritePutPointerCommit)(lifecycle())
     // identical lifecycle, identical answers; the put protocol never
     // creates a __tmp (no delete-to-rename window EXISTS to recover)
     assert(servedOf(putRoot) == servedOf(renameRoot))
+    assert(servedIds(putRoot) == Set(1L, 3L))
     assert(GenStore.generations(spark, putRoot) == Seq(0L, 1L))
+    assert(GenStore.readOverlay(spark, putRoot, LexLake.tombstonesSchema,
+      LexLake.editsSchema).isEmpty, "the fold cleared the overlay")
+    def crawlState(wh: String) = spark.read.parquet(
+        GenStore.currentDir(spark, s"$wh/crawl_state"))
+      .select("game_appid", "last_price_timestamp").collect().toSeq
+    assert(crawlState(putWh) == crawlState(renameWh))
+    assert(crawlState(putWh).map(_.getInt(0)) == Seq(1))
     val fs = new org.apache.hadoop.fs.Path(putRoot)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$putRoot/GEN__tmp")))
+    for (p <- Seq(s"$putRoot/GEN", s"$putRoot/overlay.GEN",
+        s"$putRoot/conf.GEN", s"$putWh/crawl_state.GEN")) {
+      assert(fs.exists(new org.apache.hadoop.fs.Path(p)), p)
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"${p}__tmp")), p)
+    }
     // a put-committed store keeps working under the default primitive
     // afterwards (mixed-primitive upgrade path), and vice versa
     LexLake.ingest(spark, putRoot,

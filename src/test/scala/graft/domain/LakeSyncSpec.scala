@@ -98,8 +98,7 @@ class LakeSyncSpec extends SparkSpec {
     LakeSync.deleteDocs(spark, sync, dedup, vector, Seq(2L).toDF("doc_id"))
     // logical deletion is immediate; the PHYSICAL rows wait for reconcile
     def archivedIds(): Set[Long] =
-      graft.sources.Writers.readOrEmptyReadOnly(spark, s"$dedup/archive",
-          DedupLake.archiveSchema)
+      GenStore.read(spark, s"$dedup/archive", DedupLake.archiveSchema)
         .collect().map(_.getLong(0)).toSet
     assert(archivedIds().contains(2L), "archive purge is deferred")
     DedupLake.reconcile(spark, dedup)

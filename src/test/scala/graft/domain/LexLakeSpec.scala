@@ -273,8 +273,9 @@ class LexLakeSpec extends SparkSpec {
       == reference(logical), "the fold changes where the truth lives, not what it says")
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/tombstones")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/edits")))
+    assert(GenStore.readOverlay(spark, root, LexLake.tombstonesSchema,
+      LexLake.editsSchema).isEmpty, "overlays cleared")
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$root/overlay.GEN")))
     assert(GenStore.dataRoot(spark, root) == s"$root/gen-0")
     val st = spark.read.parquet(s"$root/gen-0/stats").collect()
     assert(st.length == 1 && st.head.getString(0) == "base")
@@ -978,7 +979,8 @@ class LexLakeSpec extends SparkSpec {
     // real mass-deletion day (tombstones past 2^20 ids — delete itself
     // caps nothing) refuses on every one of them
     spark.range(1000L, 1000L + (1L << 20) + 1L).toDF("doc_id")
-      .write.mode("append").parquet(s"$root/tombstones")
+      .write.mode("append")
+      .parquet(s"${GenStore.current(spark, GenStore.overlay(root))}/tombstones")
     for ((name, serveCall) <- Seq[(String, () => DataFrame)](
         "serve" -> (() => LexLake.serve(spark, root, queriesDf, n = 5)),
         "prfServe" -> (() => LexLake.prfServe(spark, root, queriesDf, n = 5,

@@ -190,10 +190,10 @@ class VectorLakeSpec extends SparkSpec {
     val root = freshRoot("legacystrand")
     val cents = Seq(Seq(10.0, 0.0), Seq(0.0, 10.0))
     import scala.jdk.CollectionConverters._
-    graft.sources.Writers.swapReplace(spark, s"$root/centroids",
-      spark.createDataFrame(cents.zipWithIndex
+    spark.createDataFrame(cents.zipWithIndex
         .map { case (c, i) => org.apache.spark.sql.Row(i, c) }.asJava,
-        VectorLake.centroidsSchema))
+        VectorLake.centroidsSchema)
+      .write.parquet(s"$root/centroids")
     graft.operators.Similarity.ivfAssignWithDist(
         Seq(1L -> unit(0, 14f), 2L -> unit(80, 14f))
           .toDF("vec_id", "embedding"), "embedding", cents)
@@ -498,10 +498,10 @@ class VectorLakeSpec extends SparkSpec {
     val cents = Seq(Seq(10.0, 0.0), Seq(0.0, 10.0))
     // hand-build the PRE-VERSIONING layout: centroids + vectors at the root
     import scala.jdk.CollectionConverters._
-    graft.sources.Writers.swapReplace(spark, s"$root/centroids",
-      spark.createDataFrame(cents.zipWithIndex
+    spark.createDataFrame(cents.zipWithIndex
         .map { case (c, i) => org.apache.spark.sql.Row(i, c) }.asJava,
-        VectorLake.centroidsSchema))
+        VectorLake.centroidsSchema)
+      .write.parquet(s"$root/centroids")
     graft.operators.Similarity.ivfAssignWithDist(
         Seq(1L -> unit(0, 14f), 2L -> unit(80, 14f))
           .toDF("vec_id", "embedding"), "embedding", cents)
@@ -938,10 +938,10 @@ class VectorLakeSpec extends SparkSpec {
   }
 
   test("a torn upsert (edit landed, tombstone not yet dropped) is repaired by the replay") {
-    // the overlay torn window (the LexLake contract verbatim): the edit
-    // swap commits, the crash hits before the tombstone drop — a
-    // TOMBSTONED id's resurrection stays masked until the replay; a fresh
-    // id's refresh is already fully visible (the swap is the commit)
+    // the overlay torn window: the next overlay (edit + tombstone drop)
+    // is written in full, the crash hits before its pointer flip — nothing
+    // is committed, so a TOMBSTONED id's resurrection stays masked until
+    // the replay commits edit and drop together
     val root = freshRoot("upserttorn")
     VectorLake.init(spark, root, Seq(Seq(10.0, 0.0), Seq(0.0, 10.0)))
     VectorLake.ingest(spark, root, Seq(
@@ -953,7 +953,7 @@ class VectorLakeSpec extends SparkSpec {
         failpointAfterEdits = () => throw new RuntimeException("torn"))
     }
     assert(boom.getMessage == "torn")
-    // the torn window: the tombstone still masks the committed edit
+    // the torn window: the tombstone still masks the id
     assert(VectorLake.vectors(spark, root).select("vec_id")
       .collect().map(_.getLong(0)).toSet == Set(2L))
     // the replay drops the tombstone and the refresh serves

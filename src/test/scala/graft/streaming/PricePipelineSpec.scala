@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.domain.GenStore
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path}
 
@@ -37,7 +38,8 @@ class PricePipelineSpec extends SparkSpec {
       Files.writeString(Path.of(staging, "w2.jsonl"),
         tick(1, "4,99", "75", 1700009999.0))
       q.processAllAvailable()
-      val state = spark.read.parquet(s"$warehouse/crawl_state")
+      val state = spark.read.parquet(
+        GenStore.currentDir(spark, s"$warehouse/crawl_state"))
       val s1 = state.filter(col("game_appid") === 1).head()
       assert(s1.getAs[java.sql.Timestamp]("last_price_timestamp").toInstant.getEpochSecond == 1700009999L)
       assert(spark.read.parquet(s"$warehouse/prices").count() == 3)
@@ -93,33 +95,62 @@ class PricePipelineSpec extends SparkSpec {
     Seq((1, 999L, 0.0, 999L, epochTs(priceTs)))
       .toDF("appid", "price_cents", "discount", "initial_price_cents", "ts")
 
-  test("interrupted state swap: complete __tmp is recovered, watermarks survive") {
-    val warehouse = Files.createTempDirectory("wh_swap1").toString
-    // crash between the two renames: state displaced to __old, the fully
-    // written (has _SUCCESS) new state still at __tmp, no crawl_state
-    stateDf(100, 100).write.parquet(s"$warehouse/crawl_state__old")
-    stateDf(100, 500).write.parquet(s"$warehouse/crawl_state__tmp")
-    PricePipeline.mergeBatch(spark, warehouse, tickBatch(300))
-    val st = spark.read.parquet(s"$warehouse/crawl_state")
+  private def watermarks(warehouse: String): (java.sql.Timestamp, java.sql.Timestamp) = {
+    val st = spark.read.parquet(GenStore.currentDir(spark, s"$warehouse/crawl_state"))
       .filter(col("game_appid") === 1).head()
-    // recovered __tmp watermark (500) beats the replayed tick (300);
-    // without recovery the state would have reset and landed at 300
-    assert(st.getAs[java.sql.Timestamp]("last_price_timestamp") == epochTs(500))
-    assert(!new java.io.File(s"$warehouse/crawl_state__old").exists())
+    (st.getAs[java.sql.Timestamp]("last_review_timestamp"),
+      st.getAs[java.sql.Timestamp]("last_price_timestamp"))
   }
 
-  test("interrupted state swap: incomplete __tmp falls back to __old") {
-    val warehouse = Files.createTempDirectory("wh_swap2").toString
-    stateDf(77, 100).write.parquet(s"$warehouse/crawl_state__old")
-    // __tmp without _SUCCESS = write never finished -> must not be trusted
-    val tmpDir = new java.io.File(s"$warehouse/crawl_state__tmp")
-    tmpDir.mkdirs()
-    Files.writeString(Path.of(tmpDir.toString, "part-incomplete"), "junk")
+  /** A pointer primitive that dies at the flip: every commit under it is
+    * written in full and never committed. */
+  private object CrashAtFlip extends graft.sources.Writers.PointerCommit {
+    val name = "crash-at-flip"
+    def put(fs: org.apache.hadoop.fs.FileSystem,
+            dst: org.apache.hadoop.fs.Path, value: String): Unit =
+      throw new RuntimeException("crash before the pointer flip")
+    def recover(fs: org.apache.hadoop.fs.FileSystem,
+                dst: org.apache.hadoop.fs.Path): Unit =
+      graft.sources.Writers.RenamePointerCommit.recover(fs, dst)
+  }
+
+  test("a merge torn before its pointer flip keeps the old watermarks, and its replay lands once") {
+    val warehouse = Files.createTempDirectory("wh_torn1").toString
+    stateDf(100, 100).write.parquet(s"$warehouse/crawl_state") // legacy dir
+    PricePipeline.mergeBatch(spark, warehouse, tickBatch(200))
+    assert(watermarks(warehouse) == (epochTs(100), epochTs(200)))
+    intercept[RuntimeException] {
+      graft.sources.Writers.withPointerCommit(CrashAtFlip) {
+        PricePipeline.mergeBatch(spark, warehouse, tickBatch(300))
+      }
+    }
+    // the torn merge wrote its next state version in full — unflipped, so
+    // readers keep the old watermarks (not a reset, not the new ones)
+    assert(new java.io.File(s"$warehouse/crawl_state.gen-1/_SUCCESS").exists())
+    assert(watermarks(warehouse) == (epochTs(100), epochTs(200)))
+    // its replay overwrites the orphan, commits, and the tick lands once
     PricePipeline.mergeBatch(spark, warehouse, tickBatch(300))
-    val st = spark.read.parquet(s"$warehouse/crawl_state")
-      .filter(col("game_appid") === 1).head()
-    assert(st.getAs[java.sql.Timestamp]("last_price_timestamp") == epochTs(300))
-    // the review watermark from the recovered __old state survives
-    assert(st.getAs[java.sql.Timestamp]("last_review_timestamp") == epochTs(77))
+    assert(GenStore.currentDir(spark, s"$warehouse/crawl_state") ==
+      s"$warehouse/crawl_state.gen-1")
+    assert(watermarks(warehouse) == (epochTs(100), epochTs(300)))
+    assert(spark.read.parquet(s"$warehouse/prices").count() == 2)
+  }
+
+  test("a torn first merge of a pointer-less warehouse leaves the legacy state current") {
+    val warehouse = Files.createTempDirectory("wh_torn2").toString
+    stateDf(77, 100).write.parquet(s"$warehouse/crawl_state")
+    intercept[RuntimeException] {
+      graft.sources.Writers.withPointerCommit(CrashAtFlip) {
+        PricePipeline.mergeBatch(spark, warehouse, tickBatch(300))
+      }
+    }
+    // no pointer was written: the plain dir still reads exactly as before
+    assert(GenStore.currentDir(spark, s"$warehouse/crawl_state") ==
+      s"$warehouse/crawl_state")
+    assert(watermarks(warehouse) == (epochTs(77), epochTs(100)))
+    PricePipeline.mergeBatch(spark, warehouse, tickBatch(300))
+    // the review watermark from the legacy state survives the migration
+    assert(watermarks(warehouse) == (epochTs(77), epochTs(300)))
+    assert(spark.read.parquet(s"$warehouse/prices").count() == 1)
   }
 }
