@@ -2446,11 +2446,12 @@ object SparkEntry {
     }, Some(TextOracle.proximityPairsSql("hash", "join", w = 5))),
 
     Q("q169_proximity_overlay", (s, dir) => {
-      // LexLake.proximityServe's SEMANTICS as a pure oracle query (r11
-      // ask #2): the q161 deterministic edit/insert/tombstone rules fold
-      // the corpus, then q168's bucket-blocked proximity join runs over
-      // the logical rows — exactly what the lake serve computes from its
-      // stored positions + overlays (parity spec-pinned in LexLakeSpec).
+      // LexLake.proximityServeBatch's per-probe SEMANTICS as a pure oracle
+      // query (r11 ask #2): the q161 deterministic edit/insert/tombstone
+      // rules fold the corpus, then q168's bucket-blocked proximity join
+      // runs over the logical rows — exactly what the lake serve computes
+      // from its stored positions + overlays (parity spec-pinned in
+      // LexLakeSpec).
       val docs = T(s, dir, "documents").select(col("doc_id"), col("text"))
       val edits = docs.filter(col("doc_id") % 11 === 3)
         .select(col("doc_id"), upper(col("text")).as("text"))

@@ -2171,11 +2171,11 @@ object TextOracle {
   }
 
   /** q169: windowed proximity over the LOGICAL (overlay-folded) corpus —
-    * the pure oracle form of [[graft.domain.LexLake.proximityServe]]'s
-    * semantics: the q161 deterministic edit/insert/tombstone rules fold
-    * the corpus first, then [[proximityPairsSql]]'s naive band join runs
-    * over the folded rows (the engine's bucket-blocked equi-join computes
-    * the identical pair set over the same fold). */
+    * the pure oracle form of [[graft.domain.LexLake.proximityServeBatch]]'s
+    * per-probe semantics: the q161 deterministic edit/insert/tombstone
+    * rules fold the corpus first, then [[proximityPairsSql]]'s naive band
+    * join runs over the folded rows (the engine's bucket-blocked equi-join
+    * computes the identical pair set over the same fold). */
   def proximityOverlaySql(termA: String, termB: String, w: Int): String = {
     require(Seq(termA, termB).forall(_.matches("[A-Za-z0-9_-]+")),
       s"terms must be [A-Za-z0-9_-]+: $termA, $termB")

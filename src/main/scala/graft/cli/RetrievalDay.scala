@@ -198,8 +198,9 @@ object RetrievalDay {
 
     // 11. (round 12) proximity from the stored positions: the edit's two
     //     adjacent tokens co-occur within any window
-    stages += "proximity_hits" -> LexLake.proximityServe(spark, lexRoot,
-        "zebraterm", "retrieval", w = 3)
+    stages += "proximity_hits" -> LexLake.proximityServeBatch(spark,
+        lexRoot, Seq((0L, "zebraterm", "retrieval"))
+          .toDF("probe_id", "term_a", "term_b"), w = 3)
       .filter(col("doc_id") === editId).count()
 
     // 12. (round 13) the BATCHED positional serves — one bucket-pruned

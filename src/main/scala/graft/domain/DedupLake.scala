@@ -110,14 +110,6 @@ object DedupLake {
     ov.fold(archive) { case (tombs, edits) => corpusFold(archive, edits, tombs) }
   }
 
-  /** WRITER-side: the current overlay's (tombstones, edits). */
-  private def overlay(spark: SparkSession, root: String): (DataFrame, DataFrame) =
-    GenStore.readOverlay(spark, root, tombstonesSchema, archiveSchema)
-      .getOrElse(noOverlay(spark))
-
-  private def noOverlay(spark: SparkSession): (DataFrame, DataFrame) =
-    (GenStore.empty(spark, tombstonesSchema), GenStore.empty(spark, archiveSchema))
-
   /** Run `f` holding the lake's exclusive writer lease — the shared
     * [[graft.sources.StateLock]] contract (atomic `_LOCK` create, epoch
     * payload, stale-lease expiry, injectable clock) with the lake's
@@ -169,7 +161,8 @@ object DedupLake {
       // appends below keep anti-joining the PHYSICAL stores, so a replay
       // stays a no-op and a tombstoned id is not reusable until reconcile
       // reclaims it.
-      val (tombs, edits0) = overlay(spark, root)
+      val (tombs, edits0) =
+        GenStore.overlayOrEmpty(spark, root, tombstonesSchema, archiveSchema)
       val edits = edits0.join(tombs, Seq("doc_id"), "left_anti")
       val index = GenStore.readOrEmpty(spark, s"$droot/index", indexSchema)
         .join(tombs, Seq("doc_id"), "left_anti")
@@ -269,7 +262,8 @@ object DedupLake {
       // the fold this lifecycle deferred)
       val pending = GenStore.readOverlay(spark, root, tombstonesSchema,
         archiveSchema)
-      val (tombs, edits) = pending.getOrElse(noOverlay(spark))
+      val (tombs, edits) = pending.getOrElse(
+        GenStore.noOverlay(spark, tombstonesSchema, archiveSchema))
       val archive = corpusFold(
         GenStore.read(spark, s"$root/archive", archiveSchema), edits, tombs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -345,7 +339,8 @@ object DedupLake {
       // resident = archive OR the edit overlay: an upsert-inserted id lives
       // only in `edits` until a reconcile folds it, and a purge ordered in
       // that window must still tombstone it
-      val (existing, edits) = overlay(spark, root)
+      val (existing, edits) =
+        GenStore.overlayOrEmpty(spark, root, tombstonesSchema, archiveSchema)
       val resident = GenStore.read(spark, s"$root/archive", archiveSchema)
         .select("doc_id")
         .unionByName(edits.select("doc_id"))
@@ -413,7 +408,8 @@ object DedupLake {
           s"upsert batch carries duplicate doc_id values ($n rows, " +
             s"${counts.getLong(1)} distinct) — two texts would land under " +
             "one id. Deduplicate the batch first.")
-        val (tombs, edits) = overlay(spark, root)
+        val (tombs, edits) =
+          GenStore.overlayOrEmpty(spark, root, tombstonesSchema, archiveSchema)
         val merged = edits
           .join(broadcast(docs.select("doc_id")), Seq("doc_id"), "left_anti")
           .unionByName(docs)

@@ -149,6 +149,39 @@ private[graft] object GenStore {
         readOrEmpty(spark, s"$ov/edits", edits)))
   }
 
+  /** WRITER-side: the current overlay's (tombstones, edits), the
+    * [[noOverlay]] pair when none is pending. */
+  def overlayOrEmpty(spark: SparkSession, root: String, tombstones: StructType,
+                     edits: StructType): (DataFrame, DataFrame) =
+    readOverlay(spark, root, tombstones, edits)
+      .getOrElse(noOverlay(spark, tombstones, edits))
+
+  def noOverlay(spark: SparkSession, tombstones: StructType,
+                edits: StructType): (DataFrame, DataFrame) =
+    (empty(spark, tombstones), empty(spark, edits))
+
+  /** The overlay a serve applies to stored rows keyed by `idCol`: `None`
+    * where [[readOverlay]] is (a pinned view, or nothing pending), else
+    * (edits minus tombstones, overlay id union). A tombstone on an edited
+    * id wins (a delete after the upsert). The id union BROADCASTS at every
+    * appliance: bounded by the overlays-are-interim-state contract and
+    * ENFORCED here, so a mass-deletion day refuses loudly instead of
+    * OOMing the driver. */
+  def servedOverlay(spark: SparkSession, root: String, idCol: String,
+                    tombstones: StructType, edits: StructType, view: ReadView,
+                    maxOverlayRows: Long): Option[(DataFrame, DataFrame)] =
+    readOverlay(spark, root, tombstones, edits, view).map {
+      case (tombs, edits0) =>
+        val live = edits0.join(tombs, Seq(idCol), "left_anti")
+        val ids = live.select(idCol)
+          .unionByName(tombs.select(idCol)).distinct()
+        graft.operators.Serving.requireBroadcastable(ids, maxOverlayRows,
+          s"the tombstone/edit overlay id set ($idCol)",
+          "Overlays are bounded interim state by contract — run reconcile " +
+            "to fold them, then retry the read.")
+        (live, ids)
+    }
+
   /** WRITER-side: append tombstone rows into the CURRENT overlay version
     * (the legacy `root/tombstones` while pointer-less). */
   def appendTombstones(spark: SparkSession, root: String, rows: DataFrame): Unit =

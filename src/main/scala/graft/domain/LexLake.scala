@@ -67,9 +67,9 @@ object LexLake {
     StructField("term", StringType), StructField("doc_id", LongType),
     StructField("tf", LongType), StructField("dl", LongType),
     // POSITIONAL postings (round 11): the term's 0-based token positions,
-    // sorted — what [[phraseServe]] reads. The standard positional-index
-    // size trade; BM25 serving never touches the column (columnar read
-    // skips it).
+    // sorted — what the positional serves ([[phraseServeBatch]] et al.)
+    // read. The standard positional-index size trade; BM25 serving never
+    // touches the column (columnar read skips it).
     StructField("positions",
       org.apache.spark.sql.types.ArrayType(LongType)),
     StructField("tbucket", IntegerType)))
@@ -255,7 +255,8 @@ object LexLake {
       // upsert-inserted id is resident content not yet folded) — scoped
       // semi-joins, O(batch) not O(lake)
       val batchIds = docs0.select("doc_id").distinct()
-      val (_, edits) = overlay(spark, root)
+      val (_, edits) =
+        GenStore.overlayOrEmpty(spark, root, tombstonesSchema, editsSchema)
       val resident = GenStore.readOrEmpty(spark, s"$droot/doclens", doclensSchema)
         .select("doc_id")
         .unionByName(edits.select("doc_id"))
@@ -369,7 +370,8 @@ object LexLake {
     withWriterLock(spark, root, waitMs = lockWaitMs) {
       val droot = GenStore.dataRoot(spark, root)
       val del = ids.select(col("doc_id").cast("long").as("doc_id")).distinct()
-      val (existing, edits) = overlay(spark, root)
+      val (existing, edits) =
+        GenStore.overlayOrEmpty(spark, root, tombstonesSchema, editsSchema)
       val resident = GenStore.readOrEmpty(spark, s"$droot/doclens", doclensSchema)
         .select("doc_id")
         .unionByName(edits.select("doc_id"))
@@ -413,7 +415,8 @@ object LexLake {
         require(counts.getLong(2) == 0L,
           "upsert batch carries zero-token texts — an empty replacement " +
             "is a delete, not an edit")
-        val (tombs, edits) = overlay(spark, root)
+        val (tombs, edits) =
+          GenStore.overlayOrEmpty(spark, root, tombstonesSchema, editsSchema)
         val merged = edits
           .join(broadcast(docs.select("doc_id")), Seq("doc_id"), "left_anti")
           .unionByName(docs)
@@ -491,46 +494,16 @@ object LexLake {
     GenStore.generations(spark, root)
 
   /** A serve's resolved [[ReadView]]: the generation data root, and the
-    * root overlays the view applies ([[rootOverlays]]; `None` for a
-    * pinned view or while none are pending). The overlay resolves FIRST
-    * (see [[GenStore.readOverlay]]). */
+    * root overlays the view applies ([[GenStore.servedOverlay]] on doc
+    * ids; `None` for a pinned view or while none are pending). The overlay
+    * resolves FIRST (see [[GenStore.readOverlay]]). */
   private def resolve(spark: SparkSession, root: String, view: ReadView,
                       maxOverlayRows: Long = 1L << 20)
       : (String, Option[(DataFrame, DataFrame)]) = {
-    val overlays = rootOverlays(spark, root, view, maxOverlayRows)
+    val overlays = GenStore.servedOverlay(spark, root, "doc_id",
+      tombstonesSchema, editsSchema, view, maxOverlayRows)
     (GenStore.resolve(spark, root, view), overlays)
   }
-
-  /** The current overlay's (tombstones, edits), empty when absent. */
-  private def overlay(spark: SparkSession, root: String): (DataFrame, DataFrame) =
-    GenStore.readOverlay(spark, root, tombstonesSchema, editsSchema)
-      .getOrElse(noOverlay(spark))
-
-  private def noOverlay(spark: SparkSession): (DataFrame, DataFrame) =
-    (GenStore.empty(spark, tombstonesSchema), GenStore.empty(spark, editsSchema))
-
-  /** The ROOT-LEVEL delete/edit overlays, resolved once per serve: `None`
-    * when neither member exists (the common fast path keeps plans free of
-    * dead join nodes), else (edits-minus-tombstones, overlay id union). A
-    * tombstone on an edited id wins (a delete after the upsert) —
-    * [[VectorLake]]'s rootOverlays on doc ids. The id union BROADCASTS
-    * at every appliance: bounded by the overlays-are-interim-state
-    * contract and ENFORCED here for every serve, so a mass-deletion day
-    * refuses loudly instead of OOMing the driver. */
-  private def rootOverlays(spark: SparkSession, root: String, view: ReadView,
-                           maxOverlayRows: Long)
-      : Option[(DataFrame, DataFrame)] =
-    GenStore.readOverlay(spark, root, tombstonesSchema, editsSchema, view).map {
-      case (tombs, edits0) =>
-        val edits = edits0.join(tombs, Seq("doc_id"), "left_anti")
-        val overlayIds = edits.select("doc_id")
-          .unionByName(tombs.select("doc_id")).distinct()
-        graft.operators.Serving.requireBroadcastable(overlayIds,
-          maxOverlayRows, "the tombstone/edit overlay id set",
-          "Overlays are bounded interim state by contract — run reconcile " +
-            "to fold them, then re-run the serve.")
-        (edits, overlayIds)
-    }
 
   /** `stored` posting rows with the overlays applied: every overlay id's
     * stored rows drop, and the edit texts' postings (recomputed through
@@ -840,7 +813,7 @@ object LexLake {
     * (q172). Per probe and doc:
     * `score_micros = bm25_micros + Σ_pairs round(proxWeight · ln(1 +
     * n_pairs) · 10⁶)` over every unordered pair of the probe's distinct
-    * terms, n_pairs = within-`w` position pairs ([[proximityServe]]'s
+    * terms, n_pairs = within-`w` position pairs ([[proximityServeBatch]]'s
     * statistic) — exact integer micros end to end, ranked top-`n` through
     * the bounded heap. The lake-resident twin of
     * [[graft.operators.TextStats.bm25ProximityRank]] (shared fold, parity
@@ -902,25 +875,62 @@ object LexLake {
       n, proxWeight)
   }
 
-  /** Pruned POSITIONAL postings for `terms` over the `view`'s corpus — the
-    * read every positional serve shares: one bucket-pruned scan of
-    * term/doc_id/positions restricted to the terms (columnar — tf/dl are
-    * never read), the pre-positional loud refusal (r11 advice: null
-    * positions would silently drop rows from every result, made permanent
-    * by the fold since the lake stores no text to rebuild from), and the
-    * overlay arms (tombstoned/edited docs' stored rows drop; edit texts'
-    * positional postings recompute from the bounded, guard-enforced
-    * overlay). */
-  private def positionalPostings(spark: SparkSession, root: String,
-                                 terms: Seq[String],
-                                 maxOverlayRows: Long,
-                                 view: ReadView): DataFrame = {
+  // ---- BATCHED positional serves (r12 verdict ask #1) -------------------
+  // Each positional family has ONE serve, and a single probe is a batch of
+  // one. A batch reads the stored positional postings ONCE, bucket-pruned
+  // to the UNION of all probes' terms, and folds per probe downstream
+  // through the SAME shared transcriptions as the pure operators — adding
+  // a probe adds no store work (the [[VectorLake.searchBatch]] and
+  // [[serve]] amortization). Per-probe parity with the pure
+  // [[graft.operators.TextStats]] operators over the logical corpus is
+  // spec-pinned through delete/upsert/fold, and the whole batch costs one
+  // distinct postings FileScan (plan-pinned in PlanSpec).
+
+  /** EXACT PHRASE serve from the stored positional postings — the
+    * lake-resident twin of [[graft.operators.TextStats.phraseMatch]] and
+    * [[graft.operators.TextStats.phraseMatchBatch]]. `probes` is
+    * (probe_id, phrase array<string>) through
+    * [[graft.operators.Serving.phraseSlotsBatch]] (unique ids, non-empty
+    * charset-guarded phrases, broadcast cap, pinned). Overlays apply
+    * exactly as in [[serve]]. Under a pinned view it is
+    * [[Retrieval.hybridServe]]'s phrase gate (a batch of one), so the gate
+    * and the arms it filters read ONE corpus view. Output:
+    * (probe_id, doc_id, occurrences), matches only. READER path. */
+  def phraseServeBatch(spark: SparkSession, root: String, probes: DataFrame,
+                       probeIdCol: String = "probe_id",
+                       phraseCol: String = "phrase",
+                       maxBroadcastQueryTerms: Long = 1L << 20,
+                       maxOverlayRows: Long = 1L << 20,
+                       view: ReadView = ReadView.Live): DataFrame = {
+    val slots = graft.operators.Serving.phraseSlotsBatch(probes, probeIdCol,
+      phraseCol, maxBroadcastQueryTerms)
+    val universe = slots.select("term").distinct()
+      .collect().map(_.getString(0)).toSeq
+    graft.operators.TextStats.phraseOccurrencesBatchFromPositions(
+      batchPositions(spark, root, universe, maxOverlayRows, view), slots)
+  }
+
+  /** The ONE materialized positional read a batch serve folds over: one
+    * bucket-pruned scan of term/doc_id/positions restricted to the union
+    * of the batch's terms (columnar — tf/dl are never read), the
+    * pre-positional loud refusal (r11 advice: null positions would
+    * silently drop rows from every result, made permanent by the fold
+    * since the lake stores no text to rebuild from), and the overlay arms
+    * (tombstoned/edited docs' stored rows drop; edit texts' positional
+    * postings recompute from the bounded, guard-enforced overlay) —
+    * exploded and PINNED: the folds (conjunctive gate + coverage agg, or
+    * the pa/pb pairing sides) each reference the frame, and unpinned they
+    * would re-scan the store once per reference instead of the batch's one
+    * physical read (plan-pinned in LexLakeSpec). */
+  private def batchPositions(spark: SparkSession, root: String,
+                             terms: Seq[String], maxOverlayRows: Long,
+                             view: ReadView): DataFrame = {
     val nb = servedBuckets(spark, root)
     val (droot, overlays) = resolve(spark, root, view, maxOverlayRows)
     val buckets = terms.map(bucketOf(_, nb)).distinct
     // the bucket IN-list is <= nBuckets values; the TERM filter stays a
-    // pushed IN-list only while the (batched) universe is literal-sized —
-    // a 10^5-term batch would bloat codegen without pruning anything the
+    // pushed IN-list only while the batch's universe is literal-sized — a
+    // 10^5-term batch would bloat codegen without pruning anything the
     // buckets didn't (the serveIn switch, shared)
     def termFilter(df: DataFrame): DataFrame =
       if (terms.isEmpty) df.filter(lit(false))
@@ -945,145 +955,17 @@ object LexLake {
         "(delete + upsert with their text, then reconcile) or rebuild the " +
         "store; a silent serve would drop those rows from every result.")
     withOverlays(stored, overlays, nb)(
-      termFilter(_).select("term", "doc_id", "positions"))
-  }
-
-  /** WINDOWED PROXIMITY serve from the STORED positional postings — the
-    * lake-resident twin of [[graft.operators.TextStats.proximityPairs]]
-    * (r11 verdict ask #2; spec-pinned parity over the logical corpus,
-    * mutations pending or not): per doc, the position pairs of the two
-    * terms within `w` tokens. Reads ONLY the two terms' buckets (the
-    * [[phraseServe]] read shape), then the bucket-blocked equi-join — the
-    * SAME [[graft.operators.TextStats.proximityPairsFromPositions]]
-    * transcription the pure operator runs, so parity holds by
-    * construction. Output: (doc_id, n_pairs), co-occurring docs only.
-    * READER path. */
-  def proximityServe(spark: SparkSession, root: String,
-                     termA: String, termB: String, w: Int,
-                     maxOverlayRows: Long = 1L << 20,
-                     view: ReadView = ReadView.Live): DataFrame = {
-    require(w >= 1, s"w must be >= 1, got $w")
-    require(Seq(termA, termB).forall(_.matches("[A-Za-z0-9_-]+")),
-      s"terms must be [A-Za-z0-9_-]+: $termA, $termB")
-    val postL = positionalPostings(spark, root,
-      Seq(termA, termB).distinct, maxOverlayRows, view)
-    graft.operators.TextStats.proximityPairsFromPositions(
-      postL.select(col("doc_id"), col("term"),
-        explode(col("positions")).as("pos")),
-      termA, termB, w)
-  }
-
-  /** BEST-PASSAGE-WINDOW serve from the STORED positional postings — the
-    * lake-resident twin of
-    * [[graft.operators.TextStats.bestPassageWindow]] (parity by shared
-    * transcription): per doc, the max distinct query terms any width-`w`
-    * window covers, read from only the query terms' buckets with overlay
-    * arms exactly like the other positional serves. READER path. */
-  def passageServe(spark: SparkSession, root: String, terms: Seq[String],
-                   w: Int, maxOverlayRows: Long = 1L << 20,
-                   view: ReadView = ReadView.Live): DataFrame = {
-    require(w >= 1, s"w must be >= 1, got $w")
-    require(terms.nonEmpty && terms.forall(_.matches("[A-Za-z0-9_-]+")),
-      s"terms must be [A-Za-z0-9_-]+: $terms")
-    val postL = positionalPostings(spark, root, terms.distinct,
-      maxOverlayRows, view)
-    graft.operators.TextStats.bestPassageWindowFromPositions(
-      postL.select(col("doc_id"), col("term"),
-        explode(col("positions")).as("pos")), w)
-  }
-
-  /** EXACT PHRASE serve from the STORED positional postings — the
-    * lake-resident twin of [[graft.operators.TextStats.phraseMatch]]
-    * (spec-pinned parity over the logical corpus, mutations pending or
-    * not): one bucket-pruned postings read restricted to the phrase's
-    * terms (columnar read of term/doc_id/positions only), the conjunctive
-    * rarest-word gate, then k−1 (doc, start)-keyed adjacency semi-joins
-    * over the exploded stored positions. Overlays apply exactly as in
-    * [[serve]]: tombstoned/edited docs' stored rows drop, edit texts'
-    * positional postings recompute from the bounded overlay. Under a
-    * pinned view it is [[Retrieval.hybridServe]]'s phrase gate, so the
-    * gate and the arms it filters read ONE corpus view. Output:
-    * (doc_id, occurrences), matching docs only. READER path. */
-  def phraseServe(spark: SparkSession, root: String,
-                  phrase: Seq[String],
-                  maxOverlayRows: Long = 1L << 20,
-                  view: ReadView = ReadView.Live): DataFrame = {
-    require(phrase.nonEmpty, "phrase must carry at least one token")
-    require(phrase.forall(_.matches("[A-Za-z0-9_-]+")),
-      s"phrase tokens must be [A-Za-z0-9_-]+: $phrase")
-    phraseFold(positionalPostings(spark, root, phrase.distinct,
-      maxOverlayRows, view), phrase)
-  }
-
-  /** The conjunctive gate + adjacency fold over a positional posting
-    * frame — the phraseMatch plan verbatim. */
-  private def phraseFold(postL: DataFrame, phrase: Seq[String]): DataFrame = {
-    val k = phrase.size
-    val terms = phrase.distinct
-    val pos0 = postL.select(col("doc_id"), col("term"),
-      explode(col("positions")).as("pos"))
-    // the rarest-word conjunctive gate, then the adjacency fold — the
-    // phraseMatch plan verbatim over stored positions
-    val cand = pos0.groupBy("doc_id")
-      .agg(count_distinct(col("term")).as("__nt"))
-      .filter(col("__nt") === terms.size).select("doc_id")
-    val pp = pos0.join(cand, Seq("doc_id"), "left_semi")
-    val s0 = pp.filter(col("term") === phrase.head)
-      .select(col("doc_id"), col("pos").as("start"))
-    val starts = (1 until k).foldLeft(s0) { (acc, i) =>
-      acc.join(pp.filter(col("term") === phrase(i))
-          .select(col("doc_id"), (col("pos") - i).as("start")),
-        Seq("doc_id", "start"), "left_semi")
-    }
-    starts.groupBy("doc_id").agg(count(lit(1)).as("occurrences"))
-  }
-
-  // ---- BATCHED positional serves (r12 verdict ask #1) -------------------
-  // The scalar positional serves above answer ONE query per Spark job — a
-  // ~0.1 s scheduling floor each, the same ~10 QPS ceiling
-  // [[VectorLake.searchBatch]] closed for vectors in r9 and [[serve]]
-  // closed for BM25. The batch forms read the stored positional postings
-  // ONCE, bucket-pruned to the UNION of all probes' terms, and fold per
-  // probe downstream through the SAME shared transcriptions as the pure
-  // operators — per-probe parity with the scalar serves is spec-pinned
-  // through delete/upsert/fold, and the whole batch costs one distinct
-  // postings FileScan (plan-pinned in PlanSpec).
-
-  /** Batched [[phraseServe]]: `probes` is (probe_id, phrase array<string>)
-    * through [[graft.operators.Serving.phraseSlotsBatch]] (unique ids,
-    * non-empty charset-guarded phrases, broadcast cap, pinned). Output:
-    * (probe_id, doc_id, occurrences), matches only. READER path. */
-  def phraseServeBatch(spark: SparkSession, root: String, probes: DataFrame,
-                       probeIdCol: String = "probe_id",
-                       phraseCol: String = "phrase",
-                       maxBroadcastQueryTerms: Long = 1L << 20,
-                       maxOverlayRows: Long = 1L << 20,
-                       view: ReadView = ReadView.Live): DataFrame = {
-    val slots = graft.operators.Serving.phraseSlotsBatch(probes, probeIdCol,
-      phraseCol, maxBroadcastQueryTerms)
-    val universe = slots.select("term").distinct()
-      .collect().map(_.getString(0)).toSeq
-    graft.operators.TextStats.phraseOccurrencesBatchFromPositions(
-      batchPositions(spark, root, universe, maxOverlayRows, view), slots)
-  }
-
-  /** The ONE materialized positional read a batch serve folds over:
-    * [[positionalPostings]] pruned to the union of the batch's terms,
-    * exploded, and PINNED — the folds (conjunctive gate + coverage agg,
-    * or the pa/pb pairing sides) each reference the frame, and unpinned
-    * they would re-scan the store once per reference instead of the
-    * batch's one physical read (the searchBatch amortization this family
-    * exists for; plan-pinned in LexLakeSpec). */
-  private def batchPositions(spark: SparkSession, root: String,
-                             universe: Seq[String], maxOverlayRows: Long,
-                             view: ReadView): DataFrame =
-    positionalPostings(spark, root, universe, maxOverlayRows, view)
+        termFilter(_).select("term", "doc_id", "positions"))
       .select(col("doc_id"), col("term"),
         explode(col("positions")).as("pos"))
       .localCheckpoint(true)
+  }
 
-  /** Batched [[proximityServe]]: `probes` is (probe_id, term_a, term_b)
-    * through [[graft.operators.Serving.termPairProbes]] (unique ids,
+  /** WINDOWED PROXIMITY serve from the stored positional postings — the
+    * lake-resident twin of [[graft.operators.TextStats.proximityPairs]]:
+    * per probe and doc, the position pairs of its two terms within `w`
+    * tokens. `probes` is (probe_id, term_a, term_b) through
+    * [[graft.operators.Serving.termPairProbes]] (unique ids,
     * charset-guarded, pinned); `w` is the batch's shared window (it IS the
     * blocking bucket width). Output: (probe_id, doc_id, n_pairs),
     * co-occurring docs only. READER path. */
@@ -1100,8 +982,11 @@ object LexLake {
       batchPositions(spark, root, universe, maxOverlayRows, view), p, w)
   }
 
-  /** Batched [[passageServe]]: `probes` is (probe_id, terms array<string>)
-    * through the shared serving-batch gate. Output:
+  /** BEST-PASSAGE-WINDOW serve from the stored positional postings — the
+    * lake-resident twin of [[graft.operators.TextStats.bestPassageWindow]]:
+    * per probe and doc, the max distinct query terms any width-`w` window
+    * covers. `probes` is (probe_id, terms array<string>) through the
+    * shared serving-batch gate. Output:
     * (probe_id, doc_id, best_window_terms). READER path. */
   def passageServeBatch(spark: SparkSession, root: String,
                         probes: DataFrame, w: Int,
@@ -1151,7 +1036,8 @@ object LexLake {
       val nb = confRows.head.getInt(0)
       val pending = GenStore.readOverlay(spark, root, tombstonesSchema,
         editsSchema)
-      val (tombs, edits0) = pending.getOrElse(noOverlay(spark))
+      val (tombs, edits0) = pending.getOrElse(
+        GenStore.noOverlay(spark, tombstonesSchema, editsSchema))
       val edits = edits0.join(tombs, Seq("doc_id"), "left_anti")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
@@ -1421,7 +1307,9 @@ object LexLake {
     * actual question ("how much is pending the fold?"). */
   def health(spark: SparkSession, root: String): DataFrame = {
     val nb = servedBuckets(spark, root)
-    val (tombs, edits) = overlay(spark, root) // overlay first, then generation
+    // the overlay first, then the generation
+    val (tombs, edits) =
+      GenStore.overlayOrEmpty(spark, root, tombstonesSchema, editsSchema)
     val droot = GenStore.resolve(spark, root, ReadView.Live)
     val post = GenStore.readGenOrEmpty(spark, droot, "postings",
       postingsSchema)

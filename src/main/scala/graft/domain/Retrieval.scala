@@ -99,16 +99,20 @@ object Retrieval {
       .select(col("probe_id"), col("doc_id").as("neighbor_id"), col("rank"))
     // the PHRASE-CONSTRAINED arm (r11 verdict ask #7) — the "exact quote +
     // semantic" query every retrieval product ships: the phrase's doc set
-    // (one bucket-pruned positional read, [[LexLake.phraseServe]]) gates
-    // the fused candidates BEFORE the final rank, so each probe's top-k is
-    // taken over quote-bearing docs only — a fused candidate that merely
-    // scored well lexically/semantically cannot displace one that carries
-    // the quote. The gate reads the SAME view as the lexical arm it
-    // filters — one corpus view end to end.
+    // (one bucket-pruned positional read, [[LexLake.phraseServeBatch]] with
+    // the phrase as a batch of one) gates the fused candidates BEFORE the
+    // final rank, so each probe's top-k is taken over quote-bearing docs
+    // only — a fused candidate that merely scored well lexically/semantically
+    // cannot displace one that carries the quote. The gate reads the SAME
+    // view as the lexical arm it filters — one corpus view end to end.
     val gate =
       if (phrase.isEmpty) None
-      else Some(LexLake.phraseServe(spark, lexRoot, phrase, view = lexView)
-        .select(col("doc_id").as("neighbor_id")))
+      else {
+        import spark.implicits._
+        Some(LexLake.phraseServeBatch(spark, lexRoot,
+            Seq((0L, phrase)).toDF("probe_id", "phrase"), view = lexView)
+          .select(col("doc_id").as("neighbor_id")))
+      }
     Similarity.rrfFuseAll(Seq(vec, lex), k, kRrf, candidates = gate)
   }
 }

@@ -116,14 +116,6 @@ object VectorLake {
     graft.sources.StateLock.withRootLock(spark, root, leaseMs, now, waitMs,
       heartbeatMs)(f)
 
-  /** WRITER-side: the current overlay's (tombstones, edits). */
-  private def overlay(spark: SparkSession, root: String): (DataFrame, DataFrame) =
-    GenStore.readOverlay(spark, root, tombstonesSchema, editsSchema)
-      .getOrElse(noOverlay(spark))
-
-  private def noOverlay(spark: SparkSession): (DataFrame, DataFrame) =
-    (GenStore.empty(spark, tombstonesSchema), GenStore.empty(spark, editsSchema))
-
   /** The CURRENT generation's data root, resolved READ-ONLY (shared
     * [[GenStore]] lifecycle). Every operation resolves this ONCE and reads
     * centroids AND vectors under it — the structural guarantee that no
@@ -196,32 +188,17 @@ object VectorLake {
     minusTombstones(spark, droot,
       GenStore.readGenOrEmpty(spark, droot, "codes", codesSchema))
 
-  /** The ROOT-LEVEL delete/edit overlays, resolved once (reader paths
-    * hold no lease): `None` when neither member exists (the common fast
-    * path keeps plans free of dead join nodes), else
-    * (edits-minus-tombstones, overlay id union). A tombstone on an edited
-    * id wins (a delete after the upsert) — [[LexLake]]'s precedence
-    * verbatim. The id union BROADCASTS at every appliance — bounded by the
-    * overlays-are-interim-state contract and ENFORCED. A pointer-less
-    * LEGACY root keeps its tombstones dir at the root by layout accident
-    * (droot == root) — those are gen-level tombstones, already excluded by
-    * minusTombstones; reading them here too is a harmless double
-    * exclusion. */
+  /** The ROOT-LEVEL delete/edit overlays a reader applies
+    * ([[GenStore.servedOverlay]] on vec ids), resolved once (reader paths
+    * hold no lease). A pointer-less LEGACY root keeps its tombstones dir
+    * at the root by layout accident (droot == root) — those are gen-level
+    * tombstones, already excluded by minusTombstones; reading them here
+    * too is a harmless double exclusion. */
   private def rootOverlays(spark: SparkSession, root: String,
-                           view: ReadView = ReadView.Live,
-                           maxOverlayRows: Long = 1L << 20)
+                           view: ReadView = ReadView.Live)
       : Option[(DataFrame, DataFrame)] =
-    GenStore.readOverlay(spark, root, tombstonesSchema, editsSchema, view).map {
-      case (tombs, edits0) =>
-        val edits = edits0.join(tombs, Seq("vec_id"), "left_anti")
-        val overlayIds = edits.select("vec_id")
-          .unionByName(tombs.select("vec_id")).distinct()
-        graft.operators.Serving.requireBroadcastable(overlayIds,
-          maxOverlayRows, "the vector tombstone/edit overlay id set",
-          "Overlays are bounded interim state by contract — run reconcile " +
-            "to fold them, then retry.")
-        (edits, overlayIds)
-    }
+    GenStore.servedOverlay(spark, root, "vec_id", tombstonesSchema,
+      editsSchema, view, maxOverlayRows = 1L << 20)
 
   /** The LOGICAL corpus view — what every UNPINNED read serves: committed
     * generation rows minus the root overlays' ids, plus the edit overlay's
@@ -377,7 +354,8 @@ object VectorLake {
       // LexLake residency contract: re-ingest is not the edit path, so
       // they are state no-ops, excluded up front (the overlay is bounded
       // by the upsert contract, so the anti-join build side broadcasts)
-      val (rootTombs, edits0) = overlay(spark, root)
+      val (rootTombs, edits0) =
+        GenStore.overlayOrEmpty(spark, root, tombstonesSchema, editsSchema)
       val editIds = edits0.select("vec_id")
       // the embedding cast is load-bearing: an uncast array<double> batch
       // would append double-typed files into the float-typed store and
@@ -511,10 +489,10 @@ object VectorLake {
     * later. Commits a tombstone row per RESIDENT id — physically stored or
     * upsert-inserted in the edit overlay (ids resident nowhere are
     * ignored; an exact replay appends nothing — the lake's at-least-once
-    * contract); every UNPINNED read — [[vectors]], [[search]],
-    * [[searchBatch]] float and quantized, [[driftReport]], the ingest
-    * near-dup gate — excludes tombstoned rows from that moment, so
-    * deleted content can neither be served nor suppress new ingests.
+    * contract); every UNPINNED read — [[vectors]], [[searchBatch]] float
+    * and quantized, [[driftReport]], the ingest near-dup gate — excludes
+    * tombstoned rows from that moment, so deleted content can neither be
+    * served nor suppress new ingests.
     * PINNED reads ([[ReadView.Pinned]]) serve the generation's committed
     * state until the fold — the snapshot contract. The PHYSICAL rows (and
     * their SQ codes) wait for the next [[reconcile]], whose generation
@@ -534,7 +512,8 @@ object VectorLake {
       // the purge done — the one delete outcome worse than failing
       Writers.recoverPartitionCompact(spark, s"$droot/vectors")
       val del = ids.select(col("vec_id").cast("long").as("vec_id")).distinct()
-      val (existing, edits) = overlay(spark, root)
+      val (existing, edits) =
+        GenStore.overlayOrEmpty(spark, root, tombstonesSchema, editsSchema)
       val resident = GenStore.readOrEmpty(spark, s"$droot/vectors", vectorsSchema)
         .select("vec_id")
         .unionByName(edits.select("vec_id"))
@@ -606,7 +585,8 @@ object VectorLake {
             "one id. Deduplicate the batch first.")
         val dims = counts.getInt(2)
         val ids = newRows.select("vec_id")
-        val (tombs, edits) = overlay(spark, root)
+        val (tombs, edits) =
+          GenStore.overlayOrEmpty(spark, root, tombstonesSchema, editsSchema)
         val merged = edits
           .join(broadcast(ids), Seq("vec_id"), "left_anti")
           .unionByName(newRows)
@@ -641,50 +621,6 @@ object VectorLake {
       } finally { newRows.unpersist(blocking = false); () }
     }
 
-  /** Probing search over the RESIDENT store — the serving read this lake
-    * exists for. The stored centroids rank against the query driver-side
-    * (k rows); only the `nprobe` nearest lists are read. Because the
-    * vectors dir is written `partitionBy(ivf_list)`, the `ivf_list IN`
-    * filter is PARTITION PRUNING: a probe opens nprobe list directories,
-    * never the corpus — the IVF inverted file realized as the lake layout.
-    * Scoring uses the STORED assignment (no re-assignment scan), cosine
-    * top-k with the house tie rule (cos desc, vec_id asc on the rounded
-    * score). READER path: no lease, one pointer resolution per store —
-    * safe concurrent with a locked writer's reconcile. Recall/latency
-    * dial: nprobe = numLists degrades to exact search over the store.
-    *
-    * Generation consistency: the pointer is resolved ONCE, then centroids
-    * and vectors both read under that generation — a reconcile promoting
-    * mid-search cannot mix quantizers (the r8 window, closed structurally;
-    * the displaced generation stays on disk until the NEXT reconcile, so
-    * this probe's reads stay valid). `failpoint` (test seam) runs after
-    * the resolution, where a concurrent swap would land. */
-  def search(spark: SparkSession, root: String, queryVec: Seq[Float],
-             k: Int, nprobe: Int = 2,
-             failpoint: () => Unit = () => ()): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    // name the real problems before the clamp can turn them into
-    // probeLists' confusing "nprobe=0 outside [1, 0]" (r8 advice)
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val overlays = rootOverlays(spark, root) // overlay first, then generation
-    val droot = dataRoot(spark, root)
-    failpoint()
-    val cents = centroidsAt(spark, droot, root)
-    val probes = Similarity.probeLists(
-      queryVec, cents, math.min(nprobe, cents.size))
-    logicalVectors(spark, droot, overlays, cents)
-      .filter(col("ivf_list").isInCollection(probes))
-      .withColumn("cos",
-        round(VF.cosine(col("embedding"), typedLit(queryVec)), 6))
-      // null AND NaN drop — the same scorer contract as searchBatch's
-      // bounded-heap tail, so the documented per-probe parity holds even
-      // for degenerate scores (NaN would sort FIRST under desc)
-      .filter(col("cos").isNotNull && !isnan(col("cos")))
-      .select(col("vec_id"), col("ivf_list"), col("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
-  }
-
   /** The resident generation numbers, oldest first — what a
     * [[ReadView.Pinned]] shadow read names. Under the default retention
     * this is (displaced, current): the displaced generation survives
@@ -693,25 +629,35 @@ object VectorLake {
   def generations(spark: SparkSession, root: String): Seq[Long] =
     GenStore.generations(spark, root)
 
-  /** Batched probing search — the serving read a retrieval deployment
-    * actually issues (r8 verdict ask #1): ONE partition-pruned store scan
-    * amortized over a whole probe batch, instead of [[search]]'s one Spark
-    * job per query (a ~0.1 s scheduling floor each — a ~10 QPS ceiling
-    * regardless of cluster size). Probe→list ranking is driver-free
-    * ([[Similarity.ivfGateLists]] over the broadcast probe batch); the
-    * store is opened once with an `ivf_list IN (union of all probes'
-    * nprobe gate lists)` filter — PARTITION PRUNING on the
+  /** Probing search over the RESIDENT store — the serving read this lake
+    * exists for, ONE partition-pruned store scan amortized over a whole
+    * probe batch (r8 verdict ask #1: one Spark job per query is a ~0.1 s
+    * scheduling floor each — a ~10 QPS ceiling regardless of cluster
+    * size); a single probe is a batch of one. Probe→list ranking is
+    * driver-free ([[Similarity.ivfGateLists]] over the broadcast probe
+    * batch); the store is opened once with an `ivf_list IN (union of all
+    * probes' nprobe gate lists)` filter — PARTITION PRUNING on the
     * partitionBy(ivf_list) layout, so only the probed list directories are
     * read (the tiny union collect is <= numLists ints, the bounded-LUT
     * contract, never a corpus collect) — and per-probe ranking runs
     * through the bounded-heap kNN Aggregator (q144's plan): shuffle volume
     * <= probes × partitions × k. Scoring uses the STORED assignment (no
     * re-assignment scan) and the house tie rule (cos desc, vec_id asc on
-    * the rounded score), so each probe's rows EQUAL
-    * [[search]](itsVec, k, nprobe)'s — spec-pinned parity. Output:
-    * (probe_id, neighbor_id, cos, rank). READER path: no lease, one
-    * pointer resolution per store. The probe batch BROADCASTS, serving-bounded by
-    * contract and enforced exactly like ingest's gate.
+    * the rounded score), so each probe's rows equal an exact cosine top-k
+    * over its [[Similarity.probeLists]] lists — spec-pinned parity.
+    * Recall/latency dial: nprobe = numLists degrades to exact search over
+    * the store. Output: (probe_id, neighbor_id, cos, rank). READER path:
+    * no lease, one pointer resolution per store. The probe batch
+    * BROADCASTS, serving-bounded by contract and enforced exactly like
+    * ingest's gate.
+    *
+    * Generation consistency: the pointer is resolved ONCE, then centroids
+    * and vectors both read under that generation — a reconcile promoting
+    * mid-search cannot mix quantizers (the r8 window, closed structurally;
+    * the displaced generation stays on disk until the NEXT reconcile, so
+    * this search's reads stay valid). `failpoint` (test seam) runs after
+    * the overlay and pointer resolution, before the centroid read — where
+    * a concurrent promotion would land.
     *
     * `view = ReadView.Pinned(Some(g))` is the SHADOW READ an index
     * deployment runs before trusting a promotion: serve the same probe
@@ -729,8 +675,11 @@ object VectorLake {
                   quantized: Boolean = false,
                   refineFactor: Int = 0,
                   maxBroadcastProbes: Long = 1L << 20,
-                  view: ReadView = ReadView.Live): DataFrame = {
+                  view: ReadView = ReadView.Live,
+                  failpoint: () => Unit = () => ()): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
+    // name the real problems before the clamp can turn them into
+    // probeLists' confusing "nprobe=0 outside [1, 0]" (r8 advice)
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     require(refineFactor == 0 || quantized,
       s"refineFactor=$refineFactor without quantized=true — the refine " +
@@ -739,6 +688,7 @@ object VectorLake {
     // the overlay resolves BEFORE the generation (GenStore.readOverlay)
     val overlays = rootOverlays(spark, root, view)
     val droot = GenStore.resolve(spark, root, view)
+    failpoint()
     val cents = centroidsAt(spark, droot, root)
     val np = math.min(nprobe, cents.size)
     // PINNED: the probe frame is evaluated several times (union-list
@@ -959,7 +909,8 @@ object VectorLake {
       // tombstoned ids are gone, the edit values identical)
       val pending = GenStore.readOverlay(spark, root, tombstonesSchema,
         editsSchema)
-      val (rootTombs, edits0) = pending.getOrElse(noOverlay(spark))
+      val (rootTombs, edits0) = pending.getOrElse(
+        GenStore.noOverlay(spark, tombstonesSchema, editsSchema))
       val edits = edits0.join(rootTombs, Seq("vec_id"), "left_anti")
       val overlayIds = edits.select("vec_id")
         .unionByName(rootTombs.select("vec_id")).distinct()

@@ -616,7 +616,8 @@ object Similarity {
     * SQL oracles, so probe selection is bit-identical across engines. */
   /** The `nprobe` coarse lists nearest the query, ranked (d2, i) ascending
     * — driver-side probe selection over the k-row centroid table, shared
-    * by every IVF serving path (ivfTopK, ivfSqTopK, VectorLake.search). */
+    * by every driver-side IVF path (ivfTopK, ivfSqTopK) and the per-probe
+    * reference of VectorLake.searchBatch's parity spec. */
   def probeLists(queryVec: Seq[Float], centroids: Seq[Seq[Double]],
                  nprobe: Int): Seq[Int] = {
     require(nprobe >= 1 && nprobe <= centroids.size,
@@ -845,8 +846,8 @@ object Similarity {
     // round-trip each, and every multi-probe serve pays them):
     //  1. probe ids must be UNIQUE — the groupBy(probe_id) tail would
     //     silently fold two different probe vectors sharing an id into one
-    //     combined top-k, breaking the documented per-probe parity with
-    //     VectorLake.search without any error.
+    //     combined top-k, breaking the documented per-probe parity of
+    //     VectorLake.searchBatch without any error.
     //  2. the broadcast cap guards what actually BROADCASTS — the
     //     gate-list-EXPLODED frame. ivfGateLists emits EXACTLY nprobe lists
     //     per probe (slice(.., 1, nprobe) of a >= nprobe centroid ranking),

@@ -579,8 +579,8 @@ object TextStats {
   }
 
   /** EXACT PHRASE match — the positional posting join (the classic
-    * inverted-index phrase query; [[graft.domain.LexLake.phraseServe]] is
-    * its lake-resident twin over stored positional postings): a document
+    * inverted-index phrase query; [[graft.domain.LexLake.phraseServeBatch]]
+    * is its lake-resident twin over stored positional postings): a document
     * matches the k-token phrase where token positions p, p+1, …, p+k−1
     * hold exactly phrase(0..k−1). Output: (doc_id, occurrences) for
     * matching docs only.
@@ -645,21 +645,11 @@ object TextStats {
                      termA: String, termB: String, w: Int): DataFrame = {
     require(Seq(termA, termB).forall(_.matches("[A-Za-z0-9_-]+")),
       s"terms must be [A-Za-z0-9_-]+: $termA, $termB")
+    require(w >= 1, s"w must be >= 1, got $w")
     val pos = docs.select(col(idCol).as("doc_id"),
         posexplode(TF.tokens(col(textCol))).as(Seq("pos", "term")))
       .filter(col("term").isInCollection(Seq(termA, termB).distinct))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    proximityPairsFromPositions(pos, termA, termB, w)
-  }
-
-  /** [[proximityPairs]]' bucket-blocked join over a PRE-EXPLODED
-    * (doc_id, term, pos) position frame — the ONE transcription the pure
-    * operator and [[graft.domain.LexLake.proximityServe]] (which reads
-    * positions from the stored postings instead of re-tokenizing) share,
-    * so their parity holds by construction. */
-  def proximityPairsFromPositions(pos: DataFrame, termA: String,
-                                  termB: String, w: Int): DataFrame = {
-    require(w >= 1, s"w must be >= 1, got $w")
     val pa = pos.filter(col("term") === termA)
       .select(col("doc_id"), col("pos").cast("long").as("pa"),
         floor(col("pos") / w).cast("long").as("__bk"))
@@ -740,15 +730,6 @@ object TextStats {
       .filter(col("term").isInCollection(terms.distinct))
       .select(col("doc_id"), col("term"), col("pos").cast("long").as("pos"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bestPassageWindowFromPositions(pos, w)
-  }
-
-  /** [[bestPassageWindow]]'s blocked join over a pre-filtered
-    * (doc_id, term, pos) frame — shared with
-    * [[graft.domain.LexLake.passageServe]] so parity holds by
-    * construction. */
-  def bestPassageWindowFromPositions(pos: DataFrame, w: Int): DataFrame = {
-    require(w >= 1, s"w must be >= 1, got $w")
     val starts = pos.select(col("doc_id"), col("pos").as("s"),
       floor(col("pos") / w).cast("long").as("__bk"))
     val members = pos.select(col("doc_id"), col("term"),
@@ -766,11 +747,14 @@ object TextStats {
   // ---- BATCHED positional serving transcriptions (r12 verdict ask #1) ----
   // The per-query positional ops above answer ONE phrase/pair/term-set per
   // Spark job — a ~0.1 s scheduling floor each, the same ~10 QPS ceiling
-  // VectorLake.searchBatch closed for vector serving in r9. The batched
-  // forms take a (probe_id, …) batch and answer every probe from ONE plan;
-  // the lake serves (LexLake.phraseServeBatch et al.) share these exact
-  // transcriptions over ONE bucket-pruned read of the union of all probes'
-  // terms, so per-probe parity with the scalar forms holds by construction.
+  // VectorLake.searchBatch closed for vector serving in r9. They stay as
+  // the pure scalar operators (q167, q168, q169, q172, q173 — no eager job)
+  // and as the per-probe reference the lake parity specs check against.
+  // The batched forms take a (probe_id, …) batch and answer every probe
+  // from ONE plan; the lake serves (LexLake.phraseServeBatch et al., the
+  // lake's only positional serves — a single probe is a batch of one)
+  // share these exact transcriptions over ONE bucket-pruned read of the
+  // union of all probes' terms.
 
   /** Batched EXACT PHRASE occurrences over a pre-exploded (doc_id, term,
     * pos) position frame and an exploded (probe_id, slot, term) phrase-slot
@@ -837,7 +821,7 @@ object TextStats {
     phraseOccurrencesBatchFromPositions(pos, slots)
   }
 
-  /** Batched twin of [[proximityPairsFromPositions]] over a pinned
+  /** Batched twin of [[proximityPairs]]' blocked join over a pinned
     * (probe_id, term_a, term_b) probe frame — per probe AND doc, the
     * position pairs of its two terms within `w` tokens (pa != pb when the
     * probe's terms are equal). The width-w bucket blocking is unchanged
@@ -889,7 +873,7 @@ object TextStats {
     proximityPairsBatchFromPositions(pos, p, w)
   }
 
-  /** Batched twin of [[bestPassageWindowFromPositions]] over an exploded
+  /** Batched twin of [[bestPassageWindow]]'s blocked join over an exploded
     * (probe_id, term) query frame: per probe and doc, the max distinct
     * query terms any width-`w` window covers. The one-sided blocking is
     * unchanged, keyed on (probe, doc, bucket). Output:

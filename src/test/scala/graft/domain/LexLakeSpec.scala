@@ -36,6 +36,15 @@ class LexLakeSpec extends SparkSpec {
     df.collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
 
+  /** A single phrase through the batch serve (a batch of one):
+    * (doc_id, occurrences). */
+  private def phraseOne(root: String, ph: Seq[String],
+                        view: ReadView = ReadView.Live,
+                        maxOverlayRows: Long = 1L << 20): DataFrame =
+    LexLake.phraseServeBatch(spark, root, Seq((0L, ph)).toDF("probe_id", "phrase"),
+        maxOverlayRows = maxOverlayRows, view = view)
+      .select("doc_id", "occurrences")
+
   /** The reference: the pure posting-list query (q162's registered form)
     * over the LOGICAL corpus frame. */
   private def reference(docs: Seq[(Long, String)], n: Int = 5)
@@ -374,7 +383,7 @@ class LexLakeSpec extends SparkSpec {
       (500L, unit(10.0), Seq("spark", "query")),
       (600L, unit(60.0), Seq("merge", "hash"))).toDF("probe_id", "embedding", "terms")
     val ph = Seq("spark", "batch")
-    val phraseDocs = LexLake.phraseServe(spark, lroot, ph)
+    val phraseDocs = phraseOne(lroot, ph)
       .collect().map(_.getLong(0)).toSet
     assert(phraseDocs.nonEmpty, "fixture must contain the phrase")
     val got = served(Retrieval.hybridServe(spark, vroot, lroot, probes,
@@ -390,18 +399,46 @@ class LexLakeSpec extends SparkSpec {
       .select($"probe_id", $"doc_id".as("neighbor_id"), $"rank")
     val want = served(graft.operators.Similarity.rrfFuseAll(Seq(vec, lex),
       k = 4, kRrf = 60,
-      candidates = Some(LexLake.phraseServe(spark, lroot, ph)
+      candidates = Some(phraseOne(lroot, ph)
         .select($"doc_id".as("neighbor_id")))))
     assert(got == want)
     // plan pin: the phrase arm's positional read prunes to the phrase's
-    // buckets (PartitionFilters on tbucket) with the term filter pushed
-    val plan = LexLake.phraseServe(spark, lroot, ph)
-      .queryExecution.executedPlan.toString
+    // buckets (PartitionFilters on tbucket) with the term filter pushed.
+    // That read is the batch's materializing postings scan (the eager
+    // localCheckpoint), so its plan is captured as it runs
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = {
+        val plan = qe.executedPlan.toString
+        if (funcName == "localCheckpoint" && plan.contains("postings"))
+          plans.add(plan)
+        ()
+      }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      phraseOne(lroot, ph)
+      // the listener bus delivers asynchronously: wait for the scan's event
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally spark.listenerManager.unregister(listener)
+    assert(!plans.isEmpty, "the batch's postings scan must be captured")
+    val plan = plans.peek()
+    // read inside each bracket: the scan line also lists tbucket and term
+    // among its output columns whatever it prunes
+    def filters(l: String, key: String): String = {
+      val i = l.indexOf(s"$key: [")
+      if (i < 0) "" else l.substring(i + key.length + 3).takeWhile(_ != ']')
+    }
     assert(plan.linesIterator.exists(l =>
-      l.contains("PartitionFilters:") && l.contains("tbucket")),
-      plan.take(4000))
+      filters(l, "PartitionFilters").contains("tbucket")), plan.take(4000))
     assert(plan.linesIterator.exists(l =>
-      l.contains("PushedFilters:") && l.contains("term")), plan.take(4000))
+      filters(l, "PushedFilters").contains("term")), plan.take(4000))
   }
 
   test("streaming twins: micro-batch ingest and serve pick up a mid-stream reconcile") {
@@ -454,7 +491,8 @@ class LexLakeSpec extends SparkSpec {
     val root = freshRoot("posstream")
     LexLake.ingest(spark, root, corpus().toDF("doc_id", "text"), nBuckets = 8)
     def want(ph: Seq[String]): Set[(Long, Long)] =
-      LexLake.phraseServe(spark, root, ph)
+      TextStats.phraseMatch(corpus().toDF("doc_id", "text"), "doc_id", "text",
+          ph)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val qin = MemoryStream[(Long, Seq[String])]
     val got = scala.collection.mutable.Map.empty[Long, Set[(Long, Long, Long)]]
@@ -592,7 +630,7 @@ class LexLakeSpec extends SparkSpec {
       TextStats.phraseMatch(c.toDF("doc_id", "text"), "doc_id", "text", ph)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def got(ph: Seq[String]): Set[(Long, Long)] =
-      LexLake.phraseServe(spark, root, ph)
+      phraseOne(root, ph)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val ph = Seq("spark", "batch")
     assert(want(corpus(), ph).nonEmpty, "fixture must contain the phrase")
@@ -619,7 +657,7 @@ class LexLakeSpec extends SparkSpec {
     val gen = LexLake.generations(spark, root).lastOption
     val victim = want(logical, ph).head._1
     LexLake.delete(spark, root, Seq(victim).toDF("doc_id"))
-    assert(LexLake.phraseServe(spark, root, ph, view = ReadView.Pinned(gen))
+    assert(phraseOne(root, ph, view = ReadView.Pinned(gen))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       == want(logical, ph))
     assert(got(ph) == want(logical.filterNot(_._1 == victim), ph))
@@ -686,7 +724,7 @@ class LexLakeSpec extends SparkSpec {
     // r11 verdict ask #2: the q168 pure operator, served from the lake's
     // stored positions — two terms' buckets read, the bucket-blocked
     // equi-join (shared transcription, parity by construction), overlay
-    // arms and the fold exactly like phraseServe
+    // arms and the fold exactly like the phrase serve
     val root = freshRoot("prox")
     LexLake.ingest(spark, root, corpus().toDF("doc_id", "text"), nBuckets = 8)
     def want(c: Seq[(Long, String)], a: String, b: String, w: Int)
@@ -694,9 +732,11 @@ class LexLakeSpec extends SparkSpec {
       TextStats.proximityPairs(c.toDF("doc_id", "text"), "doc_id", "text",
           a, b, w)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    def got(a: String, b: String, w: Int): Set[(Long, Long)] =
-      LexLake.proximityServe(spark, root, a, b, w)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def got(a: String, b: String, w: Int,
+            view: ReadView = ReadView.Live): Set[(Long, Long)] =
+      LexLake.proximityServeBatch(spark, root,
+          Seq((0L, a, b)).toDF("probe_id", "term_a", "term_b"), w, view = view)
+        .collect().map(r => (r.getLong(1), r.getLong(2))).toSet
     assert(want(corpus(), "spark", "hash", 5).nonEmpty,
       "fixture must co-occur")
     assert(got("spark", "hash", 5) == want(corpus(), "spark", "hash", 5))
@@ -716,9 +756,7 @@ class LexLakeSpec extends SparkSpec {
     // invisible to the pinned read, visible to the unpinned one
     val gen = LexLake.generations(spark, root).lastOption
     LexLake.delete(spark, root, Seq(1L).toDF("doc_id"))
-    assert(LexLake.proximityServe(spark, root, "spark", "hash", 5,
-        view = ReadView.Pinned(gen))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(got("spark", "hash", 5, view = ReadView.Pinned(gen))
       == want(logical, "spark", "hash", 5))
     assert(got("spark", "hash", 5)
       == want(logical.filterNot(_._1 == 1L), "spark", "hash", 5))
@@ -736,9 +774,10 @@ class LexLakeSpec extends SparkSpec {
       TextStats.bestPassageWindow(c.toDF("doc_id", "text"), "doc_id",
           "text", ts, w)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    def got(w: Int): Set[(Long, Long)] =
-      LexLake.passageServe(spark, root, ts, w)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def got(w: Int, view: ReadView = ReadView.Live): Set[(Long, Long)] =
+      LexLake.passageServeBatch(spark, root,
+          Seq((0L, ts)).toDF("probe_id", "terms"), w, view = view)
+        .collect().map(r => (r.getLong(1), r.getLong(2))).toSet
     assert(want(corpus(), 4).exists(_._2 >= 2L),
       "fixture must have a multi-term window")
     assert(got(4) == want(corpus(), 4))
@@ -755,20 +794,18 @@ class LexLakeSpec extends SparkSpec {
     // pinned arm: a post-fold delete is invisible to the pinned read
     val gen = LexLake.generations(spark, root).lastOption
     LexLake.delete(spark, root, Seq(100L).toDF("doc_id"))
-    assert(LexLake.passageServe(spark, root, ts, 4,
-        view = ReadView.Pinned(gen))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      == want(logical, 4))
+    assert(got(4, view = ReadView.Pinned(gen)) == want(logical, 4))
     assert(got(4) == want(logical.filterNot(_._1 == 100L), 4))
   }
 
   test("batched positional serves equal the per-query serves through every mutation; one pruned read per batch") {
-    // r12 verdict ask #1: phraseServe/proximityServe/passageServe answer
-    // ONE query per Spark job (~0.1 s scheduling floor, ~10 QPS ceiling);
-    // the batch forms read the stored positions ONCE — bucket-pruned to
-    // the union of all probes' terms — and fold per probe downstream.
-    // Parity per probe with the scalar serves must hold through
-    // delete/upsert/fold, and the pinned views serve committed state.
+    // r12 verdict ask #1: a per-query positional serve answers ONE query
+    // per Spark job (~0.1 s scheduling floor, ~10 QPS ceiling); the batch
+    // forms read the stored positions ONCE — bucket-pruned to the union of
+    // all probes' terms — and fold per probe downstream. Each probe's rows
+    // must equal the pure per-query TextStats operator over the logical
+    // corpus through delete/upsert/fold, and the pinned views serve
+    // committed state.
     val root = freshRoot("posbatch")
     LexLake.ingest(spark, root, corpus().toDF("doc_id", "text"), nBuckets = 8)
     val phrases = Seq(
@@ -784,34 +821,40 @@ class LexLakeSpec extends SparkSpec {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     def scalar2(df: DataFrame): Seq[(Long, Long)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    def checkParity(): Unit = {
+    def checkParity(c: Seq[(Long, String)],
+                    view: ReadView = ReadView.Live): Unit = {
+      val docs = c.toDF("doc_id", "text")
       assert(rows3(LexLake.phraseServeBatch(spark, root,
-          phrases.toDF("probe_id", "phrase")))
+          phrases.toDF("probe_id", "phrase"), view = view))
         == phrases.flatMap { case (id, ph) =>
-          scalar2(LexLake.phraseServe(spark, root, ph))
+          scalar2(TextStats.phraseMatch(docs, "doc_id", "text", ph))
             .map { case (d, n) => (id, d, n) } }.toSet)
       assert(rows3(LexLake.proximityServeBatch(spark, root,
-          pairs.toDF("probe_id", "term_a", "term_b"), w = 5))
+          pairs.toDF("probe_id", "term_a", "term_b"), w = 5, view = view))
         == pairs.flatMap { case (id, a, b) =>
-          scalar2(LexLake.proximityServe(spark, root, a, b, w = 5))
+          scalar2(TextStats.proximityPairs(docs, "doc_id", "text", a, b,
+              w = 5))
             .map { case (d, n) => (id, d, n) } }.toSet)
       assert(rows3(LexLake.passageServeBatch(spark, root,
-          passages.toDF("probe_id", "terms"), w = 8))
+          passages.toDF("probe_id", "terms"), w = 8, view = view))
         == passages.flatMap { case (id, ts) =>
-          scalar2(LexLake.passageServe(spark, root, ts, w = 8))
+          scalar2(TextStats.bestPassageWindow(docs, "doc_id", "text", ts,
+              w = 8))
             .map { case (d, n) => (id, d, n) } }.toSet)
     }
-    checkParity()
+    checkParity(corpus())
     assert(rows3(LexLake.phraseServeBatch(spark, root,
       phrases.toDF("probe_id", "phrase"))).nonEmpty, "fixture must match")
-    // mutations fold into every batch serve exactly as into the scalars
+    // mutations fold into every batch serve: the logical corpus moves
     LexLake.delete(spark, root, Seq(0L, 7L).toDF("doc_id"))
     LexLake.upsert(spark, root,
       Seq((100L, "spark batch spark batch merge query"))
         .toDF("doc_id", "text"))
-    checkParity()
+    val logical = corpus().filterNot(d => d._1 == 0L || d._1 == 7L) :+
+      ((100L, "spark batch spark batch merge query"))
+    checkParity(logical)
     LexLake.reconcile(spark, root)
-    checkParity()
+    checkParity(logical)
     // pinned views: a post-fold delete is invisible at the pinned gen
     val pinned = ReadView.Pinned(LexLake.generations(spark, root).lastOption)
     val before = rows3(LexLake.phraseServeBatch(spark, root,
@@ -820,17 +863,7 @@ class LexLakeSpec extends SparkSpec {
     LexLake.delete(spark, root, Seq(victim).toDF("doc_id"))
     assert(rows3(LexLake.phraseServeBatch(spark, root,
       phrases.toDF("probe_id", "phrase"), view = pinned)) == before)
-    assert(rows3(LexLake.proximityServeBatch(spark, root,
-        pairs.toDF("probe_id", "term_a", "term_b"), w = 5, view = pinned))
-      == pairs.flatMap { case (id, a, b) =>
-        scalar2(LexLake.proximityServe(spark, root, a, b, w = 5,
-            view = pinned))
-          .map { case (d, n) => (id, d, n) } }.toSet)
-    assert(rows3(LexLake.passageServeBatch(spark, root,
-        passages.toDF("probe_id", "terms"), w = 8, view = pinned))
-      == passages.flatMap { case (id, ts) =>
-        scalar2(LexLake.passageServe(spark, root, ts, w = 8, view = pinned))
-          .map { case (d, n) => (id, d, n) } }.toSet)
+    checkParity(logical, view = pinned)
     assert(rows3(LexLake.phraseServeBatch(spark, root,
       phrases.toDF("probe_id", "phrase"))) != before,
       "the unpinned serve must see the delete")
@@ -955,7 +988,7 @@ class LexLakeSpec extends SparkSpec {
     doctored.write.mode("overwrite").partitionBy("tbucket")
       .parquet(s"$root/postings")
     val e = intercept[IllegalArgumentException] {
-      LexLake.phraseServe(spark, root, Seq("spark", "batch"))
+      phraseOne(root, Seq("spark", "batch"))
     }
     assert(e.getMessage.contains("PRE-POSITIONAL"), e.getMessage)
     assert(e.getMessage.contains("Re-ingest"), e.getMessage)
@@ -969,8 +1002,7 @@ class LexLakeSpec extends SparkSpec {
     LexLake.ingest(spark, root, corpus(8).toDF("doc_id", "text"), nBuckets = 4)
     LexLake.delete(spark, root, Seq(0L, 1L, 2L).toDF("doc_id"))
     val e = intercept[IllegalArgumentException] {
-      LexLake.phraseServe(spark, root, Seq("spark", "batch"),
-        maxOverlayRows = 2)
+      phraseOne(root, Seq("spark", "batch"), maxOverlayRows = 2)
     }
     assert(e.getMessage.contains("cannot broadcast"), e.getMessage)
     assert(e.getMessage.contains("reconcile"), e.getMessage)

@@ -17,6 +17,16 @@ class VectorLakeSpec extends SparkSpec {
   private def freshRoot(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"veclake_$tag").toString + "/lake"
 
+  /** One probe through the batch serve (a batch of one): (neighbor_id, cos)
+    * in rank order. */
+  private def searchOne(root: String, q: Seq[Float], k: Int, nprobe: Int = 2,
+                        failpoint: () => Unit = () => ())
+      : org.apache.spark.sql.DataFrame =
+    VectorLake.searchBatch(spark, root,
+        Seq(0L -> q.toArray).toDF("probe_id", "embedding"), k, nprobe,
+        failpoint = failpoint)
+      .orderBy("rank").select("neighbor_id", "cos")
+
   test("ingest: dups vs resident index and within batch drop; survivors append") {
     val root = freshRoot("ingest")
     VectorLake.init(spark, root, Seq(Seq(0.0, 0.0), Seq(10.0, 10.0)))
@@ -160,7 +170,7 @@ class VectorLakeSpec extends SparkSpec {
   }
 
   test("a search stranded past retention raises the expiry message, not FileNotFound") {
-    // search resolves the pointer ONCE; its failpoint runs after that
+    // searchBatch resolves the pointer ONCE; its failpoint runs after that
     // resolution — exactly where back-to-back reconciles can land. Two
     // promotions drop the resolved generation (default retention 2); the
     // search's next read must raise GenStore's actionable expiry message
@@ -170,7 +180,7 @@ class VectorLakeSpec extends SparkSpec {
     VectorLake.ingest(spark, root,
       Seq((1L, unit(0, 14f)), (2L, unit(90, 14f))).toDF("vec_id", "embedding"))
     val e = intercept[IllegalStateException] {
-      VectorLake.search(spark, root, unit(0).toSeq, k = 1,
+      searchOne(root, unit(0).toSeq, k = 1,
         failpoint = () => {
           VectorLake.reconcile(spark, root, k = 2, iters = 2)
           VectorLake.reconcile(spark, root, k = 2, iters = 2)
@@ -178,7 +188,7 @@ class VectorLakeSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("EXPIRED"), e.getMessage)
     // a fresh search under the current pointer serves normally
-    assert(VectorLake.search(spark, root, unit(0).toSeq, k = 1).count() == 1)
+    assert(searchOne(root, unit(0).toSeq, k = 1).count() == 1)
   }
 
   test("a legacy-layout reader stranded past the store's migration fails loudly") {
@@ -325,11 +335,14 @@ class VectorLakeSpec extends SparkSpec {
       1L -> unit(0), 2L -> unit(45, 14f), 3L -> unit(80, 14f))
       .toDF("vec_id", "embedding"))
     assert(r.kept == 3, r.toString)
-    val hits = VectorLake.search(spark, root, unit(44, 14f), k = 3, nprobe = 1)
+    val hits = searchOne(root, unit(44, 14f), k = 3, nprobe = 1)
     // nprobe=1 prunes list 0: k=3 but only list 1's two rows qualify,
-    // ranked by cosine to the 44-degree query (45 beats 80)
-    assert(hits.collect().map(x => (x.getLong(0), x.getInt(1))).toSeq ==
-      Seq((2L, 1), (3L, 1)))
+    // ranked by cosine to the 44-degree query (45 beats 80); each hit's
+    // list is its stored assignment
+    val lists = VectorLake.vectors(spark, root).select("vec_id", "ivf_list")
+      .collect().map(x => x.getLong(0) -> x.getInt(1)).toMap
+    assert(hits.collect().map(x => (x.getLong(0), lists(x.getLong(0)))).toSeq
+      == Seq((2L, 1), (3L, 1)))
     // the pruning is PARTITION pruning on the lake layout, not a row filter
     // over a full scan: the file scan's partition filters name ivf_list
     val plan = hits.queryExecution.executedPlan.toString
@@ -355,13 +368,33 @@ class VectorLakeSpec extends SparkSpec {
     val rows = got.collect()
     // vec 5 (list 2) is outside every probe's gate set — pruned, not ranked
     assert(rows.nonEmpty && !rows.map(_.getLong(1)).contains(5L), rows.mkString(","))
-    // per-probe parity with the single-query read, rows AND order
+    // per-probe parity, rows AND order, with a driver-side reference: the
+    // probe's probeLists lists over the stored assignment, plain cosine
+    // rounded to 6 places, ranked (cos desc, vec_id asc), top-k
+    val cents = VectorLake.centroids(spark, root)
+    val stored = VectorLake.vectors(spark, root)
+      .select("vec_id", "ivf_list", "embedding").collect()
+      .map(x => (x.getLong(0), x.getInt(1), x.getSeq[Float](2)))
+    def cosine(a: Seq[Float], b: Seq[Float]): Double = {
+      val xy = a.indices.map(i => a(i).toDouble * b(i).toDouble).sum
+      val xx = a.map(x => x.toDouble * x.toDouble).sum
+      val yy = b.map(x => x.toDouble * x.toDouble).sum
+      xy / (math.sqrt(xx) * math.sqrt(yy))
+    }
+    def reference(q: Seq[Float], k: Int, nprobe: Int): Seq[(Long, Double)] = {
+      val probed = graft.operators.Similarity.probeLists(q, cents,
+        math.min(nprobe, cents.size)).toSet
+      stored.filter(v => probed.contains(v._2))
+        .map { case (id, _, e) =>
+          id -> BigDecimal(cosine(e, q))
+            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble }
+        .sortBy { case (id, c) => (-c, id) }.take(k).toSeq
+    }
     for ((pid, vec) <- probeVecs) {
-      val single = VectorLake.search(spark, root, vec, k = 5, nprobe = 2)
-        .collect().map(x => (x.getLong(0), x.getDouble(2))).toSeq
+      val want = reference(vec.toSeq, k = 5, nprobe = 2)
       val batch = rows.filter(_.getLong(0) == pid).sortBy(_.getLong(3))
         .map(x => (x.getLong(1), x.getDouble(2))).toSeq
-      assert(batch == single, s"probe $pid: $batch vs $single")
+      assert(want.nonEmpty && batch == want, s"probe $pid: $batch vs $want")
     }
     // the scale pin (r8 verdict ask #1's Done bar): the store is opened ONCE
     // — one file scan over the vectors dir, amortized across the whole probe
@@ -415,12 +448,10 @@ class VectorLakeSpec extends SparkSpec {
     // the reconciled store serves: exact search (nprobe = numLists) ranks
     // the 85-degree neighbor first for an 80-degree query, and a pruned
     // nprobe=1 probe still finds it (same list by construction)
-    val exact = VectorLake.search(spark, root, unit(80, 14f), k = 3,
-      nprobe = 2).collect()
+    val exact = searchOne(root, unit(80, 14f), k = 3, nprobe = 2).collect()
     assert(exact.map(_.getLong(0)).toSeq.take(1) == Seq(5L), exact.mkString(","))
     assert(exact.length == 3, "exact search sees the whole store")
-    val pruned = VectorLake.search(spark, root, unit(80, 14f), k = 1, nprobe = 1)
-      .collect()
+    val pruned = searchOne(root, unit(80, 14f), k = 1, nprobe = 1).collect()
     assert(pruned.map(_.getLong(0)).toSeq == Seq(5L), pruned.mkString(","))
     // a replayed day-0 batch after ALL of this is still a write no-op
     val r0b = VectorLake.ingest(spark, root, Seq(
@@ -440,26 +471,31 @@ class VectorLakeSpec extends SparkSpec {
     assert(r.kept == 3, r.toString)
     assert(VectorLake.dataRoot(spark, root) == s"$root/gen-0")
     val q = unit(10, 14f)
-    val before = VectorLake.search(spark, root, q, k = 3, nprobe = 1)
-      .collect().map(x => (x.getLong(0), x.getInt(1), x.getDouble(2))).toSeq
+    val before = searchOne(root, q, k = 3, nprobe = 1)
+      .collect().map(x => (x.getLong(0), x.getDouble(1))).toSeq
     // a full reconcile (retrain + reassign + pointer flip) lands exactly
     // between the reader's pointer resolution and its reads. The displaced
     // generation is retained, so the interleaved search serves ENTIRELY
-    // from gen-0 — identical rows, list ids, and scores. A mixed read
-    // (gen-1 centroids ranking gen-0 lists) would probe differently:
-    // nprobe=1 makes that discriminating.
+    // from gen-0 — identical rows, rank order and scores, and every stored
+    // row read from gen-0's files. A mixed read (gen-1 centroids ranking
+    // gen-0 lists) would probe differently: nprobe=1 makes that
+    // discriminating.
     @volatile var swapped = false
-    val during = VectorLake.search(spark, root, q, k = 3, nprobe = 1,
+    val duringDf = searchOne(root, q, k = 3, nprobe = 1,
         failpoint = () => {
           VectorLake.reconcile(spark, root, k = 2, iters = 3); swapped = true
         })
-      .collect().map(x => (x.getLong(0), x.getInt(1), x.getDouble(2))).toSeq
+    val during = duringDf
+      .collect().map(x => (x.getLong(0), x.getDouble(1))).toSeq
     assert(swapped)
     assert(during == before, s"interleaved read mixed generations: $during vs $before")
+    assert(duringDf.inputFiles.nonEmpty &&
+      duringDf.inputFiles.forall(_.contains("/gen-0/vectors")),
+      s"interleaved read left gen-0: ${duringDf.inputFiles.mkString(", ")}")
     // after the swap: readers resolve gen-1; gen-0 is retained for
     // in-flight readers until the NEXT reconcile displaces it
     assert(VectorLake.dataRoot(spark, root) == s"$root/gen-1")
-    assert(VectorLake.search(spark, root, q, k = 3, nprobe = 2).count() == 3)
+    assert(searchOne(root, q, k = 3, nprobe = 2).count() == 3)
     val fsys = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sessionState.newHadoopConf())
     assert(fsys.exists(new org.apache.hadoop.fs.Path(s"$root/gen-0")),
@@ -484,13 +520,11 @@ class VectorLakeSpec extends SparkSpec {
     // the crash left a fully-written orphan gen-1 — but the pointer is the
     // commit, so readers still resolve gen-0 and serve consistently
     assert(VectorLake.dataRoot(spark, root) == s"$root/gen-0")
-    assert(VectorLake.search(spark, root, unit(10, 14f), k = 3, nprobe = 2)
-      .count() == 3)
+    assert(searchOne(root, unit(10, 14f), k = 3, nprobe = 2).count() == 3)
     // the rerun overwrites the orphan and completes the swap
     VectorLake.reconcile(spark, root, k = 2, iters = 3)
     assert(VectorLake.dataRoot(spark, root) == s"$root/gen-1")
-    assert(VectorLake.search(spark, root, unit(10, 14f), k = 3, nprobe = 2)
-      .count() == 3)
+    assert(searchOne(root, unit(10, 14f), k = 3, nprobe = 2).count() == 3)
   }
 
   test("a pointer-less legacy store keeps serving and is versioned by its first reconcile") {
@@ -509,7 +543,7 @@ class VectorLakeSpec extends SparkSpec {
       .write.partitionBy("ivf_list").parquet(s"$root/vectors")
     // no pointer: every operation falls back to the root layout
     assert(VectorLake.dataRoot(spark, root) == root)
-    assert(VectorLake.search(spark, root, unit(5, 14f), k = 2, nprobe = 2)
+    assert(searchOne(root, unit(5, 14f), k = 2, nprobe = 2)
       .collect().map(_.getLong(0)).toSeq == Seq(1L, 2L))
     assert(VectorLake.ingest(spark, root,
       Seq(3L -> unit(40, 14f)).toDF("vec_id", "embedding")).kept == 1)
@@ -524,8 +558,7 @@ class VectorLakeSpec extends SparkSpec {
     assert(VectorLake.dataRoot(spark, root) == s"$root/gen-1")
     assert(!fsys.exists(new org.apache.hadoop.fs.Path(s"$root/vectors")),
       "legacy dirs must be cleaned once displaced beyond the retention window")
-    assert(VectorLake.search(spark, root, unit(5, 14f), k = 3, nprobe = 2)
-      .count() == 3)
+    assert(searchOne(root, unit(5, 14f), k = 3, nprobe = 2).count() == 3)
   }
 
   test("SQ8 tier: adopted behind the recall gate, quantized serving parity, ingest keeps codes complete") {
@@ -640,8 +673,8 @@ class VectorLakeSpec extends SparkSpec {
     assert(VectorLake.delete(spark, root, Seq(2L, 99L).toDF("vec_id")) == 0)
     assert(VectorLake.vectors(spark, root).collect().map(_.getLong(0)).toSet
       == Set(1L, 3L))
-    assert(!VectorLake.search(spark, root, unit(30, 14f).toSeq, k = 3,
-      nprobe = 2).collect().map(_.getLong(0)).contains(2L))
+    assert(!searchOne(root, unit(30, 14f).toSeq, k = 3, nprobe = 2)
+      .collect().map(_.getLong(0)).contains(2L))
     val probes = Seq(101L -> unit(30, 14f)).toDF("probe_id", "embedding")
     assert(!VectorLake.searchBatch(spark, root, probes, k = 3, nprobe = 2,
       quantized = true).collect().map(_.getLong(1)).contains(2L),
@@ -839,9 +872,9 @@ class VectorLakeSpec extends SparkSpec {
   test("search on an initialized-but-empty store returns empty, never throws") {
     val root = freshRoot("searchempty")
     VectorLake.init(spark, root, Seq(Seq(0.0, 0.0), Seq(10.0, 10.0)))
-    assert(VectorLake.search(spark, root, unit(10), k = 5).count() == 0)
+    assert(searchOne(root, unit(10), k = 5).count() == 0)
     // nprobe beyond the list count clamps to exact search, same contract
-    assert(VectorLake.search(spark, root, unit(10), k = 5, nprobe = 99).count() == 0)
+    assert(searchOne(root, unit(10), k = 5, nprobe = 99).count() == 0)
     // batched read: an empty store AND an empty probe batch both yield
     // empty results (an empty batch has no gate lists to prune to)
     assert(VectorLake.searchBatch(spark, root,

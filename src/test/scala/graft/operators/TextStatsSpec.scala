@@ -339,6 +339,18 @@ class TextStatsSpec extends SparkSpec {
     assert(got("a", "y") == Map(1L -> 2L))
     assert(got("b", "b") == Map(2L -> 2L))
     assert(got("a", "zzz").isEmpty)
+    // the batched form over the same four pairs, one probe each: the same
+    // exact counts per probe
+    val batch = TextStats.proximityPairsBatch(docs, "doc_id", "text",
+        Seq((0L, "a", "a"), (1L, "a", "y"), (2L, "b", "b"), (3L, "a", "zzz"))
+          .toDF("probe_id", "term_a", "term_b"), w = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    def gotBatch(probe: Long): Map[Long, Long] =
+      batch.filter(_._1 == probe).map(r => r._2 -> r._3).toMap
+    assert(gotBatch(0L) == Map(1L -> 4L))
+    assert(gotBatch(1L) == Map(1L -> 2L))
+    assert(gotBatch(2L) == Map(2L -> 2L))
+    assert(gotBatch(3L).isEmpty)
   }
 
   test("bm25PerQuery refuses duplicate probe ids instead of silently merging their term sets") {
