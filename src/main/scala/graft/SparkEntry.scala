@@ -1874,8 +1874,11 @@ object SparkEntry {
       // kept is referenced twice below — as the kNN corpus AND as the probe
       // source — and its plan embeds the pairwise near-dup stage (the
       // dominant cost here); unpinned, that stage executes once per
-      // reference (guide §2.4). localCheckpoint, not persist: Bench/Verify
-      // clear the SQL cache between queries.
+      // reference (guide §2.4). The localCheckpoint is NOT in the SQL
+      // cache: the clearCache that Bench/Verify run between queries does
+      // not release it, and nothing unpersists it, so its blocks stay
+      // until the RDD is garbage collected (an owned pin is ROADMAP
+      // item 2).
       val kept = gated.join(pairs.select(col("id_b").as("vec_id")).distinct(),
         Seq("vec_id"), "left_anti")
         .localCheckpoint(true)

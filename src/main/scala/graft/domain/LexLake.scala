@@ -475,10 +475,16 @@ object LexLake {
             impact: Boolean = false,
             maxStaleFraction: Double = 1.0,
             view: ReadView = ReadView.Live): DataFrame = {
+    require(n >= 1, s"n must be >= 1, got $n")
     require(!impact || view == ReadView.Live, impactPinnedRefusal)
+    val nb = servedBuckets(spark, root)
     val (droot, overlays) = resolve(spark, root, view)
-    serveIn(spark, root, droot, overlays, queries, n, queryIdCol, termsCol,
-      k1, b, maxBroadcastQueryTerms, impact, maxStaleFraction)
+    // the shared serving-batch gate, PINNED: an unpinned non-deterministic
+    // source could prune one term set and score another
+    val qterms = graft.operators.Serving.queryTermsBatch(queries, queryIdCol,
+      termsCol, maxBroadcastQueryTerms, pin = true)
+    serveIn(spark, droot, overlays, qterms, nb, n, k1, b, impact,
+      maxStaleFraction)
   }
 
   private val impactPinnedRefusal =
@@ -521,21 +527,19 @@ object LexLake {
     * [[graft.operators.TextStats.bm25PrfExpand]] (r11 verdict ask #5;
     * spec-pinned parity over the logical corpus, mutations pending or
     * not): pass 1 ranks each probe's top-`fbDocs` from the stored
-    * postings ([[serve]]'s read), the feedback docs' OWN posting rows
-    * nominate expansion terms by exact integer-micros length-normalized
-    * tf (the probe's original terms excluded, top-`fbTerms` via the
-    * bounded STRING heap), and pass 2 rescores the expanded batch top-`n`.
-    * BOTH passes and the feedback read run under ONE view resolution — a
-    * reconcile promoting between them can never mix corpus views.
+    * postings ([[serve]]'s read), the feedback docs' OWN posting rows feed
+    * the expansion step the pure form runs
+    * ([[graft.operators.TextStats.prfExpandedTerms]]), and pass 2 rescores
+    * the expanded batch top-`n`. BOTH passes and the feedback read run
+    * under ONE gate and ONE view resolution — a reconcile promoting
+    * between them can never mix corpus views.
     *
-    * Scale shape: the lake does the pure form one better on feedback
-    * extraction — postings rows ARE (term, doc_id, tf, dl), so no
-    * (doc, term) re-aggregation happens at all; the cost is one
-    * 4-column postings scan filtered by a broadcast semi-join on the
-    * bounded probes×fbDocs id set (a doc's terms span every bucket, so
-    * this read is not bucket-pruned — the price of PRF without a forward
-    * index, paid once per batch, never per probe). Overlay corrections
-    * apply to both passes and the feedback rows. READER path.
+    * Scale shape: postings rows ARE (term, doc_id, tf, dl), so feedback
+    * extraction re-aggregates nothing; it costs one 4-column postings scan
+    * semi-joined to the bounded probes×fbDocs id set (not bucket-pruned:
+    * a doc's terms span every bucket — the price of PRF without a forward
+    * index, paid once per batch). Overlay corrections apply to both
+    * passes and the feedback rows. READER path.
     *
     * `impact = true` (r12 verdict ask #2) serves BOTH ranking passes from
     * the impact tier — capped terms read their truncated lists in pass 1
@@ -556,46 +560,32 @@ object LexLake {
                impact: Boolean = false,
                maxStaleFraction: Double = 1.0,
                view: ReadView = ReadView.Live): DataFrame = {
+    require(n >= 1, s"n must be >= 1, got $n")
     require(fbDocs >= 1, s"fbDocs must be >= 1, got $fbDocs")
     require(fbTerms >= 1, s"fbTerms must be >= 1, got $fbTerms")
     require(!impact || view == ReadView.Live, impactPinnedRefusal)
     val nb = servedBuckets(spark, root)
     val (droot, overlays) = resolve(spark, root, view)
-    // pass 1: the standard serve, cut at fbDocs — pinned, it feeds the
-    // feedback scope AND the weights join
-    val fb = serveIn(spark, root, droot, overlays, queries, fbDocs,
-        queryIdCol, termsCol, k1, b, maxBroadcastQueryTerms, impact,
-        maxStaleFraction)
-      .select("probe_id", "doc_id")
-      .localCheckpoint(true)
-    // pin = true (r12 advice): this frame feeds BOTH the expansion
-    // anti-join and the expanded union — an unpinned non-deterministic
-    // queries source could exclude one term set and expand another, the
-    // exact mixed-view hazard serveIn pins against
+    // ONE pinned gate for both passes: it feeds pass 1, the expansion
+    // anti-join and the expanded union, so all three see one term set
     val qterms = graft.operators.Serving.queryTermsBatch(queries, queryIdCol,
       termsCol, maxBroadcastQueryTerms, pin = true)
-    val fbIds = fb.select("doc_id").distinct()
+    def pass(terms: DataFrame, top: Int): DataFrame = serveIn(spark, droot,
+      overlays, terms, nb, top, k1, b, impact, maxStaleFraction)
+    // pass 1: the standard serve, cut at fbDocs — pinned, it feeds the
+    // feedback scope AND the weights join
+    val fb = pass(qterms, fbDocs).select("probe_id", "doc_id")
+      .localCheckpoint(true)
     // the feedback docs' posting rows — (term, doc_id, tf, dl) directly,
     // no re-aggregation; overlay-corrected exactly like serve's rows
     val fbRows = withOverlays(
         GenStore.readGenOrEmpty(spark, droot, "postings", postingsSchema)
           .select("term", "doc_id", "tf", "dl"), overlays, nb)(
         _.select("term", "doc_id", "tf", "dl"))
-      .join(broadcast(fbIds), Seq("doc_id"), "left_semi")
-    val weights = fb.join(fbRows, Seq("doc_id"))
-      .join(qterms, Seq("probe_id", "term"), "left_anti")
-      .withColumn("__w",
-        floor(col("tf") * lit(1000000.0) / col("dl")).cast("long"))
-      .groupBy("probe_id", "term")
-      .agg(sum(col("__w")).as("w_micros"))
-    val expansion = graft.operators.Serving.rankTopNMicrosStr(weights,
-      fbTerms, "term", "w_micros")
-    val expanded = qterms
-      .unionByName(expansion.select("probe_id", "term"))
-      .groupBy("probe_id").agg(collect_set(col("term")).as("terms"))
-      .localCheckpoint(true)
-    serveIn(spark, root, droot, overlays, expanded, n, "probe_id", "terms",
-      k1, b, maxBroadcastQueryTerms, impact, maxStaleFraction)
+      .join(broadcast(fb.select("doc_id").distinct()), Seq("doc_id"),
+        "left_semi")
+    pass(graft.operators.TextStats.prfExpandedTerms(fb, fbRows, qterms,
+      fbTerms, maxBroadcastQueryTerms), n)
   }
 
   /** The LOGICAL (overlay-corrected) posting rows for a query-term
@@ -604,31 +594,22 @@ object LexLake {
     * (rows, nDocs, totalDl, docsSinceFold); rows carry
     * (term, doc_id, tf, dl[, positions]). The bucket IN-list is
     * <= nBuckets values (always tiny — it IS the partition pruning); the
-    * TERM filter is an IN-list only while the universe is literal-sized
-    * (pushes into the pruned scan), switching to a broadcast semi-join for
-    * large batches — a 10^5-term IN literal would bloat codegen without
-    * pruning anything the buckets didn't. Stats are the keyed-delta sum,
+    * TERM filter is [[termPrune]]. Stats are the keyed-delta sum,
     * corrected from the `overlays` when present: old lengths re-derive
     * from the CURRENT doclens (scoped, bounded), so the correction is
     * exact AND idempotent across the fold. */
   private def logicalQueryRows(spark: SparkSession, droot: String,
                                overlays: Option[(DataFrame, DataFrame)],
-                               qterms: DataFrame,
                                universe: Seq[String], nb: Int,
                                withPositions: Boolean)
       : (DataFrame, Long, Long, Long) = {
     val outCols =
       (if (withPositions) Seq("term", "doc_id", "tf", "dl", "positions")
        else Seq("term", "doc_id", "tf", "dl")).map(col)
-    val buckets = universe.map(bucketOf(_, nb)).distinct
-    def termFilter(df: DataFrame): DataFrame =
-      if (universe.size <= 4096)
-        df.filter(col("term").isInCollection(universe))
-      else df.join(broadcast(qterms.select("term").distinct()),
-        Seq("term"), "left_semi")
-    val stored0 = termFilter(GenStore
+    val stored0 = termPrune(GenStore
         .readGenOrEmpty(spark, droot, "postings", postingsSchema)
-        .filter(col("tbucket").isInCollection(buckets)))
+        .filter(col("tbucket").isInCollection(
+          universe.map(bucketOf(_, nb)).distinct)), universe)
       .select(outCols: _*)
     val statsRow = GenStore.readGenOrEmpty(spark, droot, "stats", statsSchema)
       .agg(coalesce(sum(col("n_docs")), lit(0L)),
@@ -655,20 +636,39 @@ object LexLake {
       totalDl = totalDl - old.getLong(1) + nw.getLong(1)
     }
     val postL = withOverlays(stored0, overlays, nb)(
-      termFilter(_).select(outCols: _*))
+      termPrune(_, universe).select(outCols: _*))
     (postL, nDocs, totalDl, docsSinceFold)
   }
 
-  private def serveIn(spark: SparkSession, root: String, droot: String,
+  /** Restrict posting rows to `terms`: a literal IN filter while the set is
+    * literal-sized (it pushes into the bucket-pruned scan), a broadcast
+    * semi-join past 4 096 terms — a 10^5-term IN literal would bloat
+    * codegen without pruning anything the buckets didn't. An empty set
+    * keeps nothing. */
+  private def termPrune(rows: DataFrame, terms: Seq[String]): DataFrame =
+    if (terms.isEmpty) rows.filter(lit(false))
+    else if (terms.size <= 4096) rows.filter(col("term").isInCollection(terms))
+    else {
+      val sq = rows.sparkSession; import sq.implicits._
+      rows.join(broadcast(terms.toDF("term")), Seq("term"), "left_semi")
+    }
+
+  /** The empty (probe_id, doc_id, `scoreCol`, rank) answer of a ranked
+    * serve whose batch matches nothing. */
+  private def emptyRanked(spark: SparkSession, scoreCol: String): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(Seq("probe_id", "doc_id", scoreCol, "rank")
+        .map(StructField(_, LongType))))
+
+  /** [[serve]]'s body over an already-gated (probe_id, term) batch and the
+    * resolved view — [[prfServe]] runs it once per pass
+    * under one gate and one resolution. */
+  private def serveIn(spark: SparkSession, droot: String,
                       overlays: Option[(DataFrame, DataFrame)],
-                      queries: DataFrame, n: Int, queryIdCol: String,
-                      termsCol: String, k1: Double, b: Double,
-                      maxBroadcastQueryTerms: Long,
-                      impact: Boolean,
+                      qterms: DataFrame, nb: Int, n: Int,
+                      k1: Double, b: Double, impact: Boolean,
                       maxStaleFraction: Double): DataFrame = {
-    require(n >= 1, s"n must be >= 1, got $n")
-    val nb = servedBuckets(spark, root)
-    // impact-tier resolution comes FIRST when requested: an absent tier
+    // impact-tier resolution comes before any store read: an absent tier
     // fails loudly (the sqQuantized contract — never silently serve a
     // different read path than the caller asked for), and the tier's
     // pinned (k1, b) must match the call's (the per-term impact ORDER was
@@ -691,13 +691,6 @@ object LexLake {
             "serve with those, serve impact = false, or rebuild the tier.")
         Some(r)
       }
-    // the shared serving-batch gate (Serving): duplicate-probe refusal +
-    // exploded broadcast cap, ONE agg; the returned frame is PINNED — it
-    // feeds the universe collect AND the final join, and an unpinned
-    // non-deterministic source could prune one term set and score another
-    // (the searchBatch pinning rationale)
-    val qterms = graft.operators.Serving.queryTermsBatch(queries, queryIdCol,
-      termsCol, maxBroadcastQueryTerms, pin = true)
     val universe = qterms.select("term").distinct()
       .collect().map(_.getString(0)).toSeq
     // while overlays pend, impact serving FALLS BACK to the exact full
@@ -707,16 +700,11 @@ object LexLake {
     // behavior, never silent wrongness: the tier's presence was already
     // checked loudly above.
     val useImpact = impactConf.isDefined && overlays.isEmpty
-    val emptyOut = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("probe_id", LongType),
-        StructField("doc_id", LongType),
-        StructField("bm25_micros", LongType),
-        StructField("rank", LongType))))
+    val emptyOut = emptyRanked(spark, "bm25_micros")
     if (universe.isEmpty) return emptyOut
     val buckets = universe.map(bucketOf(_, nb)).distinct
     val (postL, nDocs, totalDl, docsSinceFold) = logicalQueryRows(spark,
-      droot, overlays, qterms, universe, nb, withPositions = false)
+      droot, overlays, universe, nb, withPositions = false)
     if (nDocs == 0L) return emptyOut
     // the impact tier's STALENESS BOUND (round 12, r11 verdict ask #3 —
     // the recall gate's freshness twin): the tier is frozen at the last
@@ -749,17 +737,11 @@ object LexLake {
       val impAll = GenStore.readOrEmpty(spark, s"$droot/impact",
           impactSchema)
         .filter(col("tbucket").isInCollection(buckets))
-      val impRows = (if (universe.size <= 4096)
-          impAll.filter(col("term").isInCollection(universe))
-        else impAll.join(broadcast(qterms.select("term").distinct()),
-          Seq("term"), "left_semi"))
-        .localCheckpoint(true)
+      val impRows = termPrune(impAll, universe).localCheckpoint(true)
       val impTerms = impRows.select("term").distinct()
         .collect().map(_.getString(0)).toSet
       val rest = universe.filterNot(impTerms)
-      val restRows =
-        if (rest.isEmpty) postL.filter(lit(false))
-        else postL.filter(col("term").isInCollection(rest))
+      val restRows = termPrune(postL, rest)
       val dfT = impRows.select(col("term"), col("df")).distinct()
         .unionByName(restRows.groupBy("term").agg(count(lit(1)).as("df")))
       return scoreBatch(
@@ -792,19 +774,12 @@ object LexLake {
     * with its proximity bonus before ONE final rank. */
   private def scoredBatch(postL: DataFrame, dfT: DataFrame, nDocs: Long,
                           totalDl: Long, qterms: DataFrame,
-                          k1: Double, b: Double): DataFrame = {
-    val avgdl = totalDl.toDouble / nDocs
-    postL.join(broadcast(dfT), Seq("term"))
-      .withColumn("idf",
-        log((lit(nDocs.toDouble) - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)))
-      .withColumn("s_micros",
-        round(col("idf") * ((col("tf") * lit(k1 + 1)) /
-          (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * (col("dl") / lit(avgdl)))))
-          * lit(1000000.0), 0).cast("long"))
-      .join(broadcast(qterms), Seq("term"))
-      .groupBy("probe_id", "doc_id")
-      .agg(sum(col("s_micros")).as("bm25_micros"))
-  }
+                          k1: Double, b: Double): DataFrame =
+    graft.operators.TextStats.sumPerProbe(
+      postL.join(broadcast(dfT), Seq("term"))
+        .withColumn("s_micros", graft.operators.TextStats.bm25TermMicros(
+          col("tf"), col("df"), col("dl"), lit(nDocs.toDouble),
+          lit(totalDl.toDouble / nDocs), k1, b)), qterms)
 
   /** PROXIMITY-WEIGHTED ranked serve from the RESIDENT index (r12 verdict
     * ask #6) — BM25 plus a term-pair proximity BONUS in one ranked list,
@@ -843,15 +818,10 @@ object LexLake {
       "proximity-rank batch")
     val universe = qterms.select("term").distinct()
       .collect().map(_.getString(0)).toSeq
-    val emptyOut = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("probe_id", LongType),
-        StructField("doc_id", LongType),
-        StructField("score_micros", LongType),
-        StructField("rank", LongType))))
+    val emptyOut = emptyRanked(spark, "score_micros")
     if (universe.isEmpty) return emptyOut
     val (postL0, nDocs, totalDl, _) = logicalQueryRows(spark, droot,
-      overlays, qterms, universe, nb, withPositions = true)
+      overlays, universe, nb, withPositions = true)
     if (nDocs == 0L) return emptyOut
     // pre-positional rows would silently drop the bonus arm — same loud
     // refusal as the positional serves (a bounded probe over pruned rows)
@@ -928,22 +898,12 @@ object LexLake {
     val nb = servedBuckets(spark, root)
     val (droot, overlays) = resolve(spark, root, view, maxOverlayRows)
     val buckets = terms.map(bucketOf(_, nb)).distinct
-    // the bucket IN-list is <= nBuckets values; the TERM filter stays a
-    // pushed IN-list only while the batch's universe is literal-sized — a
-    // 10^5-term batch would bloat codegen without pruning anything the
-    // buckets didn't (the serveIn switch, shared)
-    def termFilter(df: DataFrame): DataFrame =
-      if (terms.isEmpty) df.filter(lit(false))
-      else if (terms.size <= 4096)
-        df.filter(col("term").isInCollection(terms))
-      else {
-        import spark.implicits._
-        df.join(broadcast(terms.toDF("term")), Seq("term"), "left_semi")
-      }
-    val stored = termFilter(GenStore.readGenOrEmpty(spark, droot, "postings",
+    // the bucket IN-list is <= nBuckets values; the TERM filter is
+    // [[termPrune]], shared with the BM25 serves
+    val stored = termPrune(GenStore.readGenOrEmpty(spark, droot, "postings",
         postingsSchema)
       .filter(if (buckets.isEmpty) lit(false)
-        else col("tbucket").isInCollection(buckets)))
+        else col("tbucket").isInCollection(buckets)), terms)
       .select("term", "doc_id", "positions")
     // the probe is a bounded count over the already-pruned scan — bounded,
     // and only on the queried terms
@@ -955,7 +915,7 @@ object LexLake {
         "(delete + upsert with their text, then reconcile) or rebuild the " +
         "store; a silent serve would drop those rows from every result.")
     withOverlays(stored, overlays, nb)(
-        termFilter(_).select("term", "doc_id", "positions"))
+        termPrune(_, terms).select("term", "doc_id", "positions"))
       .select(col("doc_id"), col("term"),
         explode(col("positions")).as("pos"))
       .localCheckpoint(true)
@@ -1086,16 +1046,13 @@ object LexLake {
                 && st.getLong(0) > 0) {
               val nd = st.getLong(0)
               val tdl = st.getLong(1)
-              val avgdl = tdl.toDouble / nd
               val dfAll = post.groupBy("term").agg(count(lit(1)).as("df"))
               val capped = dfAll.filter(col("df") > lit(impactDfThreshold))
               val scored = post.join(capped, Seq("term"))
-                .withColumn("idf",
-                  log((lit(nd.toDouble) - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)))
                 .withColumn("s_micros",
-                  round(col("idf") * ((col("tf") * lit(impactK1 + 1)) /
-                    (col("tf") + lit(impactK1) * (lit(1 - impactB) + lit(impactB) * (col("dl") / lit(avgdl)))))
-                    * lit(1000000.0), 0).cast("long"))
+                  graft.operators.TextStats.bm25TermMicros(col("tf"),
+                    col("df"), col("dl"), lit(nd.toDouble),
+                    lit(tdl.toDouble / nd), impactK1, impactB))
               // per-TERM truncation through the bounded heap — building
               // the tier must not haul a frequent term's full list to one
               // reducer either

@@ -32,6 +32,12 @@ import org.apache.spark.sql.types.DecimalType
   * [[bm25PerQueryImpact]], [[bm25PerQueryWithImpact]] (and, outside this
   * object, Dedup.lshQualityReport / ngramJaccardPairs / containmentPairs
   * and Similarity.retrievalEval / ndcgEval — same rule).
+  *
+  * `clearCache` reclaims `persist` pins only. The eager `localCheckpoint`
+  * pins of [[bm25PrfExpand]], [[bigramNll]] and [[dsirWeights]] are not in
+  * the SQL cache: their blocks stay until the checkpointed RDD is garbage
+  * collected, whatever the caller clears. An owned pin scope that releases
+  * them is ROADMAP item 2.
   */
 object TextStats {
 
@@ -212,6 +218,32 @@ object TextStats {
       .select("doc_id", "term", "tfidf", "rank")
   }
 
+  /** BM25's per-(term, doc) score (Robertson & Zaragoza 2009, §3.4): the ONE
+    * transcription every lexical scorer calls, pure or lake-resident. The
+    * pure operators pass their 1-row stats columns (`col("n_docs")`,
+    * [[statsAvgdl]]); [[graft.domain.LexLake]] passes its ledger-derived
+    * literals. The IEEE operation order is fixed — [[graft.TextOracle]]
+    * transcribes it verbatim — so the score is engine-exact. */
+  private[graft] def bm25TermScore(tf: Column, df: Column, dl: Column,
+                                   nDocs: Column, avgdl: Column,
+                                   k1: Double, b: Double): Column = {
+    val idf = log((nDocs.cast("double") - df + lit(0.5)) / (df + lit(0.5)) + lit(1.0))
+    idf * ((tf * lit(k1 + 1)) /
+      (tf + lit(k1) * (lit(1 - b) + lit(b) * (dl / avgdl))))
+  }
+
+  /** [[bm25TermScore]] as EXACT integer micros (rounded half-up), the unit
+    * every per-query sum and rank works in. */
+  private[graft] def bm25TermMicros(tf: Column, df: Column, dl: Column,
+                                    nDocs: Column, avgdl: Column,
+                                    k1: Double, b: Double): Column =
+    round(bm25TermScore(tf, df, dl, nDocs, avgdl, k1, b) * lit(1000000.0), 0)
+      .cast("long")
+
+  /** avgdl off the crossJoined 1-row (n_docs, total_dl) corpus stats. */
+  private def statsAvgdl: Column =
+    col("total_dl").cast("double") / col("n_docs")
+
   /** BM25 relevance of every document for a fixed query-term set (Robertson &
     * Zaragoza 2009, §3.4). Per-term partial scores land in FIXED columns (one
     * per query term, via conditional agg) and are summed left-to-right, so the
@@ -243,12 +275,8 @@ object TextStats {
     val dfT = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val scored = dl.join(tf.join(dfT, "term"), Seq("doc_id"), "left")
       .crossJoin(broadcast(stats))
-      .withColumn("avgdl", col("total_dl").cast("double") / col("n_docs"))
-      .withColumn("idf",
-        log((col("n_docs").cast("double") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)))
-      .withColumn("s",
-        col("idf") * ((col("tf") * lit(k1 + 1)) /
-          (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * (col("dl") / col("avgdl"))))))
+      .withColumn("s", bm25TermScore(col("tf"), col("df"), col("dl"),
+        col("n_docs"), statsAvgdl, k1, b))
     // positional column names (s0, s1, ...) — a term is data, not an
     // identifier; this also matches the oracle transcription exactly
     val termCols = queryTerms.zipWithIndex.map { case (t, i) =>
@@ -309,10 +337,6 @@ object TextStats {
       k1, b), n, "doc_id", "bm25_micros")
   }
 
-  /** [[bm25PerQuery]]'s summed (probe_id, doc_id, bm25_micros) frame
-    * WITHOUT the rank cut — shared with [[bm25ProximityRank]], which
-    * combines it with the proximity bonus before ONE final rank. `qterms`
-    * is the already-gated exploded (probe_id, term) frame. */
   /** The 1-row (n_docs, total_dl) corpus stats every BM25 pass crossJoins —
     * factored out so a multi-pass caller ([[bm25PrfExpand]]) computes the
     * corpus-length pass ONCE and shares the materialized row. */
@@ -335,11 +359,16 @@ object TextStats {
     * row. */
   private def prunedTermFreqs(docs: DataFrame, idCol: String,
                               textCol: String, qterms: DataFrame): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
-        TF.tokens(col(textCol)).as("__t"))
-      .select(col("doc_id"), size(col("__t")).cast("long").as("dl"),
-        explode(col("__t")).as("term"))
-      .join(broadcast(qterms.select("term").distinct()), Seq("term"), "left_semi")
+    termFreqsOf(docs.select(col(idCol).as("doc_id"),
+        TF.tokens(col(textCol)).as("__t")))(
+      _.join(broadcast(qterms.select("term").distinct()), Seq("term"), "left_semi"))
+
+  /** (doc_id, dl, term, tf) of a (doc_id, __t token array) frame; `prune`
+    * cuts the exploded (doc_id, dl, term) rows before the aggregation. */
+  private def termFreqsOf(tokens: DataFrame)(
+      prune: DataFrame => DataFrame): DataFrame =
+    prune(tokens.select(col("doc_id"), size(col("__t")).cast("long").as("dl"),
+        explode(col("__t")).as("term")))
       .groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
 
   /** (term, doc_id, s_micros, df): per-(doc, term) BM25 contributions in
@@ -351,24 +380,24 @@ object TextStats {
     val dfT = tf.groupBy("term").agg(count(lit(1)).as("df"))
     tf.join(dfT, "term")
       .crossJoin(broadcast(stats))
-      .withColumn("avgdl", col("total_dl").cast("double") / col("n_docs"))
-      .withColumn("idf",
-        log((col("n_docs").cast("double") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)))
-      .withColumn("s_micros",
-        round(col("idf") * ((col("tf") * lit(k1 + 1)) /
-          (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * (col("dl") / col("avgdl")))))
-          * lit(1000000.0), 0).cast("long"))
+      .withColumn("s_micros", bm25TermMicros(col("tf"), col("df"), col("dl"),
+        col("n_docs"), statsAvgdl, k1, b))
       .select("term", "doc_id", "s_micros", "df")
   }
 
   /** Per-(probe, doc) summed micros from a (term, doc_id, s_micros) posting
     * frame and the gated (probe_id, term) batch. */
-  private def sumPerProbe(posted: DataFrame, qterms: DataFrame): DataFrame =
+  private[graft] def sumPerProbe(posted: DataFrame,
+                                 qterms: DataFrame): DataFrame =
     posted.select("term", "doc_id", "s_micros")
       .join(broadcast(qterms), Seq("term"))
       .groupBy("probe_id", "doc_id")
       .agg(sum(col("s_micros")).as("bm25_micros"))
 
+  /** [[bm25PerQuery]]'s summed (probe_id, doc_id, bm25_micros) frame
+    * WITHOUT the rank cut — shared with [[bm25ProximityRank]], which
+    * combines it with the proximity bonus before ONE final rank. `qterms`
+    * is the already-gated exploded (probe_id, term) frame. */
   private def bm25ScoredPerQuery(docs: DataFrame, idCol: String,
                                  textCol: String, qterms: DataFrame,
                                  k1: Double, b: Double,
@@ -398,33 +427,18 @@ object TextStats {
     * the approximation a recall gate certifies (q165 measures it).
     * Truncation itself runs through the bounded per-TERM heap
     * ([[Serving.rankTopNMicros]] keyed by term) — building the tier never
-    * hauls a frequent term's full list to one reducer either. */
+    * hauls a frequent term's full list to one reducer either. The impact
+    * half of [[bm25PerQueryWithImpact]]: the full half stays an unexecuted
+    * plan. */
   def bm25PerQueryImpact(docs: DataFrame, idCol: String, textCol: String,
                          queries: DataFrame, queryIdCol: String,
                          termsCol: String, n: Int,
                          impactPostings: Int, dfThreshold: Long,
                          k1: Double = 1.2, b: Double = 0.75,
-                         maxBroadcastQueryTerms: Long = 1L << 20): DataFrame = {
-    require(n >= 1, s"n must be >= 1, got $n")
-    require(impactPostings >= 1,
-      s"impactPostings must be >= 1, got $impactPostings")
-    require(dfThreshold >= 0, s"dfThreshold must be >= 0, got $dfThreshold")
-    val qterms = Serving.queryTermsBatch(queries, queryIdCol, termsCol,
-      maxBroadcastQueryTerms)
-    // the impact cut: capped terms keep their per-term top-M rows only
-    // (bounded heap keyed by TERM — partial agg, no per-term full sort);
-    // uncapped terms pass through whole. posted is referenced by BOTH the
-    // capped and the uncapped arm — persist the query-term-pruned posting
-    // frame so the tokenize+score pipeline behind it runs once, not twice
-    // (guide §2.4; a lake deployment reads the prebuilt tier instead)
-    val postedP = scoredPostings(
-        prunedTermFreqs(docs, idCol, textCol, qterms),
-        corpusDlStats(docs, textCol), k1, b)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Serving.rankTopNMicros(
-      sumPerProbe(impactCut(postedP, impactPostings, dfThreshold), qterms),
-      n, "doc_id", "bm25_micros")
-  }
+                         maxBroadcastQueryTerms: Long = 1L << 20): DataFrame =
+    bm25PerQueryWithImpact(docs, idCol, textCol, queries, queryIdCol,
+      termsCol, n, impactPostings, dfThreshold, k1, b,
+      maxBroadcastQueryTerms)._2
 
   /** The per-term truncation shared by [[bm25PerQueryImpact]] and
     * [[bm25PerQueryWithImpact]]: terms with df > `dfThreshold` keep only
@@ -485,13 +499,13 @@ object TextStats {
     * still yields no rows).
     *
     * Scale shape: stage 1 is [[bm25PerQuery]] (scale-audited); the
-    * feedback tf agg is PRUNED to the feedback docs by a broadcast
-    * semi-join on the bounded probes×fbDocs id set — never a corpus
-    * (doc, term) agg; term selection runs the bounded STRING heap per
-    * probe; the expanded batch (probes × (orig + fbTerms) terms,
-    * pinned/materialized so stage 1 never re-runs) feeds stage 2's
-    * bm25PerQuery. Adding a probe adds no corpus scan beyond the two
-    * passes every PRF endpoint pays. */
+    * feedback tf agg is PRUNED to the feedback docs by a literal IN filter
+    * on the bounded probes×fbDocs id set — never a corpus (doc, term) agg;
+    * [[prfExpandedTerms]] (shared with the lake) selects the expansion
+    * through the bounded STRING heap per probe and pins the expanded
+    * batch so stage 1 never re-runs behind stage 2's bm25PerQuery. Adding
+    * a probe adds no corpus scan beyond the two passes every PRF endpoint
+    * pays. */
   def bm25PrfExpand(docs: DataFrame, idCol: String, textCol: String,
                     queries: DataFrame, queryIdCol: String, termsCol: String,
                     n: Int, fbDocs: Int, fbTerms: Int,
@@ -500,18 +514,10 @@ object TextStats {
     require(n >= 1, s"n must be >= 1, got $n")
     require(fbDocs >= 1, s"fbDocs must be >= 1, got $fbDocs")
     require(fbTerms >= 1, s"fbTerms must be >= 1, got $fbTerms")
-    // ONE gate for the whole call (r13 optimization), PINNED: the old shape
-    // gated `queries` three times — here, inside pass 1's bm25PerQuery, and
-    // inside pass 2's — at a scheduler round-trip each, and an unpinned
-    // non-deterministic source could gate one term set and score another
-    // (the prfServeIn pin rationale). Pass 1 scores the gated frame
-    // directly; bm25PerQuery(queries…) ≡ rankTopNMicros(bm25ScoredPerQuery)
-    // by definition.
-    // the batch gate and the corpus dl/stats pass touch DISJOINT inputs
-    // (queries vs docs) — run the two eager pins CONCURRENTLY (guide §2.6:
-    // overlap independent jobs), collapsing two serialized scheduler
-    // round-trips into one wait. The stats pass is still computed once and
-    // shared by BOTH scoring passes (one full corpus scan saved per call).
+    // ONE pinned gate for both passes (an unpinned non-deterministic source
+    // could gate one term set and score another), run CONCURRENTLY with the
+    // corpus dl/stats pass both passes share: the two eager pins touch
+    // disjoint inputs, so their scheduler round-trips overlap (guide §2.6)
     val (qterms, stats) = Serving.inParallel(
       Serving.queryTermsBatch(queries, queryIdCol, termsCol,
         maxBroadcastQueryTerms, pin = true),
@@ -522,60 +528,53 @@ object TextStats {
         fbDocs, "doc_id", "bm25_micros")
       .select("probe_id", "doc_id")
       .localCheckpoint(true)
-    // feedback-doc tf/dl only, pruned BEFORE the tokenize — and the prune
-    // is a LITERAL IN filter, not a semi-join (r14): the id set is bounded
-    // at probes × fbDocs by construction and `fb` is pinned, so collecting
-    // it is one bounded cache read (the broadcast semi-join collected the
-    // same rows to the driver anyway) — and unlike a semi-join, an IN
-    // predicate PUSHES INTO the parquet scan (PushedFilters: In(doc_id)),
-    // so the feedback pass reads only the row groups carrying feedback
-    // docs instead of scanning the corpus to drop it (guide §6: filters
-    // wrapped in joins do not push down)
+    // the feedback docs' postings, pruned BEFORE the tokenize by a LITERAL
+    // IN filter: the pinned id set is bounded at probes × fbDocs, so the
+    // collect is one bounded cache read, and unlike a semi-join the IN
+    // pushes into the parquet scan (PushedFilters: In(doc_id); guide §6)
     val fbIdSeq = fb.select("doc_id").distinct().collect().map(_.get(0)).toSeq
-    val ftf = docs
+    val fbRows = termFreqsOf(docs
       .select(col(idCol).as("doc_id"), col(textCol).as("__text"))
       .filter(if (fbIdSeq.isEmpty) lit(false)
         else col("doc_id").isInCollection(fbIdSeq))
-      .select(col("doc_id"), explode(TF.tokens(col("__text"))).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    val fdl = ftf.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-    val weights = fb.join(ftf, Seq("doc_id")).join(fdl, Seq("doc_id"))
+      .select(col("doc_id"), TF.tokens(col("__text")).as("__t")))(identity)
+    val expandedTerms = prfExpandedTerms(fb, fbRows, qterms, fbTerms,
+      maxBroadcastQueryTerms)
+    Serving.rankTopNMicros(
+      bm25ScoredPerQuery(docs, idCol, textCol, expandedTerms, k1, b,
+        sharedStats = Some(stats)),
+      n, "doc_id", "bm25_micros")
+  }
+
+  /** The expansion step of BOTH PRF serves ([[bm25PrfExpand]] and
+    * [[graft.domain.LexLake.prfServe]] differ only in where `fbRows`, the
+    * feedback docs' (term, doc_id, tf, dl) postings, come from). `fb` is
+    * the pinned pass-1 (probe_id, doc_id) frame, `qterms` the gated batch.
+    * Returns the PINNED expanded (probe_id, term) batch pass 2 scores
+    * directly — a disjoint union needing no distinct or re-gate (unique
+    * probe ids, one heap row per (probe, term), originals anti-joined out).
+    * The expansion adds up to probes × fbTerms rows past the gate's bound,
+    * so the pinned batch is re-counted against `maxBroadcastQueryTerms`. */
+  private[graft] def prfExpandedTerms(fb: DataFrame, fbRows: DataFrame,
+                                      qterms: DataFrame, fbTerms: Int,
+                                      maxBroadcastQueryTerms: Long): DataFrame = {
+    val weights = fb.join(fbRows, Seq("doc_id"))
       .join(qterms, Seq("probe_id", "term"), "left_anti")
       .withColumn("__w",
         floor(col("tf") * lit(1000000.0) / col("dl")).cast("long"))
       .groupBy("probe_id", "term")
       .agg(sum(col("__w")).as("w_micros"))
-    val expansion = Serving.rankTopNMicrosStr(weights, fbTerms,
-      "term", "w_micros")
-    // the expanded (probe_id, term) batch feeds pass 2 DIRECTLY — the old
-    // collect_set → re-explode → re-gate roundtrip cost a third gate action
-    // and an array build for nothing: probe ids are unique (the gate
-    // checked), the union is disjoint (expansion terms were anti-joined
-    // against the originals), and the exploded row count is bounded by
-    // construction at (gated originals) + probes × fbTerms. Pinned so
-    // pass 1 never re-runs behind pass 2's plan.
-    // no distinct(): the union is disjoint by construction — the gate
-    // deduplicated the originals per probe, the expansion heap emits one
-    // row per (probe, term), and the anti-join above excluded originals
-    // from the expansion — so the distinct's exchange bought nothing
-    val expandedTerms = qterms
-      .unionByName(expansion.select("probe_id", "term"))
+    val expanded = qterms
+      .unionByName(Serving.rankTopNMicrosStr(weights, fbTerms, "term",
+        "w_micros").select("probe_id", "term"))
       .localCheckpoint(true)
-    // re-assert the broadcast contract on the EXPANDED batch (r13 advice):
-    // pass 2 broadcasts this frame onto the postings, and the expansion
-    // adds up to probes x fbTerms rows past the gate's original bound; the
-    // frame is pinned, so the count is one bounded cache read, not a plan
-    // re-execution
-    val nExpanded = expandedTerms.count()
+    val nExpanded = expanded.count()
     require(nExpanded <= maxBroadcastQueryTerms,
       s"expanded query batch carries $nExpanded (probe, term) rows > " +
         s"maxBroadcastQueryTerms=$maxBroadcastQueryTerms — it BROADCASTS " +
         "onto the postings in the requery pass. Shrink the batch or " +
         "fbTerms, or raise the cap if executors are sized for it.")
-    Serving.rankTopNMicros(
-      bm25ScoredPerQuery(docs, idCol, textCol, expandedTerms, k1, b,
-        sharedStats = Some(stats)),
-      n, "doc_id", "bm25_micros")
+    expanded
   }
 
   /** EXACT PHRASE match — the positional posting join (the classic

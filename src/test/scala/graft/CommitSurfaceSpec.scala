@@ -17,26 +17,10 @@ class CommitSurfaceSpec extends AnyFunSuite {
       // a path built with the displaced-state suffix
       """\+\s*"__old"""", """s"[^"]*__old[^"]*"""", """"__tmp",\s*"__old""""
     ).map(_.r)
-    // comment lines (scaladoc, block and line comments) may name them
-    def isComment(line: String): Boolean = {
-      val t = line.trim
-      t.startsWith("//") || t.startsWith("/*") || t.startsWith("*")
-    }
-    def scalaFiles(d: java.io.File): Seq[java.io.File] =
-      Option(d.listFiles()).toSeq.flatten.flatMap { f =>
-        if (f.isDirectory) scalaFiles(f)
-        else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-      }
-    val files = scalaFiles(new java.io.File("src/main/scala"))
-    assert(files.nonEmpty, "no sources found under src/main/scala")
-    val found = files.flatMap { f =>
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      val lines = try src.getLines().toList finally src.close()
-      lines.zipWithIndex.filterNot(l => isComment(l._1)).flatMap {
-        case (line, i) =>
-          banned.filter(_.findFirstIn(line).isDefined)
-            .map(_ => s"${f.getPath}:${i + 1}: ${line.trim}")
-      }
+    val found = SourceScan.mainCode().flatMap(_._2).flatMap {
+      case (at, line) =>
+        banned.filter(_.findFirstIn(line).isDefined)
+          .map(_ => s"$at: ${line.trim}")
     }
     assert(found.isEmpty,
       s"${found.size} rename-swap hit(s) — commit through GenStore instead:\n" +

@@ -27,4 +27,13 @@ abstract class SparkSpec extends AnyFunSuite {
 
   def sortedRows(df: DataFrame): Seq[Seq[Any]] =
     rows(df).sortBy(_.map(v => if (v == null) "" else v.toString).mkString("|"))
+
+  /** The text inside a FileScan line's `key: [...]` bracket (key is
+    * `PartitionFilters` or `PushedFilters`), up to its first `]`; empty when
+    * the line has none. A plan pin must read here: the scan line also lists
+    * every partition and read column among its outputs, whatever it prunes. */
+  def scanFilters(line: String, key: String): String = {
+    val i = line.indexOf(s"$key: [")
+    if (i < 0) "" else line.substring(i + key.length + 3).takeWhile(_ != ']')
+  }
 }

@@ -68,13 +68,17 @@ class LexLakeSpec extends SparkSpec {
       Seq((1L, Seq("spark"))).toDF("probe_id", "terms"), n = 5)
     // (inputFiles lists the relation pre-pushdown, so assert on the
     // executed plan: the tbucket predicate must land in PartitionFilters —
-    // directory-level pruning — and the term predicate in PushedFilters)
+    // directory-level pruning — and the term predicate in PushedFilters,
+    // each read inside its bracket: the scan line lists tbucket and term
+    // among its output columns whatever it prunes)
     val plan = df.queryExecution.executedPlan.toString
-    val partLines = plan.linesIterator
-      .filter(_.contains("PartitionFilters:")).toSeq
-    assert(partLines.exists(l => l.contains("tbucket")), plan.take(4000))
-    assert(plan.linesIterator.exists(l =>
-      l.contains("PushedFilters:") && l.contains("term")), plan.take(4000))
+    val scans = plan.linesIterator
+      .filter(l => l.contains("FileScan") && l.contains("postings")).toSeq
+    assert(scans.nonEmpty, plan.take(4000))
+    assert(scans.forall(l =>
+      scanFilters(l, "PartitionFilters").contains("tbucket")), plan.take(4000))
+    assert(scans.forall(l => scanFilters(l, "PushedFilters")
+      .contains("EqualTo(term,spark)")), plan.take(4000))
   }
 
   test("serve ranks through the bounded heap — no probe-keyed window above the posting join") {
@@ -430,15 +434,12 @@ class LexLakeSpec extends SparkSpec {
     assert(!plans.isEmpty, "the batch's postings scan must be captured")
     val plan = plans.peek()
     // read inside each bracket: the scan line also lists tbucket and term
-    // among its output columns whatever it prunes
-    def filters(l: String, key: String): String = {
-      val i = l.indexOf(s"$key: [")
-      if (i < 0) "" else l.substring(i + key.length + 3).takeWhile(_ != ']')
-    }
+    // among its output columns whatever it prunes, and an inferred
+    // IsNotNull(term) is pushed even when the term filter is not
     assert(plan.linesIterator.exists(l =>
-      filters(l, "PartitionFilters").contains("tbucket")), plan.take(4000))
+      scanFilters(l, "PartitionFilters").contains("tbucket")), plan.take(4000))
     assert(plan.linesIterator.exists(l =>
-      filters(l, "PushedFilters").contains("term")), plan.take(4000))
+      scanFilters(l, "PushedFilters").contains("In(term, [")), plan.take(4000))
   }
 
   test("streaming twins: micro-batch ingest and serve pick up a mid-stream reconcile") {
@@ -718,6 +719,31 @@ class LexLakeSpec extends SparkSpec {
       .select($"probe_id", $"doc_id".as("neighbor_id"), $"rank")
     assert(gotHybrid == served(graft.operators.Similarity.rrfFuseAll(
       Seq(vec, lex), k = 4, kRrf = 60)))
+  }
+
+  test("an expanded PRF batch one row over maxBroadcastQueryTerms is refused with ONE message by bm25PrfExpand and prfServe; the cap serves") {
+    // the original batch explodes to 8 (probe, term) rows (2 + 3 + 2 + 1);
+    // with fbTerms = 2 the three matching probes add two expansion terms
+    // each, 14 rows in all. A cap of 13 passes the original gate and must
+    // refuse the EXPANDED batch — the same refusal from both PRF serves,
+    // which share the expansion step
+    val root = freshRoot("prfcap")
+    LexLake.ingest(spark, root, corpus().toDF("doc_id", "text"), nBuckets = 8)
+    def pure(cap: Long): DataFrame =
+      TextStats.bm25PrfExpand(corpus().toDF("doc_id", "text"), "doc_id",
+        "text", queriesDf, "probe_id", "terms", n = 5, fbDocs = 3,
+        fbTerms = 2, maxBroadcastQueryTerms = cap)
+    def lake(cap: Long): DataFrame =
+      LexLake.prfServe(spark, root, queriesDf, n = 5, fbDocs = 3,
+        fbTerms = 2, maxBroadcastQueryTerms = cap)
+    val ePure = intercept[IllegalArgumentException](pure(13L))
+    assert(ePure.getMessage.contains("expanded query batch carries 14 " +
+      "(probe, term) rows > maxBroadcastQueryTerms=13"), ePure.getMessage)
+    val eLake = intercept[IllegalArgumentException](lake(13L))
+    assert(eLake.getMessage == ePure.getMessage)
+    val atCap = served(lake(14L))
+    assert(atCap.nonEmpty && atCap == served(pure(14L)))
+    assert(atCap == served(lake(1L << 20)))
   }
 
   test("proximity serve over stored positional postings equals proximityPairs through every mutation") {
