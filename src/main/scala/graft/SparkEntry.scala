@@ -1873,15 +1873,13 @@ object SparkEntry {
       val pairs = Dedup.embeddingNearDupPairs(gated, "vec_id", "embedding", threshold = 0.4)
       // kept is referenced twice below — as the kNN corpus AND as the probe
       // source — and its plan embeds the pairwise near-dup stage (the
-      // dominant cost here); unpinned, that stage executes once per
-      // reference (guide §2.4). The localCheckpoint is NOT in the SQL
-      // cache: the clearCache that Bench/Verify run between queries does
-      // not release it, and nothing unpersists it, so its blocks stay
-      // until the RDD is garbage collected (an owned pin is ROADMAP
-      // item 2).
+      // dominant cost here); uncached, that stage executes once per
+      // reference (guide §2.4). knnJoin's probe-cap count materializes the
+      // cache and both references read it; callers reclaim it via
+      // clearCache (q75's `clean` contract)
       val kept = gated.join(pairs.select(col("id_b").as("vec_id")).distinct(),
         Seq("vec_id"), "left_anti")
-        .localCheckpoint(true)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val probes = kept.filter(col("vec_id") % 25 === 0)
       Similarity.knnJoin(kept, "vec_id", "embedding",
         probes, "vec_id", "embedding", k = 5, excludeSelf = true)

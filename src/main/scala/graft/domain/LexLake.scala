@@ -756,12 +756,8 @@ object LexLake {
     * each probe's top-n — [[serve]]'s tail, shared with [[reconcile]]'s
     * impact adoption gate so the gate measures EXACTLY the serving
     * computation. `dfT` must carry each queried term's TRUE df. Per-probe
-    * rank via the bounded heap (Serving.rankTopNMicros, the knnJoin
-    * partial-agg idiom): a frequent term's candidate set is O(corpus)
-    * rows, and a probe_id-keyed row_number would haul ALL of them to one
-    * reducer — the heap caps the keyed exchange at probes x partitions x
-    * n. Exact integer micros + the (micros desc, doc_id asc) total order
-    * keep the output hash-identical to the window form. */
+    * rank via the bounded heap ([[graft.operators.Serving.rankTopNMicros]]),
+    * never a probe_id-keyed window. */
   private def scoreBatch(postL: DataFrame, dfT: DataFrame, nDocs: Long,
                          totalDl: Long, qterms: DataFrame, n: Int,
                          k1: Double, b: Double): DataFrame =

@@ -1,8 +1,7 @@
 package graft.operators
 
+import graft.plans.TopN
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 /** The shared SERVING-BATCH contract, factored once (r10 verdict asks #1 and
@@ -20,17 +19,12 @@ import org.apache.spark.sql.functions._
   *     three-actions-per-serve nit), returning the exploded, deduplicated,
   *     optionally pinned (probe_id, term) frame every lexical retriever
   *     scores against.
-  *  3. [[rankTopNMicros]] — the bounded-heap per-probe rank over EXACT
-  *     integer micro scores. The `row_number` window form partitions by
-  *     probe_id only: every candidate matching a frequent term is hauled to
-  *     ONE reducer and fully sorted, per probe — a skewed-key full shuffle
-  *     at 100 TB (the r10 top finding). The heap form is the
-  *     [[Similarity.knnJoin]] partial-agg idiom: an Aggregator whose buffer
-  *     caps at n, so map-side combine (ObjectHashAggregate partial) reduces
-  *     each partition to <= n rows per probe BEFORE the exchange — shuffle
-  *     volume is probes x partitions x n, never candidates. Scores are
-  *     integer micros with the deterministic (micros desc, id asc) total
-  *     order, so the heap output is HASH-IDENTICAL to the window form.
+  *  3. [[rankTopNMicros]] — the per-probe rank through the one bounded
+  *     heap, [[graft.plans.TopN]], over exact integer micros or the kNN
+  *     cosines. A `row_number` window partitioned by probe_id alone hauls
+  *     every candidate of a frequent term to ONE reducer (the r10 top
+  *     finding); the heap's partial aggregate caps the exchange at
+  *     probes x partitions x n rows, hash-identical to the window form.
   *
   * ==Eager pinning tradeoff (localCheckpoint)==
   * The serving gates pin bounded frames with `localCheckpoint(eager=true)`:
@@ -48,100 +42,27 @@ import org.apache.spark.sql.functions._
   */
 object Serving {
 
-  /** Bounded per-key top-n aggregator over (micros, id) candidates — the
-    * integer-score twin of [[Similarity]]'s float TopKAgg (kept separate
-    * because the lexical/fusion scores are exact longs end to end: comparing
-    * them as doubles would lose exactness above 2^53). Buffer is a
-    * best-first list capped at n; order (micros desc, id asc) — the house
-    * tie rule, identical to the SQL oracle's row_number. */
-  private final class TopNMicrosAgg(n: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[
-        (Long, Long), Seq[(Long, Long)], Seq[(Long, Long)]] {
-    private def better(a: (Long, Long), b: (Long, Long)): Boolean =
-      a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
-    def zero: Seq[(Long, Long)] = Vector.empty
-    def reduce(buf: Seq[(Long, Long)], x: (Long, Long)): Seq[(Long, Long)] =
-      if (buf.size >= n && !better(x, buf.last)) buf
-      else {
-        val (hd, tl) = buf.span(better(_, x))
-        (hd ++ (x +: tl)).take(n)
-      }
-    def merge(a: Seq[(Long, Long)], b: Seq[(Long, Long)]): Seq[(Long, Long)] =
-      b.foldLeft(a)(reduce)
-    def finish(buf: Seq[(Long, Long)]): Seq[(Long, Long)] = buf
-    def bufferEncoder: org.apache.spark.sql.Encoder[Seq[(Long, Long)]] =
-      ExpressionEncoder[Seq[(Long, Long)]]()
-    def outputEncoder: org.apache.spark.sql.Encoder[Seq[(Long, Long)]] =
-      ExpressionEncoder[Seq[(Long, Long)]]()
-  }
-
-  /** The heap as a udaf: `topNMicros(n)(microsCol, idCol)` aggregates to the
-    * per-group top-n (micros, id) pairs, best first. */
-  def topNMicros(n: Int): UserDefinedFunction =
-    udaf(new TopNMicrosAgg(n), ExpressionEncoder[(Long, Long)]())
-
-  /** [[TopNMicrosAgg]] with STRING ids — for per-group term selection
-    * (query expansion picks top-weighted TERMS, not doc ids). Order
-    * (micros desc, id asc) with binary string comparison — identical to
-    * SQL's ORDER BY term on the ASCII token vocabulary (the q164 min(term)
-    * parity contract). */
-  private final class TopNMicrosStrAgg(n: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[
-        (Long, String), Seq[(Long, String)], Seq[(Long, String)]] {
-    private def better(a: (Long, String), b: (Long, String)): Boolean =
-      a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
-    def zero: Seq[(Long, String)] = Vector.empty
-    def reduce(buf: Seq[(Long, String)], x: (Long, String)): Seq[(Long, String)] =
-      if (buf.size >= n && !better(x, buf.last)) buf
-      else {
-        val (hd, tl) = buf.span(better(_, x))
-        (hd ++ (x +: tl)).take(n)
-      }
-    def merge(a: Seq[(Long, String)], b: Seq[(Long, String)]): Seq[(Long, String)] =
-      b.foldLeft(a)(reduce)
-    def finish(buf: Seq[(Long, String)]): Seq[(Long, String)] = buf
-    def bufferEncoder: org.apache.spark.sql.Encoder[Seq[(Long, String)]] =
-      ExpressionEncoder[Seq[(Long, String)]]()
-    def outputEncoder: org.apache.spark.sql.Encoder[Seq[(Long, String)]] =
-      ExpressionEncoder[Seq[(Long, String)]]()
-  }
-
-  /** [[rankTopNMicros]] for STRING-id candidates (term selection): output
-    * (keyCol, idCol, microsCol, rank), rank 1..n by (micros desc, id asc). */
-  def rankTopNMicrosStr(scored: DataFrame, n: Int,
-                        idCol: String, microsCol: String,
-                        keyCol: String = "probe_id"): DataFrame = {
-    require(n >= 1, s"n must be >= 1, got $n")
-    val topn = udaf(new TopNMicrosStrAgg(n), ExpressionEncoder[(Long, String)]())
-    scored
-      .groupBy(col(keyCol))
-      .agg(topn(col(microsCol), col(idCol)).as("__topn"))
-      .select(col(keyCol), posexplode(col("__topn")).as(Seq("__pos", "__nb")))
-      .select(col(keyCol),
-        col("__nb._2").as(idCol),
-        col("__nb._1").as(microsCol),
-        (col("__pos") + 1).cast("long").as("rank"))
-  }
-
-  /** Per-probe top-n rank of a `(probe_id, idCol, microsCol)` scored frame
-    * via the bounded heap — the drop-in replacement for
-    * `row_number().over(Window.partitionBy("probe_id").orderBy(micros desc,
-    * id))` + `filter(rank <= n)`, with the exchange capped at
-    * probes x partitions x n rows. Output columns keep the input names:
-    * (probe_id, idCol, microsCol, rank), rank 1..n by (micros desc, id
-    * asc). */
+  /** Per-key top-n rank of a `(keyCol, idCol, scoreCol)` scored frame
+    * through the one bounded heap, [[graft.plans.TopN]]: the drop-in
+    * replacement for `row_number().over(Window.partitionBy(keyCol)
+    * .orderBy(score desc, id))` + `filter(rank <= n)`, with the exchange
+    * capped at keys x partitions x n rows. The score is exact integer
+    * micros (lexical and fusion scores) or a double (the kNN cosines); the
+    * id is a long (doc and neighbor ids) or a string (PRF term selection).
+    * Rows whose score is null or NaN have no rank and drop. Output columns
+    * keep the input names: (keyCol, idCol, scoreCol, rank), rank 1..n by
+    * (score desc, id asc). */
   def rankTopNMicros(scored: DataFrame, n: Int,
-                     idCol: String, microsCol: String,
+                     idCol: String, scoreCol: String,
                      keyCol: String = "probe_id"): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
-    val topn = topNMicros(n)
     scored
       .groupBy(col(keyCol))
-      .agg(topn(col(microsCol), col(idCol)).as("__topn"))
+      .agg(TopN.column(col(scoreCol), col(idCol), n).as("__topn"))
       .select(col(keyCol), posexplode(col("__topn")).as(Seq("__pos", "__nb")))
       .select(col(keyCol),
         col("__nb._2").as(idCol),
-        col("__nb._1").as(microsCol),
+        col("__nb._1").as(scoreCol),
         (col("__pos") + 1).cast("long").as("rank"))
   }
 

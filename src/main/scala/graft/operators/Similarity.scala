@@ -655,38 +655,19 @@ object Similarity {
       .limit(k)
   }
 
-  /** Bounded per-key top-k aggregator over (cos, id) candidates: the keyed
-    * generalization of `TakeOrderedAndProject`. The buffer is a best-first
-    * list capped at k, so PARTIAL aggregation (ObjectHashAggregate map-side
-    * combine) reduces each corpus partition to at most k rows per probe
-    * BEFORE the exchange — shuffle volume is probes x partitions x k, never
-    * candidates. Order: (cos desc, id asc) over the already-ROUNDED score,
-    * so ranking ties break identically to the SQL oracle's row_number. */
-  private final class TopKAgg(k: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[
-        (Double, Long), Seq[(Double, Long)], Seq[(Double, Long)]] {
-    // total order even on NaN (Double.compare, NaN greatest) — the callers
-    // filter NaN out, but a partial order here would silently corrupt the
-    // sorted-buffer invariant for any direct caller that does not
-    private def better(a: (Double, Long), b: (Double, Long)): Boolean = {
-      val c = java.lang.Double.compare(a._1, b._1)
-      c > 0 || (c == 0 && a._2 < b._2)
-    }
-    def zero: Seq[(Double, Long)] = Vector.empty
-    def reduce(buf: Seq[(Double, Long)], x: (Double, Long)): Seq[(Double, Long)] =
-      if (buf.size >= k && !better(x, buf.last)) buf
-      else {
-        val (hd, tl) = buf.span(better(_, x))
-        (hd ++ (x +: tl)).take(k)
-      }
-    def merge(a: Seq[(Double, Long)], b: Seq[(Double, Long)]): Seq[(Double, Long)] =
-      b.foldLeft(a)(reduce)
-    def finish(buf: Seq[(Double, Long)]): Seq[(Double, Long)] = buf
-    def bufferEncoder: org.apache.spark.sql.Encoder[Seq[(Double, Long)]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Double, Long)]]()
-    def outputEncoder: org.apache.spark.sql.Encoder[Seq[(Double, Long)]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Double, Long)]]()
-  }
+  /** The tail of every kNN join below: each (probe_id, neighbor_id)
+    * candidate pair (self pairs dropped under `excludeSelf`) scores its
+    * 6-decimal-rounded cosine ONCE and ranks per probe through the bounded
+    * heap ([[Serving.rankTopNMicros]]), which drops the null or NaN cosine
+    * of a zero-norm or overflowed vector. Output: (probe_id, neighbor_id,
+    * cos, rank), rank 1..k by (cos desc, neighbor_id asc). */
+  private def rankByCosine(cand: DataFrame, vecA: String, vecB: String,
+                           k: Int, excludeSelf: Boolean = false): DataFrame =
+    Serving.rankTopNMicros(
+      (if (excludeSelf) cand.filter(col("neighbor_id") =!= col("probe_id")) else cand)
+        .select(col("probe_id"), col("neighbor_id"),
+          round(VF.cosine(col(vecA), col(vecB)), 6).as("cos")),
+      k, "neighbor_id", "cos")
 
   /** The way out named when a broadcast side passes its cap. */
   private val probeCapRemedy =
@@ -697,8 +678,8 @@ object Similarity {
   /** Batch kNN join (the retrieval/hard-negative-mining primitive): EVERY
     * probe row gets its k nearest corpus rows by cosine. The probe side is
     * small by contract (a query/seed set) and is BROADCAST against one corpus
-    * scan; per-probe top-k runs through `TopKAgg`, so the only exchange
-    * carries <= k rows per (probe x corpus partition) — the corpus itself is
+    * scan; per-probe top-k runs through the bounded heap, so the only
+    * exchange carries <= k rows per (probe x corpus partition) — the corpus itself is
     * never shuffled, and the plan survives a 100 TB corpus untouched.
     * Output: (probe_id, neighbor_id, cos, rank) with rank 1..k by
     * (cos desc, neighbor_id asc) on the 6-decimal-rounded score.
@@ -720,23 +701,11 @@ object Similarity {
     require(k >= 1, s"k must be >= 1, got $k")
     Serving.requireBroadcastable(probe, maxBroadcastProbes, "probe side",
       probeCapRemedy)
-    val topk = udaf(new TopKAgg(k),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Double, Long)]())
     val cand = corpus
-      .select(col(corpusId).cast("long").as("__nid"), col(corpusVec).as("__cv"))
+      .select(col(corpusId).cast("long").as("neighbor_id"), col(corpusVec).as("__cv"))
       .crossJoin(broadcast(
         probe.select(col(probeId).cast("long").as("probe_id"), col(probeVec).as("__pv"))))
-    val filtered = if (excludeSelf) cand.filter(col("__nid") =!= col("probe_id")) else cand
-    filtered
-      .withColumn("cos", round(VF.cosine(col("__cv"), col("__pv")), 6))
-      .filter(col("cos").isNotNull && !isnan(col("cos"))) // zero-norm / overflowed vectors have no defined angle
-      .groupBy(col("probe_id"))
-      .agg(topk(col("cos"), col("__nid")).as("__topk"))
-      .select(col("probe_id"), posexplode(col("__topk")).as(Seq("__pos", "__nb")))
-      .select(col("probe_id"),
-        col("__nb._2").as("neighbor_id"),
-        col("__nb._1").as("cos"),
-        (col("__pos") + 1).cast("long").as("rank"))
+    rankByCosine(cand, "__cv", "__pv", k, excludeSelf)
   }
 
   /** Hard-negative mining (the contrastive-training variant of [[knnJoin]]):
@@ -758,24 +727,13 @@ object Similarity {
     require(k >= 1, s"k must be >= 1, got $k")
     Serving.requireBroadcastable(probe, maxBroadcastProbes, "probe side",
       probeCapRemedy)
-    val topk = udaf(new TopKAgg(k),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Double, Long)]())
-    corpus
-      .select(col(corpusId).cast("long").as("__nid"), col(corpusVec).as("__cv"),
+    rankByCosine(corpus
+      .select(col(corpusId).cast("long").as("neighbor_id"), col(corpusVec).as("__cv"),
         col(corpusLabel).as("__cl"))
       .crossJoin(broadcast(
         probe.select(col(probeId).cast("long").as("probe_id"),
           col(probeVec).as("__pv"), col(probeLabel).as("__pl"))))
-      .filter(col("__cl") =!= col("__pl"))
-      .withColumn("cos", round(VF.cosine(col("__cv"), col("__pv")), 6))
-      .filter(col("cos").isNotNull && !isnan(col("cos")))
-      .groupBy(col("probe_id"))
-      .agg(topk(col("cos"), col("__nid")).as("__topk"))
-      .select(col("probe_id"), posexplode(col("__topk")).as(Seq("__pos", "__nb")))
-      .select(col("probe_id"),
-        col("__nb._2").as("neighbor_id"),
-        col("__nb._1").as("cos"),
-        (col("__pos") + 1).cast("long").as("rank"))
+      .filter(col("__cl") =!= col("__pl")), "__cv", "__pv", k)
   }
 
   /** IVF-accelerated batch kNN join: both sides take coarse-list assignment
@@ -793,26 +751,14 @@ object Similarity {
     require(k >= 1, s"k must be >= 1, got $k")
     Serving.requireBroadcastable(probe, maxBroadcastProbes, "probe side",
       probeCapRemedy)
-    val topk = udaf(new TopKAgg(k),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Double, Long)]())
     val c = ivfAssign(
-      corpus.select(col(corpusId).cast("long").as("__nid"), col(corpusVec).as("__cv")),
+      corpus.select(col(corpusId).cast("long").as("neighbor_id"), col(corpusVec).as("__cv")),
       "__cv", centroids)
     val p = ivfAssign(
       probe.select(col(probeId).cast("long").as("probe_id"), col(probeVec).as("__pv")),
       "__pv", centroids)
     val cand = c.join(broadcast(p), Seq("ivf_list"))
-    val filtered = if (excludeSelf) cand.filter(col("__nid") =!= col("probe_id")) else cand
-    filtered
-      .withColumn("cos", round(VF.cosine(col("__cv"), col("__pv")), 6))
-      .filter(col("cos").isNotNull && !isnan(col("cos")))
-      .groupBy(col("probe_id"))
-      .agg(topk(col("cos"), col("__nid")).as("__topk"))
-      .select(col("probe_id"), posexplode(col("__topk")).as(Seq("__pos", "__nb")))
-      .select(col("probe_id"),
-        col("__nb._2").as("neighbor_id"),
-        col("__nb._1").as("cos"),
-        (col("__pos") + 1).cast("long").as("rank"))
+    rankByCosine(cand, "__cv", "__pv", k, excludeSelf)
   }
 
   /** Batched MULTI-PROBE kNN join over a PRE-ASSIGNED corpus — the serving
@@ -824,7 +770,7 @@ object Similarity {
     * write time — and widens the probe side to `nprobe` gate lists (the
     * q122/q124 multi-probe recall dial applied to the batch join). A corpus
     * row matches a probe AT MOST ONCE (one stored list vs a set of distinct
-    * gate lists), so the join needs no dedup. Same bounded-heap TopKAgg
+    * gate lists), so the join needs no dedup. Same bounded-heap
     * tail as [[knnJoin]]: partial aggregation reduces each corpus partition
     * to <= k rows per probe before the exchange, so shuffle volume is
     * probes x partitions x k and the corpus is scanned once, never
@@ -837,8 +783,6 @@ object Similarity {
                            excludeSelf: Boolean = false,
                            maxBroadcastProbes: Long = 1L << 20): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val topk = udaf(new TopKAgg(k),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Double, Long)]())
     val p0 = probe.select(col(probeId).cast("long").as("probe_id"),
       col(probeVec).as("__pv"))
     // BOTH serving gates in ONE bounded agg (r13 optimization — the
@@ -869,21 +813,10 @@ object Similarity {
       .select(col("probe_id"), col("__pv"),
         explode(col("gate_lists")).as(listCol))
     val cand = assigned
-      .select(col(listCol), col(corpusId).cast("long").as("__nid"),
+      .select(col(listCol), col(corpusId).cast("long").as("neighbor_id"),
         col(corpusVec).as("__cv"))
       .join(broadcast(p), Seq(listCol))
-    val filtered =
-      if (excludeSelf) cand.filter(col("__nid") =!= col("probe_id")) else cand
-    filtered
-      .withColumn("cos", round(VF.cosine(col("__cv"), col("__pv")), 6))
-      .filter(col("cos").isNotNull && !isnan(col("cos")))
-      .groupBy(col("probe_id"))
-      .agg(topk(col("cos"), col("__nid")).as("__topk"))
-      .select(col("probe_id"), posexplode(col("__topk")).as(Seq("__pos", "__nb")))
-      .select(col("probe_id"),
-        col("__nb._2").as("neighbor_id"),
-        col("__nb._1").as("cos"),
-        (col("__pos") + 1).cast("long").as("rank"))
+    rankByCosine(cand, "__cv", "__pv", k, excludeSelf)
   }
 
   /** Quantized-scan + FLOAT-REFINE batch kNN — the standard IVF-SQ serving
@@ -904,7 +837,7 @@ object Similarity {
     * lists. Output: (probe_id, neighbor_id, cos, rank) with cos the EXACT
     * float score, rank 1..k by (cos desc, neighbor_id asc) on the rounded
     * score — ties at the k·r candidate cut break identically to the SQL
-    * row_number (TopKAgg's order), so the refine set is deterministic. */
+    * row_number (the heap's order), so the refine set is deterministic. */
   def ivfSqRefineKnnJoin(sqStore: DataFrame, floatStore: DataFrame,
                          corpusId: String, sqVec: String, listCol: String,
                          floatVec: String,
@@ -926,21 +859,10 @@ object Similarity {
     // each candidate carries its probe's full-precision vector into the
     // broadcast, so the float tier is scanned ONCE with no second probe join
     val candp = cand.join(pframe, Seq("probe_id"))
-    val topk = udaf(new TopKAgg(k),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Double, Long)]())
-    floatStore
+    rankByCosine(floatStore
       .select(col(corpusId).cast("long").as("neighbor_id"),
         col(floatVec).as("__fv"))
-      .join(broadcast(candp), Seq("neighbor_id"))
-      .withColumn("cos", round(VF.cosine(col("__fv"), col("__pv")), 6))
-      .filter(col("cos").isNotNull && !isnan(col("cos")))
-      .groupBy(col("probe_id"))
-      .agg(topk(col("cos"), col("neighbor_id")).as("__topk"))
-      .select(col("probe_id"), posexplode(col("__topk")).as(Seq("__pos", "__nb")))
-      .select(col("probe_id"),
-        col("__nb._2").as("neighbor_id"),
-        col("__nb._1").as("cos"),
-        (col("__pos") + 1).cast("long").as("rank"))
+      .join(broadcast(candp), Seq("neighbor_id")), "__fv", "__pv", k)
   }
 
   /** Reciprocal-rank FUSION of a per-probe vector result list with a

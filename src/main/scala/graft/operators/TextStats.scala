@@ -327,12 +327,7 @@ object TextStats {
     val qterms = Serving.queryTermsBatch(queries, queryIdCol, termsCol,
       maxBroadcastQueryTerms)
     // per-probe rank via the bounded heap (Serving.rankTopNMicros), never a
-    // probe_id-keyed window: a frequent term's candidate set is O(corpus)
-    // rows, and a single-key row_number hauls ALL of them to one reducer —
-    // the heap's partial agg caps the exchange at probes x partitions x n
-    // (the r10 verdict's top finding). Scores are exact integer micros with
-    // the (micros desc, doc_id asc) total order, so output is
-    // hash-identical to the window form.
+    // probe_id-keyed window (the r10 verdict's top finding)
     Serving.rankTopNMicros(bm25ScoredPerQuery(docs, idCol, textCol, qterms,
       k1, b), n, "doc_id", "bm25_micros")
   }
@@ -565,7 +560,7 @@ object TextStats {
       .groupBy("probe_id", "term")
       .agg(sum(col("__w")).as("w_micros"))
     val expanded = qterms
-      .unionByName(Serving.rankTopNMicrosStr(weights, fbTerms, "term",
+      .unionByName(Serving.rankTopNMicros(weights, fbTerms, "term",
         "w_micros").select("probe_id", "term"))
       .localCheckpoint(true)
     val nExpanded = expanded.count()

@@ -76,7 +76,7 @@ class PlanSpec extends SparkSpec {
 
   test("per-probe lexical rank is the bounded heap, never a probe-keyed window (q162)") {
     // the r10 top finding, closed: the per-probe rank runs through the
-    // TopN Aggregator (ObjectHashAggregate, partial map-side combine →
+    // native TopN aggregate (ObjectHashAggregate, partial map-side combine →
     // exchange carries <= probes x partitions x n rows); a row_number
     // window keyed only by probe_id would haul a frequent term's whole
     // candidate set to one reducer
@@ -530,7 +530,7 @@ class PlanSpec extends SparkSpec {
     val scans = p.linesIterator.count(_.contains("ReadSchema"))
     assert(scans == 2, s"expected 2 corpus scans (probe batch pinned), got $scans:\n${p.take(1200)}")
     assert(p.contains(PlanText.pinnedScan), "probe batch pin is gone")
-    // per-probe top-k runs through the bounded TopKAgg (ObjectHashAggregate),
+    // per-probe top-k runs through the bounded TopN heap (ObjectHashAggregate),
     // so no rangepartitioning (global sort) appears anywhere
     assert(!p.toLowerCase.contains("rangepartitioning"), p.take(1500))
     assert(p.contains("ObjectHashAggregate"), p.take(1500))

@@ -86,7 +86,7 @@ class LexLakeSpec extends SparkSpec {
     // probe_id hauls every document matching a frequent term to ONE
     // reducer; the heap form (Serving.rankTopNMicros) partial-aggregates
     // map-side, capping the keyed exchange at probes x partitions x n.
-    // Pin the plan: the Aggregator-backed udaf shows as ObjectHashAggregate
+    // Pin the plan: the native TopN aggregate shows as ObjectHashAggregate
     // (partial then final) and NO WindowExec appears anywhere in the serve.
     val root = freshRoot("heapplan")
     LexLake.ingest(spark, root, corpus().toDF("doc_id", "text"), nBuckets = 8)

@@ -180,6 +180,21 @@ class MediaCurationSpec extends SparkSpec {
     assert(s.bandPin.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
   }
 
+  test("q141's cached survivors are released by clearCache") {
+    // kept is persisted through the SQL cache, so the clearCache callers run
+    // between queries returns the persistent RDD set to its baseline after
+    // every run (an eager local checkpoint stayed listed after it)
+    val sc = spark.sparkContext
+    val q141 = graft.SparkEntry.queries("q141_media_curation")
+    spark.catalog.clearCache()
+    val baseline = sc.getPersistentRDDs.keySet
+    for (run <- 1 to 2) {
+      assert(q141(spark, "/root/testdata/sf0.001").count() > 0)
+      spark.catalog.clearCache()
+      assert(sc.getPersistentRDDs.keySet == baseline, s"run $run")
+    }
+  }
+
   test("extractFeatures: one row per asset, features null off-modality") {
     val feats = Multimodal.extractFeatures(media()).collect()
     assert(feats.length === 11)

@@ -63,17 +63,26 @@ class KnnJoinSpec extends SparkSpec {
   }
 
   test("plan: partial top-k aggregation before the single keyed exchange; probe broadcast") {
-    val probe = corpus.filter(col("vec_id") === 0)
-    val p = Similarity.knnJoin(corpus, "vec_id", "embedding",
-      probe, "vec_id", "embedding", k = 3, excludeSelf = true)
-      .queryExecution.executedPlan.toString
-    // Aggregator-backed udaf plans as ObjectHashAggregate, partial then final
-    assert(p.contains("ObjectHashAggregate"), p)
-    assert(p.contains("partial_"), p)
-    assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"), p)
-    assert(!p.contains("SortMergeJoin"), p)
-    // exactly one shuffle: the k-bounded partial results keyed on probe_id
-    assert("Exchange hashpartitioning\\(probe_id".r.findAllIn(p).size == 1, p)
+    val labeled = corpus.withColumn("label", col("vec_id") % 2)
+    val probe = labeled.filter(col("vec_id") === 0)
+    for ((name, df) <- Seq(
+        "knnJoin" -> Similarity.knnJoin(corpus, "vec_id", "embedding",
+          probe, "vec_id", "embedding", k = 3, excludeSelf = true),
+        "hardNegatives" -> Similarity.hardNegatives(labeled, "vec_id",
+          "embedding", "label", probe, "vec_id", "embedding", "label", k = 3))) {
+      val p = s"$name:\n" + df.queryExecution.executedPlan.toString
+      // the native TopN aggregate plans as ObjectHashAggregate, partial then final
+      assert(p.contains("ObjectHashAggregate"), p)
+      assert(p.contains("partial_"), p)
+      assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"), p)
+      assert(!p.contains("SortMergeJoin"), p)
+      // exactly one shuffle: the k-bounded partial results keyed on probe_id
+      assert("Exchange hashpartitioning\\(probe_id".r.findAllIn(p).size == 1, p)
+      // each pair's cosine is computed once: a cosine filter ahead of the
+      // heap lands in the nested-loop join condition, which gets no
+      // subexpression elimination (twice there, once in the project)
+      assert("cosinesim\\(".r.findAllIn(p.toLowerCase).size == 1, p)
+    }
   }
 
   test("plan: ivfMultiProbeKnnJoin keeps the knnJoin shuffle shape — partial heap, probe broadcast, list equi-join") {
@@ -93,7 +102,7 @@ class KnnJoinSpec extends SparkSpec {
   }
 
   test("property: heap aggregation == declarative window rank on random corpora") {
-    // the risky part of a hand-rolled Aggregator is merge order under
+    // the risky part of a hand-rolled heap aggregate is merge order under
     // partitioning; pin it against the declarative row_number reference on
     // deterministic pseudo-random data WITH planted exact ties, across
     // different partition counts (different merge trees)
