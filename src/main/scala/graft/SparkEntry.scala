@@ -124,6 +124,15 @@ object SparkEntry {
       case _          => Tables.load(s, dir, name)
     }
 
+  /** The vector serves' constant 64-probe batch, pinned: it is 64 rows, but
+    * each un-pinned reference re-runs the corpus TakeOrdered cut (serving
+    * gates and broadcast arms evaluate it 2-4x per query; at scale each
+    * evaluation is a full scan). ONE cut, pinned — the serving-bounded-frame
+    * idiom. */
+  private def probeBatch(emb: DataFrame): DataFrame =
+    emb.orderBy(col("vec_id")).limit(64).select("vec_id", "embedding")
+      .localCheckpoint(true)
+
   // DECIMAL(18,2)-exact sum cast back to double — deterministic across engines.
   private def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 2))).cast("double")
 
@@ -1942,13 +1951,7 @@ object SparkEntry {
       // twice (raw + dequantized top-k), never shuffled; quantization
       // stats are one 2·dims-cell agg collected as a bounded LUT
       val emb = T(s, dir, "embeddings")
-      // the constant probe batch is 64 rows but each un-pinned reference
-      // re-runs the corpus TakeOrdered cut (serving gates + broadcast arms
-      // evaluate it 2-4x per query; at scale each evaluation is a full
-      // scan). ONE cut, pinned — the serving-bounded-frame idiom.
-      val probes = emb.orderBy(col("vec_id")).limit(64)
-        .select("vec_id", "embedding")
-        .localCheckpoint(true)
+      val probes = probeBatch(emb)
       Similarity.sqRecallEval(emb, "vec_id", "embedding",
         probes, "vec_id", "embedding", k = 5, dims = 64)
     }, Some(TextOracle.sqRecallSql(k = 5, nProbes = 64, dims = 64))),
@@ -2024,13 +2027,7 @@ object SparkEntry {
       val cents = Similarity.hyperplanes(4, 64).map(_.map(_ * 0.02))
       val assigned = Similarity.ivfAssign(
         emb.select("vec_id", "embedding"), "embedding", cents)
-      // the constant probe batch is 64 rows but each un-pinned reference
-      // re-runs the corpus TakeOrdered cut (serving gates + broadcast arms
-      // evaluate it 2-4x per query; at scale each evaluation is a full
-      // scan). ONE cut, pinned — the serving-bounded-frame idiom.
-      val probes = emb.orderBy(col("vec_id")).limit(64)
-        .select("vec_id", "embedding")
-        .localCheckpoint(true)
+      val probes = probeBatch(emb)
       Similarity.ivfMultiProbeKnnJoin(assigned, "vec_id", "embedding",
         "ivf_list", probes, "vec_id", "embedding", k = 5, cents, nprobe = 2,
         excludeSelf = true)
@@ -2057,13 +2054,7 @@ object SparkEntry {
           Similarity.sqCodesTiny(col("embedding"), mins, maxs))
         .select(col("vec_id"), col("ivf_list"),
           Similarity.sqDequantTiny(col("codes"), mins, maxs).as("dqv"))
-      // the constant probe batch is 64 rows but each un-pinned reference
-      // re-runs the corpus TakeOrdered cut (serving gates + broadcast arms
-      // evaluate it 2-4x per query; at scale each evaluation is a full
-      // scan). ONE cut, pinned — the serving-bounded-frame idiom.
-      val probes = emb.orderBy(col("vec_id")).limit(64)
-        .select("vec_id", "embedding")
-        .localCheckpoint(true)
+      val probes = probeBatch(emb)
       Similarity.ivfMultiProbeKnnJoin(stored, "vec_id", "dqv", "ivf_list",
         probes, "vec_id", "embedding", k = 5, cents, nprobe = 2,
         excludeSelf = true)
@@ -2091,13 +2082,7 @@ object SparkEntry {
           Similarity.sqCodesTiny(col("embedding"), mins, maxs))
         .select(col("vec_id"), col("ivf_list"),
           Similarity.sqDequantTiny(col("codes"), mins, maxs).as("dqv"))
-      // the constant probe batch is 64 rows but each un-pinned reference
-      // re-runs the corpus TakeOrdered cut (serving gates + broadcast arms
-      // evaluate it 2-4x per query; at scale each evaluation is a full
-      // scan). ONE cut, pinned — the serving-bounded-frame idiom.
-      val probes = emb.orderBy(col("vec_id")).limit(64)
-        .select("vec_id", "embedding")
-        .localCheckpoint(true)
+      val probes = probeBatch(emb)
       Similarity.ivfSqRefineKnnJoin(sqStore,
         emb.select("vec_id", "embedding"),
         "vec_id", "dqv", "ivf_list", "embedding",
@@ -2121,13 +2106,7 @@ object SparkEntry {
       val assigned = Similarity.ivfAssign(
         emb.filter(col("label") === 3).select("vec_id", "embedding"),
         "embedding", cents)
-      // the constant probe batch is 64 rows but each un-pinned reference
-      // re-runs the corpus TakeOrdered cut (serving gates + broadcast arms
-      // evaluate it 2-4x per query; at scale each evaluation is a full
-      // scan). ONE cut, pinned — the serving-bounded-frame idiom.
-      val probes = emb.orderBy(col("vec_id")).limit(64)
-        .select("vec_id", "embedding")
-        .localCheckpoint(true)
+      val probes = probeBatch(emb)
       Similarity.ivfMultiProbeKnnJoin(assigned, "vec_id", "embedding",
         "ivf_list", probes, "vec_id", "embedding", k = 5, cents, nprobe = 2,
         excludeSelf = true)
@@ -2149,13 +2128,7 @@ object SparkEntry {
       val cents = Similarity.hyperplanes(4, 64).map(_.map(_ * 0.02))
       val assigned = Similarity.ivfAssign(
         emb.select("vec_id", "embedding"), "embedding", cents)
-      // the constant probe batch is 64 rows but each un-pinned reference
-      // re-runs the corpus TakeOrdered cut (serving gates + broadcast arms
-      // evaluate it 2-4x per query; at scale each evaluation is a full
-      // scan). ONE cut, pinned — the serving-bounded-frame idiom.
-      val probes = emb.orderBy(col("vec_id")).limit(64)
-        .select("vec_id", "embedding")
-        .localCheckpoint(true)
+      val probes = probeBatch(emb)
       val vec = Similarity.ivfMultiProbeKnnJoin(assigned, "vec_id",
         "embedding", "ivf_list", probes, "vec_id", "embedding", k = 10,
         cents, nprobe = 2, excludeSelf = true)
@@ -2186,13 +2159,7 @@ object SparkEntry {
       val cents = Similarity.hyperplanes(4, 64).map(_.map(_ * 0.02))
       val assigned = Similarity.ivfAssign(
         emb.select("vec_id", "embedding"), "embedding", cents)
-      // the constant probe batch is 64 rows but each un-pinned reference
-      // re-runs the corpus TakeOrdered cut (serving gates + broadcast arms
-      // evaluate it 2-4x per query; at scale each evaluation is a full
-      // scan). ONE cut, pinned — the serving-bounded-frame idiom.
-      val probes = emb.orderBy(col("vec_id")).limit(64)
-        .select("vec_id", "embedding")
-        .localCheckpoint(true)
+      val probes = probeBatch(emb)
       val pids = probes.select(col("vec_id").as("probe_id"))
       val vec = Similarity.ivfMultiProbeKnnJoin(assigned, "vec_id",
         "embedding", "ivf_list", probes, "vec_id", "embedding", k = 10,
@@ -2683,13 +2650,7 @@ object SparkEntry {
       // request stage, so its registered slope must be the one a deployment
       // pays — linear in the corpus from the pool pass, flat after it
       val emb = T(s, dir, "embeddings")
-      // the constant probe batch is 64 rows but each un-pinned reference
-      // re-runs the corpus TakeOrdered cut (serving gates + broadcast arms
-      // evaluate it 2-4x per query; at scale each evaluation is a full
-      // scan). ONE cut, pinned — the serving-bounded-frame idiom.
-      val probes = emb.orderBy(col("vec_id")).limit(64)
-        .select("vec_id", "embedding")
-        .localCheckpoint(true)
+      val probes = probeBatch(emb)
       Similarity.mmrRerank(emb, "vec_id", "embedding",
         probes, "vec_id", "embedding", k = 5, poolSize = 10)
     }, Some(TextOracle.mmrRerankSql(k = 5, poolSize = 10, nProbes = 64))),
@@ -2729,13 +2690,7 @@ object SparkEntry {
       // holds |probes| fixed, so cost is LINEAR in the corpus — the slope a
       // deployment actually pays per ingested decade
       val emb = T(s, dir, "embeddings")
-      // the constant probe batch is 64 rows but each un-pinned reference
-      // re-runs the corpus TakeOrdered cut (serving gates + broadcast arms
-      // evaluate it 2-4x per query; at scale each evaluation is a full
-      // scan). ONE cut, pinned — the serving-bounded-frame idiom.
-      val probes = emb.orderBy(col("vec_id")).limit(64)
-        .select("vec_id", "embedding")
-        .localCheckpoint(true)
+      val probes = probeBatch(emb)
       Similarity.knnJoin(emb, "vec_id", "embedding",
         probes, "vec_id", "embedding", k = 5, excludeSelf = true)
     }, Some(TextOracle.knnServeSql(k = 5, nProbes = 64))),

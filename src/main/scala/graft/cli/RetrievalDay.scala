@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.domain.{DedupLake, LakeSync, LexLake, Retrieval, VectorLake}
-import graft.operators.Clustering
+import graft.operators.{Clustering, Serving}
 
 /** One composed RETRIEVAL day, end to end — [[ReferenceDay]]'s twin for the
   * serving stack this engine grew beyond the reference: build all three
@@ -92,25 +92,25 @@ object RetrievalDay {
     }
     def hybrid(): DataFrame = Retrieval.hybridServe(spark, vectorRoot,
       lexRoot, probes(), k = 5, kVec = 5, nLex = 5)
-    val served = hybrid().persist()
-    stages += "hybrid_results" -> served.count()
     // purge the two best-ranked DISTINCT neighbors (bounded collect)
-    val purgeIds = served.orderBy(col("rank"), col("probe_id"))
-      .select("neighbor_id").distinct().limit(2)
-      .collect().map(_.getLong(0)).toSeq
-    served.unpersist(blocking = false)
+    val purgeIds = Serving.withPinned(hybrid()) { served =>
+      stages += "hybrid_results" -> served.count()
+      served.orderBy(col("rank"), col("probe_id"))
+        .select("neighbor_id").distinct().limit(2)
+        .collect().map(_.getLong(0)).toSeq
+    }
 
     // 5. cross-store purge through the intent log — all three lakes
     val del = LakeSync.deleteDocs(spark, syncRoot, dedupRoot, vectorRoot,
       purgeIds.toDF("doc_id"), lexRoot = Some(lexRoot))
     stages += "purged" -> del.vectorDeleted
     stages += "purged_lex" -> del.lexDeleted
-    val afterPurge = hybrid().persist()
-    val leaked = afterPurge
-      .filter(col("neighbor_id").isInCollection(purgeIds)).count()
-    stages += "post_purge_hybrid" -> afterPurge.count()
-    stages += "purge_leaks" -> leaked // asserted ZERO by the caller
-    afterPurge.unpersist(blocking = false)
+    Serving.withPinned(hybrid()) { afterPurge =>
+      val leaked = afterPurge
+        .filter(col("neighbor_id").isInCollection(purgeIds)).count()
+      stages += "post_purge_hybrid" -> afterPurge.count()
+      stages += "purge_leaks" -> leaked // asserted ZERO by the caller
+    }
 
     // 6. cross-store edit: a resident id re-written with new text AND a
     //    new embedding; the unique term must serve it lexically
@@ -150,11 +150,11 @@ object RetrievalDay {
       (if (impactGate.exists(_._2)) 1L else 0L)
     stages += "impact_recall_micros" ->
       impactGate.map(g => (g._1 * 1e6).toLong).getOrElse(-1L)
-    val afterRec = hybrid().persist()
-    stages += "post_reconcile_hybrid" -> afterRec.count()
-    stages += "post_reconcile_purge_leaks" -> afterRec
-      .filter(col("neighbor_id").isInCollection(purgeIds)).count()
-    afterRec.unpersist(blocking = false)
+    Serving.withPinned(hybrid()) { afterRec =>
+      stages += "post_reconcile_hybrid" -> afterRec.count()
+      stages += "post_reconcile_purge_leaks" -> afterRec
+        .filter(col("neighbor_id").isInCollection(purgeIds)).count()
+    }
     stages += "post_reconcile_zebra_hits" -> zebraHits()
     // the impact read on the same probe terms (the edit's unique term has
     // df 1 — uncapped, so it serves exactly through the tier path too)

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
-import graft.operators.Dedup
-import graft.sources.Writers
+import graft.operators.{Dedup, Serving}
+import graft.sources.{StateLock, Writers}
 
 /** The lake-resident incremental-dedup state as a MANAGED store, and its
   * reconciliation wired to the [[Scheduler]] as the maintenance cadence it is
@@ -58,7 +58,12 @@ import graft.sources.Writers
   * external lock). A second writer fails fast instead of interleaving
   * appends with a reconcile swap; a crashed holder's lease expires after
   * `leaseMs`. This closes the two-streaming-queries-one-index hazard the
-  * round-6 verdict named as the next frontier.
+  * round-6 verdict named as the next frontier. The lease is the shared
+  * [[graft.sources.StateLock]] contract (atomic `_LOCK` create, epoch
+  * payload, stale-lease expiry, injectable clock) with the lake's
+  * fail-fast policy: an ingest and a reconcile must never interleave, so
+  * a contender refuses immediately rather than queueing (`lockWaitMs > 0`
+  * is the scheduled caller's opt-in wait).
   *
   * Scale shape: ingest is the batch-bands-BROADCAST-vs-index probe (corpus
   * never reshuffles); reconcile is ONE banded candidate pass + the
@@ -110,18 +115,6 @@ object DedupLake {
     ov.fold(archive) { case (tombs, edits) => corpusFold(archive, edits, tombs) }
   }
 
-  /** Run `f` holding the lake's exclusive writer lease — the shared
-    * [[graft.sources.StateLock]] contract (atomic `_LOCK` create, epoch
-    * payload, stale-lease expiry, injectable clock) with the lake's
-    * fail-fast policy: an ingest and a reconcile must never interleave, so
-    * a contender refuses immediately rather than queueing. */
-  def withWriterLock[T](spark: SparkSession, root: String,
-                        leaseMs: Long = 30 * 60 * 1000L,
-                        now: () => Long = System.currentTimeMillis _,
-                        heartbeatMs: Long = 0L)(f: => T): T =
-    graft.sources.StateLock.withRootLock(spark, root, leaseMs, now,
-      heartbeatMs = heartbeatMs)(f)
-
   /** Greedy per-batch ingest: probe the stored index, append the batch to
     * the archive, the survivors' band rows to the index, and the survivor
     * ids to keeps. Returns the kept (doc_id, text) rows. Chains straddling
@@ -145,7 +138,7 @@ object DedupLake {
     // lockWaitMs > 0 is the scheduled-caller stance (stall behind a running
     // reconcile, then proceed); the default stays fail-fast (VectorLake
     // .ingest's contract)
-    graft.sources.StateLock.withRootLock(spark, root, waitMs = lockWaitMs) {
+    StateLock.withRootLock(spark, root, waitMs = lockWaitMs) {
       // one generation (and archive version) resolution for the whole
       // mutation — no pointer flips while we hold the lease
       val droot = GenStore.dataRoot(spark, root)
@@ -179,8 +172,8 @@ object DedupLake {
       // returned frame is valid until the NEXT reconcile: a reconcile swaps
       // the index files the un-pinned plan's listing points at, so consume
       // (or persist) the result before the maintenance deployment fires.
-      val kept = kept0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      Serving.withPinned(bandPin) { _ =>
+      Serving.withPinned(kept0) { kept =>
         // the count runs while kept is PINNED and the lease held — callers
         // that only need the number (the streaming twin's metrics seam)
         // take it from onKeptCount instead of re-counting the returned
@@ -224,10 +217,7 @@ object DedupLake {
             "left_anti")
           .write.mode("append").parquet(s"$droot/keeps")
         kept
-      } finally {
-        bandPin.unpersist(blocking = false)
-        kept.unpersist(blocking = false)
-        ()
+      }
       }
     }
 
@@ -251,7 +241,8 @@ object DedupLake {
     // corpus-scale wall time -> renewed lease (heartbeat), the VectorLake
     // .reconcile rationale: a fixed lease breaks mid-run at 100 TB and the
     // contender's ingest gets overwritten by this pass's swap
-    withWriterLock(spark, root, leaseMs = leaseMs, heartbeatMs = leaseMs / 3) {
+    StateLock.withRootLock(spark, root, leaseMs = leaseMs,
+        heartbeatMs = leaseMs / 3) {
       Writers.recoverPointer(spark, GenStore.pointer(root))
       val genCur = GenStore.currentGen(spark, root)
       val droot = GenStore.dataRootOf(root, genCur)
@@ -264,19 +255,15 @@ object DedupLake {
         archiveSchema)
       val (tombs, edits) = pending.getOrElse(
         GenStore.noOverlay(spark, tombstonesSchema, archiveSchema))
-      val archive = corpusFold(
-        GenStore.read(spark, s"$root/archive", archiveSchema), edits, tombs)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      Serving.withPinned(corpusFold(GenStore.read(spark, s"$root/archive",
+          archiveSchema), edits, tombs)) { archive =>
         val archiveRows = archive.count()
         val cur = GenStore.readOrEmpty(spark, s"$droot/keeps", keepsSchema)
         val r = Dedup.reconcileLshKeeps(archive, "doc_id", "text", cur,
           numHashes, bandRows, shingleN)
-        val repaired = r.repairedKeeps
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val report = ReconcileReport(repaired.count(),
-          r.drops.count(), r.resurrections.count())
-        try {
+        val report = Serving.withPinned(r.repairedKeeps) { repaired =>
+          val counted = ReconcileReport(repaired.count(),
+            r.drops.count(), r.resurrections.count())
           // write the NEW GENERATION (keeps + index) in full, then the
           // pointer flip commits both AT ONCE — keeps and index can never
           // again be observed one reconcile apart (the old twin-swap
@@ -292,7 +279,8 @@ object DedupLake {
               .select("doc_id", "band", "bh")
               .write.mode("overwrite").parquet(s"$ngRoot/index")
           }
-        } finally { repaired.unpersist(blocking = false); () }
+          counted
+        }
         // the archive accumulates one small file set per ingest batch —
         // commit it compacted on the same cadence so reads stay one healthy
         // scan. The rewrite is the PURGED+FOLDED frame (the physical
@@ -304,7 +292,7 @@ object DedupLake {
           archiveRows, targetRecordsPerFile)
         if (pending.isDefined) GenStore.commitOverlay(spark, root, None, None)
         report
-      } finally { archive.unpersist(blocking = false); () }
+      }
     }
 
   def keeps(spark: SparkSession, root: String): DataFrame = {
@@ -321,47 +309,33 @@ object DedupLake {
   }
 
   /** DELETE by doc id — the right-to-be-forgotten path through the dedup
-    * lake (VectorLake.delete's document twin): tombstone now, reclaim at
-    * the next reconcile. A tombstoned doc vanishes from [[keeps]]
-    * immediately, its band rows stop gating new ingests (a purge is not a
-    * content ban — a re-submitted near-duplicate is kept again), and the
+    * lake, by the one overlay delete ([[GenStore.delete]]) over the
+    * archive: tombstone now, reclaim at the next reconcile. A tombstoned
+    * doc vanishes from [[keeps]] immediately, its band rows stop gating
+    * new ingests (a purge is not a content ban — a re-submitted
+    * near-duplicate is kept again), and the
     * next [[reconcile]] rewrites the ARCHIVE without it (the durable copy
     * is purged too — the whole point of the request) before clearing the
     * tombstones. Ids resident nowhere (neither archived nor in the edit
-    * overlay) are ignored; an exact replay appends nothing. Same id-reuse
-    * caveat as the vector lake: until the reclaim runs, re-ingesting a
-    * tombstoned id is a state no-op ([[upsert]] is the sanctioned
-    * resurrection). Returns the number of ids newly tombstoned. */
+    * overlay) are ignored; an exact replay appends nothing. The id-reuse
+    * caveat of every overlay lake holds: until the reclaim runs,
+    * re-ingesting a tombstoned id is a state no-op ([[upsert]] is the
+    * sanctioned resurrection). Returns the number of ids newly tombstoned. */
   def delete(spark: SparkSession, root: String, ids: DataFrame,
              lockWaitMs: Long = 0L): Long =
-    graft.sources.StateLock.withRootLock(spark, root, waitMs = lockWaitMs) {
-      val del = ids.select(col("doc_id").cast("long").as("doc_id")).distinct()
-      // resident = archive OR the edit overlay: an upsert-inserted id lives
-      // only in `edits` until a reconcile folds it, and a purge ordered in
-      // that window must still tombstone it
-      val (existing, edits) =
-        GenStore.overlayOrEmpty(spark, root, tombstonesSchema, archiveSchema)
-      val resident = GenStore.read(spark, s"$root/archive", archiveSchema)
-        .select("doc_id")
-        .unionByName(edits.select("doc_id"))
-      val toWrite = del
-        .join(resident, Seq("doc_id"), "left_semi")
-        .join(existing, Seq("doc_id"), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val n = toWrite.count() // while pinned, BEFORE the append
-        if (n > 0) GenStore.appendTombstones(spark, root, toWrite)
-        n
-      } finally { toWrite.unpersist(blocking = false); () }
+    StateLock.withRootLock(spark, root, waitMs = lockWaitMs) {
+      GenStore.delete(spark, root, "doc_id", ids,
+        GenStore.read(spark, s"$root/archive", archiveSchema))
     }
 
-  /** UPSERT by doc id — the content-EDIT path ([[VectorLake.upsert]]'s
-    * document twin: a correction, a re-crawl, a redaction rewrite): under
-    * one lease the batch lands in the `edits` overlay (last-writer-wins
-    * per id — the overlay IS the replacement, so the append-only archive
-    * is never rewritten per edit) and any tombstones on the batch ids drop
-    * (an upsert is explicit new content — the one sanctioned id
-    * resurrection), both in ONE overlay commit; then the batch ids join
+  /** UPSERT by doc id — the content-EDIT path (a correction, a re-crawl, a
+    * redaction rewrite) through the one overlay upsert
+    * ([[GenStore.upsert]]): under one lease the batch lands in the
+    * `edits` overlay (last-writer-wins per id — the overlay IS the
+    * replacement, so the append-only archive is never rewritten per edit)
+    * and any tombstones on the batch ids drop (an upsert is explicit new
+    * content — the one sanctioned id resurrection), both in ONE overlay
+    * commit; then the batch ids join
     * [[keeps]] (anti-joined). From that commit every read serves the new
     * text: [[corpus]] folds the overlay over the archive, and the ingest probe
     * gates on the overlay's band rows INSTEAD of the stored ones (the old
@@ -369,9 +343,9 @@ object DedupLake {
     * The next [[reconcile]] folds the overlay into the physical archive
     * rewrite, repairs keeps over the edited corpus, rebuilds the index
     * from it, and clears the overlay. An id never seen before is an
-    * INSERT (replace-by-id semantics, the vector twin's contract).
+    * INSERT (replace-by-id semantics, [[GenStore.upsert]]'s contract).
     *
-    * Deliberately GATE-FREE, exactly like the vector twin: ingest's
+    * Deliberately GATE-FREE, like every lake's upsert: ingest's
     * near-dup gate protects content ADMISSION; an upsert asserts a new
     * version of content whose id is already the caller's to write, and a
     * near-dup the edit creates is repaired by reconcile's full-batch pass
@@ -395,52 +369,30 @@ object DedupLake {
              lockWaitMs: Long = 0L,
              failpointAfterEdits: () => Unit = () => (),
              failpointAfterTombstones: () => Unit = () => ()): Long =
-    graft.sources.StateLock.withRootLock(spark, root, waitMs = lockWaitMs) {
+    StateLock.withRootLock(spark, root, waitMs = lockWaitMs) {
       val droot = GenStore.dataRoot(spark, root)
-      val docs = batch
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val counts = docs
-          .agg(count(lit(1)), count_distinct(col("doc_id"))).head()
-        val n = counts.getLong(0)
-        require(n == counts.getLong(1),
-          s"upsert batch carries duplicate doc_id values ($n rows, " +
-            s"${counts.getLong(1)} distinct) — two texts would land under " +
-            "one id. Deduplicate the batch first.")
-        val (tombs, edits) =
-          GenStore.overlayOrEmpty(spark, root, tombstonesSchema, archiveSchema)
-        val merged = edits
-          .join(broadcast(docs.select("doc_id")), Seq("doc_id"), "left_anti")
-          .unionByName(docs)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val m = merged.count()
-          require(m <= maxOverlayRows,
-            s"edit overlay would grow to $m rows > maxOverlayRows=" +
-              s"$maxOverlayRows — the overlay is edit-request-sized by " +
-              "contract (it broadcasts into every ingest probe and corpus " +
-              "fold). Run reconcile to fold it into the archive, then " +
-              "resume; corpus-scale re-writes belong to a bulk archive " +
-              "rewrite + reconcile.")
-          if (n > 0) GenStore.commitOverlay(spark, root,
-            GenStore.nonEmpty(tombs.join(broadcast(docs.select("doc_id")),
-              Seq("doc_id"), "left_anti")),
-            Some(merged), beforeFlip = failpointAfterEdits)
-        } finally { merged.unpersist(blocking = false); () }
-        failpointAfterTombstones()
-        // gate-free keep membership (scoped anti-join — O(batch), the
-        // PricePipeline idiom): a kept id stays kept, a dropped or new id
-        // joins; reconcile's full-batch repair re-decides over the edited
-        // corpus anyway
-        docs.select("doc_id")
-          .join(GenStore.readOrEmpty(spark, s"$droot/keeps", keepsSchema)
-              .join(broadcast(docs.select("doc_id")),
-                Seq("doc_id"), "left_semi"),
-            Seq("doc_id"), "left_anti")
-          .write.mode("append").parquet(s"$droot/keeps")
-        n
-      } finally { docs.unpersist(blocking = false); () }
+      GenStore.upsert(spark, GenStore.overlay(root), "edits", "tombstones",
+        batch.select(col("doc_id").cast("long").as("doc_id"), col("text")),
+        "doc_id", GenStore.RowCap("edit overlay", "maxOverlayRows",
+          maxOverlayRows, "the overlay is edit-request-sized by contract " +
+            "(it broadcasts into every ingest probe and corpus fold). Run " +
+            "reconcile to fold it into the archive, then resume; " +
+            "corpus-scale re-writes belong to a bulk archive rewrite + " +
+            "reconcile."),
+        beforeFlip = failpointAfterEdits,
+        after = { docs =>
+          failpointAfterTombstones()
+          // gate-free keep membership (scoped anti-join — O(batch), the
+          // PricePipeline idiom): a kept id stays kept, a dropped or new
+          // id joins; reconcile's full-batch repair re-decides over the
+          // edited corpus anyway
+          docs.select("doc_id")
+            .join(GenStore.readOrEmpty(spark, s"$droot/keeps", keepsSchema)
+                .join(broadcast(docs.select("doc_id")),
+                  Seq("doc_id"), "left_semi"),
+              Seq("doc_id"), "left_anti")
+            .write.mode("append").parquet(s"$droot/keeps")
+        })
     }
 
   /** The reconcile pass as a cron [[Scheduler.Deployment]] — default weekly
@@ -472,21 +424,14 @@ object DedupLake {
                     targetRecordsPerFile: Long = 1000000L,
                     minFilesPerStore: Int = 8,
                     lockWaitMs: Long = 0L): Map[String, Long] =
-    graft.sources.StateLock.withRootLock(spark, root, waitMs = lockWaitMs) {
+    StateLock.withRootLock(spark, root, waitMs = lockWaitMs) {
       Writers.recoverPointer(spark, GenStore.pointer(root))
       val genCur = GenStore.currentGen(spark, root)
       val droot = GenStore.dataRootOf(root, genCur)
       val archiveDir = GenStore.currentDir(spark, s"$root/archive")
-      def dataFiles(dir: String): Long = {
-        val p = new org.apache.hadoop.fs.Path(dir)
-        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-        if (!fs.exists(p)) 0L
-        else fs.listStatus(p).count(f =>
-          f.isFile && !"_.".contains(f.getPath.getName.head)).toLong
-      }
       val due = Seq("archive" -> archiveDir, "index" -> s"$droot/index",
           "keeps" -> s"$droot/keeps")
-        .map { case (label, dir) => label -> dataFiles(dir) }
+        .map { case (label, dir) => label -> Writers.dataFiles(spark, dir) }
         .filter(_._2 >= minFilesPerStore).toMap
       if (due.contains("archive")) {
         val archive = spark.read.parquet(archiveDir)

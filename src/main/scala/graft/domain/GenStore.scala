@@ -1,8 +1,10 @@
 package graft.domain
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.operators.Serving
 import graft.sources.Writers
 
 /** The ONE commit protocol of every mutable state dir: immutable numbered
@@ -182,25 +184,99 @@ private[graft] object GenStore {
         (live, ids)
     }
 
-  /** WRITER-side: append tombstone rows into the CURRENT overlay version
-    * (the legacy `root/tombstones` while pointer-less). */
-  def appendTombstones(spark: SparkSession, root: String, rows: DataFrame): Unit =
-    rows.write.mode("append")
-      .parquet(s"${current(spark, overlay(root))}/tombstones")
-
   /** `df` as a next-version member, `None` when it has no rows (one
     * bounded probe). */
   def nonEmpty(df: DataFrame): Option[DataFrame] =
-    if (graft.operators.Serving.boundedCount(df, 1) > 0) Some(df) else None
+    if (Serving.boundedCount(df, 1) > 0) Some(df) else None
+
+  private def idOnly(idCol: String) =
+    StructType(Seq(StructField(idCol, LongType)))
+
+  /** WRITER-side DELETE by id, the one delete body of every lake (call
+    * under the lake's lease): tombstone each distinct `idCol` value of
+    * `ids` that is RESIDENT — in `stored`, the lake's physical rows, or in
+    * the edit overlay (an upsert-inserted id lives only there until a
+    * reconcile folds it, and a purge ordered in that window must still
+    * reach it) — and not tombstoned yet, by an append into the CURRENT
+    * overlay version (the legacy `root/tombstones` while pointer-less). Ids
+    * resident nowhere are ignored; an exact replay appends nothing. Returns
+    * the number of ids newly tombstoned. */
+  def delete(spark: SparkSession, root: String, idCol: String,
+             ids: DataFrame, stored: DataFrame): Long = {
+    val ov = current(spark, overlay(root))
+    val resident = stored.select(idCol)
+      .unionByName(readOrEmpty(spark, s"$ov/edits", idOnly(idCol)))
+    Serving.withPinned(ids.select(col(idCol).cast("long").as(idCol))
+        .distinct()
+        .join(resident, Seq(idCol), "left_semi")
+        .join(readOrEmpty(spark, s"$ov/tombstones", idOnly(idCol)),
+          Seq(idCol), "left_anti")) { toWrite =>
+      // count while pinned and BEFORE the append — afterwards the plan's
+      // tombstone read would see its own rows
+      val n = toWrite.count()
+      if (n > 0) toWrite.write.mode("append").parquet(s"$ov/tombstones")
+      n
+    }
+  }
+
+  /** The row cap of an upsert's merged member: a refusal names the member
+    * as `what` and the cap as `name=max`, then says `remedy`. */
+  final case class RowCap(what: String, name: String, max: Long,
+                          remedy: String)
+
+  /** WRITER-side UPSERT by id, the one upsert body of every lake's overlay
+    * and of the sync log (call under the store's lease): `batch`, already
+    * projected to member `into`'s schema and pinned for the whole call,
+    * merges over `into` LAST-WRITER-WINS per `idCol` (the
+    * `ON DUPLICATE KEY UPDATE` of a mutable table), and member `drop` loses
+    * its rows under the batch ids, both in ONE [[commitMembers]] flip — an
+    * upsert is explicit new content, so it cancels a pending tombstone or
+    * purge for its ids. One agg over the batch counts its rows, its
+    * distinct ids and the caller's `extra` columns: duplicate ids are
+    * refused (two rows would race for one id), the merged member must fit
+    * `cap`, then `check` sees the `extra` values and the merged row count.
+    * `beforeFlip` runs once the next version is written in full, before
+    * the pointer commits it; `after` runs on the pinned batch once the
+    * commit is done. An empty batch commits nothing. Returns the batch row
+    * count. */
+  def upsert(spark: SparkSession, s: Store, into: String, drop: String,
+             batch: DataFrame, idCol: String, cap: RowCap,
+             extra: Seq[Column] = Nil,
+             check: (Row, Long) => Unit = (_, _) => (),
+             beforeFlip: () => Unit = () => (),
+             after: DataFrame => Unit = _ => ()): Long =
+    Serving.withPinned(batch) { b =>
+      val c = b.agg(count(lit(1)), count_distinct(col(idCol)) +: extra: _*)
+        .head()
+      val n = c.getLong(0)
+      Serving.requireUnique(n, c.getLong(1), idCol, "upsert batch",
+        "two rows would land under one id. Deduplicate the batch first.")
+      val v = current(spark, s)
+      val ids = broadcast(b.select(idCol))
+      val intoSchema = StructType(b.schema.map(_.copy(nullable = true)))
+      Serving.withPinned(readOrEmpty(spark, s"$v/$into", intoSchema)
+          .join(ids, Seq(idCol), "left_anti").unionByName(b)) { merged =>
+        val m = merged.count()
+        require(m <= cap.max, s"${cap.what} would grow to $m rows > " +
+          s"${cap.name}=${cap.max} — ${cap.remedy}")
+        check(Row.fromSeq(c.toSeq.drop(2)), m)
+        if (n > 0) commitMembers(spark, s, Seq(
+          drop -> nonEmpty(readOrEmpty(spark, s"$v/$drop", idOnly(idCol))
+            .join(ids, Seq(idCol), "left_anti")),
+          into -> Some(merged)), beforeFlip)
+      }
+      after(b)
+      n
+    }
 
   /** WRITER-side: commit the next overlay — both members in ONE flip (a
-    * `None` member is left out). `beforeFlip` runs once the version is
-    * written in full, before the pointer commits it. */
+    * `None` member is left out: two clear the overlay, as a reconcile
+    * does once it has folded it). */
   def commitOverlay(spark: SparkSession, root: String,
-                    tombstones: Option[DataFrame], edits: Option[DataFrame],
-                    beforeFlip: () => Unit = () => ()): Unit =
+                    tombstones: Option[DataFrame],
+                    edits: Option[DataFrame]): Unit =
     commitMembers(spark, overlay(root),
-      Seq("tombstones" -> tombstones, "edits" -> edits), beforeFlip)
+      Seq("tombstones" -> tombstones, "edits" -> edits))
 
   // ---- lake generations (Store.lake) ---------------------------------------
 

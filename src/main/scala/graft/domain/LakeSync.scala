@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.Serving
+import graft.sources.StateLock
 
 /** CROSS-LAKE mutation sync — the fan-out a real purge or edit request
   * needs when the same document lives in BOTH stores (the dedup lake holds
@@ -81,10 +82,6 @@ object LakeSync {
                               upsertsApplied: Long = 0L,
                               lexDeleted: Long = 0L)
 
-  private def withSyncLock[T](spark: SparkSession, syncRoot: String,
-                              waitMs: Long)(f: => T): T =
-    graft.sources.StateLock.withRootLock(spark, syncRoot, waitMs = waitMs)(f)
-
   private def log(syncRoot: String) = GenStore.Store.under(syncRoot, "log")
 
   /** The two logs at the current version (resolved once): (requests,
@@ -109,10 +106,9 @@ object LakeSync {
   def requestDelete(spark: SparkSession, syncRoot: String, ids: DataFrame,
                     lockWaitMs: Long = 0L,
                     failpointAfterCommit: () => Unit = () => ()): Long =
-    withSyncLock(spark, syncRoot, lockWaitMs) {
-      val del = ids.select(col("doc_id").cast("long").as("doc_id")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+    StateLock.withRootLock(spark, syncRoot, waitMs = lockWaitMs) {
+      Serving.withPinned(ids.select(col("doc_id").cast("long").as("doc_id"))
+          .distinct()) { del =>
         // COMMIT OUR OWN INTENT FIRST, cancel the opposite log second (the
         // r10 advice): the reverse order had a crash window — upserts
         // cancelled, requests not yet appended — that silently destroyed a
@@ -121,16 +117,15 @@ object LakeSync {
         // which propagate's delete-wins intersection resolves correctly:
         // here the delete genuinely IS the newer intent.
         val (existing, _) = logs(spark, syncRoot)
-        val toWrite = del.join(existing, Seq("doc_id"), "left_anti")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val n = try {
+        val n = Serving.withPinned(
+            del.join(existing, Seq("doc_id"), "left_anti")) { toWrite =>
           // count while pinned, BEFORE the append — afterwards the plan's
           // requests read would see its own rows
           val n0 = toWrite.count()
           if (n0 > 0) toWrite.write.mode("append").parquet(
             s"${GenStore.current(spark, log(syncRoot))}/requests")
           n0
-        } finally { toWrite.unpersist(blocking = false); () }
+        }
         failpointAfterCommit()
         // a newer purge CANCELS a pending edit for the same id: applying
         // both in either order would be wrong (edit-then-purge loses the
@@ -142,17 +137,19 @@ object LakeSync {
           commitLogs(spark, syncRoot, GenStore.nonEmpty(reqs), GenStore.nonEmpty(
             ups.join(broadcast(del), Seq("doc_id"), "left_anti")))
         n
-      } finally { del.unpersist(blocking = false); () }
+      }
     }
 
   /** Durably record a cross-lake EDIT for `docs` — (doc_id, text,
     * embedding) rows, the one-id-space contract: the dedup lake gets the
     * text, the vector lake the embedding, BOTH through their own
     * [[DedupLake.upsert]]/[[VectorLake.upsert]] at the next [[propagate]].
-    * Last-writer-wins per id (the overlay merge), and a pending PURGE for
-    * the same id is cancelled — this edit is newer intent, and replaying a
-    * crashed purge after it would silently undo the edit (the id-reuse
-    * window of the delete log, closed for the sanctioned path). A
+    * Last-writer-wins per id, and a pending PURGE for the same id is
+    * cancelled in the same commit (the lakes' one overlay upsert,
+    * [[GenStore.upsert]], over the two logs) — this edit is newer intent,
+    * and replaying a crashed purge after it would silently undo the edit
+    * (the id-reuse window of the delete log, closed for the sanctioned
+    * path). A
     * text-only or embedding-only refresh is a SINGLE-lake operation — call
     * that lake's upsert directly; this log carries the paired payload by
     * contract. The log is edit-request-sized (ENFORCED via `maxLogRows`,
@@ -161,40 +158,16 @@ object LakeSync {
   def requestUpsert(spark: SparkSession, syncRoot: String, docs: DataFrame,
                     maxLogRows: Long = 1L << 20,
                     lockWaitMs: Long = 0L): Long =
-    withSyncLock(spark, syncRoot, lockWaitMs) {
-      val batch = docs.select(col("doc_id").cast("long").as("doc_id"),
-        col("text"),
-        col("embedding").cast(upsertsSchema("embedding").dataType)
-          .as("embedding"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val counts = batch
-          .agg(count(lit(1)), count_distinct(col("doc_id"))).head()
-        val n = counts.getLong(0)
-        require(n == counts.getLong(1),
-          s"upsert request carries duplicate doc_id values ($n rows, " +
-            s"${counts.getLong(1)} distinct) — two payloads would race " +
-            "for one id. Deduplicate the batch first.")
-        val (reqs, ups) = logs(spark, syncRoot)
-        val merged = ups
-          .join(broadcast(batch.select("doc_id")), Seq("doc_id"), "left_anti")
-          .unionByName(batch)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val m = merged.count()
-          require(m <= maxLogRows,
-            s"upsert log would grow to $m rows > maxLogRows=$maxLogRows — " +
-              "the log is edit-request-sized by contract. Run propagate to " +
-              "drain it, then resume.")
-          // the newer edit cancels a pending purge for the same id (see
-          // requestDelete's mirror-image cancellation) in the SAME commit
-          if (n > 0) commitLogs(spark, syncRoot,
-            GenStore.nonEmpty(reqs.join(broadcast(batch.select("doc_id")),
-              Seq("doc_id"), "left_anti")),
-            Some(merged))
-          n
-        } finally { merged.unpersist(blocking = false); () }
-      } finally { batch.unpersist(blocking = false); () }
+    StateLock.withRootLock(spark, syncRoot, waitMs = lockWaitMs) {
+      // the newer edit cancels a pending purge for the same id (see
+      // requestDelete's mirror-image cancellation) in the SAME commit
+      GenStore.upsert(spark, log(syncRoot), "upserts", "requests",
+        docs.select(col("doc_id").cast("long").as("doc_id"), col("text"),
+          col("embedding").cast(upsertsSchema("embedding").dataType)
+            .as("embedding")),
+        "doc_id", GenStore.RowCap("upsert log", "maxLogRows", maxLogRows,
+          "the log is edit-request-sized by contract. Run propagate to " +
+            "drain it, then resume."))
     }
 
   /** The logged-but-unapplied purge orders — read-only (no lease), the
@@ -215,19 +188,15 @@ object LakeSync {
                 failpointBeforeRetire: () => Unit = () => (),
                 failpointAfterDedupUpsert: () => Unit = () => (),
                 lexRoot: Option[String] = None): SyncReport =
-    withSyncLock(spark, syncRoot, lockWaitMs) {
+    StateLock.withRootLock(spark, syncRoot, waitMs = lockWaitMs) {
       val (reqs0, ups0) = logs(spark, syncRoot)
-      val reqs = reqs0
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      Serving.withPinned(reqs0) { reqs =>
       // DELETE WINS on a (torn-request-only) intersection of the two logs:
       // an id in both can only mean a requestDelete crashed between its
       // purge append and its cancellation of the edit — the purge is the
       // newer intent, so applying it here is the honest reading of the
       // durable state
-      val ups = ups0
-        .join(reqs, Seq("doc_id"), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      Serving.withPinned(ups0.join(reqs, Seq("doc_id"), "left_anti")) { ups =>
         val n = reqs.count()
         val nu = ups.count()
         if (n == 0L && nu == 0L) SyncReport(0L, 0L, 0L, 0L)
@@ -280,9 +249,7 @@ object LakeSync {
           commitLogs(spark, syncRoot, None, None)
           SyncReport(n, nd, nv, n, nu, nl)
         }
-      } finally {
-        ups.unpersist(blocking = false)
-        reqs.unpersist(blocking = false); ()
+      }
       }
     }
 

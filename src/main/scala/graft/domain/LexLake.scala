@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.functions.{TextFunctions => TF}
-import graft.sources.Writers
+import graft.operators.Serving
+import graft.sources.{StateLock, Writers}
 
 /** The lake-resident INVERTED INDEX — the lexical sibling of [[VectorLake]]
   * (and the serving twin of [[graft.operators.TextStats.bm25PerQuery]],
@@ -108,13 +109,6 @@ object LexLake {
     StructField("b", org.apache.spark.sql.types.DoubleType)))
 
   final case class IngestReport(docs: Long, postings: Long)
-
-  def withWriterLock[T](spark: SparkSession, root: String,
-                        leaseMs: Long = 30 * 60 * 1000L,
-                        waitMs: Long = 0L,
-                        heartbeatMs: Long = 0L)(f: => T): T =
-    graft.sources.StateLock.withRootLock(spark, root, leaseMs,
-      waitMs = waitMs, heartbeatMs = heartbeatMs)(f)
 
   /** Driver-side twin of [[TF.md5Prefix32]] `% nBuckets` — MUST stay
     * bit-identical to the Column form: serve prunes partitions with
@@ -237,7 +231,7 @@ object LexLake {
              failpoint: () => Unit = () => (),
              failpointAfterStats: () => Unit = () => (),
              lockWaitMs: Long = 0L): IngestReport =
-    withWriterLock(spark, root, waitMs = lockWaitMs) {
+    StateLock.withRootLock(spark, root, waitMs = lockWaitMs) {
       val nb = confuredBuckets(spark, root, nBuckets)
       val droot = GenStore.dataRoot(spark, root)
       val docs0 = batch
@@ -245,12 +239,8 @@ object LexLake {
         .filter(TF.tokenCount(col("text")) > 0)
       // ids must be unique within the batch: two texts under one id would
       // interleave their postings into one garbage document
-      val idCounts = docs0
-        .agg(count(lit(1)), count_distinct(col("doc_id"))).head()
-      require(idCounts.getLong(0) == idCounts.getLong(1),
-        s"ingest batch carries duplicate doc_id values " +
-          s"(${idCounts.getLong(0)} rows, ${idCounts.getLong(1)} distinct) " +
-          "— two texts would interleave under one id. Deduplicate first.")
+      Serving.requireUniqueIds(docs0, "doc_id", "ingest batch",
+        "two texts would interleave under one id. Deduplicate first.")
       // residency check: doclens ids plus the edit overlay's (an
       // upsert-inserted id is resident content not yet folded) — scoped
       // semi-joins, O(batch) not O(lake)
@@ -261,12 +251,9 @@ object LexLake {
         .select("doc_id")
         .unionByName(edits.select("doc_id"))
         .join(batchIds, Seq("doc_id"), "left_semi")
-      val docs = docs0.join(resident, Seq("doc_id"), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val post = postingsOf(docs, nb)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
+      Serving.withPinned(
+          docs0.join(resident, Seq("doc_id"), "left_anti")) { docs =>
+        Serving.withPinned(postingsOf(docs, nb)) { post =>
           // EVERYTHING derived from `docs` is computed BEFORE the appends:
           // the doclens write recaches every plan referencing its path
           // (docs' residency anti-join does), so a post-append evaluation
@@ -292,11 +279,10 @@ object LexLake {
               GenStore.readOrEmpty(spark, s"$droot/stats", statsSchema)
               .select(explode(col("doc_ids")).as("doc_id"))
               .join(broadcast(batchIds), Seq("doc_id"), "left_semi")
-            val toCount = docs
-              .select(col("doc_id"), TF.tokenCount(col("text")).as("dl"))
-              .join(broadcast(coveredScoped), Seq("doc_id"), "left_anti")
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
+            Serving.withPinned(docs
+                .select(col("doc_id"), TF.tokenCount(col("text")).as("dl"))
+                .join(broadcast(coveredScoped), Seq("doc_id"), "left_anti")) {
+                toCount =>
               val nc = toCount.count()
               if (nc > 0) {
                 // split the id arrays so none outgrows ~64k entries — a
@@ -333,7 +319,7 @@ object LexLake {
                     col("n_docs"), col("total_dl"), col("doc_ids"))
                   .write.mode("append").parquet(s"$droot/stats")
               }
-            } finally { toCount.unpersist(blocking = false); () }
+            }
           }
           failpointAfterStats()
           // postings append scoped by the POSTINGS store's own ids
@@ -355,8 +341,8 @@ object LexLake {
             .join(lensIds, Seq("doc_id"), "left_anti")
             .write.mode("append").parquet(s"$droot/doclens")
           IngestReport(nDocs, nPost)
-        } finally { post.unpersist(blocking = false); () }
-      } finally { docs.unpersist(blocking = false); () }
+        }
+      }
     }
 
   /** DELETE by doc id — tombstone now, fold at [[reconcile]]. A tombstoned
@@ -367,27 +353,13 @@ object LexLake {
     * the sanctioned resurrection). */
   def delete(spark: SparkSession, root: String, ids: DataFrame,
              lockWaitMs: Long = 0L): Long =
-    withWriterLock(spark, root, waitMs = lockWaitMs) {
-      val droot = GenStore.dataRoot(spark, root)
-      val del = ids.select(col("doc_id").cast("long").as("doc_id")).distinct()
-      val (existing, edits) =
-        GenStore.overlayOrEmpty(spark, root, tombstonesSchema, editsSchema)
-      val resident = GenStore.readOrEmpty(spark, s"$droot/doclens", doclensSchema)
-        .select("doc_id")
-        .unionByName(edits.select("doc_id"))
-      val toWrite = del
-        .join(resident, Seq("doc_id"), "left_semi")
-        .join(existing, Seq("doc_id"), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val n = toWrite.count()
-        if (n > 0) GenStore.appendTombstones(spark, root, toWrite)
-        n
-      } finally { toWrite.unpersist(blocking = false); () }
+    StateLock.withRootLock(spark, root, waitMs = lockWaitMs) {
+      GenStore.delete(spark, root, "doc_id", ids, GenStore.readOrEmpty(spark,
+        s"${GenStore.dataRoot(spark, root)}/doclens", doclensSchema))
     }
 
-  /** UPSERT by doc id — the content-edit path ([[DedupLake.upsert]]'s
-    * contract verbatim, minus the keep set): the batch lands in the
+  /** UPSERT by doc id — the content-edit path, through the one overlay
+    * upsert every lake runs ([[GenStore.upsert]]): the batch lands in the
     * `edits` overlay (last-writer-wins), tombstones on the batch ids drop
     * (the sanctioned resurrection) — both in ONE overlay commit — and from
     * that commit
@@ -401,38 +373,15 @@ object LexLake {
   def upsert(spark: SparkSession, root: String, batch: DataFrame,
              maxOverlayRows: Long = 1L << 20,
              lockWaitMs: Long = 0L): Long =
-    withWriterLock(spark, root, waitMs = lockWaitMs) {
-      val docs = batch
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val counts = docs.agg(count(lit(1)), count_distinct(col("doc_id")),
-          count(when(TF.tokenCount(col("text")) === 0, 1))).head()
-        val n = counts.getLong(0)
-        require(n == counts.getLong(1),
-          s"upsert batch carries duplicate doc_id values ($n rows, " +
-            s"${counts.getLong(1)} distinct). Deduplicate the batch first.")
-        require(counts.getLong(2) == 0L,
+    StateLock.withRootLock(spark, root, waitMs = lockWaitMs) {
+      GenStore.upsert(spark, GenStore.overlay(root), "edits", "tombstones",
+        batch.select(col("doc_id").cast("long").as("doc_id"), col("text")),
+        "doc_id", GenStore.RowCap("edit overlay", "maxOverlayRows",
+          maxOverlayRows, "run reconcile to fold it, then resume"),
+        extra = Seq(count(when(TF.tokenCount(col("text")) === 0, 1))),
+        check = (zeroToken, _) => require(zeroToken.getLong(0) == 0L,
           "upsert batch carries zero-token texts — an empty replacement " +
-            "is a delete, not an edit")
-        val (tombs, edits) =
-          GenStore.overlayOrEmpty(spark, root, tombstonesSchema, editsSchema)
-        val merged = edits
-          .join(broadcast(docs.select("doc_id")), Seq("doc_id"), "left_anti")
-          .unionByName(docs)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val m = merged.count()
-          require(m <= maxOverlayRows,
-            s"edit overlay would grow to $m rows > maxOverlayRows=" +
-              s"$maxOverlayRows — run reconcile to fold it, then resume")
-          if (n > 0) GenStore.commitOverlay(spark, root,
-            GenStore.nonEmpty(tombs.join(broadcast(docs.select("doc_id")),
-              Seq("doc_id"), "left_anti")),
-            Some(merged))
-        } finally { merged.unpersist(blocking = false); () }
-        n
-      } finally { docs.unpersist(blocking = false); () }
+            "is a delete, not an edit"))
     }
 
   /** BM25 a query BATCH against the resident index — the serving read this
@@ -981,7 +930,7 @@ object LexLake {
                 impactGateN: Int = 10,
                 impactK1: Double = 1.2, impactB: Double = 0.75,
                 onImpactGate: (Double, Boolean) => Unit = (_, _) => ()): Unit =
-    withWriterLock(spark, root, leaseMs = leaseMs,
+    StateLock.withRootLock(spark, root, leaseMs = leaseMs,
         heartbeatMs = leaseMs / 3) {
       Writers.recoverPointer(spark, GenStore.pointer(root))
       val cur = GenStore.currentGen(spark, root)
@@ -994,23 +943,20 @@ object LexLake {
         editsSchema)
       val (tombs, edits0) = pending.getOrElse(
         GenStore.noOverlay(spark, tombstonesSchema, editsSchema))
-      val edits = edits0.join(tombs, Seq("doc_id"), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      Serving.withPinned(
+          edits0.join(tombs, Seq("doc_id"), "left_anti")) { edits =>
         val overlayIds = edits.select("doc_id")
           .unionByName(tombs.select("doc_id")).distinct()
-        val lens = GenStore.readOrEmpty(spark, s"$droot/doclens", doclensSchema)
-          .join(broadcast(overlayIds), Seq("doc_id"), "left_anti")
-          .unionByName(edits.select(col("doc_id"),
-            TF.tokenCount(col("text")).as("dl")))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val post = GenStore.readOrEmpty(spark, s"$droot/postings", postingsSchema)
-            .join(broadcast(overlayIds), Seq("doc_id"), "left_anti")
-            .select("term", "doc_id", "tf", "dl", "positions", "tbucket")
-            .unionByName(postingsOf(edits, nb))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
+        Serving.withPinned(
+            GenStore.readOrEmpty(spark, s"$droot/doclens", doclensSchema)
+              .join(broadcast(overlayIds), Seq("doc_id"), "left_anti")
+              .unionByName(edits.select(col("doc_id"),
+                TF.tokenCount(col("text")).as("dl")))) { lens =>
+          Serving.withPinned(
+              GenStore.readOrEmpty(spark, s"$droot/postings", postingsSchema)
+                .join(broadcast(overlayIds), Seq("doc_id"), "left_anti")
+                .select("term", "doc_id", "tf", "dl", "positions", "tbucket")
+                .unionByName(postingsOf(edits, nb))) { post =>
           val st = lens.agg(coalesce(count(lit(1)), lit(0L)),
             coalesce(sum(col("dl")), lit(0L))).head()
           GenStore.promote(spark, root, cur,
@@ -1106,10 +1052,10 @@ object LexLake {
             }
             failpoint()
           }
-          } finally { post.unpersist(blocking = false); () }
+          }
           if (pending.isDefined) GenStore.commitOverlay(spark, root, None, None)
-        } finally { lens.unpersist(blocking = false); () }
-      } finally { edits.unpersist(blocking = false); () }
+        }
+      }
     }
 
   /** The reconcile pass as a cron [[Scheduler.Deployment]] — the weekly
@@ -1284,33 +1230,17 @@ object LexLake {
   }
 
   /** Collapse the small files a high-frequency ingest accumulates between
-    * reconciles — per posting BUCKET, the [[VectorLake.compactLists]]
-    * contract (hidden-sibling leaf swaps invisible to readers). */
+    * reconciles — per posting BUCKET, through the one leaf-compaction loop
+    * ([[Writers.compactLeaves]]: hidden-sibling leaf swaps invisible to
+    * readers). Returns the compacted bucket leaves with their prior file
+    * counts. */
   def compactBuckets(spark: SparkSession, root: String,
                      targetRecordsPerFile: Long = 1000000L,
                      minFilesPerBucket: Int = 8,
                      lockWaitMs: Long = 0L): Map[String, Long] =
-    withWriterLock(spark, root, waitMs = lockWaitMs) {
-      val droot = GenStore.dataRoot(spark, root)
-      val conf = spark.sessionState.newHadoopConf()
-      val out = Map.newBuilder[String, Long]
-      val base = new org.apache.hadoop.fs.Path(s"$droot/postings")
-      val fs = base.getFileSystem(conf)
-      if (fs.exists(base)) {
-        Writers.recoverPartitionCompact(spark, base.toString)
-        for (st <- fs.listStatus(base)
-             if st.isDirectory && st.getPath.getName.contains("=")
-               && !st.getPath.getName.startsWith(".")) {
-          val nFiles = fs.listStatus(st.getPath).count(f =>
-            f.isFile && !f.getPath.getName.startsWith("_") &&
-              !f.getPath.getName.startsWith("."))
-          if (nFiles >= minFilesPerBucket) {
-            Writers.compactPartition(spark, st.getPath.toString,
-              targetRecordsPerFile)
-            out += st.getPath.getName -> nFiles.toLong
-          }
-        }
-      }
-      out.result()
+    StateLock.withRootLock(spark, root, waitMs = lockWaitMs) {
+      Writers.compactLeaves(spark,
+        s"${GenStore.dataRoot(spark, root)}/postings", minFilesPerBucket,
+        targetRecordsPerFile)
     }
 }

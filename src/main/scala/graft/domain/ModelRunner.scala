@@ -1,5 +1,6 @@
 package graft.domain
 
+import graft.operators.Serving
 import graft.quality.DataQuality
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -35,22 +36,23 @@ object ModelRunner {
     // their upstream mart DataFrames (game_quality_metrics reads dim_games +
     // fact_reviews), and without the persist each write re-executed the
     // whole upstream join/window pipeline from source — dbt reads the
-    // materialized table; persisting is the DataFrame-graph equivalent
-    val pinned = scala.collection.mutable.ListBuffer.empty[org.apache.spark.sql.DataFrame]
-    val materialized = SteamModels.allModels(w).map { case (name, df) =>
-      if (stagingModels(name)) {
+    // materialized table; persisting is the DataFrame-graph equivalent.
+    // Each mart's pin scopes the rest of the run (the later marts and the
+    // quality checks, which also reuse them), so a failed write releases
+    // every pin taken before it.
+    def materialize(models: List[(String, DataFrame)],
+                    done: Map[String, String]): RunResult = models match {
+      case Nil => RunResult(done, DataQuality.run(DataQuality.steamSuite(w)))
+      case (name, df) :: rest if stagingModels(name) =>
         df.createOrReplaceTempView(name)
-        name -> "view"
-      } else {
-        val path = s"$martDir/$name"
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        pinned += df
-        df.write.mode("overwrite").parquet(path)
-        name -> path
-      }
-    }.toMap
-    val result = RunResult(materialized, DataQuality.run(DataQuality.steamSuite(w)))
-    pinned.foreach(_.unpersist(blocking = false)) // quality checks also reuse them
-    result
+        materialize(rest, done + (name -> "view"))
+      case (name, df) :: rest =>
+        Serving.withPinned(df) { mart =>
+          val path = s"$martDir/$name"
+          mart.write.mode("overwrite").parquet(path)
+          materialize(rest, done + (name -> path))
+        }
+    }
+    materialize(SteamModels.allModels(w).toList, Map.empty)
   }
 }

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType, StructField, StructType}
 
 import graft.functions.{VectorFunctions => VF}
-import graft.operators.{Clustering, Similarity}
-import graft.sources.Writers
+import graft.operators.{Clustering, Serving, Similarity}
+import graft.sources.{StateLock, Writers}
 
 /** The lake-resident incremental VECTOR index — [[DedupLake]]'s ANN sibling
   * (reference analogue: the same scheduled-maintenance shape as the prefect
@@ -108,14 +108,6 @@ object VectorLake {
   final case class IngestReport(kept: Long, dupsVsIndex: Long,
                                 dupsInBatch: Long, editResident: Long = 0L)
 
-  def withWriterLock[T](spark: SparkSession, root: String,
-                        leaseMs: Long = 30 * 60 * 1000L,
-                        now: () => Long = System.currentTimeMillis _,
-                        waitMs: Long = 0L,
-                        heartbeatMs: Long = 0L)(f: => T): T =
-    graft.sources.StateLock.withRootLock(spark, root, leaseMs, now, waitMs,
-      heartbeatMs)(f)
-
   /** The CURRENT generation's data root, resolved READ-ONLY (shared
     * [[GenStore]] lifecycle). Every operation resolves this ONCE and reads
     * centroids AND vectors under it — the structural guarantee that no
@@ -138,7 +130,7 @@ object VectorLake {
     val rows = centroids.zipWithIndex
       .map { case (c, i) => org.apache.spark.sql.Row(i, c) }.asJava
     val df = spark.createDataFrame(rows, centroidsSchema)
-    withWriterLock(spark, root) {
+    StateLock.withRootLock(spark, root) {
       Writers.recoverPointer(spark, GenStore.pointer(root))
       val cur = GenStore.currentGen(spark, root)
       if (cur.isEmpty && !GenStore.exists(spark, s"$root/vectors"))
@@ -341,7 +333,7 @@ object VectorLake {
              failpoint: () => Unit = () => (),
              failpointAfterVectors: () => Unit = () => (),
              lockWaitMs: Long = 0L): IngestReport =
-    withWriterLock(spark, root, waitMs = lockWaitMs) {
+    StateLock.withRootLock(spark, root, waitMs = lockWaitMs) {
       // one generation resolution for the whole mutation; the pointer
       // cannot flip while we hold the writer lease
       val droot = dataRoot(spark, root)
@@ -360,15 +352,12 @@ object VectorLake {
       // the embedding cast is load-bearing: an uncast array<double> batch
       // would append double-typed files into the float-typed store and
       // brick every subsequent schema-imposed read
-      val batchCast = batch.select(col("vec_id").cast("long").as("vec_id"),
+      Serving.withPinned(batch.select(col("vec_id").cast("long").as("vec_id"),
           col("embedding").cast(vectorsSchema("embedding").dataType)
-            .as("embedding"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val assigned = Similarity.ivfAssignWithDist(
-        batchCast.join(broadcast(editIds), Seq("vec_id"), "left_anti"),
-        "embedding", cents)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+            .as("embedding"))) { batchCast =>
+      Serving.withPinned(Similarity.ivfAssignWithDist(
+          batchCast.join(broadcast(editIds), Seq("vec_id"), "left_anti"),
+          "embedding", cents)) { assigned =>
         val batchRows = assigned.count()
         // the edit-resident drops are REPORTED (r12 advice): without the
         // count, kept + dups no longer accounted for the full batch and
@@ -413,61 +402,54 @@ object VectorLake {
             .select("vec_id", "embedding", "ivf_list", "d2"))
         val (vsIndex0, inBatch0) =
           gateFrames(storedLogical, assigned, cents, dupThreshold, gateProbes)
-        val vsIndex = vsIndex0
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val inBatch = inBatch0
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        Serving.withPinned(vsIndex0) { vsIndex =>
+        Serving.withPinned(inBatch0) { inBatch =>
         // a batch vector can be a dup BOTH ways; the union is the drop set,
         // the two counts are reported independently (they may overlap).
         // Both gate frames are pinned: the report counts and the drop-set
         // union then reuse ONE resident-index scan instead of three.
         val dropIds = vsIndex.unionByName(inBatch).distinct()
-        try {
-          val kept = assigned.join(dropIds, Seq("vec_id"), "left_anti")
-          // count EVERYTHING before the append: these plans read the store,
-          // and re-evaluating them afterwards would see the batch's own
-          // freshly-appended rows — every vector self-matches at cos 1 and
-          // the report claims the whole batch was a dup
-          val report = IngestReport(kept.count(), vsIndex.count(),
-            inBatch.count(), editResident)
-          failpoint()
-          // replay-safe append, scoped to the batch's ids (PricePipeline
-          // idiom — never rescans the whole store)
-          val storedScoped = stored.select("vec_id")
+        val kept = assigned.join(dropIds, Seq("vec_id"), "left_anti")
+        // count EVERYTHING before the append: these plans read the store,
+        // and re-evaluating them afterwards would see the batch's own
+        // freshly-appended rows — every vector self-matches at cos 1 and
+        // the report claims the whole batch was a dup
+        val report = IngestReport(kept.count(), vsIndex.count(),
+          inBatch.count(), editResident)
+        failpoint()
+        // replay-safe append, scoped to the batch's ids (PricePipeline
+        // idiom — never rescans the whole store)
+        val storedScoped = stored.select("vec_id")
+          .join(broadcast(assigned.select("vec_id")), Seq("vec_id"), "left_semi")
+        val toWrite = kept.join(storedScoped, Seq("vec_id"), "left_anti")
+          .select("vec_id", "embedding", "ivf_list", "d2")
+        toWrite.write.mode("append").partitionBy("ivf_list")
+          .parquet(s"$droot/vectors")
+        failpointAfterVectors()
+        // SQ tier resident for this generation: append the survivors'
+        // codes too, so the quantized serving read stays COMPLETE. The
+        // "new" set derives from the CODES dir itself (scoped to the
+        // batch), not from toWrite — a crash between the two appends
+        // leaves vectors-without-codes, and a replay (whose toWrite is
+        // empty) must still repair them (the DedupLake
+        // derive-from-your-own-store rule). Codes clamp into this
+        // generation's grid; the next reconcile refreshes the stats.
+        for ((mins, maxs) <- sqStatsAt(spark, droot)) {
+          val codedScoped =
+            GenStore.readOrEmpty(spark, s"$droot/codes", codesSchema)
+            .select("vec_id")
             .join(broadcast(assigned.select("vec_id")), Seq("vec_id"), "left_semi")
-          val toWrite = kept.join(storedScoped, Seq("vec_id"), "left_anti")
-            .select("vec_id", "embedding", "ivf_list", "d2")
-          toWrite.write.mode("append").partitionBy("ivf_list")
-            .parquet(s"$droot/vectors")
-          failpointAfterVectors()
-          // SQ tier resident for this generation: append the survivors'
-          // codes too, so the quantized serving read stays COMPLETE. The
-          // "new" set derives from the CODES dir itself (scoped to the
-          // batch), not from toWrite — a crash between the two appends
-          // leaves vectors-without-codes, and a replay (whose toWrite is
-          // empty) must still repair them (the DedupLake
-          // derive-from-your-own-store rule). Codes clamp into this
-          // generation's grid; the next reconcile refreshes the stats.
-          for ((mins, maxs) <- sqStatsAt(spark, droot)) {
-            val codedScoped =
-              GenStore.readOrEmpty(spark, s"$droot/codes", codesSchema)
-              .select("vec_id")
-              .join(broadcast(assigned.select("vec_id")), Seq("vec_id"), "left_semi")
-            kept.join(codedScoped, Seq("vec_id"), "left_anti")
-              .withColumn("codes",
-                Similarity.sqCodesTiny(col("embedding"), mins, maxs))
-              .select("vec_id", "codes", "ivf_list")
-              .write.mode("append").partitionBy("ivf_list")
-              .parquet(s"$droot/codes")
-          }
-          report
-        } finally {
-          vsIndex.unpersist(blocking = false)
-          inBatch.unpersist(blocking = false); ()
+          kept.join(codedScoped, Seq("vec_id"), "left_anti")
+            .withColumn("codes",
+              Similarity.sqCodesTiny(col("embedding"), mins, maxs))
+            .select("vec_id", "codes", "ivf_list")
+            .write.mode("append").partitionBy("ivf_list")
+            .parquet(s"$droot/codes")
         }
-      } finally {
-        assigned.unpersist(blocking = false)
-        batchCast.unpersist(blocking = false); ()
+        report
+        }
+        }
+      }
       }
     }
 
@@ -485,9 +467,9 @@ object VectorLake {
   /** DELETE by id — the retraction/right-to-be-forgotten path a serving
     * index needs (the training-data-pipeline twin of a GDPR purge):
     * tombstone the ids now (in the ROOT overlay — uncommitted mutation
-    * state, the [[LexLake.delete]] contract verbatim), reclaim the bytes
-    * later. Commits a tombstone row per RESIDENT id — physically stored or
-    * upsert-inserted in the edit overlay (ids resident nowhere are
+    * state — by the one overlay delete, [[GenStore.delete]]), reclaim the
+    * bytes later. Commits a tombstone row per RESIDENT id — physically
+    * stored or upsert-inserted in the edit overlay (ids resident nowhere are
     * ignored; an exact replay appends nothing — the lake's at-least-once
     * contract); every UNPINNED read — [[vectors]], [[searchBatch]] float
     * and quantized, [[driftReport]], the ingest near-dup gate — excludes
@@ -504,39 +486,25 @@ object VectorLake {
     * newly tombstoned. */
   def delete(spark: SparkSession, root: String, ids: DataFrame,
              lockWaitMs: Long = 0L): Long =
-    withWriterLock(spark, root, waitMs = lockWaitMs) {
+    StateLock.withRootLock(spark, root, waitMs = lockWaitMs) {
       val droot = dataRoot(spark, root)
       // repair any compaction crash BEFORE the resident read: a leaf absent
       // mid-swap would make this writer silently SKIP tombstoning the ids
-      // stored in it (the left_semi below would miss them) while reporting
-      // the purge done — the one delete outcome worse than failing
+      // stored in it (GenStore.delete's resident semi-join would miss them)
+      // while reporting the purge done — the one delete outcome worse than
+      // failing
       Writers.recoverPartitionCompact(spark, s"$droot/vectors")
-      val del = ids.select(col("vec_id").cast("long").as("vec_id")).distinct()
-      val (existing, edits) =
-        GenStore.overlayOrEmpty(spark, root, tombstonesSchema, editsSchema)
-      val resident = GenStore.readOrEmpty(spark, s"$droot/vectors", vectorsSchema)
-        .select("vec_id")
-        .unionByName(edits.select("vec_id"))
-      val toWrite = del
-        .join(resident, Seq("vec_id"), "left_semi")
-        .join(existing, Seq("vec_id"), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        // count while pinned and BEFORE the append — afterwards the plan's
-        // tombstone read would see its own rows
-        val n = toWrite.count()
-        if (n > 0) GenStore.appendTombstones(spark, root, toWrite)
-        n
-      } finally { toWrite.unpersist(blocking = false); () }
+      GenStore.delete(spark, root, "vec_id", ids,
+        GenStore.readOrEmpty(spark, s"$droot/vectors", vectorsSchema))
     }
 
   /** UPSERT by id — the re-embedding path (a model refresh re-encodes
     * RESIDENT documents; their vectors must serve REPLACED immediately,
     * not deleted-and-waited-on): the batch lands in the root `edits`
-    * OVERLAY (last-writer-wins per id — the [[LexLake.upsert]] contract
-    * verbatim) and any tombstones on the batch ids drop (an upsert is
-    * explicit new content — the one sanctioned id resurrection), both in
-    * ONE overlay commit. From that commit every UNPINNED read
+    * OVERLAY (last-writer-wins per id — the one overlay upsert,
+    * [[GenStore.upsert]]) and any tombstones on the batch ids drop (an
+    * upsert is explicit new content — the one sanctioned id resurrection),
+    * both in ONE overlay commit. From that commit every UNPINNED read
     * serves the NEW embedding (assigned under the current quantizer,
     * full-float on the quantized paths); the COMMITTED generations are
     * untouched, so a PINNED read ([[ReadView.Pinned]], a
@@ -568,40 +536,21 @@ object VectorLake {
              maxOverlayBytes: Long = 1L << 27,
              lockWaitMs: Long = 0L,
              failpointAfterEdits: () => Unit = () => ()): Long =
-    withWriterLock(spark, root, waitMs = lockWaitMs) {
-      val newRows = batch
-        .select(col("vec_id").cast("long").as("vec_id"),
+    StateLock.withRootLock(spark, root, waitMs = lockWaitMs) {
+      GenStore.upsert(spark, GenStore.overlay(root), "edits", "tombstones",
+        batch.select(col("vec_id").cast("long").as("vec_id"),
           col("embedding").cast(vectorsSchema("embedding").dataType)
-            .as("embedding"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val counts = newRows
-          .agg(count(lit(1)), count_distinct(col("vec_id")),
-            coalesce(max(size(col("embedding"))), lit(0))).head()
-        val n = counts.getLong(0)
-        require(n == counts.getLong(1),
-          s"upsert batch carries duplicate vec_id values ($n rows, " +
-            s"${counts.getLong(1)} distinct) — two rows would land under " +
-            "one id. Deduplicate the batch first.")
-        val dims = counts.getInt(2)
-        val ids = newRows.select("vec_id")
-        val (tombs, edits) =
-          GenStore.overlayOrEmpty(spark, root, tombstonesSchema, editsSchema)
-        val merged = edits
-          .join(broadcast(ids), Seq("vec_id"), "left_anti")
-          .unionByName(newRows)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val m = merged.count()
-          require(m <= maxOverlayRows,
-            s"edit overlay would grow to $m rows > maxOverlayRows=" +
-              s"$maxOverlayRows — it broadcasts at every read " +
-              "(serving-bounded by contract). Run reconcile to fold it; " +
-              "corpus-scale re-encodes belong to a bulk rewrite + " +
-              "reconcile.")
-          // BYTES are the binding budget for a frame that carries
-          // embeddings (r12 verdict finding #3): dims-aware, so a
-          // high-dimensional overlay refuses long before the row cap
+            .as("embedding")),
+        "vec_id", GenStore.RowCap("edit overlay", "maxOverlayRows",
+          maxOverlayRows, "it broadcasts at every read (serving-bounded " +
+            "by contract). Run reconcile to fold it; corpus-scale " +
+            "re-encodes belong to a bulk rewrite + reconcile."),
+        extra = Seq(coalesce(max(size(col("embedding"))), lit(0))),
+        // BYTES are the binding budget for a frame that carries
+        // embeddings (r12 verdict finding #3): dims-aware, so a
+        // high-dimensional overlay refuses long before the row cap
+        check = { (dimsRow, m) =>
+          val dims = dimsRow.getInt(0)
           val bytes = m * 4L * dims
           require(bytes <= maxOverlayBytes,
             s"edit overlay would grow to ~$bytes broadcast bytes " +
@@ -609,16 +558,8 @@ object VectorLake {
               s"$maxOverlayBytes — it broadcasts EMBEDDINGS at every " +
               "read. Run reconcile to fold it; corpus-scale re-encodes " +
               "belong to a bulk rewrite + reconcile.")
-          // an upsert of a tombstoned id is the sanctioned resurrection:
-          // its tombstone drops in the same commit, or every read would
-          // exclude the new row
-          if (n > 0) GenStore.commitOverlay(spark, root,
-            GenStore.nonEmpty(tombs.join(broadcast(ids), Seq("vec_id"),
-              "left_anti")), Some(merged),
-            beforeFlip = failpointAfterEdits)
-        } finally { merged.unpersist(blocking = false); () }
-        n
-      } finally { newRows.unpersist(blocking = false); () }
+        },
+        beforeFlip = failpointAfterEdits)
     }
 
   /** The resident generation numbers, oldest first — what a
@@ -791,7 +732,7 @@ object VectorLake {
     * re-ingest them (replay-safe) after rolling back. */
   def rollback(spark: SparkSession, root: String, toGeneration: Long,
                lockWaitMs: Long = 0L): Unit =
-    withWriterLock(spark, root, waitMs = lockWaitMs) {
+    StateLock.withRootLock(spark, root, waitMs = lockWaitMs) {
       // CARRY LEGACY GENERATION-LEVEL TOMBSTONES FIRST (pre-round-12
       // generations stored them under the gen dir; new deletes live in the
       // ROOT overlay, which a pointer flip never touches): a bare flip
@@ -814,16 +755,13 @@ object VectorLake {
           s"generation (${cur.fold("no pointer")(g => s"gen-$g")}) — only " +
           "committed past generations can be rolled back to")
       GenStore.requireLive(spark, target)
-      val pending = GenStore.readOrEmpty(spark, s"$curRoot/tombstones",
-          tombstonesSchema)
-        .join(GenStore.readOrEmpty(spark, s"$target/tombstones",
-          tombstonesSchema),
-          Seq("vec_id"), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      Serving.withPinned(
+          GenStore.readOrEmpty(spark, s"$curRoot/tombstones", tombstonesSchema)
+            .join(GenStore.readOrEmpty(spark, s"$target/tombstones",
+              tombstonesSchema), Seq("vec_id"), "left_anti")) { pending =>
         if (pending.count() > 0)
           pending.write.mode("append").parquet(s"$target/tombstones")
-      } finally { pending.unpersist(blocking = false); () }
+      }
       GenStore.rollback(spark, root, toGeneration)
     }
 
@@ -895,7 +833,8 @@ object VectorLake {
     // (heartbeat at leaseMs/3) instead of betting a fixed leaseMs covers
     // 100 TB — without it a contender breaks the "stale" lock mid-run,
     // ingests, and this pass's swap would discard those vectors
-    withWriterLock(spark, root, leaseMs = leaseMs, heartbeatMs = leaseMs / 3) {
+    StateLock.withRootLock(spark, root, leaseMs = leaseMs,
+        heartbeatMs = leaseMs / 3) {
       Writers.recoverPointer(spark, GenStore.pointer(root))
       val cur = GenStore.currentGen(spark, root)
       val droot = GenStore.dataRootOf(root, cur)
@@ -914,16 +853,15 @@ object VectorLake {
       val edits = edits0.join(rootTombs, Seq("vec_id"), "left_anti")
       val overlayIds = edits.select("vec_id")
         .unionByName(rootTombs.select("vec_id")).distinct()
-      val stored = GenStore.readOrEmpty(spark, s"$droot/vectors", vectorsSchema)
-        .join(GenStore.readOrEmpty(spark, s"$droot/tombstones", tombstonesSchema),
-          Seq("vec_id"), "left_anti")
-        .join(broadcast(overlayIds), Seq("vec_id"), "left_anti")
-        .select("vec_id", "embedding")
-        .unionByName(edits.select(col("vec_id"),
-          col("embedding").cast(vectorsSchema("embedding").dataType)
-            .as("embedding")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      Serving.withPinned(
+          GenStore.readOrEmpty(spark, s"$droot/vectors", vectorsSchema)
+            .join(GenStore.readOrEmpty(spark, s"$droot/tombstones",
+              tombstonesSchema), Seq("vec_id"), "left_anti")
+            .join(broadcast(overlayIds), Seq("vec_id"), "left_anti")
+            .select("vec_id", "embedding")
+            .unionByName(edits.select(col("vec_id"),
+              col("embedding").cast(vectorsSchema("embedding").dataType)
+                .as("embedding")))) { stored =>
         val n = stored.count()
         require(n > 0, s"vector lake at $root is empty (or fully " +
           "tombstoned) — nothing to recluster")
@@ -936,11 +874,9 @@ object VectorLake {
         require(cents.size >= 2,
           s"recluster collapsed to ${cents.size} centroid(s) — the resident " +
             "vectors are degenerate; raise k or inspect the store")
-        val reassigned = Similarity.ivfAssignWithDist(
-          stored.select("vec_id", "embedding"), "embedding", cents)
-          .select("vec_id", "embedding", "ivf_list", "d2")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
+        Serving.withPinned(Similarity.ivfAssignWithDist(
+            stored.select("vec_id", "embedding"), "embedding", cents)
+          .select("vec_id", "embedding", "ivf_list", "d2")) { reassigned =>
         // near-dup REPAIR under the new assignment (see docstring): banded
         // SRP candidates within each list, keep the lower id — the
         // maintenance-cadence pass that removes anything a mixed-quantizer
@@ -954,15 +890,14 @@ object VectorLake {
         // the recall eval (twice), the stats pass, and the codes write —
         // unpinned, the banded repair join (the dominant reconcile cost)
         // would re-execute for each while holding the writer lease
-        val repaired = reassigned.join(dups, Seq("vec_id"), "left_anti")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        Serving.withPinned(
+            reassigned.join(dups, Seq("vec_id"), "left_anti")) { repaired =>
         // the SQ gate below sizes its recall eval from the POST-repair
         // count: the banded pass may have shrunk the store, and a gate
         // guarded by the pre-dedup n could run an empty exclude-self eval
         // (coalesced to recall 0.0 — spurious refusal) or set kk2 beyond
         // repaired-1, deflating measured recall (r9 advice)
         val nr = repaired.count()
-        try {
         // write the NEW GENERATION in full — vectors WITH the list
         // partitioning (the pruning that makes a probe read one list, not
         // the corpus) and the quantizer that produced it — then commit by
@@ -1017,9 +952,9 @@ object VectorLake {
         // the overlays are folded into the promoted generation — clear them
         // (a crash before this re-applies them as no-ops, see above)
         if (pending.isDefined) GenStore.commitOverlay(spark, root, None, None)
-        } finally { repaired.unpersist(blocking = false); () }
-        } finally { reassigned.unpersist(blocking = false); () }
-      } finally { stored.unpersist(blocking = false); () }
+        }
+        }
+      }
     }
 
   /** The recluster pass as a cron [[Scheduler.Deployment]] — the vector
@@ -1038,9 +973,10 @@ object VectorLake {
     * in between — per-file open/footer cost exactly where partition
     * pruning should make a probe cheap. Each list whose data-file count
     * reaches `minFilesPerList` is rewritten to
-    * ceil(rows / targetRecordsPerFile) files via the hidden-sibling leaf
-    * swap ([[Writers.compactPartition]] — crash states are invisible to
-    * readers and repaired under the next lease). Values untouched;
+    * ceil(rows / targetRecordsPerFile) files by the one leaf-compaction
+    * loop ([[Writers.compactLeaves]]: a hidden-sibling leaf swap per leaf —
+    * crash states are invisible to readers and repaired under the next
+    * lease). Values untouched;
     * CURRENT generation only (an expired generation is already dead — its
     * reads fail loudly, never slowly). Returns the compacted leaves with
     * their prior file counts. Runs under the writer lease; `lockWaitMs > 0`
@@ -1049,30 +985,13 @@ object VectorLake {
                    targetRecordsPerFile: Long = 1000000L,
                    minFilesPerList: Int = 8,
                    lockWaitMs: Long = 0L): Map[String, Long] =
-    withWriterLock(spark, root, waitMs = lockWaitMs) {
+    StateLock.withRootLock(spark, root, waitMs = lockWaitMs) {
       val droot = dataRoot(spark, root)
-      val conf = spark.sessionState.newHadoopConf()
-      val out = Map.newBuilder[String, Long]
-      for (tier <- Seq("vectors", "codes")) {
-        val base = new org.apache.hadoop.fs.Path(s"$droot/$tier")
-        val fs = base.getFileSystem(conf)
-        if (fs.exists(base)) {
-          Writers.recoverPartitionCompact(spark, base.toString)
-          for (st <- fs.listStatus(base)
-               if st.isDirectory && st.getPath.getName.contains("=")
-                 && !st.getPath.getName.startsWith(".")) {
-            val nFiles = fs.listStatus(st.getPath).count(f =>
-              f.isFile && !f.getPath.getName.startsWith("_") &&
-                !f.getPath.getName.startsWith("."))
-            if (nFiles >= minFilesPerList) {
-              Writers.compactPartition(spark, st.getPath.toString,
-                targetRecordsPerFile)
-              out += s"$tier/${st.getPath.getName}" -> nFiles.toLong
-            }
-          }
-        }
-      }
-      out.result()
+      (for {
+        tier <- Seq("vectors", "codes")
+        (leaf, nFiles) <- Writers.compactLeaves(spark, s"$droot/$tier",
+          minFilesPerList, targetRecordsPerFile)
+      } yield s"$tier/$leaf" -> nFiles).toMap
     }
 
   /** [[compactLists]] as a cron [[Scheduler.Deployment]] — the in-between

@@ -3,6 +3,7 @@ package graft.operators
 import graft.plans.TopN
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The shared SERVING-BATCH contract, factored once (r10 verdict asks #1 and
   * #4): every per-probe endpoint — vector ([[Similarity.knnJoin]] family),
@@ -74,10 +75,17 @@ object Serving {
   def requireUniqueIds(df: DataFrame, idCol: String,
                        subject: String, consequence: String): Unit = {
     val c = df.agg(count(lit(1)), count_distinct(col(idCol))).head()
-    require(c.getLong(0) == c.getLong(1),
-      s"$subject carries duplicate $idCol values (${c.getLong(0)} rows, " +
-        s"${c.getLong(1)} distinct) — $consequence")
+    requireUnique(c.getLong(0), c.getLong(1), idCol, subject, consequence)
   }
+
+  /** [[requireUniqueIds]] over counts a caller's own agg already took
+    * (`rows` rows, `distinct` distinct `idCol` values), so a gate that
+    * checks more than the ids still runs one job. */
+  def requireUnique(rows: Long, distinct: Long, idCol: String,
+                    subject: String, consequence: String): Unit =
+    require(rows == distinct,
+      s"$subject carries duplicate $idCol values ($rows rows, " +
+        s"$distinct distinct) — $consequence")
 
   /** `df.limit(cap).count()` — the row count capped at `cap` — with
     * generated code that repeats from call to call. Spark's local limit
@@ -94,6 +102,17 @@ object Serving {
       .mapPartitions(it => Iterator.single(it.take(cap).size.toLong))
       .fold(0L)(_ + _)
     math.min(n, cap.toLong)
+  }
+
+  /** Run `use` over `df` pinned (MEMORY_AND_DISK) and release the pin when
+    * `use` returns or throws: the scope that pins a frame unpersists it, so
+    * a refusal or a failed write between pin and release leaks nothing. A
+    * frame already pinned (a `...Pinned` operator's band table) is adopted:
+    * not pinned again, released here. */
+  def withPinned[T](df: DataFrame)(use: DataFrame => T): T = {
+    if (df.storageLevel == StorageLevel.NONE)
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+    try use(df) finally { df.unpersist(blocking = false); () }
   }
 
   /** Broadcast-contract guard for a BOUNDED-BY-CONTRACT frame (the knnJoin
@@ -122,11 +141,9 @@ object Serving {
                       pin: Boolean = false): DataFrame = {
     val c = queries.agg(count(lit(1)), count_distinct(col(queryIdCol)),
       coalesce(sum(size(array_distinct(col(termsCol)))), lit(0L))).head()
-    require(c.getLong(0) == c.getLong(1),
-      s"query batch carries duplicate $queryIdCol values (${c.getLong(0)} " +
-        s"rows, ${c.getLong(1)} distinct) — their term sets would silently " +
-        "merge into one combined top-n. Deduplicate or re-key the batch " +
-        "first.")
+    requireUnique(c.getLong(0), c.getLong(1), queryIdCol, "query batch",
+      "their term sets would silently merge into one combined top-n. " +
+        "Deduplicate or re-key the batch first.")
     val nq = c.getLong(2)
     require(nq <= maxBroadcastQueryTerms,
       s"query batch explodes to $nq (probe, term) rows > " +
@@ -152,10 +169,9 @@ object Serving {
     val c = probes.agg(count(lit(1)), count_distinct(col(probeIdCol)),
       coalesce(sum(size(col(phraseCol))), lit(0L)),
       count(when(size(col(phraseCol)) === 0, 1))).head()
-    require(c.getLong(0) == c.getLong(1),
-      s"phrase batch carries duplicate $probeIdCol values (${c.getLong(0)} " +
-        s"rows, ${c.getLong(1)} distinct) — their occurrence counts would " +
-        "silently merge. Deduplicate or re-key the batch first.")
+    requireUnique(c.getLong(0), c.getLong(1), probeIdCol, "phrase batch",
+      "their occurrence counts would silently merge. Deduplicate or re-key " +
+        "the batch first.")
     require(c.getLong(3) == 0L,
       s"phrase batch carries ${c.getLong(3)} empty phrase(s) — a phrase " +
         "must carry at least one token")

@@ -800,11 +800,9 @@ object Similarity {
     //     (checking the pre-explosion count alone would under-count by the
     //     nprobe factor, r9 review).
     val g = p0.agg(count(lit(1)), count_distinct(col("probe_id"))).head()
-    require(g.getLong(0) == g.getLong(1),
-      s"probe side carries duplicate probe_id values (${g.getLong(0)} rows, " +
-        s"${g.getLong(1)} distinct) — per-probe top-k would silently merge " +
-        "them into one combined result. Deduplicate or re-key the probe " +
-        "batch first.")
+    Serving.requireUnique(g.getLong(0), g.getLong(1), "probe_id",
+      "probe side", "per-probe top-k would silently merge them into one " +
+        "combined result. Deduplicate or re-key the probe batch first.")
     require(g.getLong(0) * nprobe <= maxBroadcastProbes,
       s"probe batch explodes to ${g.getLong(0) * nprobe} gate-list rows > " +
         s"$maxBroadcastProbes — it cannot broadcast. Shrink the batch or " +

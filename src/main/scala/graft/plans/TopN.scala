@@ -24,9 +24,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * An integral score or id widens to long; any other score to double, any
   * other id to string. A row whose score is null or NaN has no rank and is
-  * skipped. A null long id ranks as id 0, as the typed `Aggregator` heaps
-  * this replaced decoded it; a null string id is refused. Output:
-  * `array<struct<_1: score, _2: id>>`, best first. */
+  * skipped. A null id is refused, long or string: no id stands for it.
+  * Output: `array<struct<_1: score, _2: id>>`, best first. */
 case class TopN(score: Expression, id: Expression, n: Int,
                 mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[TopN.Heap]
@@ -65,10 +64,10 @@ case class TopN(score: Expression, id: Expression, n: Int,
       else if (s.asInstanceOf[Double].isNaN) return heap
       else TopN.orderKey(s.asInstanceOf[Double])
     val i = id.eval(input)
-    if (!stringIds) heap.offer(key, if (i == null) 0L else i.asInstanceOf[Long], null)
-    else if (i != null) heap.offer(key, 0L, i.asInstanceOf[UTF8String])
-    else throw new IllegalArgumentException(
-      s"top_n: null string id ${id.sql} for score ${score.sql} = $s")
+    if (i == null) throw new IllegalArgumentException(
+      s"top_n: null id ${id.sql} for score ${score.sql} = $s")
+    if (stringIds) heap.offer(key, 0L, i.asInstanceOf[UTF8String])
+    else heap.offer(key, i.asInstanceOf[Long], null)
     heap
   }
 

@@ -290,6 +290,38 @@ object Writers {
                        targetRecordsPerFile: Long = 1000000L): Unit =
     rewriteLeaf(spark, leafDir, targetRecordsPerFile)(identity)
 
+  /** The data files directly under `dir` (names not starting with `_` or
+    * `.`), 0 when `dir` is absent. */
+  def dataFiles(spark: SparkSession, dir: String): Long = {
+    val (fs, p) = hfsOf(spark, dir)
+    if (!fs.exists(p)) 0L
+    else fs.listStatus(p).count(f =>
+      f.isFile && !"_.".contains(f.getPath.getName.head)).toLong
+  }
+
+  /** WRITER-side small-file compaction of a partitioned table (call under
+    * the store's lease): repair crashed leaf swaps
+    * ([[recoverPartitionCompact]]), then [[compactPartition]] each visible
+    * `k=v` leaf holding at least `minFiles` data files. Returns the
+    * compacted leaves' names with their prior file counts; empty when the
+    * table dir is absent. */
+  def compactLeaves(spark: SparkSession, tableDir: String, minFiles: Int,
+                    targetRecordsPerFile: Long): Map[String, Long] = {
+    val (fs, base) = hfsOf(spark, tableDir)
+    if (!fs.exists(base)) return Map.empty
+    recoverPartitionCompact(spark, tableDir)
+    (for {
+      st <- fs.listStatus(base).toSeq
+      name = st.getPath.getName
+      if st.isDirectory && name.contains("=") && !name.startsWith(".")
+      nFiles = dataFiles(spark, st.getPath.toString)
+      if nFiles >= minFiles
+    } yield {
+      compactPartition(spark, st.getPath.toString, targetRecordsPerFile)
+      name -> nFiles
+    }).toMap
+  }
+
   /** Rewrite ONE leaf of a partitioned table as `transform(current rows)`
     * through the same hidden-sibling swap as [[compactPartition]] — the
     * row-level mutation primitive a partitioned store needs (e.g. a vector

@@ -46,8 +46,7 @@ object PricePipeline {
     * on the full row, so a replayed batch or a repeated line inserts nothing
     * new. */
   def mergeBatch(spark: SparkSession, warehouseDir: String, batch: DataFrame): Unit = {
-    val ticks = batch.cache()
-    try {
+    graft.operators.Serving.withPinned(batch) { ticks =>
       val games =
         GenStore.readOrEmpty(spark, s"$warehouseDir/games", gamesSchema)
       val state = GenStore.read(spark, s"$warehouseDir/crawl_state", stateSchema)
@@ -85,7 +84,7 @@ object PricePipeline {
       // above), and a reader that resolved the old version keeps its files
       // for one more commit
       GenStore.commitDir(spark, s"$warehouseDir/crawl_state", mergedState)
-    } finally ticks.unpersist()
+    }
   }
 
   /** Start the streaming job over a staging directory of JSONL wire files. */

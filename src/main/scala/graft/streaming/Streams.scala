@@ -479,7 +479,7 @@ object Streams {
       // without the unpersist every micro-batch would leak one pin
       val (kept, bandPin) = graft.operators.Dedup.incrementalKeepPinned(
         batch, idCol, textCol, index, numHashes, bandRows, shingleN)
-      try sink(kept) finally { bandPin.unpersist(blocking = false); () }
+      graft.operators.Serving.withPinned(bandPin)(_ => sink(kept))
     }
 
   /** Streaming ingest into the managed DEDUP lake — the document twin of

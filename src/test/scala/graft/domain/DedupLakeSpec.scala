@@ -3,6 +3,7 @@ package graft.domain
 import java.time.LocalDateTime
 
 import graft.SparkSpec
+import graft.sources.StateLock
 import org.apache.spark.sql.DataFrame
 
 /** The dedup-state compaction daemon: lake-resident greedy ingest, the
@@ -251,14 +252,15 @@ class DedupLakeSpec extends SparkSpec {
     var t = 1000000L
     val now = () => t
     // holder acquires, a contender inside the lease window is refused
-    DedupLake.withWriterLock(spark, root, leaseMs = 60000L, now = now) {
+    StateLock.withRootLock(spark, root, leaseMs = 60000L, now = now) {
       val ex = intercept[IllegalArgumentException] {
-        DedupLake.withWriterLock(spark, root, leaseMs = 60000L, now = now) { fail("must not enter") }
+        StateLock.withRootLock(spark, root, leaseMs = 60000L, now = now) {
+          fail("must not enter") }
       }
       assert(ex.getMessage.contains("locked by another writer"), ex.getMessage)
     }
     // lock released on exit: a fresh writer enters
-    DedupLake.withWriterLock(spark, root, leaseMs = 60000L, now = now) {}
+    StateLock.withRootLock(spark, root, leaseMs = 60000L, now = now) {}
     // a crashed holder (lock file left behind) blocks until the lease
     // expires, then the next writer breaks it and proceeds
     val fs = new org.apache.hadoop.fs.Path(root)
@@ -267,11 +269,12 @@ class DedupLakeSpec extends SparkSpec {
     val out = fs.create(lock, false)
     out.write(t.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)); out.close()
     intercept[IllegalArgumentException] {
-      DedupLake.withWriterLock(spark, root, leaseMs = 60000L, now = now) { fail("must not enter") }
+      StateLock.withRootLock(spark, root, leaseMs = 60000L, now = now) {
+        fail("must not enter") }
     }
     t += 61000L
     var entered = false
-    DedupLake.withWriterLock(spark, root, leaseMs = 60000L, now = now) { entered = true }
+    StateLock.withRootLock(spark, root, leaseMs = 60000L, now = now) { entered = true }
     assert(entered)
   }
 }

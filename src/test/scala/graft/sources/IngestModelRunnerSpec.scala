@@ -58,6 +58,19 @@ class IngestModelRunnerSpec extends SparkSpec {
     assert(c.count() == 1) // the malformed part surfaces for salvage/audit
   }
 
+  test("ModelRunner releases the mart pins it took when a mart write fails") {
+    val notADir = Files.createTempFile("marts", ".file").toString
+    val w = new graft.domain.SteamModelsSpec().w
+    intercept[Exception](ModelRunner.run(spark, w, notADir))
+    // a frame's storage level is looked up by plan: a rebuilt mart finds
+    // the pin a run left behind
+    val stillPinned = graft.domain.SteamModels.allModels(w).collect {
+      case (name, df) if df.storageLevel !=
+        org.apache.spark.storage.StorageLevel.NONE => name
+    }
+    assert(stillPinned.isEmpty, stillPinned)
+  }
+
   test("ModelRunner materializes staging as views, marts as parquet, runs tests") {
     val martDir = Files.createTempDirectory("marts").toFile.getAbsolutePath
     val w = new graft.domain.SteamModelsSpec().w
