@@ -17,7 +17,7 @@ object Engine {
     // each table at its current version (crawl_state commits versions;
     // a pointer-less table reads as its plain dir)
     def t(name: String): DataFrame =
-      spark.read.parquet(graft.domain.GenStore.currentDir(spark, s"$dir/$name"))
+      Tables.read(spark, graft.domain.GenStore.currentDir(spark, s"$dir/$name"))
     SteamModels.Warehouse(
       games = t("games"),
       developers = t("developers"), publishers = t("publishers"),

@@ -1,18 +1,87 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated testdata tables (see TESTDATA.md).
   *
-  * Parquet carries its own schema; we read it as-is so Catalyst's
-  * vectorized parquet reader + column pruning + predicate pushdown apply.
-  * At 100 TB these would be catalog tables partitioned on the natural
-  * time/key column (orders by o_orderdate, events by date(ts)); the
-  * loaders are the single seam where that swap happens.
+  * Parquet carries its own schema. Every untyped parquet read in the
+  * engine goes through [[read]], which infers a path's schema once per
+  * session and then reads with it, so building a query runs no footer job.
+  * The memo is keyed by the path, each file under it (name, length, mtime)
+  * and the session's parquet confs, and holds one entry per path.
+  * The vectorized reader, column pruning and predicate pushdown apply
+  * either way. At 100 TB these would be catalog tables partitioned on the
+  * natural time/key column (orders by o_orderdate, events by date(ts));
+  * the loaders are the single seam where that swap happens.
   */
 object Tables {
+
+  /** What a memoized schema is valid for: the path, each file under it as
+    * (name, length, mtime), and the session's explicitly set
+    * `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*` confs (`nanosAsLong`
+    * and `inferTimestampNTZ` decide the type of `events.ts`). */
+  private[graft] final case class Fingerprint(path: String,
+      files: Seq[(String, Long, Long)], confs: Seq[(String, String)])
+
+  private final case class Entry(key: Fingerprint, schema: StructType)
+
+  /** Per session, one entry per path: a changed fingerprint replaces the
+    * path's entry, so rewrites cannot grow the memo. Weak in the session,
+    * so a memo dies with its session. Only the schema is kept: a cached
+    * DataFrame would share attribute ids between separate reads of one
+    * table (ambiguous self-joins) and hold a file index that goes stale. */
+  private val memos =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, Entry]]()
+
+  /** The memo key of `path` in `spark`, from a driver-side Hadoop listing
+    * (no Spark job). A missing path lists no files; its read then fails
+    * with Spark's own error. */
+  private[graft] def fingerprint(spark: SparkSession, path: String): Fingerprint = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val files = Seq.newBuilder[(String, Long, Long)]
+    try {
+      val it = fs.listFiles(p, true)
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+    } catch { case _: java.io.FileNotFoundException => () }
+    val confs = spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }
+    Fingerprint(path, files.result().sorted, confs.sorted)
+  }
+
+  /** The local property `SparkContext.setJobDescription` sets. */
+  private val JobDescription = "spark.job.description"
+
+  /** The one untyped parquet read of a file or dir `path` (not a glob):
+    * `path` with its memoized schema, or, on a miss, with the schema Spark
+    * infers — one job, described as `infer schema <path>`. A miss infers
+    * outside any lock, so concurrent first reads do not queue behind each
+    * other. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val key = fingerprint(spark, path)
+    val memo = memos.synchronized(
+      memos.computeIfAbsent(spark, _ => new ConcurrentHashMap[String, Entry]()))
+    Option(memo.get(path)).filter(_.key == key) match {
+      case Some(e) => spark.read.schema(e.schema).parquet(path)
+      case None =>
+        val sc = spark.sparkContext
+        val caller = sc.getLocalProperty(JobDescription)
+        sc.setJobDescription(s"infer schema $path")
+        val df = try spark.read.parquet(path)
+          finally sc.setLocalProperty(JobDescription, caller)
+        memo.put(path, Entry(key, df.schema))
+        df
+    }
+  }
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    read(spark, s"$dir/$name.parquet")
 
   def lineitem(spark: SparkSession, dir: String): DataFrame =
     normalizeTs(load(spark, dir, "lineitem"), "l_shipdate")

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.domain.{ModelRunner, Schemas, SteamModels}
 import graft.streaming.{PricePipeline, Streams}
 
@@ -105,8 +106,8 @@ object ReferenceDay {
     * load_game_mysql enrichment step in the reference. */
   private def assembleWarehouse(spark: SparkSession, catalogDir: String,
                                 whDir: String): SteamModels.Warehouse = {
-    def cat(name: String): DataFrame = spark.read.parquet(s"$catalogDir/$name")
-    val games = spark.read.parquet(s"$whDir/games")
+    def cat(name: String): DataFrame = Tables.read(spark, s"$catalogDir/$name")
+    val games = Tables.read(spark, s"$whDir/games")
       .join(cat("titles"), Seq("game_id"), "left")
       .select(col("game_id"), coalesce(col("title"), lit("(uncatalogued)")).as("title"),
         lit(null).cast("string").as("description"),
@@ -115,7 +116,7 @@ object ReferenceDay {
         lit(null).cast("string").as("mac_req"),
         lit(null).cast("string").as("linux_req"),
         lit(0).as("required_age"), lit(null).cast("string").as("awards"))
-    val prices = spark.read.parquet(s"$whDir/prices")
+    val prices = Tables.read(spark, s"$whDir/prices")
       .select(
         row_number().over(org.apache.spark.sql.expressions.Window
           .orderBy("game_id", "timestamp")).cast("long").as("price_id"),
@@ -131,7 +132,7 @@ object ReferenceDay {
       gameDevelopers = cat("game_developers"), gamePublishers = cat("game_publishers"),
       gameGenres = cat("game_genres"), gameLanguages = cat("game_languages"),
       prices = prices,
-      crawlState = spark.read.parquet(
+      crawlState = Tables.read(spark,
         graft.domain.GenStore.currentDir(spark, s"$whDir/crawl_state")),
       reviews = cat("reviews"))
   }
@@ -164,18 +165,18 @@ object ReferenceDay {
         tick(1, "4,99", "75", 1700009999L))
       q.processAllAvailable()
     } finally q.stop()
-    stages += "warehouse_games" -> spark.read.parquet(s"$warehouse/games").count()
-    stages += "warehouse_prices" -> spark.read.parquet(s"$warehouse/prices").count()
-    stages += "warehouse_crawl_state" -> spark.read.parquet(
+    stages += "warehouse_games" -> Tables.read(spark, s"$warehouse/games").count()
+    stages += "warehouse_prices" -> Tables.read(spark, s"$warehouse/prices").count()
+    stages += "warehouse_crawl_state" -> Tables.read(spark,
       graft.domain.GenStore.currentDir(spark, s"$warehouse/crawl_state")).count()
 
     // 3. model graph: staging views -> mart tables -> quality suite
     val w = assembleWarehouse(spark, catalog, warehouse)
     val result = ModelRunner.run(spark, w, marts)
-    stages += "mart_dim_games" -> spark.read.parquet(s"$marts/dim_games").count()
-    stages += "mart_fact_reviews" -> spark.read.parquet(s"$marts/fact_reviews").count()
+    stages += "mart_dim_games" -> Tables.read(spark, s"$marts/dim_games").count()
+    stages += "mart_fact_reviews" -> Tables.read(spark, s"$marts/fact_reviews").count()
     stages += "mart_game_quality_metrics" ->
-      spark.read.parquet(s"$marts/game_quality_metrics").count()
+      Tables.read(spark, s"$marts/game_quality_metrics").count()
     stages += "quality_failures" -> result.testFailures.size.toLong
 
     // 4+5. CDC diff -> stateful dedup -> notify log (the Debezium + Discord

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.domain.{DedupLake, LakeSync, LexLake, Retrieval, VectorLake}
 import graft.operators.{Clustering, Serving}
 
@@ -57,9 +58,9 @@ object RetrievalDay {
     val lexRoot = s"$workDir/lex"
     val dedupRoot = s"$workDir/dedup"
     val syncRoot = s"$workDir/sync"
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = Tables.read(spark, s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = Tables.read(spark, s"$sfDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
 
     // 1. the vector lake: quantizer trained on the day's corpus, then the

@@ -434,7 +434,7 @@ object DedupLake {
         .map { case (label, dir) => label -> Writers.dataFiles(spark, dir) }
         .filter(_._2 >= minFilesPerStore).toMap
       if (due.contains("archive")) {
-        val archive = spark.read.parquet(archiveDir)
+        val archive = graft.Tables.read(spark, archiveDir)
         GenStore.commitCompacted(spark, s"$root/archive", archive,
           archive.count(), targetRecordsPerFile)
       }

@@ -905,7 +905,7 @@ object Multimodal {
         val idxPath = new org.apache.hadoop.fs.Path(indexDir)
         val fs = idxPath.getFileSystem(spark.sessionState.newHadoopConf())
         val idx =
-          if (fs.exists(idxPath)) spark.read.parquet(indexDir)
+          if (fs.exists(idxPath)) graft.Tables.read(spark, indexDir)
           else emptyDHashIndex(spark)
         val r = ingestMediaBatch(batch, idx, maxHamming = maxHamming)
         try {

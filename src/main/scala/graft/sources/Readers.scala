@@ -3,9 +3,13 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{StructField, StringType, StructType}
 
-/** Batch file sources (SURVEY §2.1 S1-S3) with explicit schemas — schema
-  * inference is a full extra pass over the data at 100 TB, so production
-  * paths always pass one in.
+/** Batch file sources (SURVEY §2.1 S1-S3) with explicit schemas — CSV and
+  * JSON schema inference is a full extra pass over the data at 100 TB, so
+  * these readers always take one. Parquet carries its schema in its
+  * footers: an untyped parquet read goes through [[graft.Tables.read]],
+  * which infers it once per session and memoizes it, keyed by the path,
+  * its files (name, length, mtime) and the session's parquet confs, one
+  * entry per path.
   */
 object Readers {
 

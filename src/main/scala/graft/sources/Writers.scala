@@ -337,7 +337,7 @@ object Writers {
     val (fs, dst) = hfsOf(spark, leafDir)
     val tmp = leafTmp(dst)
     val old = leafOld(dst)
-    val df = transform(spark.read.parquet(leafDir))
+    val df = transform(graft.Tables.read(spark, leafDir))
     val rows = df.count()
     val files = math.max(1L, (rows + targetRecordsPerFile - 1) / targetRecordsPerFile)
     if (fs.exists(tmp)) fs.delete(tmp, true)

@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * cache holds a pass's working set ([[GraftSession]]), and the bounded
   * count behind every gate produces the same source on every call
   * ([[Serving.boundedCount]]). Compiles are read from Spark's own counter,
-  * one sample per Janino compile. */
+  * one sample per Janino compile. Nor does a rerun infer a table schema
+  * again: building the warehouse queries runs no Spark job ([[Tables.read]]). */
 class CodegenReuseSpec extends SparkSpec {
 
   private def compiles(body: => Unit): Long = {
@@ -22,15 +23,24 @@ class CodegenReuseSpec extends SparkSpec {
       "q04_left_join_fill", "q09_filter_regex", "q14_distinct_keys",
       "q19_global_topk", "q40_dim_assembly_multijoin", "q46_asof_join",
       "q48_rollup", "q50_sessionize", "q55_range_join", "q91_salted_join")
-    def pass(): Unit = queries.foreach { q =>
+    def build(q: String) =
       SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
-        .write.format("noop").mode("overwrite").save()
-    }
+    // the Spark jobs the pass's query construction launches
+    def pass(): Int = queries.map { q =>
+      var df: org.apache.spark.sql.DataFrame = null
+      val constructJobs = jobStarts { df = build(q) }
+      df.write.format("noop").mode("overwrite").save()
+      constructJobs.size
+    }.sum
     val first = compiles(pass())
     assert(first > 0, "the first pass must compile the queries' code")
-    val second = compiles(pass())
+    var constructJobs = -1
+    val second = compiles { constructJobs = pass() }
     assert(second == 0,
       s"the second pass compiled $second classes (first pass: $first)")
+    // each table's schema is inferred once per session (Tables.read)
+    assert(constructJobs == 0,
+      s"the second pass ran $constructJobs Spark jobs while constructing")
   }
 
   test("a bounded-count gate compiles nothing on its second call, and keeps its threshold") {

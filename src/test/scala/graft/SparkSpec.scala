@@ -28,6 +28,42 @@ abstract class SparkSpec extends AnyFunSuite {
   def sortedRows(df: DataFrame): Seq[Seq[Any]] =
     rows(df).sortBy(_.map(v => if (v == null) "" else v.toString).mkString("|"))
 
+  /** The start events of the Spark jobs `body` launches. A job is counted
+    * when it carries the local property the body ran under, which broadcast
+    * threads and `inParallel` arms copy from their caller. */
+  def jobStarts(body: => Any): Seq[org.apache.spark.scheduler.SparkListenerJobStart] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = "graft.test.jobs"
+    val label = java.util.UUID.randomUUID().toString
+    val sentinelLabel = s"$label/sentinel"
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val sentinel = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(tag)).orNull match {
+          case `label` => starts.add(e)
+          case `sentinelLabel` => sentinel.set(true)
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, label)
+      try body finally sc.setLocalProperty(tag, null)
+      // listener events arrive in order: the sentinel's start follows
+      // every job of the body
+      sc.setLocalProperty(tag, sentinelLabel)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(tag, null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!sentinel.get() && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(sentinel.get(), "listener bus did not deliver the sentinel job")
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    starts.asScala.toSeq
+  }
+
   /** The text inside a FileScan line's `key: [...]` bracket (key is
     * `PartitionFilters` or `PushedFilters`), up to its first `]`; empty when
     * the line has none. A plan pin must read here: the scan line also lists

@@ -6,44 +6,12 @@ import graft.SparkSpec
   * one `LakeSync.requestUpsert`, each against a fresh small store. The
   * overlay write protocol lives in [[GenStore]]; these pins keep its one
   * body from costing a scheduler round-trip more than the per-lake copies
-  * it replaced did. A job is counted when it carries the local property
-  * the body ran under, which broadcast threads and `inParallel` arms copy
-  * from their caller. */
+  * it replaced did. Jobs are counted by [[graft.SparkSpec.jobStarts]]. */
 class WritePathJobsSpec extends SparkSpec {
   import spark.implicits._
 
-  private val Tag = "graft.test.writePath"
-
   /** Spark jobs launched while `body` runs on this thread. */
-  private def jobsOf(label: String)(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val sentinel = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val sentinelLabel = s"$label/sentinel"
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(Tag)).orNull match {
-          case `label` => n.incrementAndGet()
-          case `sentinelLabel` => sentinel.set(true)
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(Tag, label)
-      try body finally sc.setLocalProperty(Tag, null)
-      // listener events arrive in order: the sentinel's start follows
-      // every job of the body
-      sc.setLocalProperty(Tag, sentinelLabel)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty(Tag, null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!sentinel.get() && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(sentinel.get(), "listener bus did not deliver the sentinel job")
-    } finally sc.removeSparkListener(listener)
-    n.get()
-  }
+  private def jobsOf(body: => Any): Int = jobStarts(body).size
 
   private def freshRoot(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"writejobs_$tag").toString
@@ -64,8 +32,8 @@ class WritePathJobsSpec extends SparkSpec {
   private def measure(name: String)(upsert: => Long)(delete: => Long)
       : (Int, Int) = {
     var u, d = -1L
-    val ju = jobsOf(s"$name.upsert") { u = upsert }
-    val jd = jobsOf(s"$name.delete") { d = delete }
+    val ju = jobsOf { u = upsert }
+    val jd = jobsOf { d = delete }
     assert(u == 2L && d == 1L, s"$name: upsert $u, delete $d")
     info(s"$name: upsert $ju jobs, delete $jd jobs")
     (ju, jd)
@@ -98,7 +66,7 @@ class WritePathJobsSpec extends SparkSpec {
 
     val sync = freshRoot("sync")
     var n = -1L
-    val syncJobs = jobsOf("LakeSync.requestUpsert") {
+    val syncJobs = jobsOf {
       n = LakeSync.requestUpsert(spark, sync,
         Seq((2L, "rewritten body", unit(30)), (9L, "new body", unit(60)))
           .toDF("doc_id", "text", "embedding"))
